@@ -10,9 +10,10 @@
 Input is a band frame parquet (product_id, band, row, col, v) — the rebuilt
 engine's equivalent of a pre-decoded SAFE measurement set (sources/safe.py
 handles discovery/metadata and uncompressed-TIFF decode). Output is
-partitioned parquet plus, with ``--format tiff``, per-product GeoTIFF files
-(W1/W2 via the pure-Python codec), plus a JSON run report (A9). JPEG stays
-parquet-only (encoder stubbed — no PIL here).
+partitioned parquet plus one image file per product in a sibling directory
+(``<out>_tiff`` or ``<out>_jpeg``): a GeoTIFF with ``--format tiff`` (W1/W2),
+an 8-bit JPEG with ``--format jpeg`` (W3; ``--bit-depth 16`` is rejected),
+both via the pure-Python codecs, plus a JSON run report (A9).
 """
 
 from __future__ import annotations
@@ -173,41 +174,35 @@ def main(argv: list[str] | None = None) -> int:
             return 0
     if args.input is None or args.output is None:
         raise SystemExit("error: -i/--input and -o/--output are required to run")
+    if args.fmt == "jpeg" and args.bit_depth != 8:
+        raise SystemExit("error: --format jpeg writes 8-bit images; use --bit-depth 8")
     from sarpro_spark.plans.pipeline import build_pipeline
     from sarpro_spark.session import build_session
+    from sarpro_spark.sinks.writers import write_geotiffs, write_jpegs
 
     spark = build_session("sarpro_spark_cli", master=args.master)
     t0 = time.time()
     band_long = spark.read.parquet(args.input)
     out = build_pipeline(band_long, params)
     out.write.mode("overwrite").partitionBy("product_id").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    res = spark.read.parquet(args.output)
     report = {
         "input": args.input,
         "output": args.output,
         "params": params.to_dict(),
-        "rows_written": n,
-        "elapsed_sec": round(time.time() - t0, 3),
+        "rows_written": res.count(),
     }
+    value_cols = ["q"] if "q" in res.columns else ["r", "g", "b"]
+    # sibling dir: an extra subdir inside the parquet root would corrupt
+    # partition discovery on read-back
+    image_dir = f"{args.output.rstrip('/')}_{args.fmt}"
     if args.fmt == "tiff":
-        from sarpro_spark.sinks.writers import write_geotiffs
-
-        res = spark.read.parquet(args.output)
-        value_cols = [c for c in ("q",) if c in res.columns] or [
-            c for c in ("r", "g", "b") if c in res.columns
-        ]
-        if value_cols:
-            bits = 8 if (args.bit_depth == 8 or value_cols != ["q"]) else 16
-            # sibling dir: an extra subdir inside the parquet root would
-            # corrupt partition discovery on read-back
-            tiff_dir = args.output.rstrip("/") + "_tiff"
-            manifest = write_geotiffs(
-                res, tiff_dir, ["product_id"], value_cols, bits=bits
-            )
-            report["tiff_files"] = manifest.count()
-            report["tiff_dir"] = tiff_dir
-    elif args.fmt == "jpeg":
-        report["note"] = "jpeg encode stubbed (no PIL); parquet written"
+        bits = 8 if (args.bit_depth == 8 or value_cols != ["q"]) else 16
+        manifest = write_geotiffs(res, image_dir, ["product_id"], value_cols, bits=bits)
+    else:  # quality 100, as the reference's JPEG writer (jpeg.rs:6-30)
+        manifest = write_jpegs(res, image_dir, ["product_id"], value_cols, quality=100)
+    report[f"{args.fmt}_files"] = manifest.count()
+    report[f"{args.fmt}_dir"] = image_dir
     report["elapsed_sec"] = round(time.time() - t0, 3)
     print(json.dumps(report))
     return 0

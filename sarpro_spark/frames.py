@@ -12,12 +12,21 @@ row-major order per product (row_number over a unique key), 64 columns wide,
 with two co-registered bands (vv from extendedprice, vh from quantity). The
 identical derivation is expressed as the ``PX_CTE`` SQL fragment so every
 raster operator has a DuckDB-checkable analog.
+
+Inside a per-product pandas task a band is a dense 2-D array (the reference's
+``Array2<f32>``); between tasks it is the long pixel frame ``(keys..., row,
+col, values...)``. The pixel-grid codec at the end of this module
+(:func:`keyed_schema`, :func:`to_grid`, :func:`to_rows`) is the one
+conversion between the two.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 TABLES = (
@@ -136,3 +145,37 @@ px AS (
   ) t
 )
 """.strip()
+
+
+# --- pixel-grid codec: long pixel frame <-> dense per-product array ----------
+
+
+def keyed_schema(df: DataFrame, keys: list[str], fields: str) -> StructType:
+    """Output schema of a per-product task: ``df``'s key fields, then
+    ``fields`` as a DDL string such as ``"row int, col int, q int"``."""
+    return StructType([df.schema[k] for k in keys] + StructType.fromDDL(fields).fields)
+
+
+def to_grid(pdf: pd.DataFrame, names: list[str], dtype=np.float64) -> np.ndarray:
+    """Pixel rows -> zero-filled dense array sized by the row/col maxima:
+    ``(rows, cols)`` for one value column, ``(rows, cols, k)`` for k."""
+    r, c = pdf["row"].to_numpy(), pdf["col"].to_numpy()
+    grid = np.zeros((int(r.max()) + 1, int(c.max()) + 1, len(names)), dtype=dtype)
+    for i, name in enumerate(names):
+        grid[r, c, i] = pdf[name].to_numpy()
+    return grid[:, :, 0] if len(names) == 1 else grid
+
+
+def to_rows(keys: dict, names: list[str], values: np.ndarray, at=None) -> pd.DataFrame:
+    """Array -> pixel rows ``(keys..., row, col, names...)``. Without ``at``,
+    ``values`` is a dense array shaped as :func:`to_grid` returns and every
+    cell is emitted in row-major order; with ``at=(rows, cols)``, ``values``
+    holds one entry (or one row of k) per position. Each key is a scalar or
+    a per-row array."""
+    if at is None:
+        at = np.divmod(np.arange(values.shape[0] * values.shape[1]), values.shape[1])
+    flat = values.reshape(len(at[0]), len(names))
+    return pd.DataFrame(
+        {**keys, "row": at[0].astype(np.int32), "col": at[1].astype(np.int32)}
+        | {name: flat[:, i] for i, name in enumerate(names)}
+    )

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sarpro_spark import frames
+
 
 def calculate_resize_dimensions(cols: int, rows: int, target: int) -> tuple[int, int]:
     """G1 (pure): returns (new_cols, new_rows)."""
@@ -190,7 +192,12 @@ def _lanczos_weights(src: int, dst: int, a: int = 3) -> tuple[np.ndarray, np.nda
 
 
 def lanczos_resize_array(img: np.ndarray, new_rows: int, new_cols: int, a: int = 3) -> np.ndarray:
-    """Separable Lanczos-a resample of a 2-D array (float64 accumulation)."""
+    """Separable Lanczos-a resample of a 2-D array (float64 accumulation);
+    a ``(rows, cols, k)`` array is resampled one channel at a time."""
+    if img.ndim == 3:
+        return np.stack(
+            [lanczos_resize_array(img[:, :, i], new_rows, new_cols, a) for i in range(img.shape[2])], axis=2
+        )
     rows, cols = img.shape
     startc, wc = _lanczos_weights(cols, new_cols, a)
     idxc = np.minimum(startc[:, None] + np.arange(wc.shape[1])[None, :], cols - 1)
@@ -205,46 +212,25 @@ def lanczos_resize_grouped(
     px: DataFrame,
     group_cols: list[str],
     target_size: int,
-    value: str = "q",
+    value_cols: list[str] = ("q",),
     clamp_max: int = 255,
 ) -> DataFrame:
-    """G2/G3: per-product Lanczos3 resize to ``target_size`` long side via
-    applyInPandas — each product is one grouped-map task (the reference's unit
-    of work), Arrow both ways, no driver involvement."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    key_fields = [px.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [
-            StructField("row", IntegerType()),
-            StructField("col", IntegerType()),
-            StructField(value, IntegerType()),
-        ]
-    )
+    """G2/G3: per-product Lanczos3 resize of every ``value_cols`` channel to
+    ``target_size`` long side via applyInPandas — each product is one
+    grouped-map task (the reference's unit of work), Arrow both ways, no
+    driver involvement."""
+    schema = frames.keyed_schema(px, group_cols, ", ".join(f"`{c}` int" for c in ["row", "col", *value_cols]))
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = int(pdf["row"].max()) + 1
-        cols = int(pdf["col"].max()) + 1
-        img = np.zeros((rows, cols), dtype=np.float64)
-        img[pdf["row"].to_numpy(), pdf["col"].to_numpy()] = pdf[value].to_numpy(dtype=np.float64)
+        img = frames.to_grid(pdf, value_cols)
+        rows, cols = img.shape[:2]
         new_cols, new_rows = calculate_resize_dimensions(cols, rows, target_size)
         if (new_cols, new_rows) == (cols, rows):
             res = img
         else:
             res = lanczos_resize_array(img, new_rows, new_cols)
         res = np.clip(np.floor(res + 0.5), 0, clamp_max).astype(np.int32)
-        rr, cc = np.meshgrid(np.arange(res.shape[0]), np.arange(res.shape[1]), indexing="ij")
-        out = pd.DataFrame(
-            {
-                "row": rr.ravel().astype(np.int32),
-                "col": cc.ravel().astype(np.int32),
-                value: res.ravel(),
-            }
-        )
-        for c in group_cols:
-            out.insert(0, c, pdf[c].iloc[0])
-        return out
+        return frames.to_rows({c: pdf[c].iloc[0] for c in group_cols}, value_cols, res)
 
     return px.groupBy(*group_cols).applyInPandas(fn, schema=schema)
 

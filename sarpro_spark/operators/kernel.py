@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from sarpro_spark import frames
 from sarpro_spark.types import (
     AutoscaleStrategy,
     BitDepth,
@@ -246,15 +247,7 @@ def multiband_synrgb_kernel(
     stats -> A7 band-specific U8 -> C1/C2 composite. Input (group..., row,
     col, v1, v2); output (group..., row, col, r, g, b). f64 formulas —
     bit-identical to the relational synrgb queries and their oracles."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    key_fields = [wide.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [StructField("row", IntegerType()), StructField("col", IntegerType()),
-           StructField("r", IntegerType()), StructField("g", IntegerType()),
-           StructField("b", IntegerType())]
-    )
+    schema = frames.keyed_schema(wide, group_cols, "row int, col int, r int, g int, b int")
 
     def band_q(pdf: pd.DataFrame, col: str, is_copol: bool) -> np.ndarray:
         v = pdf[col].to_numpy(dtype=np.float64)
@@ -273,13 +266,11 @@ def multiband_synrgb_kernel(
             r, g, b = synrgb_suppressed_np(q1, q2)
         else:
             r, g, b = synrgb_default_np(q1, q2)
-        out = pd.DataFrame(
-            {"row": pdf["row"].to_numpy(np.int32), "col": pdf["col"].to_numpy(np.int32),
-             "r": r.astype(np.int32), "g": g.astype(np.int32), "b": b.astype(np.int32)}
+        return frames.to_rows(
+            {c: pdf[c].iloc[0] for c in group_cols}, ["r", "g", "b"],
+            np.stack([r, g, b], axis=1).astype(np.int32),
+            at=(pdf["row"].to_numpy(), pdf["col"].to_numpy()),
         )
-        for c in group_cols:
-            out.insert(0, c, pdf[c].iloc[0])
-        return out
 
     return wide.groupBy(*group_cols).applyInPandas(fn, schema=schema)
 
@@ -312,7 +303,6 @@ def single_band_kernel_tiled(
     is spatial (tile neighborhoods) and not tileable this way — use the full
     kernel or the relational CLAHE."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     from sarpro_spark.operators import autoscale as asc
     from sarpro_spark.operators import elementwise as ew
@@ -330,12 +320,7 @@ def single_band_kernel_tiled(
     quant_max = 255.0 if bit_depth == BitDepth.U8 else 65535.0
 
     joined = pxdb.join(F.broadcast(params), group_cols)
-    key_fields = [px.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [StructField("row", IntegerType()), StructField("col", IntegerType()),
-           StructField("q", IntegerType())]
-    )
+    schema = frames.keyed_schema(px, group_cols, "row int, col int, q int")
 
     def fn(batches):
         for pdf in batches:
@@ -349,13 +334,10 @@ def single_band_kernel_tiled(
                     c["gamma"].to_numpy(dtype=np.float64),
                     quant_max,
                 )
-                out = pd.DataFrame(
-                    {"row": c["row"].to_numpy(np.int32), "col": c["col"].to_numpy(np.int32),
-                     "q": q.astype(np.int32)}
+                yield frames.to_rows(
+                    {g: c[g].to_numpy() for g in group_cols}, ["q"], q.astype(np.int32),
+                    at=(c["row"].to_numpy(), c["col"].to_numpy()),
                 )
-                for g in reversed(group_cols):
-                    out.insert(0, g, c[g].to_numpy())
-                yield out
 
     q16 = joined.mapInPandas(fn, schema=schema)
     if bit_depth == BitDepth.U8:
@@ -380,22 +362,13 @@ def single_band_kernel(
     dB/mask -> stats -> strategy params (or CLAHE) -> quantize (+ U8 double
     quantization). Input (group..., row, col, v); output (group..., row, col,
     q)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    key_fields = [px.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [StructField("row", IntegerType()), StructField("col", IntegerType()),
-           StructField("q", IntegerType())]
-    )
+    schema = frames.keyed_schema(px, group_cols, "row int, col int, q int")
     max_val = 255.0 if bit_depth == BitDepth.U8 else 65535.0
     is_clahe = strategy == AutoscaleStrategy.CLAHE
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = int(pdf["row"].max()) + 1
-        cols = int(pdf["col"].max()) + 1
-        img = np.zeros((rows, cols))
-        img[pdf["row"].to_numpy(), pdf["col"].to_numpy()] = pdf[value].to_numpy(dtype=np.float64)
+        img = frames.to_grid(pdf, [value])
+        rows, cols = img.shape
         mag = np.maximum(img, EPS_INTENSITY)
         db = 10.0 * np.log10(mag)
         valid = db > DB_VALID_THRESHOLD
@@ -413,14 +386,7 @@ def single_band_kernel(
             q = scale_u16_to_u8_np(q)
         # emit only the input pixel positions (the grid may be ragged in its
         # last row; padding cells are the padding operator's job, not ours)
-        pr = pdf["row"].to_numpy()
-        pc = pdf["col"].to_numpy()
-        out = pd.DataFrame(
-            {"row": pr.astype(np.int32), "col": pc.astype(np.int32),
-             "q": q[pr, pc].astype(np.int32)}
-        )
-        for c in group_cols:
-            out.insert(0, c, pdf[c].iloc[0])
-        return out
+        at = pdf["row"].to_numpy(), pdf["col"].to_numpy()
+        return frames.to_rows({c: pdf[c].iloc[0] for c in group_cols}, ["q"], q[at].astype(np.int32), at)
 
     return px.groupBy(*group_cols).applyInPandas(fn, schema=schema)

@@ -9,13 +9,13 @@ partitioned by product_id, and Tungsten handles staging/spill. The sequential-
 staging trick is superseded by lazy evaluation (SURVEY §4).
 
 Plan shape per product (single band, W9):
-  scan -> dB+mask (fused projection) -> stats (2 shuffles) -> broadcast params
-  -> quantize (fused) -> optional Lanczos resize (grouped pandas task) ->
-  optional pad (canvas join) -> gt update (metadata-grain column math)
+  scan -> one grouped pandas task (dB+mask -> stats -> params -> quantize) ->
+  optional Lanczos resize (grouped pandas task) -> optional pad (canvas join)
+  -> gt update (metadata-grain column math)
 
-Multiband (W10): band1 and band2 flow through the same stats/quantize plan
-keyed by (product, band) — Spark runs them concurrently instead of
-sequentially; the JPEG path applies A7 per band then the synRGB compositor.
+Multiband (W10): band1 and band2 are paired on (product, row, col) and one
+grouped pandas task per product applies A7 per band, then the synRGB
+compositor.
 """
 
 from __future__ import annotations
@@ -25,12 +25,9 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sarpro_spark.operators import autoscale as asc
-from sarpro_spark.operators import clahe as clh
 from sarpro_spark.operators import elementwise as ew
 from sarpro_spark.operators import geometry as geom
-from sarpro_spark.operators import synrgb as srgb
-from sarpro_spark.operators.stats import histogram_stats
+from sarpro_spark.operators import kernel as krn
 from sarpro_spark.types import (
     AutoscaleStrategy,
     BitDepth,
@@ -40,43 +37,24 @@ from sarpro_spark.types import (
 )
 
 
-def quantize_with_strategy(
-    px: DataFrame, group_cols: list[str], strategy: AutoscaleStrategy, bit_depth: BitDepth
-) -> DataFrame:
-    """Strategy dispatch incl. the CLAHE special path (pipeline.rs:51-67,
-    autoscale.rs:572-608). Output column ``q``."""
-    if strategy == AutoscaleStrategy.CLAHE:
-        return clh.clahe_quantize(px, group_cols, bit_depth)
-    return asc.autoscale_to_bitdepth(px, group_cols, strategy, bit_depth)
-
-
 def single_band_pipeline(
     band: DataFrame,
     params: ProcessingParams,
     group_cols: list[str] = ("product_id",),
-    use_kernel: bool = True,
 ) -> DataFrame:
     """W9 (save.rs:23-170): dB -> autoscale(strategy, bit depth) -> optional
     resize -> optional pad. Input: (group..., row, col, v).
 
-    ``use_kernel=True`` (default) runs the per-product grouped NumPy kernel —
-    one task per product, zero intermediate shuffles, bit-identical to the
-    relational operators (tests/test_kernel.py) and ~10x faster end-to-end.
-    The relational path remains for oracle verification and for deployments
-    where a product exceeds one task's memory."""
+    The autoscale runs as the per-product grouped NumPy kernel — one task per
+    product, zero intermediate shuffles, bit-identical to the relational
+    operators (tests/test_kernel.py). Products too large for one task go
+    through ``kernel.single_band_kernel_tiled`` instead."""
     group_cols = list(group_cols)
-    if use_kernel:
-        from sarpro_spark.operators import kernel as krn
-
-        strategy = "standard-a2" if params.autoscale == AutoscaleStrategy.STANDARD else params.autoscale
-        out = krn.single_band_kernel(band, group_cols, strategy, params.bit_depth)
-    else:
-        px = ew.with_db_mask(band)
-        q = quantize_with_strategy(px, group_cols, params.autoscale, params.bit_depth)
-        out = q.select(*group_cols, "row", "col", "q")
+    strategy = "standard-a2" if params.autoscale == AutoscaleStrategy.STANDARD else params.autoscale
+    out = krn.single_band_kernel(band, group_cols, strategy, params.bit_depth)
     if params.size is not None:
         clamp_max = 255 if params.bit_depth == BitDepth.U8 else 65535
-        out = geom.lanczos_resize_grouped(out, group_cols, params.size, value="q", clamp_max=clamp_max)
+        out = geom.lanczos_resize_grouped(out, group_cols, params.size, value_cols=["q"], clamp_max=clamp_max)
     if params.pad:
         out = geom.pad_to_square(out, group_cols, value="q", fill=0)
     return out
@@ -102,54 +80,28 @@ def multiband_synrgb_pipeline(
     copol: str = "vv",
     crosspol: str = "vh",
 ) -> DataFrame:
-    """W10 JPEG path (save.rs:286-406): per-band A7 Tamed-synRGB U8 scale,
-    then the strategy-dispatched compositor (Tamed/Clahe -> suppressed C2,
-    else default C1 — synthetic_rgb.rs:182-197)."""
+    """W10 JPEG path (save.rs:286-406): the two bands paired on the pixel
+    key, then per product in one grouped task the A7 Tamed-synRGB U8 scale
+    of each band and the strategy-dispatched compositor (Tamed/Clahe ->
+    suppressed C2, else default C1 — synthetic_rgb.rs:182-197); optional
+    resize of r, g and b in one grouped task, then optional pad."""
     group_cols = list(group_cols)
-    gb = [*group_cols, "band"]
-    px = ew.with_db_mask(band_long)
-    stats = histogram_stats(px, gb)
-    low = F.when(F.col("band") == copol, F.least(F.col("p02"), F.col("p05"))).otherwise(F.col("p05"))
-    p = stats.select(
-        *gb,
-        low.alias("low"),
-        F.col("p99").alias("high"),
-        F.lit(1.0).alias("gamma"),
-        F.greatest(F.col("p99") - low, F.lit(1.0)).alias("qrange"),
+    keys = [*group_cols, "row", "col"]
+
+    def band(name: str) -> DataFrame:
+        return band_long.where(F.col("band") == name).select(*keys, F.col("v").alias(name))
+
+    suppressed = params.autoscale in (AutoscaleStrategy.TAMED, AutoscaleStrategy.CLAHE)
+    out = krn.multiband_synrgb_kernel(
+        band(copol).join(band(crosspol), keys), group_cols, suppressed=suppressed, v1=copol, v2=crosspol
     )
-    q8 = asc.apply_params(px, p, gb, BitDepth.U8)
-    wide = (
-        q8.groupBy(*group_cols, "row", "col")
-        .pivot("band", [copol, crosspol])
-        .agg(F.first("q"))
-        .withColumnRenamed(copol, "q1")
-        .withColumnRenamed(crosspol, "q2")
-    )
-    if params.autoscale in (AutoscaleStrategy.TAMED, AutoscaleStrategy.CLAHE):
-        rgb = srgb.synrgb_suppressed(wide, group_cols, "q1", "q2")
-    else:
-        rgb = srgb.synrgb_default(wide, "q1", "q2")
-    out = rgb.select(*group_cols, "row", "col", "r", "g", "b")
     if params.size is not None:
-        # resize each channel; one grouped task per (product, channel)
-        chans = []
-        for ch in ("r", "g", "b"):
-            c = out.select(*group_cols, "row", "col", F.col(ch).alias("q"))
-            c = geom.lanczos_resize_grouped(c, group_cols, params.size, value="q")
-            chans.append(c.withColumnRenamed("q", ch))
-        a, b, c = chans
-        out = a.join(b, [*group_cols, "row", "col"]).join(c, [*group_cols, "row", "col"])
+        out = geom.lanczos_resize_grouped(out, group_cols, params.size, value_cols=["r", "g", "b"])
     if params.pad:
         out = (
-            geom.pad_to_square(out.select(*group_cols, "row", "col", "r"), group_cols, value="r", fill=0)
-            .join(
-                geom.pad_to_square(out.select(*group_cols, "row", "col", "g"), group_cols, value="g", fill=0),
-                [*group_cols, "row", "col"],
-            )
-            .join(
-                geom.pad_to_square(out.select(*group_cols, "row", "col", "b"), group_cols, value="b", fill=0),
-                [*group_cols, "row", "col"],
-            )
+            geom.pad_to_square(out.select(*keys, "r"), group_cols, value="r", fill=0)
+            .join(geom.pad_to_square(out.select(*keys, "g"), group_cols, value="g", fill=0), keys)
+            .join(geom.pad_to_square(out.select(*keys, "b"), group_cols, value="b", fill=0), keys)
         )
     return out
 

@@ -225,7 +225,7 @@ def q_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         gt_cols=("gt0", "gt1", "gt2", "gt3", "gt4", "gt5"),
         compression_col="comp", tiled_col="tiled",
     )
-    back = w.read_tiffs_px(manifest, ["q", "q_inv"], ["product_id"])
+    back = w.read_images_px(manifest, ["q", "q_inv"], ["product_id"])
     # the synthetic px grid is ragged (per-product counts vary, partial last
     # row) while TIFF rasters are rectangular — compare on the original
     # footprint; the canvas fill cells outside it are write padding
@@ -274,7 +274,7 @@ def q_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged, out_dir, ["product_id"], ["r", "g", "b"],
         quality=92, gt_cols=("gt0", "gt1", "gt2", "gt3", "gt4", "gt5"),
     )
-    back = w.read_jpegs_px(manifest, ["r", "g", "b"], ["product_id"])
+    back = w.read_images_px(manifest, ["r", "g", "b"], ["product_id"])
     orig = rgb.select(
         "product_id", "row", "col",
         F.col("r").alias("r0"), F.col("g").alias("g0"), F.col("b").alias("b0"),

@@ -4,9 +4,9 @@ Reference: /root/reference/src/io/writers/ (studied, not copied).
 
 The relational engine's primary sink is partitioned Parquet (columnar,
 predicate-pushdown-friendly — what a 100 TB consumer reads back). Image
-encodes (W1-W3: GeoTIFF/JPEG) happen per product inside foreachPartition so
-no pixel data crosses the driver; actual byte encoding is stubbed behind an
-import-try since PIL/GDAL are absent here.
+encodes (W1-W3: GeoTIFF/JPEG) happen per product inside a grouped pandas
+task, so no pixel data crosses the driver; the bytes come from the in-repo
+pure-Python codecs ``sinks/tiff.py`` and ``sinks/jpeg.py``.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from sarpro_spark import frames
 
 # --- W6: metadata field extraction + operation-aware polarization label ------
 
@@ -159,7 +161,7 @@ def tiff_embed_plan(
     """W7 (metadata.rs:297-341): what gets embedded in a GeoTIFF —
     geotransform skipped when identity, projection written ONLY IF a
     non-identity geotransform was set, all metadata items always. Returns the
-    embed plan (the writer stub consumes it; the rules are the operator)."""
+    embed plan (:func:`write_geotiffs` applies the same rules when it writes)."""
     set_gt = geotransform is not None and geotransform != IDENTITY_GT
     set_proj = set_gt and projection is not None
     return {
@@ -214,7 +216,29 @@ def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 
 
-# --- W1/W2: GeoTIFF encode (pure-Python codec, executor-side) ----------------
+# --- W1/W2/W3: image encode + read-back (pure-Python codecs, executor-side) --
+
+#: manifest fields every image writer returns after the product's keys
+_MANIFEST = "path string, rows int, cols int, n_bands int, n_bytes bigint"
+
+
+def _image_path(pdf, group_cols: list[str], out_dir: str, ext: str) -> str:
+    """One file per product, named after its group key."""
+    stem = "_".join(str(pdf[g].iloc[0]) for g in group_cols).replace("/", "_")
+    os.makedirs(out_dir, exist_ok=True)
+    return os.path.join(out_dir, f"{stem}.{ext}")
+
+
+def _manifest_row(pdf, group_cols: list[str], path: str, arr, n_bands: int, n_bytes: int, **extra):
+    """The one row a writer returns per product: its keys, then ``_MANIFEST``
+    and ``extra``."""
+    import pandas as pd
+
+    keys = {g: pdf[g].iloc[0] for g in group_cols}
+    return pd.DataFrame(
+        {**keys, "path": [path], "rows": [arr.shape[0]], "cols": [arr.shape[1]],
+         "n_bands": [n_bands], "n_bytes": [n_bytes]} | {k: [v] for k, v in extra.items()}
+    )
 
 
 def write_geotiffs(
@@ -237,142 +261,58 @@ def write_geotiffs(
     embedded, projection sidecar (.prj, W5) written only when a non-identity
     geotransform was set. ``out_dir`` must be shared storage on a cluster."""
     import numpy as np
-    import pandas as pd
 
     from sarpro_spark.sinks.tiff import write_tiff
 
     dtype = np.uint8 if bits == 8 else np.uint16
-    key_fields = [px.schema[c] for c in group_cols]
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    schema = frames.keyed_schema(px, group_cols, f"{_MANIFEST}, embedded_gt string")
 
-    schema = StructType(
-        key_fields
-        + [
-            StructField("path", StringType()),
-            StructField("rows", IntegerType()),
-            StructField("cols", IntegerType()),
-            StructField("n_bands", IntegerType()),
-            StructField("n_bytes", LongType()),
-            StructField("embedded_gt", StringType()),
-        ]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = int(pdf["row"].max()) + 1
-        cols = int(pdf["col"].max()) + 1
-        arr = np.zeros((rows, cols, len(value_cols)), dtype=dtype)
-        r, c = pdf["row"].to_numpy(), pdf["col"].to_numpy()
-        for i, vc in enumerate(value_cols):
-            arr[r, c, i] = pdf[vc].to_numpy()
+    def fn(pdf):
+        arr = frames.to_grid(pdf, value_cols, dtype)
         gt = None
         if gt_cols is not None:
             gt = [float(pdf[g].iloc[0]) for g in gt_cols]
             if gt == IDENTITY_GT:  # W7: identity never embedded
                 gt = None
         desc = str(pdf[description_col].iloc[0]) if description_col else None
-        stem = "_".join(str(pdf[g].iloc[0]) for g in group_cols).replace("/", "_")
-        path = os.path.join(out_dir, f"{stem}.tif")
-        os.makedirs(out_dir, exist_ok=True)
+        path = _image_path(pdf, group_cols, out_dir, "tif")
         comp = str(pdf[compression_col].iloc[0]) if compression_col else compression
         tiled = bool(pdf[tiled_col].iloc[0]) if tiled_col else False
-        n = write_tiff(path, arr[:, :, 0] if len(value_cols) == 1 else arr,
-                       geotransform=gt, description=desc, compression=comp,
+        n = write_tiff(path, arr, geotransform=gt, description=desc, compression=comp,
                        tile_size=(16, 16) if tiled else None)
         if gt is not None and projection_col is not None:  # W7 projection rule
             write_prj(path, str(pdf[projection_col].iloc[0]))
-        out = pd.DataFrame(
-            {
-                "path": [path],
-                "rows": [rows],
-                "cols": [cols],
-                "n_bands": [len(value_cols)],
-                "n_bytes": [n],
-                "embedded_gt": [json.dumps(gt) if gt is not None else None],
-            }
-        )
-        for g in reversed(group_cols):
-            out.insert(0, g, pdf[g].iloc[0])
-        return out
+        return _manifest_row(pdf, group_cols, path, arr, len(value_cols), n,
+                             embedded_gt=json.dumps(gt) if gt is not None else None)
 
     return px.groupBy(*group_cols).applyInPandas(fn, schema=schema)
 
 
-def read_tiffs_px(manifest: DataFrame, value_cols: list[str], group_cols: list[str]) -> DataFrame:
-    """S4 read-back over a write manifest: mapInPandas decodes each TIFF
-    executor-side and emits the dense (group, row, col, values...) frame —
-    the inverse of :func:`write_geotiffs`, used by the roundtrip
-    certification query."""
-    import numpy as np
-    import pandas as pd
-
-    from sarpro_spark.sinks.tiff import read_tiff
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    key_fields = [manifest.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [StructField("row", IntegerType()), StructField("col", IntegerType())]
-        + [StructField(vc, IntegerType()) for vc in value_cols]
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            for _, rec in pdf.iterrows():
-                arr, _meta = read_tiff(rec["path"])
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                rows, cols, _ = arr.shape
-                rr, cc = np.meshgrid(np.arange(rows), np.arange(cols), indexing="ij")
-                out = pd.DataFrame({"row": rr.ravel().astype(np.int32), "col": cc.ravel().astype(np.int32)})
-                for i, vc in enumerate(value_cols):
-                    out[vc] = arr[:, :, i].ravel().astype(np.int32)
-                for g in reversed(group_cols):
-                    out.insert(0, g, rec[g])
-                yield out
-
-    return manifest.mapInPandas(fn, schema=schema)
-
-
-def read_jpegs_px(manifest: DataFrame, value_cols: list[str], group_cols: list[str]) -> DataFrame:
-    """Read-back over a :func:`write_jpegs` manifest: mapInPandas decodes each
-    .jpg executor-side and emits the dense (group, row, col, values...) frame
-    — used by the jpeg_roundtrip certification query (JPEG is lossy, so the
+def read_images_px(manifest: DataFrame, value_cols: list[str], group_cols: list[str]) -> DataFrame:
+    """S4 read-back over a :func:`write_geotiffs` or :func:`write_jpegs`
+    manifest: mapInPandas decodes each file executor-side (TIFF or JPEG,
+    picked by the file suffix) and emits the dense (group, row, col,
+    values...) frame — the writers' inverse, used by the tiff_roundtrip and
+    jpeg_roundtrip certification queries (JPEG is lossy, so its
     certification is a PSNR bound, not pixel equality)."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     from sarpro_spark.sinks.jpeg import decode_jpeg
+    from sarpro_spark.sinks.tiff import read_tiff
 
-    key_fields = [manifest.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [StructField("row", IntegerType()), StructField("col", IntegerType())]
-        + [StructField(vc, IntegerType()) for vc in value_cols]
-    )
+    schema = frames.keyed_schema(manifest, group_cols, ", ".join(f"`{c}` int" for c in ["row", "col", *value_cols]))
+
+    def decode(path: str):
+        if path.lower().endswith((".tif", ".tiff")):
+            return read_tiff(path)[0]
+        with open(path, "rb") as fh:
+            return decode_jpeg(fh.read())
 
     def fn(batches):
         for pdf in batches:
             for _, rec in pdf.iterrows():
-                with open(rec["path"], "rb") as fh:
-                    arr = decode_jpeg(fh.read())
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                rows, cols, _ = arr.shape
-                rr, cc = np.meshgrid(np.arange(rows), np.arange(cols), indexing="ij")
-                out = pd.DataFrame({"row": rr.ravel().astype(np.int32), "col": cc.ravel().astype(np.int32)})
-                for i, vc in enumerate(value_cols):
-                    out[vc] = arr[:, :, i].ravel().astype(np.int32)
-                for g in reversed(group_cols):
-                    out.insert(0, g, rec[g])
-                yield out
+                arr = decode(rec["path"]).astype(np.int32)
+                yield frames.to_rows({g: rec[g] for g in group_cols}, value_cols, arr)
 
     return manifest.mapInPandas(fn, schema=schema)
 
@@ -395,46 +335,14 @@ def write_jpegs(
     mirroring the reference's JPEG save path. ``value_cols`` of length 3 =
     RGB, length 1 = grayscale."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     from sarpro_spark.sinks.jpeg import encode_jpeg
 
-    key_fields = [rgb.schema[c] for c in group_cols]
-    schema = StructType(
-        key_fields
-        + [
-            StructField("path", StringType()),
-            StructField("rows", IntegerType()),
-            StructField("cols", IntegerType()),
-            StructField("n_bands", IntegerType()),
-            StructField("n_bytes", LongType()),
-            StructField("sidecars", StringType()),
-        ]
-    )
-    vcols = list(value_cols)
+    schema = frames.keyed_schema(rgb, group_cols, f"{_MANIFEST}, sidecars string")
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = int(pdf["row"].max()) + 1
-        cols = int(pdf["col"].max()) + 1
-        r, c = pdf["row"].to_numpy(), pdf["col"].to_numpy()
-        if len(vcols) == 1:
-            arr = np.zeros((rows, cols), dtype=np.uint8)
-            arr[r, c] = pdf[vcols[0]].to_numpy()
-        else:
-            arr = np.zeros((rows, cols, 3), dtype=np.uint8)
-            for i, vc in enumerate(vcols):
-                arr[r, c, i] = pdf[vc].to_numpy()
-        stem = "_".join(str(pdf[g].iloc[0]) for g in group_cols).replace("/", "_")
-        path = os.path.join(out_dir, f"{stem}.jpg")
-        os.makedirs(out_dir, exist_ok=True)
+    def fn(pdf):
+        arr = frames.to_grid(pdf, value_cols, np.uint8)
+        path = _image_path(pdf, group_cols, out_dir, "jpg")
         data = encode_jpeg(arr, quality=quality)
         with open(path, "wb") as fh:
             fh.write(data)
@@ -449,18 +357,7 @@ def write_jpegs(
                 if projection_col is not None:
                     write_prj(path, str(pdf[projection_col].iloc[0]))
                     sidecars.append(os.path.basename(os.path.splitext(path)[0] + ".prj"))
-        out = pd.DataFrame(
-            {
-                "path": [path],
-                "rows": [rows],
-                "cols": [cols],
-                "n_bands": [len(vcols)],
-                "n_bytes": [len(data)],
-                "sidecars": [json.dumps(sidecars)],
-            }
-        )
-        for g in reversed(group_cols):
-            out.insert(0, g, pdf[g].iloc[0])
-        return out
+        return _manifest_row(pdf, group_cols, path, arr, len(value_cols), len(data),
+                             sidecars=json.dumps(sidecars))
 
     return rgb.groupBy(*group_cols).applyInPandas(fn, schema=schema)

@@ -7,10 +7,10 @@ through discovery -> metadata parse -> viability check as column/UDF logic, so
 a 1000-executor cluster opens thousands of products concurrently and failures
 become a status column (S2's error-tolerant open) instead of control flow.
 
-Raster decode (GDAL) is not available in this environment; band loading is
-stubbed behind an import-try (S4/S5), while everything driver-shaped —
-directory iteration, polarization file classification, XML metadata parsing,
-auto-CRS resolution — is real and tested.
+Band loading (S4/S5) decodes the measurement TIFFs with the in-repo
+pure-Python codec (``sinks/tiff.py``, no GDAL) inside executor tasks; the
+driver-shaped parts — directory iteration, polarization file classification,
+XML metadata parsing, auto-CRS resolution — run as column/UDF logic.
 """
 
 from __future__ import annotations
@@ -247,8 +247,8 @@ def lonlat_to_epsg(lon: float, lat: float) -> str:
 
 def resolve_auto_target_crs_from_centroid(lon: float, lat: float) -> str:
     """S10 wrapper: the reference derives the centroid from GCPs via GDAL or
-    `gdalinfo -json`; with rasters stubbed, the centroid arrives as data
-    (avg(lon), avg(lat) aggregation in the GCP frame)."""
+    `gdalinfo -json`; here the centroid arrives as data (the avg(lon),
+    avg(lat) aggregation over the GCP frame)."""
     return lonlat_to_epsg(lon, lat)
 
 
@@ -449,42 +449,18 @@ def read_bands_px(
     frame the operator pipeline consumes. The pixel payload never exists on
     the driver."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from sarpro_spark import frames
 
     path_col = f"{band}_path"
-    schema = StructType(
-        [
-            StructField("product_path", StringType()),
-            StructField("row", IntegerType()),
-            StructField("col", IntegerType()),
-            StructField(value, DoubleType()),
-        ]
-    )
+    schema = frames.keyed_schema(products, ["product_path"], f"row int, col int, `{value}` double")
 
     def fn(batches):
         for pdf in batches:
             for _, rec in pdf.iterrows():
-                if not rec[path_col]:
-                    continue
-                arr = load_band(rec[path_col], target_size)
-                rows, cols = arr.shape
-                rr, cc = np.meshgrid(np.arange(rows), np.arange(cols), indexing="ij")
-                yield pd.DataFrame(
-                    {
-                        "product_path": rec["product_path"],
-                        "row": rr.ravel().astype(np.int32),
-                        "col": cc.ravel().astype(np.int32),
-                        value: arr.ravel().astype(np.float64),
-                    }
-                )
+                if rec[path_col]:
+                    arr = load_band(rec[path_col], target_size).astype(np.float64)
+                    yield frames.to_rows({"product_path": rec["product_path"]}, [value], arr)
 
     cols = ["product_path", path_col]
     return products.select(*cols).repartition("product_path").mapInPandas(fn, schema=schema)

@@ -77,6 +77,40 @@ def test_cli_end_to_end(spark, sf_dir, tmp_path):
     assert arr.dtype == np.uint16 and arr.ndim == 2 and arr.size > 0
 
 
+def test_cli_multiband_jpeg(spark, sf_dir, tmp_path):
+    """--format jpeg writes one JPEG per product that decodes back to the
+    parquet's r, g and b within the jpeg_roundtrip bound (PSNR >= 30 dB);
+    JPEG is 8-bit, so --bit-depth 16 fails loudly."""
+    import os
+
+    import numpy as np
+
+    from sarpro_spark import frames
+    from sarpro_spark.sinks.jpeg import decode_jpeg
+
+    inp = str(tmp_path / "band_long.parquet")
+    outp = str(tmp_path / "out")
+    frames.band_long(spark, sf_dir).write.parquet(inp)
+    argv = [
+        sys.executable, "-m", "sarpro_spark", "-i", inp, "-o", outp,
+        "--polarization", "multiband", "--format", "jpeg", "--master", "local[4]",
+    ]
+    bad = subprocess.run(argv + ["--bit-depth", "16"], capture_output=True, text=True, timeout=300)
+    assert bad.returncode != 0 and "8-bit" in bad.stderr
+
+    proc = subprocess.run(argv, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    rgb = spark.read.parquet(outp).toPandas()
+    assert report["jpeg_files"] == rgb["product_id"].nunique() > 0
+    for pid, px in rgb.groupby("product_id"):
+        with open(os.path.join(report["jpeg_dir"], f"{pid}.jpg"), "rb") as fh:
+            got = decode_jpeg(fh.read())
+        err = got[px["row"], px["col"]].astype(float) - px[["r", "g", "b"]].to_numpy(float)
+        psnr = 10 * np.log10(255.0**2 / max(float(np.mean(err**2)), 1e-12))
+        assert psnr >= 30.0, (pid, psnr)
+
+
 def test_preset_save_load_roundtrip(tmp_path):
     """GUI preset analog (models.rs:208-433): --save-preset writes the
     resolved params JSON; --load-preset restores them as defaults with

@@ -85,7 +85,7 @@ def test_lanczos_resize_grouped(spark):
     rows, cols = 12, 16
     data = [("p", r, c, int(10 + (r * cols + c) % 200)) for r in range(rows) for c in range(cols)]
     px = spark.createDataFrame(data, "g string, row int, col int, q int")
-    out = geom.lanczos_resize_grouped(px, ["g"], target_size=8, value="q")
+    out = geom.lanczos_resize_grouped(px, ["g"], target_size=8, value_cols=["q"])
     rows_out = out.collect()
     # 16x12 -> long side 16 -> 8, short 12*(8/16)=6
     assert len(rows_out) == 8 * 6

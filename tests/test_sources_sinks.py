@@ -248,12 +248,49 @@ def test_full_pipeline_smoke(spark, sf_dir):
     p2 = ProcessingParams(operation=PolarizationOperation.RATIO, pad=True)
     out2 = build_pipeline(long, p2)
     assert out2.count() > 0
-    # multiband synRGB JPEG route with resize
-    p3 = ProcessingParams(polarization=Polarization.MULTIBAND, format=OutputFormat.JPEG,
-                          autoscale=AutoscaleStrategy.TAMED, size=32)
-    out3 = build_pipeline(long, p3)
-    rows = out3.limit(5).collect()
-    assert {"r", "g", "b"} <= set(out3.columns) and len(rows) > 0
+    # multiband synRGB JPEG routes: every pixel equals the kernel's numpy
+    # reference chain (A1 stats -> A7 window -> quantize -> C1 or C2), so a
+    # wrong default/suppressed compositor mapping fails here
+    import numpy as np
+
+    from sarpro_spark.operators import kernel as krn
+    from sarpro_spark.operators.geometry import calculate_resize_dimensions, lanczos_resize_array
+    from sarpro_spark.types import DB_VALID_THRESHOLD, EPS_INTENSITY
+
+    wide = frames.band_frame(spark, sf_dir).toPandas()
+
+    def band_q(v, is_copol):
+        db = 10.0 * np.log10(np.maximum(v, EPS_INTENSITY))
+        valid = db > DB_VALID_THRESHOLD
+        low, high = krn.tamed_synrgb_params_np(krn.histogram_stats_np(db[valid]), is_copol)
+        return krn.quantize_np(db, valid, low, high, 1.0, 255.0)
+
+    def expected(compose, size=None):
+        ref = {}
+        for pid, p in wide.groupby("product_id"):
+            r, c = p["row"].to_numpy(), p["col"].to_numpy()
+            rgb = np.stack(compose(band_q(p["vv"].to_numpy(), True), band_q(p["vh"].to_numpy(), False)), axis=1)
+            if size is None:
+                ref.update({(pid, i, j): tuple(v) for i, j, v in zip(r, c, rgb.tolist())})
+                continue
+            grid = np.zeros((r.max() + 1, c.max() + 1, 3))
+            grid[r, c] = rgb
+            new_cols, new_rows = calculate_resize_dimensions(grid.shape[1], grid.shape[0], size)
+            res = np.clip(np.floor(lanczos_resize_array(grid, new_rows, new_cols) + 0.5), 0, 255)
+            ref.update({(pid, i, j): tuple(res[i, j].astype(int).tolist())
+                        for i in range(new_rows) for j in range(new_cols)})
+        return ref
+
+    for autoscale, compose, size in (
+        (AutoscaleStrategy.STANDARD, krn.synrgb_default_np, None),
+        (AutoscaleStrategy.TAMED, krn.synrgb_suppressed_np, None),
+        (AutoscaleStrategy.TAMED, krn.synrgb_suppressed_np, 32),
+    ):
+        p3 = ProcessingParams(polarization=Polarization.MULTIBAND, format=OutputFormat.JPEG,
+                              autoscale=autoscale, size=size)
+        got = {(r["product_id"], r["row"], r["col"]): (r["r"], r["g"], r["b"])
+               for r in build_pipeline(long, p3).collect()}
+        assert got == expected(compose, size), (autoscale, size)
 
 
 # --- pure-Python TIFF codec (W1/W2 write, S4 read) ---------------------------
@@ -356,7 +393,7 @@ def test_safe_e2e_read_pipeline_write(spark, tmp_path):
     manifest = w.write_geotiffs(u8, out_dir, ["product_id"], ["q"], bits=8)
     man = manifest.collect()
     assert len(man) == 1 and man[0]["n_bands"] == 1
-    back = w.read_tiffs_px(manifest, ["q"], ["product_id"]).collect()
+    back = w.read_images_px(manifest, ["q"], ["product_id"]).collect()
     orig = {(r["row"], r["col"]): r["q"] for r in u8.collect()}
     assert len(back) == 20 * 16
     for r in back:
@@ -441,7 +478,7 @@ def test_write_jpegs_sink_with_sidecars(spark, tmp_path):
             assert fh.read(2) == b"\xff\xd8"
         sidecars = _json.loads(m["sidecars"])
         assert any(s.endswith(".jgw") for s in sidecars)
-    back = w.read_jpegs_px(
+    back = w.read_images_px(
         spark.createDataFrame([tuple(m) for m in man], schema=w.write_jpegs(
             df, out, ["product_id"], ["r", "g", "b"]).schema), ["r", "g", "b"], ["product_id"]
     ).collect()
