@@ -18,14 +18,33 @@ Five surfaces, each shuffle-bounded for 100 TB:
                it portable SQL); near-dups = small Hamming distance.
   embedding    cosine near-dup in llm/similarity.py (sign-bucket prefilter).
 
+Every MinHash-family function is written over ONE chain of private builders,
+each the single home of one decision, with its DuckDB twin beside it:
+
+  _minhash_frame / _sql_hashed + sql_minhash_ctes
+               md5-prefix base hash per shingle, the seeded permutation
+               minimums sig_i and (when verifying) the sorted hash set.
+  _band_slices -> _band_keys / sql_minhash_bands
+               (band, dropped, bucket) LSH keys; probe >= 1 adds the
+               leave-one/two-out keys, probe=0 is the plain banding.
+  _band_pairs  the keyed self-join of those keys (doc_a < doc_b).
+  _set_jaccard / _sql_hash_sets + _sql_set_jaccard
+               exact set Jaccard of candidate pairs.
+  sql_minhash_agreement
+               the signature-agreement fraction (est_sim) in SQL.
+
 All Spark-side logic is native column expressions (codegen, no Python in the
 hot path).
 """
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from sarpro_spark.llm.cluster import _checkpointer
 
 DEFAULT_SHINGLE = 5
 DEFAULT_NUM_HASHES = 8
@@ -242,6 +261,134 @@ WHERE CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) >= {thre
 
 # --- MinHash + LSH -----------------------------------------------------------
 
+#: LSH key columns shared by every banding join (probe=0 keys carry
+#: dropped = -1, so one key form serves plain and multi-probe banding)
+_KEY = ["band", "dropped", "bucket"]
+
+
+def _minhash_frame(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    num_hashes: int,
+    sets: bool = False,
+) -> DataFrame:
+    """(id, sig_0..sig_{k-1}[, hset, sz]) from ONE shingle explode + md5 pass
+    and ONE aggregation: sig_i = MIN((a_i*h + b_i) mod p) over the 60-bit
+    md5-prefix base hash h of each shingle — one md5 per shingle, k cheap
+    multiply-mods (codegen'd), bit-identical in the DuckDB oracle.
+    ``sets=True`` also carries each doc's distinct hash SET (sorted array)
+    and its size out of the same shuffle; the set is bounded by doc length,
+    so the agg buffer stays small even when the corpus is 100 TB.
+
+    Non-distinct shingles: MIN and collect_set over duplicates are
+    identical, so the explode feeds the aggregation directly (map-side
+    combine, single shuffle)."""
+    base = (
+        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
+        % MINHASH_PRIME
+    )
+    hashed = char_shingles(df, id_col, text_col, n, distinct=False).select(
+        F.col(id_col), base.alias("h")
+    )
+    aggs = [
+        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"sig_{i}")
+        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+    ]
+    if not sets:
+        return hashed.groupBy(id_col).agg(*aggs)
+    return hashed.groupBy(id_col).agg(
+        *aggs, F.sort_array(F.collect_set("h")).alias("hset")
+    ).withColumn("sz", F.size("hset"))
+
+
+def _band_slices(num_hashes: int, bands: int, probe: int = 0) -> list[tuple[int, int, list[int]]]:
+    """(band, dropped, kept signature positions) of every LSH key, shared by
+    the Spark and SQL key builders. Per band of r = num_hashes // bands
+    positions: the full band (dropped = -1); ``probe >= 1`` adds the r
+    leave-one-out keys (dropped = j); ``probe >= 2`` adds the C(r,2)
+    leave-two-out keys, whose codes start at r (distinct from the single
+    drops)."""
+    r = num_hashes // bands
+    if probe >= 2 and r < 3:
+        raise ValueError(
+            f"probe=2 needs >= 3 rows per band (got {r}): leave-two-out "
+            "buckets over r-2 < 1 positions would collide everything"
+        )
+    drops: list[tuple[int, ...]] = [()]
+    if probe >= 1:
+        drops += [(j,) for j in range(r)]
+    if probe >= 2:
+        drops += list(combinations(range(r), 2))
+    return [
+        (b, code, [b * r + i for i in range(r) if i not in drop])
+        for b in range(bands)
+        for code, drop in enumerate(drops, -1)
+    ]
+
+
+def _band_keys(sig: DataFrame, id_col: str, slices: list[tuple[int, int, list[int]]]) -> DataFrame:
+    """(id, band, dropped, bucket) for every key of :func:`_band_slices`,
+    bucket = md5 of the '|'-joined kept signature values. ONE explode of an
+    inline struct array, NOT a union of per-key selects: the union form
+    multiplies the source partitioning (20 selects x 32 partitions = 640
+    map tasks of near-empty data per downstream shuffle, measured as the
+    dominant fixed cost of the multi-probe recall line) and re-scans the
+    signature frame once per member."""
+    entries = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.lit(code).alias("dropped"),
+            F.md5(F.concat_ws("|", *[F.col(f"sig_{i}") for i in kept])).alias("bucket"),
+        )
+        for b, code, kept in slices
+    ]
+    return sig.select(F.col(id_col), F.explode(F.array(*entries)).alias("_k")).select(
+        id_col, *[f"_k.{c}" for c in _KEY]
+    )
+
+
+def _band_pairs(sig: DataFrame, id_col: str, slices: list[tuple[int, int, list[int]]]) -> DataFrame:
+    """(band, dropped, bucket, doc_a, doc_b): every pair of docs sharing an
+    LSH key of :func:`_band_keys`, doc_a < doc_b — a bucket join, never
+    all-pairs."""
+    keys = _band_keys(sig, id_col, slices)
+    return (
+        keys.select(F.col(id_col).alias("doc_a"), *_KEY)
+        .join(keys.select(F.col(id_col).alias("doc_b"), *_KEY), _KEY)
+        .where(F.col("doc_a") < F.col("doc_b"))
+    )
+
+
+def _set_jaccard(
+    cand: DataFrame,
+    sets: DataFrame,
+    id_col: str,
+    a: str = "doc_a",
+    b: str = "doc_b",
+    broadcast_sets: bool = False,
+) -> DataFrame:
+    """(a, b, jaccard) for every candidate pair: exact |A ∩ B| via
+    array_intersect of the two docs' sorted hash sets — two joins of the
+    candidate list against the (id, hset, sz) frame, zero further shuffles
+    of the corpus. The 60-bit md5-prefix stream is identical on both
+    engines, so the oracle stays in lock-step (an intra-pair collision is
+    ~1e-12 and affects both sides identically). ``broadcast_sets`` is the
+    caller's bounded-panel contract (:func:`ngram_jaccard_pairs_sets`)."""
+    sa = sets.select(F.col(id_col).alias(a), F.col("hset").alias("set_a"), F.col("sz").alias("sz_a"))
+    sb = sets.select(F.col(id_col).alias(b), F.col("hset").alias("set_b"), F.col("sz").alias("sz_b"))
+    if broadcast_sets:
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    inter = F.col("inter")
+    jaccard = inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter).cast("double")
+    return (
+        cand.join(sa, a)
+        .join(sb, b)
+        .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")))
+        .select(a, b, jaccard.alias("jaccard"))
+    )
+
 
 def minhash_signatures(
     df: DataFrame,
@@ -250,24 +397,9 @@ def minhash_signatures(
     n: int = DEFAULT_SHINGLE,
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
-    """k min-hashes per doc: sig_i = MIN((a_i*h + b_i) mod p) over the 60-bit
-    md5-prefix base hash h of each shingle — ONE md5 per shingle, k cheap
-    multiply-mods (codegen'd), bit-identical in the DuckDB oracle. Output:
-    (id, sig_0..sig_{k-1}) as BIGINT.
-
-    Non-distinct shingles: MIN over duplicates is identical, so the explode
-    feeds the aggregation directly (map-side combine, single shuffle)."""
-    sh = char_shingles(df, id_col, text_col, n, distinct=False)
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % MINHASH_PRIME
-    )
-    hashed = sh.select(F.col(id_col), base.alias("_h"))
-    aggs = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_PRIME).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
+    """k min-hashes per doc (:func:`_minhash_frame`): (id, sig_0..sig_{k-1})
+    as BIGINT, bit-identical in the DuckDB oracle."""
+    return _minhash_frame(df, id_col, text_col, n, num_hashes)
 
 
 def minhash_lsh_pairs(
@@ -282,26 +414,12 @@ def minhash_lsh_pairs(
     candidates; est_sim = fraction of agreeing min-hashes (exact rational).
     Scale shape: bucket join on band hash (never all-pairs); candidate
     verification is a tiny join on the signature frame."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes).cache()
-    band_frames = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_frames.append(
-            sig.select(
-                F.col(id_col),
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *cols)).alias("bucket"),
-            )
-        )
-    banded = band_frames[0]
-    for bf in band_frames[1:]:
-        banded = banded.unionByName(bf)
-    a = banded.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-    b_ = banded.select(F.col(id_col).alias("doc_b"), "band", "bucket")
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
+    # the signature frame feeds both banding sides and both verify joins:
+    # materialize it once, same policy as every other MinHash path
+    sig = _checkpointer(sig)(sig)
     cand = (
-        a.join(b_, ["band", "bucket"])
-        .where(F.col("doc_a") < F.col("doc_b"))
+        _band_pairs(sig, id_col, _band_slices(num_hashes, bands))
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -339,65 +457,17 @@ def minhash_jaccard_pairs(
     Rows-per-band must stay high enough that baseline-similar corpora (shared
     vocab) don't flood the buckets; raise `bands` for recall, `rows` for
     selectivity."""
-    rows_per_band = num_hashes // bands
-    # ONE shingle explode + md5 pass feeds the signature aggregation, which
-    # ALSO carries each doc's distinct shingle-hash SET (sorted array) and its
-    # size: min-hashes, set, and set-size all come out of the SAME single
-    # shuffle. The set per doc is bounded by doc length (~|text| int64s), so
-    # the agg buffer stays small even when the corpus is 100 TB.
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % MINHASH_PRIME
-    )
-    hashed = char_shingles(df, id_col, text_col, n, distinct=False).select(
-        F.col(id_col), base.alias("h")
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    from sarpro_spark.llm.cluster import _checkpointer
-
-    sig = hashed.groupBy(id_col).agg(
-        *aggs, F.sort_array(F.collect_set("h")).alias("hset")
-    ).withColumn("sz", F.size("hset"))
+    # min-hashes, hash set and set size all come out of ONE shuffle
+    sig = _minhash_frame(df, id_col, text_col, n, num_hashes, sets=True)
     # reliable checkpoint on a cluster (executor-loss-safe), local otherwise —
     # same policy as every other iteration/multi-consumer materialization
     sig = _checkpointer(sig)(sig)
-    band_frames = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_frames.append(
-            sig.select(F.col(id_col), F.lit(b).alias("band"), F.md5(F.concat_ws("|", *cols)).alias("bucket"))
-        )
-    banded = band_frames[0]
-    for bf in band_frames[1:]:
-        banded = banded.unionByName(bf)
     cand = (
-        banded.select(F.col(id_col).alias("doc_a"), "band", "bucket")
-        .join(banded.select(F.col(id_col).alias("doc_b"), "band", "bucket"), ["band", "bucket"])
-        .where(F.col("doc_a") < F.col("doc_b"))
+        _band_pairs(sig, id_col, _band_slices(num_hashes, bands))
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # verify: exact |A ∩ B| via array_intersect of the per-doc hash sets —
-    # two joins of the (tiny) candidate pair list against the signature
-    # frame, zero additional shuffles of the corpus. The 60-bit md5-prefix
-    # stream is identical on both engines, so the oracle stays in lock-step
-    # (an intra-pair collision is ~1e-12 and affects both sides identically).
-    sets = sig.select(F.col(id_col), "hset", "sz")
-    out = (
-        cand.join(sets.select(F.col(id_col).alias("doc_a"), F.col("hset").alias("set_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sets.select(F.col(id_col).alias("doc_b"), F.col("hset").alias("set_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc_a", "doc_b", "jaccard")
+    return _set_jaccard(cand, sig, id_col).where(F.col("jaccard") >= threshold)
 
 
 def sql_minhash_jaccard(
@@ -410,42 +480,18 @@ def sql_minhash_jaccard(
     threshold: float = 0.5,
 ) -> str:
     """DuckDB twin of :func:`minhash_jaccard_pairs`."""
-    rows_per_band = num_hashes // bands
     ctes = sql_minhash_ctes(src_rel, id_col, text_col, n, num_hashes)
-    band_selects = []
-    for b in range(bands):
-        sig_concat = " || '|' || ".join(
-            f"sig_{b * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        band_selects.append(
-            f"SELECT {id_col}, {b} AS band, MD5({sig_concat}) AS bucket FROM sigs"
-        )
-    banded = "\n  UNION ALL\n  ".join(band_selects)
     return f"""
 WITH {ctes},
-banded AS (
-  {banded}
-),
+{sql_minhash_bands(num_hashes, bands, id_col=id_col)},
 cand AS (
   SELECT DISTINCT a.{id_col} AS doc_a, b.{id_col} AS doc_b
-  FROM banded a JOIN banded b USING (band, bucket)
+  FROM banded a JOIN banded b USING (band, dropped, bucket)
   WHERE a.{id_col} < b.{id_col}
 ),
-hdist AS (SELECT DISTINCT {id_col}, h FROM hashed),
-sizes AS (SELECT {id_col}, COUNT(*) AS sz FROM hdist GROUP BY {id_col}),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cand c
-  JOIN hdist sa ON sa.{id_col} = c.doc_a
-  JOIN hdist sb ON sb.{id_col} = c.doc_b AND sb.h = sa.h
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b,
-       CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) AS jaccard
-FROM inter i
-JOIN sizes za ON za.{id_col} = i.doc_a
-JOIN sizes zb ON zb.{id_col} = i.doc_b
-WHERE CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) >= {threshold!r}
+{_sql_hash_sets(id_col)},
+{_sql_set_jaccard(id_col)}
+SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {threshold!r}
 """.strip()
 
 
@@ -477,18 +523,7 @@ def ngram_jaccard_pairs_sets(
     through a sort-merge join; measured 13 s -> ~2 s on the 1000-doc
     panel). Default False: a corpus-scale set relation must never be
     broadcast, AQE sizes it."""
-    from sarpro_spark.llm.cluster import _checkpointer
-
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % MINHASH_PRIME
-    )
-    hashed = char_shingles(df, id_col, text_col, n, distinct=False).select(
-        F.col(id_col), base.alias("h")
-    )
-    sets = hashed.groupBy(id_col).agg(
-        F.sort_array(F.collect_set("h")).alias("hset")
-    ).withColumn("sz", F.size("hset"))
+    sets = _minhash_frame(df, id_col, text_col, n, 0, sets=True)
     sets = _checkpointer(sets)(sets)
     hdist = sets.select(id_col, F.explode("hset").alias("h"))
     if max_shingle_df is not None:
@@ -505,32 +540,15 @@ def ngram_jaccard_pairs_sets(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # the per-pair array_intersect below is COMPUTE-bound, but the cand
+    # the per-pair array_intersect is COMPUTE-bound, but the cand
     # relation is byte-tiny (16 B/row) so AQE coalesces it to ~one
     # partition and the whole verify runs on one core (measured: 481 k
     # pairs -> ~10 s serial). Spread the compute explicitly; the extra
     # shuffle moves only the skinny pair list.
     cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    sa = sets.select(
-        F.col(id_col).alias("doc_a"), F.col("hset").alias("set_a"), F.col("sz").alias("sz_a")
+    return _set_jaccard(cand, sets, id_col, broadcast_sets=broadcast_sets).where(
+        F.col("jaccard") >= threshold
     )
-    sb = sets.select(
-        F.col(id_col).alias("doc_b"), F.col("hset").alias("set_b"), F.col("sz").alias("sz_b")
-    )
-    if broadcast_sets:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    out = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc_a", "doc_b", "jaccard")
 
 
 def sql_ngram_jaccard_sets(
@@ -544,17 +562,9 @@ def sql_ngram_jaccard_sets(
     """DuckDB twin of :func:`ngram_jaccard_pairs_sets` — jaccard over the
     same 60-bit md5-prefix hash stream, so both engines share any
     collision identically."""
-    shingles = sql_char_shingles(src_rel, id_col, text_col, n)
-    p = MINHASH_PRIME
     return f"""
-WITH {shingles},
-hashed AS (
-  SELECT {id_col},
-         CAST(('0x' || SUBSTR(MD5(shingle), 1, 15)) AS BIGINT) % {p} AS h
-  FROM shingles
-),
-hdist AS (SELECT DISTINCT {id_col}, h FROM hashed),
-sizes AS (SELECT {id_col}, COUNT(*) AS sz FROM hdist GROUP BY {id_col}),
+WITH {_sql_hashed(src_rel, id_col, text_col, n)},
+{_sql_hash_sets(id_col)},
 hdf AS (SELECT h, COUNT(*) AS df_ FROM hdist GROUP BY h),
 rare AS (SELECT d.* FROM hdist d JOIN hdf USING (h) WHERE hdf.df_ <= {max_shingle_df}),
 cand AS (
@@ -562,19 +572,8 @@ cand AS (
   FROM rare a JOIN rare b USING (h)
   WHERE a.{id_col} < b.{id_col}
 ),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cand c
-  JOIN hdist sa ON sa.{id_col} = c.doc_a
-  JOIN hdist sb ON sb.{id_col} = c.doc_b AND sb.h = sa.h
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b,
-       CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) AS jaccard
-FROM inter i
-JOIN sizes za ON za.{id_col} = i.doc_a
-JOIN sizes zb ON zb.{id_col} = i.doc_b
-WHERE CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) >= {threshold!r}
+{_sql_set_jaccard(id_col)}
+SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {threshold!r}
 """.strip()
 
 
@@ -610,73 +609,18 @@ def minhash_probe_candidates(
     dropped, bucket), never all-pairs; candidates are meant to feed the
     exact-jaccard verifier which bounds downstream cost to |candidates|."""
     rows_per_band = num_hashes // bands
-    if probe >= 2 and rows_per_band < 3:
-        raise ValueError(
-            f"probe=2 needs >= 3 rows per band (got {rows_per_band}): "
-            "leave-two-out buckets over r-2 < 1 positions would collide "
-            "everything"
-        )
+    slices = _band_slices(num_hashes, bands, probe)  # validates before any job
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
-    from sarpro_spark.llm.cluster import _checkpointer
-
     # the key relation feeds both sides of the banding self-join —
     # materialize the signature aggregation once
     sig = _checkpointer(sig)(sig)
-    # ONE explode of an inline struct array, NOT a bands*(1+r)-way union of
-    # selects: the union form multiplies the source partitioning (20 selects
-    # x 32 partitions = 640 map tasks of near-empty data per downstream
-    # shuffle, measured as the dominant fixed cost of the recall line) and
-    # re-scans the signature frame once per member
-    entries = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.lit(-1).alias("dropped"),
-                F.md5(F.concat_ws("|", *cols)).alias("bucket"),
-            )
-        )
-        if probe >= 1:
-            for j in range(rows_per_band):
-                kept = [c for i, c in enumerate(cols) if i != j]
-                entries.append(
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.lit(j).alias("dropped"),
-                        F.md5(F.concat_ws("|", *kept)).alias("bucket"),
-                    )
-                )
-        if probe >= 2:
-            # dropped-pair codes start at rows_per_band (distinct from the
-            # single-drop codes 0..r-1 and the full-band -1)
-            for pk, (j1, j2) in enumerate(
-                (a, c) for a in range(rows_per_band)
-                for c in range(a + 1, rows_per_band)
-            ):
-                kept = [c for i, c in enumerate(cols) if i not in (j1, j2)]
-                entries.append(
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.lit(rows_per_band + pk).alias("dropped"),
-                        F.md5(F.concat_ws("|", *kept)).alias("bucket"),
-                    )
-                )
-    keys = sig.select(
-        F.col(id_col), F.explode(F.array(*entries)).alias("_k")
-    ).select(id_col, "_k.band", "_k.dropped", "_k.bucket")
     level = (
         F.when(F.col("dropped") == -1, 0)
         .when(F.col("dropped") < rows_per_band, 1)
         .otherwise(2)
     )
     return (
-        keys.select(F.col(id_col).alias("doc_a"), "band", "dropped", "bucket")
-        .join(
-            keys.select(F.col(id_col).alias("doc_b"), "band", "dropped", "bucket"),
-            ["band", "dropped", "bucket"],
-        )
-        .where(F.col("doc_a") < F.col("doc_b"))
+        _band_pairs(sig, id_col, slices)
         .groupBy("doc_a", "doc_b")
         .agg(F.min(level).alias("level"))
     )
@@ -694,47 +638,28 @@ def sql_minhash_probe_candidates(
     """DuckDB twin of :func:`minhash_probe_candidates` — CTE ``probecand``
     (doc_a, doc_b, level)."""
     rows_per_band = num_hashes // bands
-    if probe >= 2 and rows_per_band < 3:
-        raise ValueError(f"probe=2 needs >= 3 rows per band (got {rows_per_band})")
-    ctes = sql_minhash_ctes(src_rel, id_col, text_col, n, num_hashes)
-    sep = " || '|' || "
-    key_selects = []
-    for b in range(bands):
-        all_cols = [f"sig_{b * rows_per_band + r}" for r in range(rows_per_band)]
-        key_selects.append(
-            f"SELECT {id_col}, {b} AS band, -1 AS dropped, "
-            f"MD5({sep.join(all_cols)}) AS bucket FROM sigs"
-        )
-        if probe >= 1:
-            for j in range(rows_per_band):
-                kept = [c for i, c in enumerate(all_cols) if i != j]
-                key_selects.append(
-                    f"SELECT {id_col}, {b} AS band, {j} AS dropped, "
-                    f"MD5({sep.join(kept)}) AS bucket FROM sigs"
-                )
-        if probe >= 2:
-            for pk, (j1, j2) in enumerate(
-                (a, c) for a in range(rows_per_band)
-                for c in range(a + 1, rows_per_band)
-            ):
-                kept = [c for i, c in enumerate(all_cols) if i not in (j1, j2)]
-                key_selects.append(
-                    f"SELECT {id_col}, {b} AS band, {rows_per_band + pk} AS dropped, "
-                    f"MD5({sep.join(kept)}) AS bucket FROM sigs"
-                )
-    keys = "\n  UNION ALL\n  ".join(key_selects)
-    return f"""{ctes},
-probekeys AS (
-  {keys}
-),
+    keys = sql_minhash_bands(num_hashes, bands, probe, id_col)
+    return f"""{sql_minhash_ctes(src_rel, id_col, text_col, n, num_hashes)},
+{keys},
 probecand AS (
   SELECT a.{id_col} AS doc_a, b.{id_col} AS doc_b,
          MIN(CASE WHEN a.dropped = -1 THEN 0
                   WHEN a.dropped < {rows_per_band} THEN 1 ELSE 2 END) AS level
-  FROM probekeys a
-  JOIN probekeys b ON a.band = b.band AND a.dropped = b.dropped AND a.bucket = b.bucket
+  FROM banded a JOIN banded b USING (band, dropped, bucket)
   WHERE a.{id_col} < b.{id_col}
   GROUP BY a.{id_col}, b.{id_col}
+)"""
+
+
+def _sql_hashed(src_rel: str, id_col: str, text_col: str, n: int) -> str:
+    """DuckDB CTEs ``shingles`` + ``hashed`` (id, h) — the twin of the base
+    hash in :func:`_minhash_frame`."""
+    shingles = sql_char_shingles(src_rel, id_col, text_col, n)
+    return f"""{shingles},
+hashed AS (
+  SELECT {id_col},
+         CAST(('0x' || SUBSTR(MD5(shingle), 1, 15)) AS BIGINT) % {MINHASH_PRIME} AS h
+  FROM shingles
 )"""
 
 
@@ -748,23 +673,71 @@ def sql_minhash_ctes(
     """DuckDB CTEs ending in ``sigs`` (id, sig_0..) — the exact twin of
     :func:`minhash_signatures` (same md5-prefix base hash, same seeded
     permutation coefficients)."""
-    shingles = sql_char_shingles(src_rel, id_col, text_col, n)
-    p = MINHASH_PRIME
     sig_cols = ",\n    ".join(
-        f"MIN(({a} * h + {b}) % {p}) AS sig_{i}"
+        f"MIN(({a} * h + {b}) % {MINHASH_PRIME}) AS sig_{i}"
         for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
     )
-    return f"""{shingles},
-hashed AS (
-  SELECT {id_col},
-         CAST(('0x' || SUBSTR(MD5(shingle), 1, 15)) AS BIGINT) % {p} AS h
-  FROM shingles
-),
+    return f"""{_sql_hashed(src_rel, id_col, text_col, n)},
 sigs AS (
   SELECT {id_col},
     {sig_cols}
   FROM hashed GROUP BY {id_col}
 )""".strip()
+
+
+def sql_minhash_bands(
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    bands: int = DEFAULT_BANDS,
+    probe: int = 0,
+    id_col: str = "doc_id",
+) -> str:
+    """DuckDB CTE ``banded`` (id, band, dropped, bucket) over ``sigs`` — the
+    twin of :func:`_band_keys` (same key list, same '|'-joined md5
+    bucket)."""
+    sep = " || '|' || "
+    selects = "\n  UNION ALL\n  ".join(
+        f"SELECT {id_col}, {b} AS band, {code} AS dropped, "
+        f"MD5({sep.join(f'sig_{i}' for i in kept)}) AS bucket FROM sigs"
+        for b, code, kept in _band_slices(num_hashes, bands, probe)
+    )
+    return f"banded AS (\n  {selects}\n)"
+
+
+def sql_minhash_agreement(num_hashes: int = DEFAULT_NUM_HASHES) -> str:
+    """DuckDB expression: the fraction of agreeing min-hashes between the
+    ``sa`` and ``sb`` rows of ``sigs`` (exact rational, DOUBLE)."""
+    agree = " + ".join(
+        f"(CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
+    )
+    return f"CAST(({agree}) AS DOUBLE) / {float(num_hashes)!r}"
+
+
+def _sql_hash_sets(id_col: str) -> str:
+    """DuckDB CTEs ``hdist`` (distinct (id, h)) and ``sizes`` (id, sz) over
+    ``hashed`` — the twin of the ``hset``/``sz`` columns of
+    :func:`_minhash_frame`."""
+    return f"""hdist AS (SELECT DISTINCT {id_col}, h FROM hashed),
+sizes AS (SELECT {id_col}, COUNT(*) AS sz FROM hdist GROUP BY {id_col})"""
+
+
+def _sql_set_jaccard(id_col: str, a: str = "doc_a", b: str = "doc_b") -> str:
+    """DuckDB CTEs ``inter`` + ``verified`` (a, b, jaccard) for the pairs of
+    CTE ``cand`` — the twin of :func:`_set_jaccard`: |A ∩ B| counted by an
+    h-keyed join of the two docs' ``hdist`` rows."""
+    return f"""inter AS (
+  SELECT c.{a}, c.{b}, COUNT(*) AS inter
+  FROM cand c
+  JOIN hdist sa ON sa.{id_col} = c.{a}
+  JOIN hdist sb ON sb.{id_col} = c.{b} AND sb.h = sa.h
+  GROUP BY c.{a}, c.{b}
+),
+verified AS (
+  SELECT i.{a}, i.{b},
+         CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) AS jaccard
+  FROM inter i
+  JOIN sizes za ON za.{id_col} = i.{a}
+  JOIN sizes zb ON zb.{id_col} = i.{b}
+)"""
 
 
 # --- SimHash -----------------------------------------------------------------
@@ -989,75 +962,24 @@ def incremental_dedup(
     batch_ids = fp.where("is_batch").select(id_col, "fp")
     exact = batch_ids.join(idx_fp, "fp", "left").select(id_col, "exact_dup_of")
 
-    rows_per_band = num_hashes // bands
     # ONE shingle explode + md5 pass yields min-hashes AND each doc's
     # distinct hash set (the minhash_jaccard_pairs doctrine) — no second
     # corpus pass for verification, no h-keyed verify join
-    from sarpro_spark.llm.cluster import _checkpointer
-
-    base_h = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % MINHASH_PRIME
-    )
-    hashed = char_shingles(df, id_col, text_col, n, distinct=False).select(
-        F.col(id_col), base_h.alias("h")
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    sig = hashed.groupBy(id_col).agg(
-        *aggs, F.sort_array(F.collect_set("h")).alias("hset")
-    ).withColumn("sz", F.size("hset"))
+    sig = _minhash_frame(df, id_col, text_col, n, num_hashes, sets=True)
     sig = _checkpointer(sig)(sig)
-    sig = sig.withColumn(
-        "is_batch", (hash_bucket(F.col(id_col), split_seed) % batch_mod) >= batch_min
+    keys = _band_keys(sig, id_col, _band_slices(num_hashes, bands)).withColumn(
+        "is_batch", is_batch
     )
-    band_frames = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_frames.append(
-            sig.select(
-                F.col(id_col),
-                "is_batch",
-                F.lit(b).alias("band"),
-                F.md5(F.concat_ws("|", *cols)).alias("bucket"),
-            )
-        )
-    banded = band_frames[0]
-    for bf in band_frames[1:]:
-        banded = banded.unionByName(bf)
     cand = (
-        banded.where("is_batch")
-        .select(F.col(id_col).alias("doc_b"), "band", "bucket")
-        .join(
-            banded.where(~F.col("is_batch")).select(
-                F.col(id_col).alias("doc_i"), "band", "bucket"
-            ),
-            ["band", "bucket"],
-        )
+        keys.where("is_batch")
+        .select(F.col(id_col).alias("doc_b"), *_KEY)
+        .join(keys.where(~F.col("is_batch")).select(F.col(id_col).alias("doc_i"), *_KEY), _KEY)
         .select("doc_b", "doc_i")
         .distinct()
     )
-    sets = sig.select(F.col(id_col), "hset", "sz")
     jacc = (
-        cand.join(
-            sets.select(F.col(id_col).alias("doc_b"), F.col("hset").alias("set_b"), F.col("sz").alias("sz_b")),
-            "doc_b",
-        )
-        .join(
-            sets.select(F.col(id_col).alias("doc_i"), F.col("hset").alias("set_i"), F.col("sz").alias("sz_i")),
-            "doc_i",
-        )
-        .withColumn("inter", F.size(F.array_intersect("set_b", "set_i")))
-        .select(
-            "doc_b",
-            "doc_i",
-            fround(
-                F.col("inter").cast("double")
-                / (F.col("sz_b") + F.col("sz_i") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
+        _set_jaccard(cand, sig, id_col, "doc_b", "doc_i")
+        .select("doc_b", "doc_i", fround(F.col("jaccard")).alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
     w = W.partitionBy("doc_b").orderBy(F.col("jaccard").desc(), F.col("doc_i").asc())
@@ -1098,22 +1020,11 @@ def sql_incremental_dedup(
     from sarpro_spark.llm.sampling import sql_hash_bucket
     from sarpro_spark.queries import sql_fround
 
-    rows_per_band = num_hashes // bands
     ctes = sql_minhash_ctes(src_rel, id_col, text_col, n, num_hashes)
-    band_selects = []
-    for b in range(bands):
-        sig_concat = " || '|' || ".join(
-            f"sig_{b * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        band_selects.append(
-            f"SELECT {id_col}, {b} AS band, MD5({sig_concat}) AS bucket FROM sigs"
-        )
-    banded = "\n  UNION ALL\n  ".join(band_selects)
     is_batch = f"(({sql_hash_bucket(id_col, split_seed)}) % {batch_mod} >= {batch_min})"
     fp_expr = (
         "SUBSTR(MD5(REGEXP_REPLACE(TRIM(LOWER(" + text_col + ")), '\\s+', ' ', 'g')), 1, 16)"
     )
-    jacc_expr = "CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE)"
     return f"""
 WITH {ctes},
 split AS (SELECT {id_col}, {is_batch} AS is_batch FROM {src_rel}),
@@ -1124,30 +1035,18 @@ exact AS (
   SELECT b.{id_col}, i.exact_dup_of
   FROM fp b LEFT JOIN idx_fp i USING (fp) WHERE b.is_batch
 ),
-banded AS (
-  {banded}
-),
+{sql_minhash_bands(num_hashes, bands, id_col=id_col)},
 cand AS (
   SELECT DISTINCT a.{id_col} AS doc_b, b.{id_col} AS doc_i
   FROM banded a JOIN split sa ON sa.{id_col} = a.{id_col} AND sa.is_batch
-  JOIN banded b ON a.band = b.band AND a.bucket = b.bucket
+  JOIN banded b USING (band, dropped, bucket)
   JOIN split sb ON sb.{id_col} = b.{id_col} AND NOT sb.is_batch
 ),
-hdist AS (SELECT DISTINCT {id_col}, h FROM hashed),
-sizes AS (SELECT {id_col}, COUNT(*) AS sz FROM hdist GROUP BY {id_col}),
-inter AS (
-  SELECT c.doc_b, c.doc_i, COUNT(*) AS inter
-  FROM cand c
-  JOIN hdist sa ON sa.{id_col} = c.doc_b
-  JOIN hdist sb ON sb.{id_col} = c.doc_i AND sb.h = sa.h
-  GROUP BY c.doc_b, c.doc_i
-),
+{_sql_hash_sets(id_col)},
+{_sql_set_jaccard(id_col, "doc_b", "doc_i")},
 jacc AS (
-  SELECT i.doc_b, i.doc_i, {sql_fround(jacc_expr)} AS jaccard
-  FROM inter i
-  JOIN sizes za ON za.{id_col} = i.doc_b
-  JOIN sizes zb ON zb.{id_col} = i.doc_i
-  WHERE {sql_fround(jacc_expr)} >= {threshold!r}
+  SELECT doc_b, doc_i, {sql_fround("jaccard")} AS jaccard
+  FROM verified WHERE {sql_fround("jaccard")} >= {threshold!r}
 ),
 best AS (
   SELECT doc_b AS {id_col}, doc_i AS near_dup_of, jaccard AS near_jaccard

@@ -1733,6 +1733,10 @@ def pq_codebooks(
     from sarpro_spark.llm.cluster import _checkpointer
     from sarpro_spark.queries import fround
 
+    if iters < 1:
+        # the seed centroids are a lazy plan over the slice cache released
+        # below; only a training round materializes them first
+        raise ValueError(f"pq_codebooks needs iters >= 1 (got {iters})")
     sub = dim // m
     checkpoint = _checkpointer(emb)
     slices = emb.select(

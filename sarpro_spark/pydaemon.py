@@ -29,13 +29,14 @@ Everything else is stock: the daemon protocol is pyspark's own
 
 from __future__ import annotations
 
+import re
 import sys
+
+_SPARK_CORE_JAR = re.compile(r"spark-core_\d+\.\d+-[^/]+\.jar")
 
 
 def _version_from_source(src: str) -> str | None:
     """Extract ``__version__`` from version.py source text."""
-    import re
-
     m = re.search(r"__version__\s*(?::\s*str\s*)?=\s*['\"]([^'\"]+)['\"]", src)
     return m.group(1) if m else None
 
@@ -70,11 +71,10 @@ def _prune_spark_zips() -> None:
         # the jar prune to THAT jar — the r13 predicate's precedence made
         # `or p.endswith(".jar")` drop EVERY jar on the worker path, and
         # the restore guard (pyspark/py4j resolve) would not have noticed
-        # a user's own Python-in-a-jar going missing.
-        or (
-            p.endswith(".jar")
-            and p.rsplit("/", 1)[-1].startswith("spark-core")
-        )
+        # a user's own Python-in-a-jar going missing. Only the assembly
+        # jar's own name (spark-core_<scala>-<version>.jar) matches, not
+        # any spark-core* basename.
+        or _SPARK_CORE_JAR.fullmatch(p.rsplit("/", 1)[-1])
     ]
     if not zips:
         return

@@ -80,22 +80,13 @@ def q_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LSH_SQL = f"""
 WITH {dd.sql_minhash_ctes('documents')},
-banded AS (
-  SELECT doc_id, 0 AS band, MD5(sig_0 || '|' || sig_1 || '|' || sig_2 || '|' || sig_3) AS bucket FROM sigs
-  UNION ALL
-  SELECT doc_id, 1 AS band, MD5(sig_4 || '|' || sig_5 || '|' || sig_6 || '|' || sig_7) AS bucket FROM sigs
-),
+{dd.sql_minhash_bands()},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM banded a JOIN banded b USING (band, bucket)
+  FROM banded a JOIN banded b USING (band, dropped, bucket)
   WHERE a.doc_id < b.doc_id
 )
-SELECT c.doc_a, c.doc_b,
-  CAST((CASE WHEN sa.sig_0 = sb.sig_0 THEN 1 ELSE 0 END) + (CASE WHEN sa.sig_1 = sb.sig_1 THEN 1 ELSE 0 END)
-     + (CASE WHEN sa.sig_2 = sb.sig_2 THEN 1 ELSE 0 END) + (CASE WHEN sa.sig_3 = sb.sig_3 THEN 1 ELSE 0 END)
-     + (CASE WHEN sa.sig_4 = sb.sig_4 THEN 1 ELSE 0 END) + (CASE WHEN sa.sig_5 = sb.sig_5 THEN 1 ELSE 0 END)
-     + (CASE WHEN sa.sig_6 = sb.sig_6 THEN 1 ELSE 0 END) + (CASE WHEN sa.sig_7 = sb.sig_7 THEN 1 ELSE 0 END)
-     AS DOUBLE) / 8.0 AS est_sim
+SELECT c.doc_a, c.doc_b, {dd.sql_minhash_agreement()} AS est_sim
 FROM cand c
 JOIN sigs sa ON sa.doc_id = c.doc_a
 JOIN sigs sb ON sb.doc_id = c.doc_b
@@ -2351,33 +2342,19 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_neardup_sql() -> str:
-    from sarpro_spark.llm.dedup import sql_minhash_ctes
     from sarpro_spark.streaming import dedup as sdd
 
     nh, bands = sdd.DEFAULT_NUM_HASHES, sdd.DEFAULT_BANDS
-    rpb = nh // bands
-    ctes = sql_minhash_ctes("documents", num_hashes=nh)
-    band_selects = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {b} AS band, MD5("
-        + " || '|' || ".join(f"sig_{b * rpb + r}" for r in range(rpb))
-        + ") AS bucket FROM sigs"
-        for b in range(bands)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END)" for i in range(nh)
-    )
     return f"""
-WITH {ctes},
-banded AS (
-  {band_selects}
-),
+WITH {dd.sql_minhash_ctes("documents", num_hashes=nh)},
+{dd.sql_minhash_bands(nh, bands)},
 cand AS (
   SELECT DISTINCT a.doc_id AS matched_id, b.doc_id AS doc_id
-  FROM banded a JOIN banded b USING (band, bucket)
+  FROM banded a JOIN banded b USING (band, dropped, bucket)
   WHERE a.doc_id < b.doc_id
 ),
 agree AS (
-  SELECT c.doc_id, c.matched_id, ({agree}) / {float(nh)!r} AS est
+  SELECT c.doc_id, c.matched_id, {dd.sql_minhash_agreement(nh)} AS est
   FROM cand c
   JOIN sigs sa ON sa.doc_id = c.matched_id
   JOIN sigs sb ON sb.doc_id = c.doc_id
@@ -2396,7 +2373,7 @@ FROM documents d LEFT JOIN hits h USING (doc_id)
 def q_dedup_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental near-dup, certified through its batch twin
     (streaming/dedup.py): a document STREAM dedups against the accumulated
-    corpus via stateless column-expression MinHash signatures + ONE
+    corpus via a stateless MinHash signature kernel (mapInPandas) + ONE
     applyInPandasWithState stage keyed by (band, bucket); the drained
     stream's match rows equal the pairwise batch rule 'doc b matches every
     earlier a sharing a band bucket with signature agreement >= 0.75'
@@ -2417,34 +2394,20 @@ def q_dedup_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_stream_neardup_sql() -> str:
-    from sarpro_spark.llm.dedup import sql_minhash_ctes
     from sarpro_spark.streaming import dedup as sdd
 
     nh, bands = sdd.DEFAULT_NUM_HASHES, sdd.DEFAULT_BANDS
-    rpb = nh // bands
-    ctes = sql_minhash_ctes("documents", num_hashes=nh)
-    band_selects = "\n  UNION ALL\n  ".join(
-        f"SELECT doc_id, {b} AS band, MD5("
-        + " || '|' || ".join(f"sig_{b * rpb + r}" for r in range(rpb))
-        + ") AS bucket FROM sigs"
-        for b in range(bands)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END)" for i in range(nh)
-    )
     return f"""
-WITH {ctes},
-banded AS (
-  {band_selects}
-),
+WITH {dd.sql_minhash_ctes("documents", num_hashes=nh)},
+{dd.sql_minhash_bands(nh, bands)},
 xpairs AS (
   SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_bands
-  FROM banded a JOIN banded b USING (band, bucket)
+  FROM banded a JOIN banded b USING (band, dropped, bucket)
   WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
   GROUP BY a.doc_id, b.doc_id
 ),
 xagree AS (
-  SELECT p.a_id, p.b_id, p.n_bands, ({agree}) / {float(nh)!r} AS est
+  SELECT p.a_id, p.b_id, p.n_bands, {dd.sql_minhash_agreement(nh)} AS est
   FROM xpairs p
   JOIN sigs sa ON sa.doc_id = p.a_id
   JOIN sigs sb ON sb.doc_id = p.b_id

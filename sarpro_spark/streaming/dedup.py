@@ -7,11 +7,12 @@ now continuous arrival.
 Shape:
 
 1. **Stateless signature stage** (`doc_sig_bands`): per-doc MinHash
-   signature + LSH band bucket keys as PURE column expressions — no
-   aggregation (streaming queries allow at most one stateful operator, so
-   the batch path's explode+groupBy signature builder is re-expressed as
-   ``array_min(transform(...))`` over the shingle array; same base hash,
-   same permutation coefficients, bit-identical signatures).
+   signature + LSH band bucket keys from a numpy ``mapInPandas`` block
+   kernel — no aggregation (streaming queries allow at most one stateful
+   operator, so the batch path's explode+groupBy signature builder is
+   re-expressed per doc: one hashlib md5 per shingle, numpy for the k
+   permutations and mins; same base hash, same permutation coefficients,
+   bit-identical signatures and buckets).
 2. **One stateful stage** (`streaming_neardup`): groupBy(band, bucket) →
    ``applyInPandasWithState``. State per bucket = the (doc_id, signature)
    list of every doc that has arrived in that bucket. Each arriving doc is

@@ -104,9 +104,9 @@ def test_persist_gate_clean_on_real_tree():
     assert ea.audit_persist_sites() == []
 
 
-def test_persist_gate_flags_unreviewed_bad_grain_and_stale(monkeypatch):
-    """r14 (verdict item 4): every .persist site needs a reviewed grain +
-    lifecycle entry; stale entries and unknown grains fail."""
+def test_persist_gate_flags_unreviewed_bad_grain_and_stale(tmp_path, monkeypatch):
+    """r14 (verdict item 4): every .persist/.cache site needs a reviewed
+    grain + lifecycle entry; stale entries and unknown grains fail."""
     bad = dict(ea.PERSIST_ALLOW)
     removed = bad.pop(("llm/setjoin.py", "pairstats"))
     bad[("llm/text.py", "ghost")] = ("corpus-rows", "query-lifetime: no such site")
@@ -121,6 +121,30 @@ def test_persist_gate_flags_unreviewed_bad_grain_and_stale(monkeypatch):
     monkeypatch.setattr(ea, "PERSIST_ALLOW", bad2)
     assert any("lifecycle" in p for p in ea.audit_persist_sites())
     assert removed[0] == "pair-aggregate"
+    # a bare ``df.persist()`` statement and a ``return df.cache()`` are
+    # caches too: both are flagged, keyed by the enclosing function; an
+    # attribute target keys by its dotted name
+    pkg = tmp_path / "sarpro_spark"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "def keep(df):\n"
+        "    df.persist()\n"
+        "    return df.cache()\n"
+        "\n"
+        "def attr(self, df):\n"
+        "    self.frame = df.persist()\n"
+    )
+    monkeypatch.setattr(ea, "PKG", str(pkg))
+    monkeypatch.setattr(ea, "PERSIST_ALLOW", {})
+    problems = ea.audit_persist_sites()
+    assert any("mod.py:2 .persist() in 'keep'" in p for p in problems)
+    assert any("mod.py:3 .cache() in 'keep'" in p for p in problems)
+    assert any("mod.py:6 .persist() in 'self.frame'" in p for p in problems)
+    monkeypatch.setattr(ea, "PERSIST_ALLOW", {
+        ("mod.py", "keep"): ("corpus-rows", "query-lifetime: test"),
+        ("mod.py", "self.frame"): ("corpus-rows", "query-lifetime: test"),
+    })
+    assert ea.audit_persist_sites() == []
 
 
 def test_singlepart_window_forbid():

@@ -318,6 +318,16 @@ def test_minhash_pairs_independent_of_partitioning(spark):
     a = sorted(map(tuple, dd.minhash_jaccard_pairs(df.repartition(1), threshold=0.5).collect()))
     b = sorted(map(tuple, dd.minhash_jaccard_pairs(df.repartition(11), threshold=0.5).collect()))
     assert a == b and len(a) > 0
+    # one band builder: plain LSH candidates are the probe=0 candidates
+    lsh = {(r["doc_a"], r["doc_b"]) for r in dd.minhash_lsh_pairs(df).collect()}
+    p0 = dd.minhash_probe_candidates(df, num_hashes=8, bands=2, probe=0).collect()
+    assert lsh == {(r["doc_a"], r["doc_b"]) for r in p0} and lsh
+    # one verifier: every banded pair carries the exact set jaccard
+    exact = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in dd.ngram_jaccard_pairs_sets(df, threshold=0.5, max_shingle_df=None).collect()
+    }
+    assert all(exact.get((da, db)) == j for da, db, j in a)
 
 
 # --- corpus hygiene + sampling ------------------------------------------------
@@ -1745,6 +1755,11 @@ def test_pq_topk_self_and_copy_first(spark, emb):
     assert [r["vec_id"] for r in out if r["rnk"] == 2] == [7]  # scaled copy
     for r in out:
         assert -1.0 - 1e-9 <= r["adc_sim"] <= 1.0 + 1e-9  # reconstructed cosine
+
+
+def test_pq_codebooks_rejects_zero_iters(spark, emb):
+    with pytest.raises(ValueError, match="iters >= 1"):
+        sim.pq_codebooks(emb, iters=0, dim=16)
 
 
 def test_ivfpq_topk_self_and_copy_first(spark, emb):

@@ -101,9 +101,15 @@ def test_jar_prune_restricted_to_spark_core(tmp_path, monkeypatch):
     user.write_bytes(b"PK\x05\x06" + b"\x00" * 18)
     core = tmp_path / "spark-core_2.13-4.1.2.jar"
     core.write_bytes(b"PK\x05\x06" + b"\x00" * 18)
-    monkeypatch.setattr(sys, "path", [str(user), str(core)] + list(sys.path))
+    # a spark-core* name that is not the assembly jar's pattern survives too
+    lookalike = tmp_path / "spark-core-utils.jar"
+    lookalike.write_bytes(b"PK\x05\x06" + b"\x00" * 18)
+    monkeypatch.setattr(
+        sys, "path", [str(user), str(core), str(lookalike)] + list(sys.path)
+    )
     pydaemon._prune_spark_zips()
     assert str(user) in sys.path
+    assert str(lookalike) in sys.path
     assert str(core) not in sys.path
 
 

@@ -15,6 +15,7 @@ Exits nonzero if any assertion fails; prints a one-line verdict per query.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
@@ -25,6 +26,8 @@ from sarpro_spark.queries import spark_queries
 from sarpro_spark.session import build_session
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+#: the package the static broadcast and persist gates parse
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sarpro_spark")
 
 # per-query expectations: substrings that MUST appear / MUST NOT appear in the
 # formatted physical plan
@@ -1850,7 +1853,6 @@ def audit_broadcast_sites() -> list[str]:
     CONSTRUCTION, allowlist or not — for any site or review that names an
     SF-scaling relation (the r5 failure mode: customer/supplier/per-user
     tables reviewed as 'dims')."""
-    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sarpro_spark")
     # capture the full first-arg expression incl. a subscript, so
     # t["customer"] and t["nation"] are DISTINCT gate keys (r5 let the bad
     # one ride in on the good one's bare-variable key)
@@ -1860,12 +1862,12 @@ def audit_broadcast_sites() -> list[str]:
     )
     problems = []
     seen: set[tuple[str, str]] = set()
-    for root, _dirs, files in os.walk(pkg):
+    for root, _dirs, files in os.walk(PKG):
         for fn in files:
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(root, fn)
-            rel = os.path.relpath(path, pkg)
+            rel = os.path.relpath(path, PKG)
             with open(path) as fh:
                 for ln, line in enumerate(fh, 1):
                     for m in pat.finditer(line):
@@ -1906,7 +1908,7 @@ def audit_broadcast_sites() -> list[str]:
     return problems
 
 
-#: r14 (verdict item 4): every intra-query `.persist()` site must be reviewed
+#: r14 (verdict item 4): every `.persist()` or `.cache()` site must be reviewed
 #: here — grain (what bounds the cached bytes) + lifecycle (who releases the
 #: blocks). Grain classes: "corpus-rows" = O(input rows) of NARROW columns
 #: (ids/hashes/shingles — never decoded payloads); "pair-aggregate" =
@@ -1988,58 +1990,84 @@ PERSIST_ALLOW: dict[tuple[str, str], tuple[str, str]] = {
         "corpus-rows",
         "released: unpersisted after the (eager) PQ training loop (r14)",
     ),
+    ("frames.py", "out"): (
+        "corpus-rows",
+        "query-lifetime: the synthetic band frame (product_id, row, col, vv, "
+        "vh — five narrow numeric columns per pixel), memoized per (session, "
+        "sf_dir) and shared by the raster queries; bench.py and the tools "
+        "release it between lines with catalog clearCache() plus "
+        "frames._BAND_FRAME_CACHE.clear()",
+    ),
+    ("queries_relational.py", "bloom"): (
+        "bounded",
+        "query-lifetime: Bloom filter words, m_bits/32 rows fixed by "
+        "_BLOOM_CERT_M; read by every hash probe's broadcast join in the "
+        "returned plan",
+    ),
+    ("queries_raster.py", "wide"): (
+        "corpus-rows",
+        "query-lifetime: per-pixel u8 wide frame (ids + two u8 bands) that "
+        "the A8 floor union and final compose of the returned plan read 3x",
+    ),
+    ("queries_raster.py", "u8"): (
+        "corpus-rows",
+        "query-lifetime: per-pixel kernel u8 output shared by the dims "
+        "aggregate and the fused gather of the returned plan",
+    ),
 }
+
+
+def _persist_site_name(node, parents) -> str:
+    """Key of a persist/cache call: its nearest enclosing assignment target,
+    else its enclosing function (``<module>`` at top level)."""
+    while node in parents:
+        node = parents[node]
+        if isinstance(node, ast.Assign):
+            return ast.unparse(node.targets[0])
+        if isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+            return ast.unparse(node.target)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            return node.name
+    return "<module>"
 
 
 def audit_persist_sites() -> list[str]:
     """Static persist gate (r14, verdict item 4): parse every module, find
-    each ``<target> = <expr>.persist(...)`` site, and require a reviewed
-    (grain, lifecycle) entry in PERSIST_ALLOW — so a new cache cannot land
-    without stating what bounds it and who releases it. Stale allowlist
-    entries fail too (they would silently bless a reintroduction)."""
-    import ast
-
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sarpro_spark"
-    )
+    each ``.persist(...)``/``.cache()`` call in any statement context
+    (assignment, bare expression, return, argument), and require a reviewed
+    (grain, lifecycle) entry in PERSIST_ALLOW keyed by the call's nearest
+    assignment target, else its enclosing function — so a new cache cannot
+    land without stating what bounds it and who releases it. Stale
+    allowlist entries fail too (they would silently bless a
+    reintroduction)."""
     problems: list[str] = []
     seen: set[tuple[str, str]] = set()
-    for root, _dirs, files in os.walk(pkg):
+    for root, _dirs, files in os.walk(PKG):
         for fn in files:
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(root, fn)
-            rel = os.path.relpath(path, pkg)
-            tree = ast.parse(open(path).read())
+            rel = os.path.relpath(path, PKG)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            parents = {
+                child: node for node in ast.walk(tree) for child in ast.iter_child_nodes(node)
+            }
             for node in ast.walk(tree):
-                targets = []
-                if isinstance(node, ast.Assign):
-                    targets = [
-                        t.id for t in node.targets if isinstance(t, ast.Name)
-                    ]
-                    value = node.value
-                elif isinstance(node, ast.AnnAssign) and isinstance(
-                    node.target, ast.Name
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("persist", "cache")
                 ):
-                    targets, value = [node.target.id], node.value
-                else:
                     continue
-                if value is None:
-                    continue
-                for sub in ast.walk(value):
-                    if (
-                        isinstance(sub, ast.Call)
-                        and isinstance(sub.func, ast.Attribute)
-                        and sub.func.attr == "persist"
-                    ):
-                        key = (rel, targets[0] if targets else "<expr>")
-                        seen.add(key)
-                        if key not in PERSIST_ALLOW:
-                            problems.append(
-                                f"sarpro_spark/{rel}:{sub.lineno} .persist() into "
-                                f"{key[1]!r} not in PERSIST_ALLOW — review the "
-                                "cached grain and lifecycle first"
-                            )
+                key = (rel, _persist_site_name(node, parents))
+                seen.add(key)
+                if key not in PERSIST_ALLOW:
+                    problems.append(
+                        f"sarpro_spark/{rel}:{node.lineno} .{node.func.attr}() in "
+                        f"{key[1]!r} not in PERSIST_ALLOW — review the "
+                        "cached grain and lifecycle first"
+                    )
     for key, entry in PERSIST_ALLOW.items():
         if not (isinstance(entry, tuple) and len(entry) == 2):
             problems.append(f"PERSIST_ALLOW entry {key} must be a (grain, reason) tuple")
@@ -2078,7 +2106,7 @@ def main() -> int:
             print(f"\nPLAN AUDIT FAILED (persist gate: {len(persist_problems)})")
             return 1
     elif not sys.argv[1:]:
-        print("✓ persist-gate: all .persist sites reviewed (grain + lifecycle)")
+        print("✓ persist-gate: all .persist/.cache sites reviewed (grain + lifecycle)")
     # static planning: AQE hides codegen ids / finalizes lazily, and the
     # audit is about the designed plan shape, not runtime re-planning
     spark = build_session("explain_audit", extra_conf={"spark.sql.adaptive.enabled": "false"})
