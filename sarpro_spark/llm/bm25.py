@@ -69,16 +69,22 @@ def bm25_index(
     # it back, paying an extra aggregate leg + join operator on the same
     # exchange; the window computes the identical per-doc sum on the one
     # doc-keyed exchange the join needed anyway.
-    tfd = tf.withColumn("dl", F.sum("tf").over(Window.partitionBy(id_col)))
+    # A NULL id is no document: it gets no postings, but its tokens still
+    # count in df and the stats, as in the SQL twin's join on id.
+    tfd = tf.where(F.col(id_col).isNotNull()).withColumn(
+        "dl", F.sum("tf").over(Window.partitionBy(id_col))
+    )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # N counts ALL docs (token-less docs score 0 but still dilute idf/avgdl
     # denominators identically on both engines); avgdl over docs WITH tokens
     # — sum(dl over docs) = sum(tf over the whole tf relation) and
-    # count(docs with tokens) = count(distinct id over tf), so the stats
+    # count(docs with tokens) = count(distinct id over tf), the NULL id
+    # counting as one group like the SQL twin's GROUP BY, so the stats
     # come from ONE pass over tf instead of a second aggregate over dl.
     stats = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
         tf.agg(
-            F.sum("tf").alias("_dlsum"), F.countDistinct(id_col).alias("_dln")
+            F.sum("tf").alias("_dlsum"),
+            (F.countDistinct(id_col) + F.max(F.col(id_col).isNull().cast("int"))).alias("_dln"),
         )
     )
     # same no-forced-broadcast reasoning as tfidf_vectors: raw vocabulary is

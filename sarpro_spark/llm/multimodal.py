@@ -199,7 +199,6 @@ def safe_decode_image(payload: bytes):
         ValueError,           # malformed stream content
         struct_error,         # truncated fixed-layout field
         IndexError,           # truncated marker/segment chain
-        AssertionError,       # marker-structure invariant violated
         KeyError,             # reference to an undefined table id
         zlib.error,           # corrupt DEFLATE stream (PNG idat)
     ):

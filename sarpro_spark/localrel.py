@@ -28,7 +28,7 @@ from typing import Iterable, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType, TimestampType
 
 
 def local_relation(
@@ -48,11 +48,18 @@ def local_relation(
     itself (epoch micros) and are cast to the Arrow type, so the two paths
     agree BY CONSTRUCTION in every timezone. (No production call site
     passes timestamps today; the equivalence is pinned by
-    tests/test_localrel.py.)"""
+    tests/test_localrel.py.) A ``TimestampType`` nested in an array, map
+    or struct would skip that fix, so such a field raises ``TypeError``."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     arrow_schema = to_arrow_schema(st)
+    for sf in st.fields:
+        if not isinstance(sf.dataType, TimestampType) and _has_timestamp(sf.dataType):
+            raise TypeError(
+                f"local_relation: field {sf.name!r} ({sf.dataType.simpleString()}) nests a "
+                "timestamp; only top-level timestamp columns are supported"
+            )
     rows = list(rows)
     if rows:
         cols = list(zip(*rows))
@@ -66,3 +73,15 @@ def local_relation(
         else:
             arrays.append(pa.array(list(col), type=field.type))
     return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema))
+
+
+def _has_timestamp(dt: DataType) -> bool:
+    if isinstance(dt, TimestampType):
+        return True
+    if isinstance(dt, ArrayType):
+        return _has_timestamp(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_timestamp(dt.keyType) or _has_timestamp(dt.valueType)
+    if isinstance(dt, StructType):
+        return any(_has_timestamp(f.dataType) for f in dt.fields)
+    return False

@@ -7,10 +7,15 @@ container's lack of PIL doesn't force a stub: baseline sequential DCT, JFIF,
 4:4:4 (no chroma subsampling), grayscale or RGB, Annex-K quantization and
 Huffman tables with libjpeg-style quality scaling.
 
-Encoder design: the DCT + quantization over all blocks is vectorized numpy
-(one einsum per component); only the entropy pack is a per-block Python loop
-(table lookups + bit concat). That is plenty for per-product executor-side
-encodes; Spark-side parallelism comes from one task per product
+Encoder design: every stage is numpy array operations, with no per-block or
+per-coefficient Python. The DCT + quantization over all blocks is one einsum
+per component. The entropy coder works on strips of MCU rows: it finds the
+nonzero AC coefficients, derives their zero runs (ZRL codes) and magnitude
+categories, looks the Huffman codes up in arrays built at import, merges each
+code with its extra bits into one word, and packs the words MSB-first into
+64-bit words, then stuffs 0x00 after every 0xFF byte. The DC predictors and
+the partial byte carry from strip to strip, so the symbol arrays stay one
+strip in size. Spark-side parallelism comes from one task per product
 (writers.write_jpegs), not from threading inside the codec.
 
 A matching decoder is included because the environment has no other JPEG
@@ -104,17 +109,60 @@ for _u in range(8):
         _C[_u, _x] = _a * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 
 
-def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """Canonical Huffman: value -> (code, length)."""
-    out: dict[int, tuple[int, int]] = {}
+def _huff_lut(bits: list[int], vals: list[int]) -> tuple[np.ndarray, np.ndarray]:
+    """Canonical Huffman as lookup arrays indexed by symbol: (code, length);
+    length 0 marks a symbol the table does not define."""
+    codes = np.zeros(256, np.uint64)
+    lengths = np.zeros(256, np.uint64)
     code, k = 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            out[vals[k]] = (code, length)
+            codes[vals[k]], lengths[vals[k]] = code, length
             code += 1
             k += 1
         code <<= 1
-    return out
+    return codes, lengths
+
+
+# per table class (0 = luminance, 1 = chrominance), indexed by symbol
+_DC_CODE, _DC_LEN = (np.stack(t) for t in zip(
+    _huff_lut(DC_LUMA_BITS, DC_LUMA_VALS), _huff_lut(DC_CHROMA_BITS, DC_CHROMA_VALS)))
+_AC_CODE, _AC_LEN = (np.stack(t) for t in zip(
+    _huff_lut(AC_LUMA_BITS, AC_LUMA_VALS), _huff_lut(AC_CHROMA_BITS, AC_CHROMA_VALS)))
+
+
+_DC_SLOT = 63
+
+
+def _prefix_lut() -> tuple[np.ndarray, np.ndarray]:
+    """(code, length) of the bits that precede a coefficient's extra bits,
+    per (table class, run slot 0..63, magnitude category 0..15), flattened.
+    Slot _DC_SLOT = 63 is the DC code of the category. Slots 0..62 are an AC zero run:
+    its ZRL codes (one per 16 zeros, at most 3) followed by the Huffman code
+    of (run % 16, category)."""
+    codes = np.zeros((2, 64, 16), np.uint64)
+    lengths = np.zeros_like(codes)
+    for t in range(2):
+        codes[t, _DC_SLOT], lengths[t, _DC_SLOT] = _DC_CODE[t, :16], _DC_LEN[t, :16]
+        zrl_code, zrl_len = int(_AC_CODE[t, 0xF0]), int(_AC_LEN[t, 0xF0])
+        for run in range(63):
+            n_zrl = run >> 4
+            zrls = sum(zrl_code << (zrl_len * i) for i in range(n_zrl))
+            for size in range(16):
+                sym = ((run & 15) << 4) | size
+                code_len = int(_AC_LEN[t, sym])
+                codes[t, run, size] = (zrls << code_len) | int(_AC_CODE[t, sym])
+                lengths[t, run, size] = n_zrl * zrl_len + code_len
+    return codes.ravel(), lengths.ravel()
+
+
+_PREFIX, _PREFIX_LEN = _prefix_lut()
+# magnitude category of |v| for every 8-bit baseline coefficient or DC
+# difference (|v| <= 2047)
+_BIT_LENGTH = np.array([i.bit_length() for i in range(2048)], np.uint64)
+# MCUs (one block per component) entropy-coded per strip: working memory of
+# the symbol arrays is bounded by one strip, not by the image
+_STRIP_BLOCKS = 1 << 14
 
 
 def _scaled_quant(table: np.ndarray, quality: int) -> np.ndarray:
@@ -125,36 +173,75 @@ def _scaled_quant(table: np.ndarray, quality: int) -> np.ndarray:
     return np.clip(q, 1, 255)
 
 
-class _BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            self.nbits -= 8
-            b = (self.acc >> self.nbits) & 0xFF
-            self.buf.append(b)
-            if b == 0xFF:  # byte stuffing
-                self.buf.append(0x00)
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> None:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """JPEG magnitude category: (size, low-order bits)."""
-    if v == 0:
-        return 0, 0
-    size = int(abs(v)).bit_length()
-    bits = v if v >= 0 else v + (1 << size) - 1
+def _size_bits(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """JPEG magnitude category and its low-order bits, per value (uint64).
+    A negative value's bits are its one's complement: v + 2**size - 1."""
+    v = v.astype(np.int64)
+    size = _BIT_LENGTH[np.abs(v)]
+    bits = (v - (v < 0)).astype(np.uint64) & ((np.uint64(1) << size) - np.uint64(1))
     return size, bits
+
+
+def _entropy_words(z: np.ndarray, tab: np.ndarray,
+                   preds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Huffman words, in stream order, for blocks ``z`` (m, 64) of quantized
+    zigzag coefficients in MCU order, block ``i`` coded with table class
+    ``tab[i]``. ``preds`` holds each component's DC predictor and is advanced
+    past these blocks. Each word is one Huffman code merged with its extra
+    bits; an AC word also carries the ZRL codes before it (<= 59 bits)."""
+    nc = len(preds)
+    dc = z[:, 0].astype(np.int64).reshape(-1, nc)
+    dc_diff = np.diff(np.vstack([preds, dc]), axis=0).ravel()
+    preds[:] = dc[-1]
+
+    # one symbol per DC and per nonzero AC coefficient, already in stream
+    # order; each block's DC opens its symbols, so an AC coefficient's zero
+    # run is the gap to the symbol before it
+    coded = z != 0
+    coded[:, 0] = True
+    at = np.flatnonzero(coded)
+    pos = at & 63
+    is_dc = pos == 0
+    v = z.ravel()[at]
+    v[is_dc] = dc_diff
+    size, bits = _size_bits(v)
+    slot = np.where(is_dc, _DC_SLOT, at - np.roll(at, 1) - 1)
+    lut = (tab[at >> 6] * 64 + slot) * 16 + size.astype(np.int64)
+    word = (_PREFIX[lut] << size) | bits
+    length = _PREFIX_LEN[lut] + size
+
+    # end-of-block code after a block's last symbol when zeros trail it
+    last = np.flatnonzero(np.r_[is_dc[1:], True])
+    last = last[pos[last] < 63]
+    t = tab[at[last] >> 6]
+    return (np.insert(word, last + 1, _AC_CODE[t, 0x00]),
+            np.insert(length, last + 1, _AC_LEN[t, 0x00]))
+
+
+def _pack(word: np.ndarray, length: np.ndarray) -> tuple[bytes, int, int]:
+    """Concatenate the words MSB-first (each <= 64 bits). Returns the whole
+    bytes, 0xFF-stuffed, and the leftover partial byte as (value, n_bits)."""
+    length = length.astype(np.int64)
+    end = np.cumsum(length)
+    total = int(end[-1])
+    start = end - length
+    # w: the 64-bit word a code word starts in; e: where it ends, in bits
+    # from the start of w (at most 63 + 59)
+    w, e = start >> 6, (start & 63) + length
+    fits = e <= 64
+    hi = np.where(fits, word << np.where(fits, 64 - e, 0).astype(np.uint64),
+                  word >> np.where(fits, 0, e - 64).astype(np.uint64))
+    out = np.zeros((total + 63) // 64, np.uint64)
+    heads = np.flatnonzero(np.r_[True, w[1:] != w[:-1]])
+    out[w[heads]] = np.bitwise_or.reduceat(hi, heads)
+    spill = ~fits  # the word runs into the next 64-bit word
+    out[w[spill] + 1] |= word[spill] << (128 - e[spill]).astype(np.uint64)
+    raw = np.frombuffer(out.astype(">u8").tobytes(), np.uint8)
+    n_bytes, n_left = divmod(total, 8)
+    left = int(raw[n_bytes]) >> (8 - n_left) if n_left else 0
+    raw = raw[:n_bytes]
+    raw = np.insert(raw, np.flatnonzero(raw == 0xFF) + 1, 0)  # byte stuffing
+    return raw.tobytes(), left, n_left
 
 
 def _blocks(channel: np.ndarray) -> np.ndarray:
@@ -167,37 +254,6 @@ def _blocks(channel: np.ndarray) -> np.ndarray:
     return (
         channel.reshape(r8, 8, c8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
     )
-
-
-def _encode_component(bw: _BitWriter, qcoef: np.ndarray, idx: int,
-                      pred: int, dc_tab: dict, ac_tab: dict) -> int:
-    """Entropy-code one block (already quantized, zigzag order)."""
-    z = qcoef[idx]
-    dc = int(z[0])
-    size, bits = _magnitude(dc - pred)
-    code, length = dc_tab[size]
-    bw.write(code, length)
-    if size:
-        bw.write(bits, size)
-    run = 0
-    for k in range(1, 64):
-        v = int(z[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_tab[0xF0]  # ZRL
-            bw.write(code, length)
-            run -= 16
-        size, bits = _magnitude(v)
-        code, length = ac_tab[(run << 4) | size]
-        bw.write(code, length)
-        bw.write(bits, size)
-        run = 0
-    if run:
-        code, length = ac_tab[0x00]  # EOB
-        bw.write(code, length)
-    return dc
 
 
 def _quantize_all(channel: np.ndarray, qtab: np.ndarray) -> np.ndarray:
@@ -241,19 +297,27 @@ def encode_jpeg(arr: np.ndarray, quality: int = 90) -> bytes:
             _quantize_all(cr, qc),
         ]
 
-    dc_l = _huff_codes(DC_LUMA_BITS, DC_LUMA_VALS)
-    ac_l = _huff_codes(AC_LUMA_BITS, AC_LUMA_VALS)
-    dc_c = _huff_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    ac_c = _huff_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-
-    bw = _BitWriter()
-    preds = [0] * len(comps)
+    # entropy-code strips of whole MCU rows, carrying the DC predictors and
+    # the partial byte from strip to strip
+    nc = len(comps)
+    bc8 = (cols + 7) // 8
+    step = max(1, _STRIP_BLOCKS // bc8) * bc8
     n_blocks = comps[0].shape[0]
-    for i in range(n_blocks):
-        for ci, qcoef in enumerate(comps):
-            dct, act = (dc_l, ac_l) if ci == 0 else (dc_c, ac_c)
-            preds[ci] = _encode_component(bw, qcoef, i, preds[ci], dct, act)
-    bw.flush()
+    tab_mcu = np.array([0] + [1] * (nc - 1))
+    preds = np.zeros(nc, np.int64)
+    scan, left, n_left = bytearray(), 0, 0
+    for b0 in range(0, n_blocks, step):
+        z = np.stack([c[b0:b0 + step] for c in comps], axis=1).reshape(-1, 64)
+        word, length = _entropy_words(z, np.tile(tab_mcu, len(z) // nc), preds)
+        if n_left:
+            word = np.r_[np.uint64(left), word]
+            length = np.r_[np.uint64(n_left), length]
+        pad = -int(length.sum()) % 8 if b0 + step >= n_blocks else 0
+        if pad:  # fill the last byte with 1-bits
+            word = np.r_[word, np.uint64((1 << pad) - 1)]
+            length = np.r_[length, np.uint64(pad)]
+        data, left, n_left = _pack(word, length)
+        scan += data
 
     out = bytearray()
     out += b"\xFF\xD8"  # SOI
@@ -275,7 +339,7 @@ def encode_jpeg(arr: np.ndarray, quality: int = 90) -> bytes:
     for ci in range(nf):
         out += struct.pack("BB", ci + 1, 0x00 if ci == 0 else 0x11)
     out += b"\x00\x3F\x00"
-    out += bw.buf
+    out += scan
     out += b"\xFF\xD9"  # EOI
     return bytes(out)
 
@@ -394,7 +458,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     rows = cols = 0
     scan_order: list[dict] = []
     while pos < len(data):
-        assert data[pos] == 0xFF, "marker expected"
+        if data[pos] != 0xFF:
+            raise ValueError(f"marker expected at byte {pos}")
         marker = data[pos + 1]
         pos += 2
         if marker == 0xD9:  # EOI

@@ -6,7 +6,9 @@ The relational engine's primary sink is partitioned Parquet (columnar,
 predicate-pushdown-friendly — what a 100 TB consumer reads back). Image
 encodes (W1-W3: GeoTIFF/JPEG) happen per product inside a grouped pandas
 task, so no pixel data crosses the driver; the bytes come from the in-repo
-pure-Python codecs ``sinks/tiff.py`` and ``sinks/jpeg.py``.
+codecs ``sinks/tiff.py`` and ``sinks/jpeg.py`` (numpy only: the JPEG coder
+runs its DCT and Huffman entropy coding as array operations, no
+per-coefficient Python).
 """
 
 from __future__ import annotations

@@ -447,7 +447,13 @@ def read_bands_px(
     executor task that owns its manifest row (mapInPandas over the opened
     products frame) and emit the dense (product_path, row, col, value) pixel
     frame the operator pipeline consumes. The pixel payload never exists on
-    the driver."""
+    the driver.
+
+    The frame carries a ``shuffle_merge`` join hint. The planner estimates
+    its size from the few-row product manifest, not from the pixel rows the
+    decode emits, so a join on it would otherwise broadcast a whole band's
+    pixels through the driver and hold the other side's decode behind that
+    build."""
     import numpy as np
 
     from sarpro_spark import frames
@@ -463,4 +469,7 @@ def read_bands_px(
                     yield frames.to_rows({"product_path": rec["product_path"]}, [value], arr)
 
     cols = ["product_path", path_col]
-    return products.select(*cols).repartition("product_path").mapInPandas(fn, schema=schema)
+    return (
+        products.select(*cols).repartition("product_path")
+        .mapInPandas(fn, schema=schema).hint("shuffle_merge")
+    )

@@ -1583,6 +1583,34 @@ def test_bm25_spark_matches_duckdb_twin(spark):
     assert got == want
 
 
+def test_bm25_index_drops_null_doc_ids(spark):
+    """A doc with a NULL id gets no postings, yet still counts in n_docs,
+    df and avgdl exactly as the DuckDB twin's join on id leaves it."""
+    import duckdb
+
+    from sarpro_spark.llm.bm25 import bm25_index, bm25_topk, sql_bm25_topk
+
+    rows = [(1, "alpha beta gamma"), (None, "alpha alpha delta"), (2, "beta delta"),
+            (None, "gamma"), (3, "alpha")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    idx = bm25_index(docs, max_df_frac=1.0).collect()
+    assert idx and all(r["doc_id"] is not None for r in idx)
+    assert {r["doc_id"] for r in idx} == {1, 2, 3}
+
+    qs_rows = [(7, "alpha delta"), (8, "gamma beta")]
+    qs = spark.createDataFrame(qs_rows, "query_id long, qtext string")
+    got = {(r["query_id"], r["rnk"]): (r["doc_id"], r["score"])
+           for r in bm25_topk(docs, qs, k=3, max_df_frac=1.0).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    con.execute("CREATE TABLE q (query_id BIGINT, qtext VARCHAR)")
+    con.executemany("INSERT INTO q VALUES (?, ?)", qs_rows)
+    want = {(qid, rnk): (did, sc) for qid, did, sc, rnk in
+            con.execute(sql_bm25_topk("d", "q", k=3, max_df_frac=1.0)).fetchall()}
+    assert got == want and len(got) == 5
+
+
 # --- perceptual image hashing (llm/imagehash.py, r12) ---------------------------
 
 

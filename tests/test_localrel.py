@@ -71,6 +71,19 @@ def test_timestamps_use_tointernal_micros(spark):
     assert got[1] is None
 
 
+@pytest.mark.parametrize("ddl", [
+    "id int, ts array<timestamp>",
+    "id int, ts map<string, timestamp>",
+    "id int, ts struct<at: timestamp, n: int>",
+    "id int, ts array<struct<at: timestamp>>",
+])
+def test_nested_timestamps_rejected(spark, ddl):
+    """A timestamp inside an array, map or struct would bypass the
+    ``toInternal`` fix above, so it is refused by field name up front."""
+    with pytest.raises(TypeError, match="field 'ts'"):
+        local_relation(spark, [], ddl)
+
+
 def test_empty_rows(spark):
     df = local_relation(spark, [], "i int, s string")
     assert df.count() == 0

@@ -400,6 +400,43 @@ def test_safe_e2e_read_pipeline_write(spark, tmp_path):
         assert r["q"] == orig[(r["row"], r["col"])]
 
 
+def test_read_bands_px_pixel_join_never_broadcasts(spark, tmp_path):
+    """Joining the VV and VH pixel frames of the same products runs as a
+    shuffle join: the planner sizes read_bands_px's output by its few-row
+    product manifest, so without the frame's own join hint it would
+    broadcast every pixel of one band through the driver."""
+    import numpy as np
+
+    from sarpro_spark.sinks import tiff as t
+
+    rng = np.random.default_rng(9)
+    want = {}
+    for i, shape in enumerate([(12, 10), (9, 14), (16, 8)]):
+        p = tmp_path / f"P{i}.SAFE"
+        (p / "annotation").mkdir(parents=True)
+        (p / "measurement").mkdir()
+        (p / "manifest.safe").write_text(MANIFEST)
+        (p / "annotation" / "iw-vv.xml").write_text(ANNOTATION)
+        vv = rng.integers(0, 4000, shape).astype(np.uint16)
+        vh = rng.integers(0, 4000, shape).astype(np.uint16)
+        t.write_tiff(str(p / "measurement" / f"s1a-iw-grd-vv-{i}.tiff"), vv)
+        t.write_tiff(str(p / "measurement" / f"s1a-iw-grd-vh-{i}.tiff"), vh)
+        for (r, c), a in np.ndenumerate(vv):
+            want[(str(p), r, c)] = (float(a), float(vh[r, c]))
+
+    prods = safe.open_products(spark, str(tmp_path)).where(F.col("status") == "ok")
+    joined = safe.read_bands_px(prods, "vv", value="vv").join(
+        safe.read_bands_px(prods, "vh", value="vh"), ["product_path", "row", "col"]
+    )
+    rows = joined.collect()
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Broadcast" not in plan, plan
+    assert "SortMergeJoin" in plan
+    got = {(r["product_path"].removeprefix("file:"), r["row"], r["col"]): (r["vv"], r["vh"])
+           for r in rows}
+    assert len(rows) == len(want) and got == want
+
+
 # --- W3: JPEG codec + sink ----------------------------------------------------
 
 
