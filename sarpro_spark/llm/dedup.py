@@ -21,7 +21,7 @@ Five surfaces, each shuffle-bounded for 100 TB:
 Every MinHash-family function is written over ONE chain of private builders,
 each the single home of one decision, with its DuckDB twin beside it:
 
-  _minhash_frame / _sql_hashed + sql_minhash_ctes
+  shingle_hashes + minhash_mins -> _minhash_frame / _sql_hashed + sql_minhash_ctes
                md5-prefix base hash per shingle, the seeded permutation
                minimums sig_i and (when verifying) the sorted hash set.
   _band_slices -> _band_keys / sql_minhash_bands
@@ -33,16 +33,27 @@ each the single home of one decision, with its DuckDB twin beside it:
   sql_minhash_agreement
                the signature-agreement fraction (est_sim) in SQL.
 
-All Spark-side logic is native column expressions (codegen, no Python in the
-hot path).
+Spark-side logic is native column expressions (codegen) except the MinHash
+signature: ``_minhash_frame`` is one Arrow block kernel (hashlib md5 per
+distinct shingle, numpy for the k permutations and mins) after one shuffle of
+the document text. ``shingle_hashes`` and ``minhash_mins`` are the only
+Python form of the hash chain; the streaming signature stage
+(``streaming/dedup.py:doc_sig_bands``) calls the same two.
 """
 
 from __future__ import annotations
 
-from itertools import combinations
+from collections.abc import Iterator
+from hashlib import md5
+from itertools import combinations, groupby
+from operator import itemgetter
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
 
 from sarpro_spark.llm.cluster import _checkpointer
 
@@ -59,8 +70,6 @@ _MINHASH_SEED = 0x51AB
 
 def minhash_coeffs(num_hashes: int, seed: int = _MINHASH_SEED) -> list[tuple[int, int]]:
     """Seeded (a, b) pairs shared by the Spark and SQL sides."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     a = rng.integers(1, MINHASH_PRIME, num_hashes)
     b = rng.integers(0, MINHASH_PRIME, num_hashes)
@@ -112,14 +121,10 @@ def char_shingles(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = DEFAULT_SHINGLE,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Lowercase char-n-grams per doc: (id, shingle). Docs shorter than n
-    contribute no shingles (matching SUBSTR semantics on both engines).
-
-    ``distinct=True`` (set semantics) costs a shuffle — required for Jaccard
-    sizes and SimHash. MIN-aggregating consumers (MinHash) pass False: the
-    min over duplicates is identical and the shuffle disappears."""
+    """Distinct lowercase char-n-grams per doc: (id, shingle). Docs shorter
+    than n contribute no shingles (matching SUBSTR semantics on both
+    engines)."""
     # Heavy compute fans out from few input splits (a small parquet file is a
     # single row group => a single task): spread docs across the cluster
     # BEFORE the explode so shingling/hashing parallelizes; narrow-scan
@@ -129,12 +134,12 @@ def char_shingles(
     df = widen_if_narrow(df, id_col)
     lowered = F.lower(F.col(text_col))
     pos = F.explode(F.sequence(F.lit(1), F.greatest(F.length(lowered) - (n - 1), F.lit(0))))
-    out = (
+    return (
         df.select(F.col(id_col), lowered.alias("_t"), pos.alias("_i"))
         .select(F.col(id_col), F.substring(F.col("_t"), F.col("_i"), F.lit(n)).alias("shingle"))
         .where(F.length("shingle") == n)
+        .distinct()
     )
-    return out.distinct() if distinct else out
 
 
 def sql_char_shingles(src_rel: str, id_col: str = "doc_id", text_col: str = "text", n: int = DEFAULT_SHINGLE) -> str:
@@ -266,6 +271,61 @@ WHERE CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) >= {thre
 _KEY = ["band", "dropped", "bucket"]
 
 
+_NO_HASHES = np.empty(0, dtype=np.int64)
+
+
+def shingle_hashes(text: str | None, n: int) -> np.ndarray:
+    """Sorted distinct base hashes of ``text``'s lowercase char-n-gram
+    shingles (int64): the top 60 bits of each shingle's md5 reduced mod
+    :data:`MINHASH_PRIME` — the value ``_sql_hashed`` computes as
+    ``CAST('0x' || SUBSTR(MD5(shingle), 1, 15) AS BIGINT) % p``. Empty for
+    NULL text and for text shorter than ``n`` after lowering (no shingles,
+    matching SUBSTR semantics). The one Python home of the MinHash hash
+    chain: the batch frame and the streaming signature stage both call it."""
+    if text is None:
+        return _NO_HASHES
+    t = text.lower()
+    grams = {t[p:p + n] for p in range(len(t) - n + 1)}
+    if not grams:
+        return _NO_HASHES
+    digests = b"".join([md5(g.encode("utf-8")).digest()[:8] for g in grams])
+    hs = (np.frombuffer(digests, dtype=">u8") >> 4).astype(np.int64) % MINHASH_PRIME
+    return np.unique(hs)
+
+
+def minhash_mins(hashes: np.ndarray, starts: np.ndarray, coeffs: list[tuple[int, int]]) -> np.ndarray:
+    """(k, docs) int64 signatures of a block of documents whose base hashes
+    are concatenated in ``hashes``, doc j owning the non-empty segment that
+    starts at ``starts[j]``: sig_i = min((a_i*h + b_i) mod p) over the
+    segment. One permutation at a time, so memory stays at one copy of the
+    block whatever k is; a_i*h < 2^62 keeps the arithmetic exact in int64."""
+    out = np.empty((len(coeffs), len(starts)), dtype=np.int64)
+    for i, (a, b) in enumerate(coeffs):
+        out[i] = np.minimum.reduceat((a * hashes + b) % MINHASH_PRIME, starts)
+    return out
+
+
+def _id_runs(
+    batches: Iterator[pa.RecordBatch], id_col: str, text_col: str, n: int
+) -> Iterator[tuple[object, np.ndarray]]:
+    """(id, sorted distinct base hashes) per run of equal ids in id-sorted
+    Arrow batches — a run may straddle batches, and NULL ids form one run
+    (``None == None``), as a ``groupBy`` groups them."""
+    rows = (
+        row
+        for rb in batches
+        for row in zip(rb.column(id_col).to_pylist(), rb.column(text_col).to_pylist())
+    )
+    for i, run in groupby(rows, key=itemgetter(0)):
+        parts = [shingle_hashes(text, n) for _, text in run]
+        yield i, parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
+
+
+#: base hashes gathered before a kernel emits a batch — bounds a task's
+#: block memory (8 bytes per hash) independently of the Arrow batch size
+_KERNEL_BLOCK = 1 << 20
+
+
 def _minhash_frame(
     df: DataFrame,
     id_col: str,
@@ -274,33 +334,61 @@ def _minhash_frame(
     num_hashes: int,
     sets: bool = False,
 ) -> DataFrame:
-    """(id, sig_0..sig_{k-1}[, hset, sz]) from ONE shingle explode + md5 pass
-    and ONE aggregation: sig_i = MIN((a_i*h + b_i) mod p) over the 60-bit
-    md5-prefix base hash h of each shingle — one md5 per shingle, k cheap
-    multiply-mods (codegen'd), bit-identical in the DuckDB oracle.
-    ``sets=True`` also carries each doc's distinct hash SET (sorted array)
-    and its size out of the same shuffle; the set is bounded by doc length,
-    so the agg buffer stays small even when the corpus is 100 TB.
+    """(id, sig_0..sig_{k-1}[, hset, sz]): one row per distinct id with at
+    least one shingle, sig_i = MIN((a_i*h + b_i) mod p) over the base hashes
+    h of every shingle of every row carrying that id (:func:`shingle_hashes`,
+    :func:`minhash_mins`) — bit-identical to the DuckDB ``sigs``/``hdist``
+    CTEs. ``sets=True`` also carries each doc's sorted distinct hash set
+    and its size, bounded by doc length.
 
-    Non-distinct shingles: MIN and collect_set over duplicates are
-    identical, so the explode feeds the aggregation directly (map-side
-    combine, single shuffle)."""
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-        % MINHASH_PRIME
+    One Arrow block kernel after one shuffle of the (id, text) rows:
+    hash-partitioned on id, sorted within partitions so the rows of one id
+    (NULL ids form one group, as a ``groupBy`` would) arrive as one run that
+    may straddle Arrow batches. The partition count is the session's
+    ``spark.sql.shuffle.partitions`` given BY NUMBER: AQE coalesces a
+    by-column repartition of this byte-small text shuffle to one partition,
+    and the stage is CPU-bound per byte of text, not per shuffled byte."""
+    coeffs = minhash_coeffs(num_hashes)
+    fields = [df.schema[id_col]] + [StructField(f"sig_{i}", LongType()) for i in range(num_hashes)]
+    if sets:
+        fields += [
+            StructField("hset", ArrayType(LongType(), containsNull=False), nullable=False),
+            StructField("sz", IntegerType(), nullable=False),
+        ]
+    schema = StructType(fields)
+    arrow = to_arrow_schema(schema)
+
+    def emit(ids: list, docs: list[np.ndarray]) -> pa.RecordBatch:
+        sizes = np.fromiter((len(h) for h in docs), dtype=np.int32, count=len(docs))
+        offsets = np.zeros(len(docs) + 1, dtype=np.int32)
+        np.cumsum(sizes, out=offsets[1:])
+        flat = np.concatenate(docs)
+        cols = [pa.array(ids, type=arrow.field(0).type)]
+        cols += [pa.array(row) for row in minhash_mins(flat, offsets[:-1], coeffs)]
+        if sets:
+            cols += [pa.ListArray.from_arrays(offsets, flat, type=arrow.field("hset").type), pa.array(sizes)]
+        return pa.RecordBatch.from_arrays(cols, schema=arrow)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ids, docs, pending = [], [], 0
+        for i, hs in _id_runs(batches, id_col, text_col, n):
+            if len(hs):
+                ids.append(i)
+                docs.append(hs)
+                pending += len(hs)
+            if pending >= _KERNEL_BLOCK:
+                yield emit(ids, docs)
+                ids, docs, pending = [], [], 0
+        if docs:
+            yield emit(ids, docs)
+
+    parts_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        df.select(id_col, text_col)
+        .repartition(parts_n, id_col)
+        .sortWithinPartitions(id_col)
+        .mapInArrow(kernel, schema)
     )
-    hashed = char_shingles(df, id_col, text_col, n, distinct=False).select(
-        F.col(id_col), base.alias("h")
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    if not sets:
-        return hashed.groupBy(id_col).agg(*aggs)
-    return hashed.groupBy(id_col).agg(
-        *aggs, F.sort_array(F.collect_set("h")).alias("hset")
-    ).withColumn("sz", F.size("hset"))
 
 
 def _band_slices(num_hashes: int, bands: int, probe: int = 0) -> list[tuple[int, int, list[int]]]:

@@ -189,7 +189,7 @@ def allpairs_jaccard_pairs(
     # arrays) — unpersisted, the explode+distinct shingle pass ran once per
     # consumer (24 parquet scans in the sf0.1 plan). Intra-query persist:
     # materialized during this query's own computation, never across runs.
-    tok = char_shingles(df, id_col=id_col, text_col=text_col, n=n, distinct=True).persist()
+    tok = char_shingles(df, id_col=id_col, text_col=text_col, n=n).persist()
     ranked = _ranked_shingles(tok, id_col)
     cand = ppjoin_candidates(ranked, id_col, tn, td)
     sets = tok.groupBy(id_col).agg(F.collect_set("shingle").alias("toks"))
@@ -286,7 +286,7 @@ def allpairs_prefix_stats(
 
     t = _threshold(threshold)
     tn, td = t.numerator, t.denominator
-    tok = char_shingles(df, id_col=id_col, text_col=text_col, n=n, distinct=True).persist()
+    tok = char_shingles(df, id_col=id_col, text_col=text_col, n=n).persist()
     ranked = _ranked_shingles(tok, id_col).persist()
     prefix = ranked.where(F.col("rn") <= _mid_prefix_bound(F.col("s"), tn, td))
     a = prefix.select(

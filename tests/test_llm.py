@@ -330,6 +330,70 @@ def test_minhash_pairs_independent_of_partitioning(spark):
     assert all(exact.get((da, db)) == j for da, db, j in a)
 
 
+#: a shared id, two NULL ids, NULL / empty / shorter-than-a-shingle text and
+#: non-ASCII case mapping (dotted capital I, final sigma, eszett, titlecase
+#: digraph, ligature) — the DuckDB twin lowers non-ASCII text differently,
+#: so these rows are pinned by digests of the Spark-expression form
+_MINHASH_EDGE_ROWS = [
+    (1, "The quick brown fox jumps over the lazy dog"),
+    (1, "the quick brown fox leaps over a lazy cat"),
+    (2, "İstanbul ΣΑΣ Straße ǅemal ﬁne"),
+    (3, None),
+    (4, ""),
+    (5, "abc"),
+    (None, "a null-id document, the first one"),
+    (None, "another null-id document text"),
+    (6, "The quick brown fox jumps over the lazy dog!"),
+]
+
+
+@pytest.mark.parametrize(
+    "num_hashes, sets, digest",
+    [
+        (16, True, "1ecc7e4c499744eacc51e822966049bf4c312cdb5f7b4a163c07d4a77ee332d8"),
+        (8, False, "1afa44e32e22b646f434dccebff6462af57c29edac1b9f7d71c47d89b586e4ea"),
+        (0, True, "ccb6fcbf134f5b76ce3108e046a3466bb2c655552812e15ca2ce7d282a2ebda8"),
+        (16, False, "990be54c546ce01465ae06d66d2cb99e4039a7b4ce0eb46a91148829a9e8cbc8"),
+    ],
+)
+def test_minhash_frame_golden_rows(spark, num_hashes, sets, digest):
+    """The signature frame's rows and schema: sha256 of the sorted row
+    reprs, recorded from the explode/md5/conv + groupBy form the Arrow
+    kernel replaced. Rows of one id merge, the NULL ids form one group, and
+    docs without a shingle emit no row."""
+    import hashlib
+
+    df = spark.createDataFrame(_MINHASH_EDGE_ROWS, "doc_id bigint, text string")
+    out = dd._minhash_frame(df, "doc_id", "text", 5, num_hashes, sets=sets)
+    rows = sorted(repr(tuple(r)) for r in out.collect())
+    assert len(rows) == 4
+    assert hashlib.sha256("\n".join(rows).encode()).hexdigest() == digest
+    want = ["doc_id", *(f"sig_{i}" for i in range(num_hashes))] + (["hset", "sz"] if sets else [])
+    assert out.columns == want
+    assert out.schema["doc_id"].nullable
+    if sets:
+        hset = out.schema["hset"]
+        assert not hset.nullable and not hset.dataType.containsNull
+        assert not out.schema["sz"].nullable
+
+
+def test_minhash_frame_keeps_shuffle_parallelism(spark, tmp_path):
+    """A single-file corpus scans as one task; the signature frame must
+    still spread over spark.sql.shuffle.partitions tasks after AQE. A
+    by-column repartition of this byte-small text shuffle is coalesced to
+    one partition, and the kernel is CPU-bound per byte of text."""
+    rows = [(i, f"document {i} about topic {i % 13} with some words") for i in range(200)]
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(rows, "doc_id bigint, text string").coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert len(docs.inputFiles()) == 1
+    sig = dd._minhash_frame(docs, "doc_id", "text", 5, 8, sets=True)
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert want > 1
+    assert sig.rdd.getNumPartitions() == want
+    assert sig.count() == 200
+
+
 # --- corpus hygiene + sampling ------------------------------------------------
 
 

@@ -476,6 +476,32 @@ def test_streaming_neardup_capped_flag(spark, tmp_path, nanos_conf_reset):
     assert by_doc[4] == {True}
 
 
+def test_streaming_neardup_batch_drops_null_ids(spark):
+    """A NULL doc_id never pairs (the SQL twins' a.doc_id < b.doc_id is
+    never true for it), so the signature stage drops the document: the
+    pairs of a frame with NULL-id copies equal the pairs without them. Ids
+    above 2^53 survive next to the NULLs unrounded."""
+    from sarpro_spark.streaming import dedup as sdd
+
+    text = "the quick brown fox jumps over the lazy dog again and again "
+    big = 2**62 + 1
+    rows = [
+        (1, text),
+        (2, text + "today"),
+        (big, text + "now"),
+        (3, "completely different content about spark engines"),
+    ]
+    schema = "doc_id bigint, text string"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(
+        rows + [(None, text), (None, text + "today")], schema
+    )
+    expected = sorted(map(tuple, sdd.streaming_neardup_batch(clean).collect()))
+    assert expected and any(r[2] == big for r in expected)
+    assert sorted(map(tuple, sdd.streaming_neardup_batch(dirty).collect())) == expected
+    assert dirty.transform(sdd.doc_sig_bands).where("doc_id IS NULL").count() == 0
+
+
 def test_stream_stream_neardup_equals_batch_twin(spark, sf_dir, tmp_path, nanos_conf_reset):
     """r9 stream-STREAM near-dup: two live file-source streams (corpus
     split by doc_id parity), arrivals deliberately CROSSED — the a-side

@@ -425,7 +425,9 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_incremental": {
-        # all relational: fingerprint agg, band-bucket join, jaccard verify
+        # fingerprint agg, band-bucket join and jaccard verify are
+        # relational; the signature frame is the Arrow kernel behind a
+        # checkpoint
         "require": ["HashAggregate", "Window"],
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
@@ -602,8 +604,9 @@ AUDITS: dict[str, dict] = {
         # r10 doc-side multi-probe: candidates come from the keyed
         # (band, dropped, bucket) self-join — a CartesianProduct here is
         # the all-pairs scan banding exists to prevent; truth is the
-        # inverted-index exact-jaccard path; everything is column
-        # expressions (md5 banding), no Python anywhere
+        # inverted-index exact-jaccard path; the signature frame is the
+        # Arrow block kernel behind a checkpoint, the banding is column
+        # expressions (md5 buckets), no per-row Python UDF
         "require": ["HashAggregate"], "codegen": True,
         "forbid": ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
     },
@@ -641,11 +644,12 @@ AUDITS: dict[str, dict] = {
     "dedup_stream_stream_neardup": {
         # r9 cross-stream twin: the cross-pair join must key on the LSH
         # (band, bucket) — a CartesianProduct here is the all-pairs scan
-        # the banding exists to prevent. r12: the signature stage is the
-        # vectorized Arrow block kernel (MapInPandas — the interpreted
-        # HOF form pinned the 10x soak at vs_linear 0.95); the join and
-        # agreement math stay JVM-side
-        "require": ["MapInPandas"],
+        # the banding exists to prevent. The signature stage is the
+        # vectorized Arrow block kernel (MapInArrow, over the batch
+        # frame's own hash helpers — the interpreted HOF form pinned the
+        # 10x soak at vs_linear 0.95); the join and agreement math stay
+        # JVM-side
+        "require": ["MapInArrow"],
         "forbid": ["CartesianProduct", "BatchEvalPython", "ArrowEvalPython"],
     },
     "dedup_semantic_prune": {
@@ -962,8 +966,12 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_minhash_signatures": {
-        "require": ["HashAggregate", "Generate"], "codegen": True,
-        "forbid": ["CartesianProduct", "BatchEvalPython"],
+        # one Arrow block kernel after ONE (id, text) shuffle whose partition
+        # count is given by number — AQE coalesces a by-column repartition
+        # of this byte-small text shuffle to a single task; no per-shingle
+        # explode or wide aggregate
+        "require": ["MapInArrow", "REPARTITION_BY_NUM"], "codegen": True,
+        "forbid": ["CartesianProduct", "BatchEvalPython", "Generate", "HashAggregate"],
     },
     "dedup_simhash": {
         "require": ["HashAggregate", "Generate"], "codegen": True,
@@ -1359,10 +1367,10 @@ AUDITS: dict[str, dict] = {
     },
     # r12 ratchet: batch twin of the streaming pipeline: band Generate + bucket join + SMJ verify
     # r12 ratchet: batch twin of the streaming pipeline — the signature
-    # stage is the vectorized Arrow kernel (MapInPandas), index/bucket
+    # stage is the vectorized Arrow kernel (MapInArrow), index/bucket
     # joins and verify stay JVM-side
     "dedup_streaming_neardup": {
-        "require": ['HashAggregate', 'MapInPandas'],
+        "require": ['HashAggregate', 'MapInArrow'],
         "forbid": ['CartesianProduct', 'BatchEvalPython', 'ArrowEvalPython'],
     },
     # r12 ratchet: unrolled logistic steps end in a bounded literal plan
