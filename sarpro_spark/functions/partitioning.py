@@ -44,33 +44,52 @@ def _estimated_splits(df: DataFrame, files: list[str]) -> int:
     return splits
 
 
+def shuffle_partition_count(df: DataFrame) -> int:
+    """``spark.sql.shuffle.partitions`` as a number, for a repartition that
+    must be given BY NUMBER: a by-number repartition plans as
+    REPARTITION_BY_NUM, which AQE must not coalesce, where AQE sizes a
+    by-column one by its shuffled bytes. Use it for an exchange whose bytes
+    are small but whose downstream work is large (an explode, a CPU-bound
+    kernel) — coalesced by its bytes, that work would run in one task.
+
+    Platforms that manage AQE themselves may set the conf to a non-numeric
+    value (e.g. ``"auto"``); fall back to the cluster's default parallelism
+    rather than crashing on ``int()``."""
+    raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    try:
+        return int(raw)
+    except (TypeError, ValueError):
+        return int(df.sparkSession.sparkContext.defaultParallelism)
+
+
+def scan_is_narrow(df: DataFrame, min_parallelism: int | None = None) -> bool:
+    """True when ``df`` reads files whose estimated scan-split count is
+    below ``min_parallelism`` (default: defaultParallelism).
+
+    Heuristic, deliberately conservative: when the frame is not file-backed
+    (``inputFiles()`` empty — in-memory test frames, post-shuffle stages) the
+    upstream op that produced it already chose a parallelism, so it is not
+    narrow."""
+    par = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
+    try:
+        files = df.inputFiles()
+    except Exception:  # noqa: BLE001 — non-file plans: leave as-is
+        return False
+    return bool(files) and _estimated_splits(df, files) < par
+
+
 def widen_if_narrow(
     df: DataFrame,
     key_col: str,
     min_parallelism: int | None = None,
     assume_wide: bool = False,
 ) -> DataFrame:
-    """Repartition ``df`` by ``key_col`` only when its estimated scan-split
-    count is below ``min_parallelism`` (default: defaultParallelism).
+    """Repartition ``df`` by ``key_col`` into ``min_parallelism`` (default:
+    defaultParallelism) partitions only when :func:`scan_is_narrow`.
 
     ``assume_wide=True`` is the explicit call-site override for inputs known
     to arrive well-partitioned (a production corpus): skips the heuristic
-    entirely and never adds a shuffle.
-
-    Heuristic, deliberately conservative: when the frame is not file-backed
-    (``inputFiles()`` empty — in-memory test frames, post-shuffle stages) the
-    upstream op that produced it already chose a parallelism, so leave it
-    alone.
-    """
-    if assume_wide:
+    entirely and never adds a shuffle."""
+    if assume_wide or not scan_is_narrow(df, min_parallelism):
         return df
-    par = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file plans: leave as-is
-        return df
-    if not files:
-        return df
-    if _estimated_splits(df, files) < par:
-        return df.repartition(par, key_col)
-    return df
+    return df.repartition(min_parallelism or df.sparkSession.sparkContext.defaultParallelism, key_col)

@@ -21,7 +21,7 @@ Five surfaces, each shuffle-bounded for 100 TB:
 Every MinHash-family function is written over ONE chain of private builders,
 each the single home of one decision, with its DuckDB twin beside it:
 
-  shingle_hashes + minhash_mins -> _minhash_frame / _sql_hashed + sql_minhash_ctes
+  shingle_hashes + minhash_blocks -> _minhash_frame / _sql_hashed + sql_minhash_ctes
                md5-prefix base hash per shingle, the seeded permutation
                minimums sig_i and (when verifying) the sorted hash set.
   _band_slices -> _band_keys / sql_minhash_bands
@@ -34,19 +34,18 @@ each the single home of one decision, with its DuckDB twin beside it:
                the signature-agreement fraction (est_sim) in SQL.
 
 Spark-side logic is native column expressions (codegen) except the MinHash
-signature: ``_minhash_frame`` is one Arrow block kernel (hashlib md5 per
-distinct shingle, numpy for the k permutations and mins) after one shuffle of
-the document text. ``shingle_hashes`` and ``minhash_mins`` are the only
-Python form of the hash chain; the streaming signature stage
-(``streaming/dedup.py:doc_sig_bands``) calls the same two.
+signature: ``_minhash_frame`` hashes each row in an Arrow kernel (hashlib
+md5 per distinct shingle, numpy for the k permutations and mins) and merges
+the rows of one id in a second, around one exchange on id. ``shingle_hashes`` and ``minhash_blocks`` are the
+only Python form of the hash chain; the streaming signature stage
+(``streaming/dedup.py:doc_sig_bands``) runs the same two.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 from hashlib import md5
-from itertools import combinations, groupby
-from operator import itemgetter
+from itertools import combinations
 
 import numpy as np
 import pyarrow as pa
@@ -280,8 +279,7 @@ def shingle_hashes(text: str | None, n: int) -> np.ndarray:
     :data:`MINHASH_PRIME` — the value ``_sql_hashed`` computes as
     ``CAST('0x' || SUBSTR(MD5(shingle), 1, 15) AS BIGINT) % p``. Empty for
     NULL text and for text shorter than ``n`` after lowering (no shingles,
-    matching SUBSTR semantics). The one Python home of the MinHash hash
-    chain: the batch frame and the streaming signature stage both call it."""
+    matching SUBSTR semantics)."""
     if text is None:
         return _NO_HASHES
     t = text.lower()
@@ -293,37 +291,60 @@ def shingle_hashes(text: str | None, n: int) -> np.ndarray:
     return np.unique(hs)
 
 
-def minhash_mins(hashes: np.ndarray, starts: np.ndarray, coeffs: list[tuple[int, int]]) -> np.ndarray:
-    """(k, docs) int64 signatures of a block of documents whose base hashes
-    are concatenated in ``hashes``, doc j owning the non-empty segment that
-    starts at ``starts[j]``: sig_i = min((a_i*h + b_i) mod p) over the
-    segment. One permutation at a time, so memory stays at one copy of the
-    block whatever k is; a_i*h < 2^62 keeps the arithmetic exact in int64."""
-    out = np.empty((len(coeffs), len(starts)), dtype=np.int64)
-    for i, (a, b) in enumerate(coeffs):
-        out[i] = np.minimum.reduceat((a * hashes + b) % MINHASH_PRIME, starts)
-    return out
+def _pack(docs: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, values): the Arrow list layout of per-document arrays —
+    doc j owns ``values[offsets[j]:offsets[j + 1]]``."""
+    offsets = np.zeros(len(docs) + 1, dtype=np.int32)
+    np.cumsum([len(d) for d in docs], out=offsets[1:])
+    return offsets, np.concatenate(docs)
 
 
-def _id_runs(
-    batches: Iterator[pa.RecordBatch], id_col: str, text_col: str, n: int
-) -> Iterator[tuple[object, np.ndarray]]:
-    """(id, sorted distinct base hashes) per run of equal ids in id-sorted
-    Arrow batches — a run may straddle batches, and NULL ids form one run
-    (``None == None``), as a ``groupBy`` groups them."""
-    rows = (
-        row
-        for rb in batches
-        for row in zip(rb.column(id_col).to_pylist(), rb.column(text_col).to_pylist())
-    )
-    for i, run in groupby(rows, key=itemgetter(0)):
-        parts = [shingle_hashes(text, n) for _, text in run]
-        yield i, parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
+def minhash_blocks(
+    batches: Iterator[pa.RecordBatch], id_col: str, text_col: str, n: int, coeffs: list[tuple[int, int]]
+) -> Iterator[tuple[list, np.ndarray, np.ndarray, np.ndarray]]:
+    """(ids, sigs, offsets, hashes) per Arrow batch of (id, text) rows: one
+    entry per row with at least one shingle (:func:`shingle_hashes`), its
+    hash set at ``hashes[offsets[j]:offsets[j + 1]]`` and its signature in
+    column j of the (k, docs) int64 ``sigs``, sig_i = min((a_i*h + b_i) mod
+    p) over the set. One permutation at a time over the whole block, so
+    memory stays at one copy of it whatever k is; a_i*h < 2^62 keeps the
+    arithmetic exact in int64. The one Python home of the MinHash chain:
+    the batch signature frame and the streaming signature stage both run
+    it."""
+    for rb in batches:
+        ids, docs = [], []
+        for i, text in zip(rb.column(id_col).to_pylist(), rb.column(text_col).to_pylist()):
+            hs = shingle_hashes(text, n)
+            if len(hs):
+                ids.append(i)
+                docs.append(hs)
+        if not docs:
+            continue
+        offsets, hashes = _pack(docs)
+        sigs = np.empty((len(coeffs), len(docs)), dtype=np.int64)
+        for k, (a, b) in enumerate(coeffs):
+            sigs[k] = np.minimum.reduceat((a * hashes + b) % MINHASH_PRIME, offsets[:-1])
+        yield ids, sigs, offsets, hashes
 
 
-#: base hashes gathered before a kernel emits a batch — bounds a task's
-#: block memory (8 bytes per hash) independently of the Arrow batch size
-_KERNEL_BLOCK = 1 << 20
+def _id_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[pa.RecordBatch, list[int]]]:
+    """(block, run starts) over id-sorted batches whose first column is the
+    id: every block holds whole runs of equal id — the last run of a batch
+    is held back until the next batch shows where it ends — and NULL ids
+    form one run (``None == None``), as a ``groupBy`` groups them."""
+    held = None
+    for rb in batches:
+        if held is not None:
+            rb = pa.Table.from_batches([held, rb]).combine_chunks().to_batches()[0]
+        ids = rb.column(0).to_pylist()
+        if not ids:
+            continue
+        starts = [j for j in range(len(ids)) if j == 0 or ids[j] != ids[j - 1]]
+        held = rb.slice(starts[-1])
+        if len(starts) > 1:
+            yield rb.slice(0, starts[-1]), starts[:-1]
+    if held is not None:
+        yield held, [0]
 
 
 def _minhash_frame(
@@ -336,20 +357,41 @@ def _minhash_frame(
 ) -> DataFrame:
     """(id, sig_0..sig_{k-1}[, hset, sz]): one row per distinct id with at
     least one shingle, sig_i = MIN((a_i*h + b_i) mod p) over the base hashes
-    h of every shingle of every row carrying that id (:func:`shingle_hashes`,
-    :func:`minhash_mins`) — bit-identical to the DuckDB ``sigs``/``hdist``
-    CTEs. ``sets=True`` also carries each doc's sorted distinct hash set
-    and its size, bounded by doc length.
+    h of every shingle of every row carrying that id — bit-identical to the
+    DuckDB ``sigs``/``hdist`` CTEs. ``sets=True`` also carries each doc's
+    sorted distinct hash set and its size, bounded by doc length.
 
-    One Arrow block kernel after one shuffle of the (id, text) rows:
-    hash-partitioned on id, sorted within partitions so the rows of one id
-    (NULL ids form one group, as a ``groupBy`` would) arrive as one run that
-    may straddle Arrow batches. The partition count is the session's
-    ``spark.sql.shuffle.partitions`` given BY NUMBER: AQE coalesces a
-    by-column repartition of this byte-small text shuffle to one partition,
-    and the stage is CPU-bound per byte of text, not per shuffled byte."""
+    Two Arrow kernels around one exchange on id:
+
+      * ``sign`` hashes each row (:func:`minhash_blocks`) into an output
+        row of its own — rows without a shingle drop;
+      * ``merge`` takes runs of equal id from id-sorted partitions and
+        folds each into one row: the min of each sig_i and the union of the
+        hash sets. A row whose id is unique passes through unchanged.
+
+    The exchange moves the smaller form. By default it runs before
+    ``sign``, which then feeds ``merge`` in the same Python task, and moves
+    the text: a hash set is 8 bytes per shingle, about 8x the text
+    (measured on a 16 000-doc, 8-file corpus: 4.5 MB of text against 40 MB
+    of signature rows), and a narrow scan
+    (:func:`~sarpro_spark.functions.partitioning.scan_is_narrow`) needs a
+    shuffle of its text anyway to spread the hashing. A wide scan without
+    ``sets`` is hashed where it is read instead, and only k longs per row
+    cross the exchange (1.2 MB against the 4.5 MB of text on that corpus).
+    The partition count is given BY NUMBER
+    (:func:`~sarpro_spark.functions.partitioning.shuffle_partition_count`):
+    AQE coalesces a by-column repartition of these few bytes to one task,
+    while the kernels and every consumer (band-key explode, set
+    intersections) are CPU-bound.
+
+    NULL ids form ONE group, as the DuckDB twins' ``GROUP BY`` forms it,
+    while the streaming ``doc_sig_bands`` drops NULL-id rows (a NULL never
+    pairs there); both are pinned by tests."""
+    from sarpro_spark.functions.partitioning import scan_is_narrow, shuffle_partition_count
+
     coeffs = minhash_coeffs(num_hashes)
-    fields = [df.schema[id_col]] + [StructField(f"sig_{i}", LongType()) for i in range(num_hashes)]
+    sig_names = [f"sig_{i}" for i in range(num_hashes)]
+    fields = [df.schema[id_col]] + [StructField(c, LongType()) for c in sig_names]
     if sets:
         fields += [
             StructField("hset", ArrayType(LongType(), containsNull=False), nullable=False),
@@ -358,37 +400,43 @@ def _minhash_frame(
     schema = StructType(fields)
     arrow = to_arrow_schema(schema)
 
-    def emit(ids: list, docs: list[np.ndarray]) -> pa.RecordBatch:
-        sizes = np.fromiter((len(h) for h in docs), dtype=np.int32, count=len(docs))
-        offsets = np.zeros(len(docs) + 1, dtype=np.int32)
-        np.cumsum(sizes, out=offsets[1:])
-        flat = np.concatenate(docs)
-        cols = [pa.array(ids, type=arrow.field(0).type)]
-        cols += [pa.array(row) for row in minhash_mins(flat, offsets[:-1], coeffs)]
+    def batch(ids: pa.Array, sigs: np.ndarray, offsets: np.ndarray, hashes: np.ndarray) -> pa.RecordBatch:
+        cols = [ids, *map(pa.array, sigs)]
         if sets:
-            cols += [pa.ListArray.from_arrays(offsets, flat, type=arrow.field("hset").type), pa.array(sizes)]
+            hset = pa.ListArray.from_arrays(offsets, hashes, type=arrow.field("hset").type)
+            cols += [hset, pa.array(np.diff(offsets))]
         return pa.RecordBatch.from_arrays(cols, schema=arrow)
 
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ids, docs, pending = [], [], 0
-        for i, hs in _id_runs(batches, id_col, text_col, n):
-            if len(hs):
-                ids.append(i)
-                docs.append(hs)
-                pending += len(hs)
-            if pending >= _KERNEL_BLOCK:
-                yield emit(ids, docs)
-                ids, docs, pending = [], [], 0
-        if docs:
-            yield emit(ids, docs)
+    def sign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for ids, sigs, offsets, hashes in minhash_blocks(batches, id_col, text_col, n, coeffs):
+            yield batch(pa.array(ids, type=arrow.field(0).type), sigs, offsets, hashes)
 
-    parts_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        df.select(id_col, text_col)
-        .repartition(parts_n, id_col)
-        .sortWithinPartitions(id_col)
-        .mapInArrow(kernel, schema)
-    )
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb, starts in _id_runs(batches):
+            if len(starts) == rb.num_rows:
+                yield rb
+                continue
+            at = np.asarray(starts)
+            sigs = np.array([np.minimum.reduceat(rb.column(c).to_numpy(), at) for c in sig_names])
+            sigs = sigs.reshape(num_hashes, len(at))
+            offsets, hashes = np.zeros(1, dtype=np.int32), _NO_HASHES
+            if sets:
+                hset = rb.column("hset")
+                offs, vals = hset.offsets.to_numpy(), hset.values.to_numpy()
+                ends = [*starts[1:], rb.num_rows]
+                offsets, hashes = _pack([
+                    vals[offs[s]:offs[e]] if e - s == 1 else np.unique(vals[offs[s]:offs[e]])
+                    for s, e in zip(starts, ends)
+                ])
+            yield batch(rb.column(0).take(at), sigs, offsets, hashes)
+
+    def by_id(rows: DataFrame) -> DataFrame:
+        return rows.repartition(shuffle_partition_count(df), id_col).sortWithinPartitions(id_col)
+
+    rows = df.select(id_col, text_col)
+    if sets or scan_is_narrow(rows):
+        return by_id(rows).mapInArrow(lambda batches: merge(sign(batches)), schema)
+    return by_id(rows.mapInArrow(sign, schema)).mapInArrow(merge, schema)
 
 
 def _band_slices(num_hashes: int, bands: int, probe: int = 0) -> list[tuple[int, int, list[int]]]:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sarpro_spark import frames
+from sarpro_spark.functions.partitioning import shuffle_partition_count
 
 
 def calculate_resize_dimensions(cols: int, rows: int, target: int) -> tuple[int, int]:
@@ -90,7 +91,7 @@ def pad_to_square(
         *group_cols,
         "max_dim",
         F.explode(F.sequence(F.lit(0), F.col("max_dim") - 1)).alias("row"),
-    ).repartition(_canvas_partitions(dims), *group_cols, "row")
+    ).repartition(shuffle_partition_count(dims), *group_cols, "row")
     shifted = px.join(
         F.broadcast(dims.select(*group_cols, "pad_cols", "pad_rows")), group_cols
     ).select(
@@ -332,42 +333,21 @@ def affine_warp(
     return resample_gather(coords, px, group_cols, value, alg=alg)
 
 
-def _canvas_partitions(df: DataFrame) -> int:
-    """Explicit partition count for the canvas row-stub repartition.
-
-    The stub exchange carries one tiny row per TARGET ROW while everything
-    downstream (col explode, tap explode, candidate join, the gather's
-    pre-shuffle work) fans out by dst_cols or more — the classic
-    explode-after-exchange trap: AQE coalesces the exchange by its own
-    (tiny) byte size and the whole canvas lands in one task (measured in r6:
-    warp_utm_from_lonlat peaked at 704 MB task memory with its canvas stage
-    coalesced to ONE task at sf0.1). A user-specified count plans as
-    REPARTITION_BY_NUM, which AQE must not coalesce, so per-task work stays
-    (total canvas)/N — bounded by the same shuffle.partitions contract that
-    sizes every other exchange for the data scale.
-
-    Platforms that manage AQE themselves may set the conf to a non-numeric
-    value (e.g. ``"auto"``); fall back to the cluster's default parallelism
-    rather than crashing every warp route on ``int()``."""
-    raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        return int(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def affine_coords(geo: DataFrame, group_cols: list[str]) -> DataFrame:
     """Target canvas + inverse-affine source coordinates shared by every
     kernel: one row per target cell (group, row, col, cs, rs). Row-grain
-    explode -> repartition (explicit count — see _canvas_partitions) ->
+    explode -> repartition (explicit count, :func:`shuffle_partition_count`) ->
     in-task col explode (the pad_to_square scale shape — never an
-    O(rows*cols) single-task explode)."""
+    O(rows*cols) single-task explode). The count is explicit because the
+    stub exchange carries one tiny row per target row: AQE coalesced it by
+    bytes and warp_utm_from_lonlat peaked at 704 MB task memory with its
+    whole canvas in ONE task at sf0.1."""
     gcols = [F.col(c) for c in group_cols]
     stubs = geo.select(
         *gcols, "sg0", "sg1", "sg2", "sg3", "sg4", "sg5",
         "dg0", "dg1", "dg2", "dg3", "dg4", "dg5", "dst_cols",
         F.explode(F.sequence(F.lit(0), F.col("dst_rows") - 1)).alias("row"),
-    ).repartition(_canvas_partitions(geo), *group_cols, "row")
+    ).repartition(shuffle_partition_count(geo), *group_cols, "row")
     cells = stubs.select(
         *gcols, "sg0", "sg1", "sg2", "sg3", "sg4", "sg5",
         "dg0", "dg1", "dg2", "dg3", "dg4", "dg5", "row",
@@ -929,7 +909,7 @@ def warp_gcp_grid(
     stubs = geo.select(
         *gcols, "dg0", "dg1", "dg2", "dg3", "dg4", "dg5", "dst_cols",
         F.explode(F.sequence(F.lit(0), F.col("dst_rows") - 1)).alias("row"),
-    ).repartition(_canvas_partitions(geo), *group_cols, "row")
+    ).repartition(shuffle_partition_count(geo), *group_cols, "row")
     cells = stubs.select(
         *gcols, "row",
         F.explode(F.sequence(F.lit(0), F.col("dst_cols") - 1)).alias("col"),
@@ -1165,7 +1145,7 @@ def warp_gcp_tps(
     stubs = geo.select(
         *gcols, "dg0", "dg1", "dg2", "dg3", "dg4", "dg5", "dst_cols",
         F.explode(F.sequence(F.lit(0), F.col("dst_rows") - 1)).alias("row"),
-    ).repartition(_canvas_partitions(geo), *group_cols, "row")
+    ).repartition(shuffle_partition_count(geo), *group_cols, "row")
     cells = stubs.select(
         *gcols, "row",
         F.explode(F.sequence(F.lit(0), F.col("dst_cols") - 1)).alias("col"),

@@ -12,7 +12,7 @@ Shape:
    stateful operator, so each input row is one document rather than a
    run of rows merged by id as in the batch ``_minhash_frame``). Both
    kernels hash through the same two helpers of llm/dedup.py
-   (``shingle_hashes``, ``minhash_mins``), so signatures and buckets are
+   (``shingle_hashes``, ``minhash_blocks``), so signatures and buckets are
    bit-identical to the batch path's.
 2. **One stateful stage** (`streaming_neardup`): groupBy(band, bucket) →
    ``applyInPandasWithState``. State per bucket = the (doc_id, signature)
@@ -49,7 +49,6 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from hashlib import md5
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -68,9 +67,8 @@ from pyspark.sql.types import (
 
 from sarpro_spark.llm.dedup import (
     DEFAULT_SHINGLE,
+    minhash_blocks,
     minhash_coeffs,
-    minhash_mins,
-    shingle_hashes,
 )
 
 #: 16 hashes / 4 bands / agreement >= 0.75: measured on the documents
@@ -96,8 +94,8 @@ def doc_sig_bands(
     stateless ``mapInArrow`` block kernel, no aggregation).
 
     Each input row is one document, hashed by the batch signature frame's
-    own helpers (:func:`~sarpro_spark.llm.dedup.shingle_hashes`,
-    :func:`~sarpro_spark.llm.dedup.minhash_mins`), so every signature is
+    own helper (:func:`~sarpro_spark.llm.dedup.minhash_blocks`, over
+    :func:`~sarpro_spark.llm.dedup.shingle_hashes`), so every signature is
     bit-equal to the batch frame's; band buckets are the md5 of the
     '|'-joined signature slice, as in the batch ``_band_keys``. Documents
     without a shingle (NULL or shorter than the shingle width) drop, and
@@ -115,21 +113,9 @@ def doc_sig_bands(
     rows_per_band = num_hashes // bands
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            ids, docs = [], []
-            for i, text in zip(rb.column(id_col).to_pylist(), rb.column(text_col).to_pylist()):
-                if i is None:
-                    continue
-                hs = shingle_hashes(text, n)
-                if len(hs):
-                    ids.append(i)
-                    docs.append(hs)
-            if not docs:
-                continue
-            starts = np.cumsum([0] + [len(h) for h in docs[:-1]])
-            sigs = minhash_mins(np.concatenate(docs), starts, coeffs).T.tolist()
+        for ids, sigs, _offsets, _hashes in minhash_blocks(batches, id_col, text_col, n, coeffs):
             out_ids, bnds, bkts, sigs_out = [], [], [], []
-            for i, sig in zip(ids, sigs):
+            for i, sig in zip(ids, sigs.T.tolist()):
                 for b in range(bands):
                     chunk = sig[b * rows_per_band:(b + 1) * rows_per_band]
                     out_ids.append(i)
@@ -146,7 +132,11 @@ def doc_sig_bands(
                 names=schema.fieldNames(),
             )
 
-    return docs.select(F.col(id_col), F.col(text_col)).mapInArrow(fn, schema=schema)
+    return (
+        docs.select(F.col(id_col), F.col(text_col))
+        .where(F.col(id_col).isNotNull())
+        .mapInArrow(fn, schema=schema)
+    )
 
 
 MATCH_SCHEMA = StructType(

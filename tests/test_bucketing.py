@@ -102,6 +102,26 @@ def test_widen_if_narrow_single_large_file(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
+def test_shuffle_partition_count_falls_back_on_nonnumeric_conf(spark):
+    """The by-number partition count is the session's shuffle.partitions;
+    a non-numeric value (a platform-managed "auto", refused by open-source
+    Spark, hence the stand-in frame) falls back to the default parallelism
+    instead of raising."""
+    from types import SimpleNamespace
+
+    from sarpro_spark.functions.partitioning import shuffle_partition_count
+
+    def frame(value):
+        conf = SimpleNamespace(get=lambda key, default=None: value)
+        ctx = SimpleNamespace(defaultParallelism=3)
+        return SimpleNamespace(sparkSession=SimpleNamespace(conf=conf, sparkContext=ctx))
+
+    assert shuffle_partition_count(frame("auto")) == 3
+    assert shuffle_partition_count(frame("12")) == 12
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle_partition_count(spark.range(1)) == want
+
+
 # --- Z-order layout (functions/zorder.py, r11) ---------------------------------
 
 

@@ -394,6 +394,76 @@ def test_minhash_frame_keeps_shuffle_parallelism(spark, tmp_path):
     assert sig.count() == 200
 
 
+def test_minhash_frame_hashes_a_wide_scan_before_its_exchange(spark, tmp_path):
+    """Without hash sets, a corpus that already scans in many splits is
+    hashed where it is read and only signatures cross the exchange (two
+    kernels); a single-file corpus, and any frame with hash sets, shuffles
+    its text to one kernel. Both placements build the same rows, ids shared
+    across files included."""
+    rows = [(i % 150, f"document {i} about topic {i % 13} with some words") for i in range(300)]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    wide_path, narrow_path = str(tmp_path / "wide"), str(tmp_path / "narrow")
+    df.repartition(8).write.parquet(wide_path)
+    df.coalesce(1).write.parquet(narrow_path)
+    wide, narrow = spark.read.parquet(wide_path), spark.read.parquet(narrow_path)
+    assert len(wide.inputFiles()) == 8 > spark.sparkContext.defaultParallelism
+
+    def kernels(frame):
+        return frame._jdf.queryExecution().executedPlan().toString().count("MapInArrow")
+
+    for sets in (False, True):
+        w = dd._minhash_frame(wide, "doc_id", "text", 5, 8, sets=sets)
+        nw = dd._minhash_frame(narrow, "doc_id", "text", 5, 8, sets=sets)
+        assert (kernels(w), kernels(nw)) == ((1, 1) if sets else (2, 1))
+        got = sorted(map(repr, w.collect()))
+        assert len(got) == 150
+        assert got == sorted(map(repr, nw.collect()))
+
+
+def test_minhash_frame_merges_runs_across_arrow_batches(spark):
+    """Rows of one id merge into one signature row even when their run is
+    split over many Arrow batches and input partitions: one row per Arrow
+    batch, every edge row three times. Reference: the union of each id's
+    shingle hashes, permuted and minimised in numpy."""
+    rows = _MINHASH_EDGE_ROWS * 3
+    want = {}
+    for i, text in rows:
+        want.setdefault(i, set()).update(dd.shingle_hashes(text, 5).tolist())
+    coeffs = dd.minhash_coeffs(16)
+    expected = sorted(
+        (repr(i), tuple(min((a * h + b) % dd.MINHASH_PRIME for h in hs) for a, b in coeffs), sorted(hs))
+        for i, hs in want.items()
+        if hs
+    )
+    df = spark.createDataFrame(rows, "doc_id bigint, text string").repartition(3)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        got = dd._minhash_frame(df, "doc_id", "text", 5, 16, sets=True).collect()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert all(r["sz"] == len(r["hset"]) for r in got)
+    assert sorted((repr(r[0]), tuple(r[1:17]), r["hset"]) for r in got) == expected
+
+
+def test_minhash_frame_builds_on_nonnumeric_shuffle_partitions(spark, monkeypatch):
+    """Platforms that manage AQE themselves set spark.sql.shuffle.partitions
+    to a value such as "auto" (open-source Spark refuses it, so the session's
+    conf reader is patched): the signature frame's by-number exchange falls
+    back to the default parallelism instead of failing on ``int()``."""
+    df = spark.createDataFrame(_MINHASH_EDGE_ROWS, "doc_id bigint, text string")
+    want = sorted(map(repr, dd._minhash_frame(df, "doc_id", "text", 5, 8).collect()))
+    conf = spark.conf
+    real_get = conf.get
+    monkeypatch.setattr(
+        conf, "get",
+        lambda key, *default: "auto" if key == "spark.sql.shuffle.partitions" else real_get(key, *default),
+    )
+    sig = dd._minhash_frame(df, "doc_id", "text", 5, 8)
+    assert sig.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(map(repr, sig.collect())) == want
+
+
 # --- corpus hygiene + sampling ------------------------------------------------
 
 

@@ -966,10 +966,11 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_minhash_signatures": {
-        # one Arrow block kernel after ONE (id, text) shuffle whose partition
-        # count is given by number — AQE coalesces a by-column repartition
-        # of this byte-small text shuffle to a single task; no per-shingle
-        # explode or wide aggregate
+        # Arrow kernels (hash rows, merge runs of one id) around ONE
+        # exchange on id whose partition count is given by number — AQE
+        # coalesces a by-column repartition of these few bytes to a single
+        # task; the exchange moves the text, or per-row signatures for a
+        # wide scan; no per-shingle explode or wide aggregate
         "require": ["MapInArrow", "REPARTITION_BY_NUM"], "codegen": True,
         "forbid": ["CartesianProduct", "BatchEvalPython", "Generate", "HashAggregate"],
     },
