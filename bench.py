@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from sarpro_spark import frames
 from sarpro_spark.queries import spark_queries
@@ -217,6 +219,35 @@ FLOOR_BOUND = {
 }
 
 
+def _infer_round(
+    env: tuple[str, ...] = ("SPARK_GRAFT_ROUND",),
+    required: str | None = None,
+    repo: str = REPO,
+) -> int | None:
+    """The round an artifact is stamped with (bench.py and the tools share
+    this rule). The first set variable of ``env`` wins — SPARK_GRAFT_ROUND
+    is the cross-tool override, so a re-run after a round's artifacts exist
+    is not stamped as the next round. Otherwise the round is 1 + the newest
+    ``BENCH_r*``/``CORRECTNESS_r*.json`` in ``repo`` (both are written at
+    the END of round N, so during round N+1 the max is N). With neither, a
+    frozen default would silently stamp a stale round: return None, or
+    raise ``SystemExit(required)`` for a caller that cannot write without
+    one."""
+    for name in env:
+        if os.environ.get(name):
+            return int(os.environ[name])
+    ns = [
+        int(m.group(1))
+        for fn in os.listdir(repo)
+        if (m := re.match(r"(?:BENCH|CORRECTNESS)_r(\d+)\.json$", fn))
+    ]
+    if ns:
+        return max(ns) + 1
+    if required:
+        raise SystemExit(required)
+    return None
+
+
 def tree_cpu_sec() -> float:
     """Total CPU seconds (utime+stime) consumed so far by this process and
     every live descendant (the JVM driver/executor and its Python workers).
@@ -394,7 +425,7 @@ def main() -> None:
     # key-shifted replica of sf0.1 — see SOAK_r*.json for per-query rows);
     # embedded so the driver-recorded bench carries the scale evidence
     soak_summary = None
-    repo = os.path.dirname(os.path.abspath(__file__))
+    repo = REPO
     soaks = sorted(f for f in os.listdir(repo) if f.startswith("SOAK_r") and f.endswith(".json"))
     if soaks:
         try:
@@ -428,24 +459,6 @@ def main() -> None:
         except (OSError, ValueError):
             pass
     total = round(sum(timings.values()), 3)
-
-    def _infer_round() -> int | None:
-        # ADVICE r8: a hardcoded default silently stamps a stale round and
-        # corrupts the prev-round diffing chain. Env var wins; otherwise
-        # the round is 1 + the newest driver artifact (the driver writes
-        # BENCH_r{N}/CORRECTNESS_r{N} at the END of round N, so when bench
-        # runs during round N+1 the max is N); null if neither exists.
-        env = os.environ.get("SPARK_GRAFT_ROUND")
-        if env:
-            return int(env)
-        import re as _re
-
-        ns = [
-            int(m.group(1))
-            for fn in os.listdir(repo)
-            if (m := _re.match(r"(?:BENCH|CORRECTNESS)_r(\d+)\.json$", fn))
-        ]
-        return max(ns) + 1 if ns else None
 
     full_payload = {
         "round": _infer_round(),

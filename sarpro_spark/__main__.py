@@ -51,7 +51,9 @@ def _build_parser() -> argparse.ArgumentParser:
                    help="GCP-warp interpolant: exact piecewise-bilinear grid "
                         "(default) or true thin-plate spline (the reference's "
                         "gdalwarp -tps interpolant)")
-    p.add_argument("--continue-on-error", action="store_true", default=True)
+    p.add_argument("--continue-on-error", action=argparse.BooleanOptionalAction, default=True,
+                   help="the reference's batch-mode switch; recorded in the run "
+                        "params and presets (the run itself does not consult it)")
     p.add_argument("--master", default=None)
     p.add_argument("--save-preset", default=None, metavar="FILE",
                    help="write the resolved params as a JSON preset and exit "
@@ -115,6 +117,8 @@ def params_to_cli(params, input_path: str = "<input>", output_path: str = "<out>
     argv += ["--resample", params.resample_alg.value]
     if params.gcp_interpolant != "grid":
         argv += ["--gcp-interpolant", params.gcp_interpolant]
+    if not params.continue_on_error:
+        argv += ["--no-continue-on-error"]
     return argv
 
 

@@ -28,52 +28,11 @@ per-query WindowGroupLimit.  No full-corpus interaction anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 #: token vectors per document (slices of the 64-d corpus vector)
 MAXSIM_T = 4
-
-
-def _slice_cos(
-    qvec: Column, dvec: Column, i: int, j: int, sub: int, round_digits: int
-) -> Column:
-    """fround'd cosine of query slice i against doc slice j, null-guarded
-    to the -2.0 sentinel (ordered below every real cosine)."""
-    from sarpro_spark.llm.similarity import _dot, _norm
-    from sarpro_spark.queries import fround
-
-    qs = F.slice(qvec.cast("array<double>"), i * sub + 1, sub)
-    ds = F.slice(dvec.cast("array<double>"), j * sub + 1, sub)
-    denom = _norm(qs) * _norm(ds)
-    return F.coalesce(
-        fround(F.when(denom > 0, _dot(qs, ds) / denom), round_digits),
-        F.lit(-2.0),
-    )
-
-
-def maxsim_expr(
-    qvec: Column,
-    dvec: Column,
-    t: int = MAXSIM_T,
-    dim: int = 64,
-    round_digits: int = 6,
-) -> Column:
-    """The MaxSim score: sum over query slices of the max slice cosine —
-    one fixed expression tree (t*t fround'd cosines, greatest, +), fully
-    inside whole-stage codegen."""
-    sub = dim // t
-    terms = [
-        F.greatest(
-            *[_slice_cos(qvec, dvec, i, j, sub, round_digits) for j in range(t)]
-        )
-        for i in range(t)
-    ]
-    out = terms[0]
-    for term in terms[1:]:
-        out = out + term
-    return out
 
 
 def spark_maxsim_sql(
@@ -83,35 +42,31 @@ def spark_maxsim_sql(
     dim: int = 64,
     round_digits: int = 6,
 ) -> str:
-    """Spark-SQL text of :func:`maxsim_expr` (r14, guide §7.3 — driver
-    work): each Column-API slice cosine costs ~60 py4j round-trips to
-    build (zip_with/transform/aggregate lambdas), ~1000 per t=4 call;
-    the parsed string crosses the boundary once and yields the identical
-    operator tree (D-suffixed literals stay doubles, the -2.0 sentinel
-    and the zero-denominator guard unchanged). Keep in lock-step with
-    :func:`maxsim_expr` / :func:`_slice_cos`."""
+    """The MaxSim score as Spark SQL text (wrap in ``F.expr``): sum over
+    query slices of the max slice cosine — one fixed expression tree (t*t
+    fround'd cosines, greatest, +), fully inside whole-stage codegen. Each
+    slice cosine is built from the same ``_dot_sql``/``_norm_sql`` text as
+    ``similarity.cosine_sql``, guarded against a zero denominator and
+    null-guarded to the -2.0 sentinel (ordered below every real cosine).
+    Text rather than the Column API: the Column form cost ~60 py4j
+    round-trips per slice cosine to build, ~1000 per t=4 call (r14).
+    Keep in lock-step with the DuckDB twin :func:`sql_maxsim_expr`."""
+    from sarpro_spark.llm.similarity import _dot_sql, _norm_sql
+
     sub = dim // t
     scale = f"{float(10 ** round_digits)!r}D"
+
+    def sl(v: str, i: int) -> str:
+        return f"slice(cast({v} as array<double>), {i * sub + 1}, {sub})"
+
     terms = []
     for i in range(t):
-        qs = f"slice(cast({qvec} as array<double>), {i * sub + 1}, {sub})"
-        qn = (
-            f"sqrt(aggregate(transform({qs}, x -> cast(x as double) * cast(x as double)), "
-            "0.0D, (acc, x) -> acc + x))"
-        )
+        qs = sl(qvec, i)
         cells = []
         for j in range(t):
-            ds = f"slice(cast({dvec} as array<double>), {j * sub + 1}, {sub})"
-            dn = (
-                f"sqrt(aggregate(transform({ds}, x -> cast(x as double) * cast(x as double)), "
-                "0.0D, (acc, x) -> acc + x))"
-            )
-            dot = (
-                f"aggregate(zip_with({qs}, {ds}, (x, y) -> cast(x as double) * cast(y as double)), "
-                "0.0D, (acc, x) -> acc + x)"
-            )
-            denom = f"({qn} * {dn})"
-            guarded = f"(case when {denom} > 0 then {dot} / {denom} end)"
+            ds = sl(dvec, j)
+            denom = f"({_norm_sql(qs)} * {_norm_sql(ds)})"
+            guarded = f"(case when {denom} > 0 then {_dot_sql(qs, ds)} / {denom} end)"
             fr = f"(floor(cast({guarded} as double) * {scale} + 0.5D) / {scale})"
             cells.append(f"coalesce({fr}, -2.0D)")
         terms.append("greatest(" + ", ".join(cells) + ")")
@@ -138,27 +93,13 @@ def maxsim_topk_ivf(
     quantizer (the same certified probe as the IVF/IVF-PQ rungs); the
     late-interaction score only ever touches candidate pairs."""
     from sarpro_spark.functions.partitioning import widen_if_narrow
-    from sarpro_spark.llm.similarity import cosine_expr, ivf_assign, ivf_centroids
+    from sarpro_spark.llm.similarity import _ivf_probe, _rank_cut, ivf_assign, ivf_centroids
     from sarpro_spark.queries import fround
 
     centroids = ivf_centroids(emb, n_centroids, id_col, vec_col)
     emb = widen_if_narrow(emb, id_col)
     assign = ivf_assign(emb, centroids, id_col, vec_col)
-    qsim = queries.join(F.broadcast(centroids)).select(
-        F.col(qid_col),
-        F.col("centroid_id"),
-        fround(cosine_expr(F.col(qvec_col), F.col("cvec")), round_digits).alias(
-            "sim"
-        ),
-    )
-    wq = Window.partitionBy(qid_col).orderBy(
-        F.col("sim").desc(), F.col("centroid_id")
-    )
-    probed = (
-        qsim.withColumn("rnk", F.row_number().over(wq))
-        .where(F.col("rnk") <= nprobe)
-        .select(qid_col, "centroid_id")
-    )
+    probed = _ivf_probe(queries, centroids, nprobe, qid_col, qvec_col, round_digits)
     cand = probed.join(assign, "centroid_id").select(qid_col, id_col).distinct()
     qv = queries.select(F.col(qid_col), F.col(qvec_col))
     scored = (
@@ -173,11 +114,8 @@ def maxsim_topk_ivf(
             ).alias("maxsim"),
         )
     )
-    wf = Window.partitionBy(qid_col).orderBy(F.col("maxsim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wf))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "maxsim", "rnk")
+    return _rank_cut(scored, qid_col, k, "maxsim", id_col).select(
+        qid_col, id_col, "maxsim", "rnk"
     )
 
 
@@ -196,6 +134,7 @@ def maxsim_topk_brute(
     """Exact MaxSim top-k — the ground truth of the recall frontier: one
     corpus scan against the broadcast query batch, the same fixed
     interaction tree, a per-query rank window."""
+    from sarpro_spark.llm.similarity import _rank_cut
     from sarpro_spark.queries import fround
 
     scored = emb.select(F.col(id_col), F.col(vec_col)).join(
@@ -208,11 +147,8 @@ def maxsim_topk_brute(
             round_digits,
         ).alias("maxsim"),
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("maxsim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "maxsim", "rnk")
+    return _rank_cut(scored, qid_col, k, "maxsim", id_col).select(
+        qid_col, id_col, "maxsim", "rnk"
     )
 
 
@@ -236,7 +172,7 @@ def maxsim_recall_sweep(
     item from the top-k, so the frontier values are hashed as OBSERVED
     data (the ivfpq cross-probe doctrine), not asserted monotone."""
     from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
+    from sarpro_spark.llm.similarity import _recall_ladder
 
     ckpt = _checkpointer(emb)
     truth = ckpt(
@@ -245,27 +181,14 @@ def maxsim_recall_sweep(
             round_digits,
         ).select(qid_col, F.col(id_col).alias("_tid"))
     )
-    legs = []
-    for np_ in nprobes:
-        top = maxsim_topk_ivf(
+    legs = [
+        ({"nprobe": np_}, maxsim_topk_ivf(
             emb, queries, k, n_centroids, np_, t, dim,
             id_col, vec_col, qid_col, qvec_col, round_digits,
-        ).select(qid_col, id_col)
-        hit = truth.join(
-            top.withColumn("_h", F.lit(1)),
-            (truth[qid_col] == top[qid_col]) & (F.col("_tid") == top[id_col]),
-            "left",
-        ).groupBy(truth[qid_col].alias(qid_col)).agg(
-            F.sum(F.coalesce(F.col("_h"), F.lit(0))).cast("long").alias("hits")
-        )
-        legs.append(hit.withColumn("nprobe", F.lit(np_)))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out.select(
-        qid_col, "nprobe", "hits",
-        fround(F.col("hits") / float(k), round_digits).alias("recall"),
-    )
+        ).select(qid_col, id_col))
+        for np_ in nprobes
+    ]
+    return _recall_ladder(truth, legs, k, qid_col, id_col, round_digits)
 
 
 # --- DuckDB twin ---------------------------------------------------------------
@@ -274,7 +197,7 @@ def maxsim_recall_sweep(
 def sql_maxsim_expr(
     qvec: str, dvec: str, t: int = MAXSIM_T, dim: int = 64
 ) -> str:
-    """DuckDB twin of :func:`maxsim_expr` — the same fixed tree of
+    """DuckDB twin of :func:`spark_maxsim_sql` — the same fixed tree of
     fround'd, -2.0-guarded slice cosines (1-based list indexing)."""
     from sarpro_spark.queries import sql_fround
 

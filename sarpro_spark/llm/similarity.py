@@ -26,14 +26,17 @@ Recall/selectivity math (p_bit = 1 - theta/pi):
 Defaults target the near-dup regime; the registered queries pin explicit
 parameters so their oracles are reproducible.
 
-A pandas-UDF matmul variant (``cosine_topk_pandas``) covers the case where
-per-row zip_with becomes the bottleneck: NumPy does a blocked matrix multiply
-per Arrow batch — the vectorized scale path.
+One builder per similarity expression, shared by every path below: the
+cosine is Spark SQL text (:func:`cosine_sql`, wrapped in ``F.expr``), the
+nearest-centroid assignment is :func:`_argmax`, an IVF probe is
+:func:`_ivf_probe`, a per-query top-k is :func:`_rank_cut`, the 1-bit
+Hamming shortlist is :func:`_hamming_shortlist`, the PQ shortlist + exact
+rerank is :func:`_adc_rerank`, and a recall frontier is
+:func:`_recall_ladder` over :func:`_mult_legs`. The DuckDB ``sql_*``
+functions are their oracle twins.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -60,46 +63,72 @@ def hyperplane_bitstrings(H: np.ndarray) -> list[str]:
     return ["".join("1" if c > 0 else "0" for c in row) for row in H]
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """Array-order dot product in double (deterministic summation order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def _norm_sql(a: str) -> str:
+    """Spark SQL text of the L2 norm of an array expression (array-order
+    sum in double)."""
     return (
         f"sqrt(aggregate(transform({a}, x -> cast(x as double) * cast(x as double)), "
         "0.0D, (acc, x) -> acc + x))"
     )
 
 
-def cosine_sql(a: str, b: str) -> str:
-    """SQL text of :func:`cosine_expr` over column-expression strings (r14,
-    guide §7.3): every Column-API lambda (`zip_with`/`transform`/`aggregate`)
-    costs ~20 py4j round-trips to build — cProfile measured ~0.08 s of
-    driver wall PER cosine_expr call in the iterative trainers; the parsed
-    string is one round-trip and yields the identical operator tree (the
-    ``D`` suffix keeps the init literal a double, matching ``F.lit(0.0)``).
-    Keep in lock-step with :func:`_dot` / :func:`_norm`."""
+def _dot_sql(a: str, b: str) -> str:
+    """Spark SQL text of the array-order dot product in double."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
-        f"0.0D, (acc, x) -> acc + x) / ({_norm_sql(a)} * {_norm_sql(b)})"
+        "0.0D, (acc, x) -> acc + x)"
     )
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """Spark SQL text of the cosine of two array expressions (column names
+    quoted with backticks, or any expression over them) — the one cosine
+    form; Spark call sites wrap it in ``F.expr``. Text rather than the
+    Column API because every Column-API lambda
+    (``zip_with``/``transform``/``aggregate``) costs ~20 py4j round-trips
+    to build — cProfile measured ~0.08 s of driver wall per Column-form
+    cosine in the iterative trainers (r14); the string crosses once and
+    parses to the same operator tree (the ``D`` suffix keeps the init
+    literal a double). :func:`_dot_sql`/:func:`_norm_sql` are also the
+    pieces of ``lateinteraction.spark_maxsim_sql`` and of the PQ lookup
+    table; the DuckDB twin is :func:`sql_cosine_ctes` (fround absorbs the
+    summation-order difference)."""
+    return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
+
+
+def _fcos(a: str, b: str, round_digits: int = 6) -> Column:
+    """fround'd :func:`cosine_sql` of two array expressions."""
+    from sarpro_spark.queries import fround
+
+    return fround(F.expr(cosine_sql(a, b)), round_digits)
+
+
+def _rank_cut(
+    df: DataFrame, part: str, k: int, score: str, tie: str,
+    rnk: str = "rnk", desc: bool = True,
+) -> DataFrame:
+    """The per-query top-k every ranked path shares: ``row_number`` over
+    ``part`` ordered by ``score`` (DESC unless ``desc=False``) then the
+    ``tie`` column, kept while ``rnk <= k``. Rounded scores plus the id
+    tiebreak make the cut deterministic, and ``k`` is a literal, so Spark
+    plants a WindowGroupLimit that prunes each map partition to ``k`` rows
+    per query before the exchange."""
+    order = F.col(score).desc() if desc else F.col(score)
+    w = Window.partitionBy(part).orderBy(order, F.col(tie))
+    return df.withColumn(rnk, F.row_number().over(w)).where(F.col(rnk) <= k)
+
+
+def _exact_topk(
+    j: DataFrame, k: int, id_col: str, vec_col: str, qid_col: str, qvec_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """(query_id, id, sim, rnk): the fround'd exact cosine of every
+    (query, vector) row of ``j``, cut to each query's top-k."""
+    scored = j.select(
+        F.col(qid_col), F.col(id_col),
+        _fcos(f"`{vec_col}`", f"`{qvec_col}`", round_digits).alias("sim"),
+    )
+    return _rank_cut(scored, qid_col, k, "sim", id_col).select(qid_col, id_col, "sim", "rnk")
 
 
 def cosine_topk(
@@ -116,19 +145,8 @@ def cosine_topk(
     corpus never shuffles until the per-query top-k (rank window over
     query_id). Similarity rounded before ranking + id tiebreak => fully
     deterministic cutoffs."""
-    from sarpro_spark.queries import fround
-
     j = emb.join(F.broadcast(queries))
-    sim = cosine_expr(F.col(vec_col), F.col(qvec_col))
-    scored = j.select(
-        F.col(qid_col), F.col(id_col), fround(sim, round_digits).alias("sim")
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
+    return _exact_topk(j, k, id_col, vec_col, qid_col, qvec_col, round_digits)
 
 
 def band_keys_udf(bands: int, band_bits: int, dim: int, seed: int = DEFAULT_SEED,
@@ -210,8 +228,6 @@ def cosine_topk_lsh(
     query keys (plus Hamming-1 probes) broadcast against it; exact cosine only
     on the candidate set. Work scales with candidate count — bucket key space
     is bands * 2^band_bits, and hot buckets are capped."""
-    from sarpro_spark.queries import fround
-
     ekeys = _capped(
         _exploded_keys(emb, id_col, vec_col, bands, band_bits, dim, seed), bucket_cap
     )
@@ -224,14 +240,7 @@ def cosine_topk_lsh(
     j = cand.join(emb.select(id_col, vec_col), id_col).join(
         F.broadcast(queries.select(qid_col, qvec_col)), qid_col
     )
-    sim = cosine_expr(F.col(vec_col), F.col(qvec_col))
-    scored = j.select(F.col(qid_col), F.col(id_col), fround(sim, round_digits).alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
+    return _exact_topk(j, k, id_col, vec_col, qid_col, qvec_col, round_digits)
 
 
 def embedding_neardup_pairs(
@@ -265,20 +274,70 @@ def embedding_neardup_pairs(
     )
     # norms precomputed per VECTOR (not per pair): numerically identical
     # (same sqrt of the same array-order sum) but 1/3 the per-pair work
+    norm = F.expr(_norm_sql(f"`{vec_col}`"))
     va = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("_na"),
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), norm.alias("_na")
     )
     vb = emb.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("_nb"),
+        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), norm.alias("_nb")
     )
     pairs = cand.join(va, "id_a").join(vb, "id_b")
-    sim = _dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb"))
+    sim = F.expr(f"{_dot_sql('`va`', '`vb`')} / (`_na` * `_nb`)")
     return (
         pairs.select("id_a", "id_b", fround(sim, round_digits).alias("sim"))
         .where(F.col("sim") >= threshold)
     )
+
+
+def _argmax(
+    j: DataFrame,
+    keys: list[str],
+    sim: Column,
+    cid: str,
+    carry: tuple[str, ...] = (),
+    out: str | None = None,
+) -> DataFrame:
+    """The one nearest-centroid argmax: per ``keys`` group of the joined
+    frame ``j`` (members x candidate centroids), the centroid with the
+    highest ``sim``, lowest ``cid`` on ties. Returns ``(*keys, *carry,
+    out)`` with ``out`` defaulting to ``cid``.
+
+    ``max(struct(sim, -cid, *carry))`` is exactly the rank-1 row of a
+    window ordered by (sim DESC, cid): the struct comparator and the
+    window's sort treat NaN/NULL identically (NaN greatest, NULL least),
+    and (sim, -cid) is unique per group because cid is, so the carried
+    fields never decide and the picked row is the same by construction.
+    One partial-aggregating exchange replaces the window's full sort
+    (r14). ``carry`` rides member columns that are constant per group
+    (the vector, a group path) through the struct, which deletes the
+    rejoin exchange a Lloyd round would otherwise pay; a caller that
+    needs only the assignment carries nothing, so no vector bytes are
+    shuffled or checkpointed for it."""
+    best = F.max(
+        F.struct(sim.alias("s"), (-F.col(cid)).alias("nc"), *[F.col(c) for c in carry])
+    ).alias("_best")
+    return j.groupBy(*keys).agg(best).select(
+        *keys,
+        *[F.col(f"_best.{c}").alias(c) for c in carry],
+        (-F.col("_best.nc")).alias(out or cid),
+    )
+
+
+def _ivf_nearest(
+    emb: DataFrame,
+    centroids: DataFrame,
+    id_col: str,
+    vec_col: str,
+    carry: tuple[str, ...] = (),
+    cid_col: str = "centroid_id",
+    cvec_col: str = "cvec",
+    round_digits: int = 6,
+) -> DataFrame:
+    """Broadcast-cross the centroids and keep each vector's nearest one
+    (:func:`_argmax` by fround'd cosine): ``(id, *carry, centroid_id)``."""
+    j = emb.select(id_col, vec_col).join(F.broadcast(centroids))
+    sim = _fcos(f"`{vec_col}`", f"`{cvec_col}`", round_digits)
+    return _argmax(j, [id_col], sim, cid_col, carry)
 
 
 def ivf_assign(
@@ -294,58 +353,27 @@ def ivf_assign(
     (fround'd cosine, centroid-id tiebreak — fully deterministic). Centroids
     broadcast; one pass over the corpus; output (id, centroid_id) is the
     inverted-list assignment."""
-    from sarpro_spark.queries import fround
-
-    j = emb.select(id_col, vec_col).join(F.broadcast(centroids))
-    sim = fround(cosine_expr(F.col(vec_col), F.col(cvec_col)), round_digits)
-    # r14: the rank-1 window (orderBy sim DESC, cid) is exactly
-    # max(struct(sim, -cid)) — one partial-aggregating exchange instead of
-    # a full corpus sort per assignment pass (NaN/NULL ordering identical,
-    # (sim, -cid) unique per row because cid is; ivf_assign_carry below
-    # has the full equivalence argument)
-    best = F.max(F.struct(sim.alias("s"), (-F.col(cid_col)).alias("nc"))).alias("_best")
-    return (
-        j.groupBy(id_col)
-        .agg(best)
-        .select(F.col(id_col), (-F.col("_best.nc")).alias(cid_col))
-    )
+    return _ivf_nearest(emb, centroids, id_col, vec_col, (), cid_col, cvec_col, round_digits)
 
 
-def ivf_assign_carry(
-    emb: DataFrame,
+def _ivf_probe(
+    queries: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cid_col: str = "centroid_id",
-    cvec_col: str = "cvec",
-    round_digits: int = 6,
+    nprobe: int,
+    qid_col: str,
+    qvec_col: str,
+    round_digits: int,
 ) -> DataFrame:
-    """:func:`ivf_assign` fused with the member rejoin (r14, guide §2.4):
-    returns (id, vec, centroid_id) in ONE aggregate pass. The rank-1 window
-    (orderBy sim DESC, centroid_id) is exactly ``max(struct(sim,
-    -centroid_id))`` — highest similarity, then lowest centroid id; the
-    struct comparator and the window's sort treat NaN/NULL identically
-    (NaN greatest, NULL least) and (sim, -cid) is unique per member because
-    cid is, so the picked row is the same by construction. Carrying the
-    member vector inside the struct removes BOTH the window's corpus
-    sort and the ``emb JOIN assign`` exchange every Lloyd iteration paid
-    (at 100 TB: one full-corpus shuffle per iteration, deleted)."""
-    from sarpro_spark.queries import fround
-
-    j = emb.select(id_col, vec_col).join(F.broadcast(centroids))
-    sim = fround(F.expr(cosine_sql(f"`{vec_col}`", f"`{cvec_col}`")), round_digits)
-    best = F.max(
-        F.struct(
-            sim.alias("s"),
-            (-F.col(cid_col)).alias("nc"),
-            F.col(vec_col).alias("v"),
-        )
-    ).alias("_best")
-    return j.groupBy(id_col).agg(best).select(
-        F.col(id_col),
-        F.col("_best.v").alias(vec_col),
-        (-F.col("_best.nc")).alias(cid_col),
+    """(query_id, centroid_id): each query's ``nprobe`` nearest inverted
+    lists, scored like the list assignment (fround'd cosine, centroid-id
+    tiebreak) against the broadcast centroid table."""
+    centroids = centroids.select("centroid_id", "cvec")
+    qsim = queries.join(F.broadcast(centroids)).select(
+        F.col(qid_col),
+        F.col("centroid_id"),
+        _fcos(f"`{qvec_col}`", "`cvec`", round_digits).alias("sim"),
     )
+    return _rank_cut(qsim, qid_col, nprobe, "sim", "centroid_id").select(qid_col, "centroid_id")
 
 
 def cosine_topk_ivf(
@@ -366,39 +394,16 @@ def cosine_topk_ivf(
     on the probed lists. Work per query scales with corpus/n_centroids *
     nprobe, not corpus size. ``centroids`` (centroid_id, cvec) defaults to
     the first n_centroids corpus vectors (deterministic sample); pass
-    :func:`kmeans_train` output for trained lists at production scale."""
-    from sarpro_spark.queries import fround
+    :func:`kmeans_train` output for trained lists at production scale.
 
+    The index build (the list assignment with each member's vector carried
+    through the argmax) feeds :func:`cosine_topk_ivf_from_index`, the same
+    serve path a persisted index takes."""
     if centroids is None:
-        centroids = (
-            emb.where(F.col(id_col) < n_centroids)
-            .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec"))
-        )
-    else:
-        centroids = centroids.select("centroid_id", "cvec")
-    assign = ivf_assign(emb, centroids, id_col, vec_col)
-    qsim = queries.join(F.broadcast(centroids)).select(
-        F.col(qid_col),
-        F.col("centroid_id"),
-        fround(cosine_expr(F.col(qvec_col), F.col("cvec")), round_digits).alias("sim"),
-    )
-    wq = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probed = (
-        qsim.withColumn("rnk", F.row_number().over(wq))
-        .where(F.col("rnk") <= nprobe)
-        .select(qid_col, "centroid_id")
-    )
-    cand = probed.join(assign, "centroid_id").select(qid_col, id_col).distinct()
-    j = cand.join(emb.select(id_col, vec_col), id_col).join(
-        F.broadcast(queries.select(qid_col, qvec_col)), qid_col
-    )
-    sim = cosine_expr(F.col(vec_col), F.col(qvec_col))
-    scored = j.select(F.col(qid_col), F.col(id_col), fround(sim, round_digits).alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
+        centroids = ivf_centroids(emb, n_centroids, id_col, vec_col)
+    lists = _ivf_nearest(emb, centroids, id_col, vec_col, (vec_col,))
+    return cosine_topk_ivf_from_index(
+        centroids, lists, queries, k, nprobe, id_col, vec_col, qid_col, qvec_col, round_digits
     )
 
 
@@ -432,87 +437,14 @@ def cosine_topk_ivf_from_index(
     table partitioned by centroid_id, so probing reads only the probed
     lists' files via partition pruning). Identical results to building the
     index inline (:func:`cosine_topk_ivf`)."""
-    from sarpro_spark.queries import fround
-
-    centroids = centroids.select("centroid_id", "cvec")
-    qsim = queries.join(F.broadcast(centroids)).select(
-        F.col(qid_col),
-        F.col("centroid_id"),
-        fround(cosine_expr(F.col(qvec_col), F.col("cvec")), round_digits).alias("sim"),
-    )
-    wq = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probed = (
-        qsim.withColumn("rnk", F.row_number().over(wq))
-        .where(F.col("rnk") <= nprobe)
-        .select(qid_col, "centroid_id")
-    )
+    probed = _ivf_probe(queries, centroids, nprobe, qid_col, qvec_col, round_digits)
     cand = (
         probed.join(lists.select("centroid_id", id_col, vec_col), "centroid_id")
         .select(qid_col, id_col, vec_col)
         .distinct()
     )
     j = cand.join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
-    sim = cosine_expr(F.col(vec_col), F.col(qvec_col))
-    scored = j.select(F.col(qid_col), F.col(id_col), fround(sim, round_digits).alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
-
-
-def cosine_topk_pandas(
-    emb: DataFrame,
-    query_mat: np.ndarray,
-    query_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized scale path: per Arrow batch, one NumPy matmul against the
-    (broadcast) query matrix; per-batch top-k then a global top-k. Same
-    results as cosine_topk up to float-sum ordering."""
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    qm = query_mat / np.linalg.norm(query_mat, axis=1, keepdims=True)
-    qids = list(query_ids)
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("sim", DoubleType()),
-        ]
-    )
-
-    def fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = mat @ qm.T  # (batch, nq)
-            ids = pdf[id_col].to_numpy()
-            out = {
-                "query_id": np.repeat(qids, len(ids)),
-                id_col: np.tile(ids, len(qids)),
-                "sim": sims.T.ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    scored = emb.select(id_col, vec_col).mapInPandas(fn, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", id_col, "sim", "rnk")
-    )
+    return _exact_topk(j, k, id_col, vec_col, qid_col, qvec_col, round_digits)
 
 
 # --- DuckDB oracle fragments -------------------------------------------------
@@ -663,8 +595,8 @@ def kmeans_train(
     ``centroids=``). Deterministic by construction:
 
       init       first ``k`` vectors by id (reproducible, oracle-expressible)
-      assign     nearest centroid by fround'd cosine (ivf_assign — broadcast
-                 centroids, one corpus pass, id tiebreak)
+      assign     nearest centroid by fround'd cosine (the ivf_assign argmax —
+                 broadcast centroids, one corpus pass, id tiebreak)
       update     per-dimension AVG in ONE groupBy (dim agg columns, map-side
                  combine — no explode, no dim-fold shuffle), each component
                  fround'd so float summation order can't leak across engines
@@ -674,7 +606,6 @@ def kmeans_train(
     (identically on both engines). Returns (centroid_id, cvec, n_members).
     """
     from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
 
     checkpoint = _checkpointer(emb)
     cent = emb.where(F.col(id_col) < k).select(
@@ -683,10 +614,9 @@ def kmeans_train(
     )
     out = None
     for it in range(iters):
-        # fused assignment (r14): one aggregate pass replaces the rank
-        # window + emb-rejoin — one corpus shuffle per iteration deleted
-        # (ivf_assign_carry docstring has the equivalence argument)
-        members = ivf_assign_carry(emb, cent, id_col, vec_col)
+        # the member vector rides the argmax, so the update needs no
+        # emb rejoin (one corpus shuffle per iteration saved; _argmax)
+        members = _ivf_nearest(emb, cent, id_col, vec_col, (vec_col,))
         out = members.groupBy("centroid_id").agg(
             _fround_avg_array_expr(vec_col, dim, round_digits).alias("cvec"),
             F.count(F.lit(1)).alias("n_members"),
@@ -895,7 +825,6 @@ def semantic_dedup(
     """
     from sarpro_spark.llm.cluster import _checkpointer
     from sarpro_spark.llm.sampling import hash_bucket
-    from sarpro_spark.queries import fround
 
     def _stats_of_sizes(g: DataFrame, level: int) -> DataFrame:
         """One telemetry row from a per-group ``size`` relation."""
@@ -920,11 +849,11 @@ def semantic_dedup(
 
     checkpoint = _checkpointer(emb)
     cent = kmeans_train(emb, k=k, iters=iters, dim=dim, id_col=id_col, vec_col=vec_col)
-    # fused assignment (r14): (id, vec, centroid_id) in one aggregate pass —
-    # the rank window + emb-rejoin exchange are gone (ivf_assign_carry);
-    # the assignment aggregate's exchange is shared by the splits aggregate
-    # and the join below (ReuseExchange), and m is checkpointed right after
-    assign = ivf_assign_carry(emb, cent.select("centroid_id", "cvec"), id_col, vec_col)
+    # (id, vec, centroid_id) in one aggregate pass (_argmax carries the
+    # vector); the assignment aggregate's exchange is shared by the splits
+    # aggregate and the join below (ReuseExchange), and m is checkpointed
+    # right after
+    assign = _ivf_nearest(emb, cent.select("centroid_id", "cvec"), id_col, vec_col, (vec_col,))
     # ceil(size / max_cluster) sub-clusters per cluster; k rows, no hint —
     # k grows with the corpus (AQE broadcasts it while it is small)
     splits = assign.groupBy("centroid_id").agg(
@@ -984,30 +913,13 @@ def semantic_dedup(
                 # globally, so it is NOT pinned broadcast (AQE broadcasts
                 # while it is small; at corpus scale the group-keyed shuffle
                 # co-locates each group's members with its own sub-centroids).
-                # Fused assignment (r14, same equivalence as
-                # ivf_assign_carry): max(struct(sim, -sub)) IS rank-1 of
-                # (sim DESC, sub); the group path and the member vector ride
-                # the struct (constant per id), deleting the rank window's
-                # corpus sort and the over-rejoin exchange every Lloyd round
-                # paid. Returns (id, *group_cols, vec, sub).
+                # Fused assignment (r14, _argmax): the group path and the
+                # member vector ride the struct (constant per id), deleting
+                # the rank window's corpus sort and the over-rejoin exchange
+                # every Lloyd round paid. Returns (id, *group_cols, vec, sub).
                 j = over.join(cent_df, list(gcols))
-                s = fround(
-                    F.expr(cosine_sql(f"cast(`{vec_col}` as array<double>)", "`scvec`"))
-                )
-                best = F.max(
-                    F.struct(
-                        s.alias("s"),
-                        (-F.col(sub_col)).alias("ns"),
-                        F.struct(*gcols).alias("g"),
-                        F.col(vec_col).alias("v"),
-                    )
-                ).alias("_best")
-                return j.groupBy(id_col).agg(best).select(
-                    F.col(id_col),
-                    *[F.col(f"_best.g.{c}").alias(c) for c in gcols],
-                    F.col("_best.v").alias(vec_col),
-                    (-F.col("_best.ns")).alias(sub_col),
-                )
+                s = _fcos(f"cast(`{vec_col}` as array<double>)", "`scvec`")
+                return _argmax(j, [id_col], s, sub_col, (*gcols, vec_col))
 
             for si in range(sub_iters):
                 mem = _sub_assign(subcent)
@@ -1060,7 +972,7 @@ def semantic_dedup(
         *group_cols, "_salt", F.col(id_col).alias("idb"), F.col(vec_col).alias("vb")
     )
     pairs = a.join(b, [*group_cols, "_salt"]).where(F.col("ida") < F.col("idb"))
-    sim = fround(cosine_expr(F.col("va").cast("array<double>"), F.col("vb").cast("array<double>")))
+    sim = _fcos("cast(`va` as array<double>)", "cast(`vb` as array<double>)")
     dropped = (
         pairs.where(sim >= F.lit(tau)).select(F.col("idb").alias(id_col)).distinct()
     )
@@ -1294,7 +1206,7 @@ def cosine_topk_int8(
 
     # norms depend on ONE side each — compute them per vector BEFORE the
     # pair join (corpus norm once per corpus row, not once per pair)
-    def _int_norm(c: str) -> Column:
+    def _int_l2norm(c: str) -> Column:
         return F.sqrt(
             F.aggregate(
                 F.transform(F.col(c), lambda a: (a * a).cast("long")),
@@ -1305,13 +1217,13 @@ def cosine_topk_int8(
 
     qc = quantize_int8(queries, qid_col, qvec_col).select(
         F.col(qid_col), F.col("codes").alias("qcodes")
-    ).withColumn("qnorm", _int_norm("qcodes"))
+    ).withColumn("qnorm", _int_l2norm("qcodes"))
     # widen narrow inputs (a small parquet file is one split): the quantize +
     # dot scan should use the cluster; a 100 TB corpus already arrives split
     from sarpro_spark.functions.partitioning import widen_if_narrow
 
     emb = widen_if_narrow(emb, id_col)
-    cc = quantize_int8(emb, id_col, vec_col).withColumn("cnorm", _int_norm("codes"))
+    cc = quantize_int8(emb, id_col, vec_col).withColumn("cnorm", _int_l2norm("codes"))
     j = cc.join(F.broadcast(qc))
     dp = F.aggregate(
         F.zip_with(F.col("codes"), F.col("qcodes"), lambda a, b: (a * b).cast("long")),
@@ -1322,12 +1234,7 @@ def cosine_topk_int8(
     scored = j.select(
         F.col(qid_col), F.col(id_col), fround(sim, round_digits).alias("sim")
     ).where(F.col("sim").isNotNull())
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "sim", "rnk")
-    )
+    return _rank_cut(scored, qid_col, k, "sim", id_col).select(qid_col, id_col, "sim", "rnk")
 
 
 def sql_cosine_topk_int8(
@@ -1414,6 +1321,49 @@ def quantize_binary(
     return df.select(F.col(id_col), *[F.col(c) for c in keep], *cols)
 
 
+def _hamming_shortlist(
+    emb: DataFrame,
+    queries: DataFrame,
+    kshort: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """(query_id, id, hamming, _hrnk, sim): the bounded query batch's
+    sign-bit words broadcast-crossed with the corpus words, the Hamming
+    distance an XOR + popcount per packed word (pure integer codegen),
+    cut to each query's ``kshort`` nearest by (hamming, id), then
+    rescored with the exact fround'd cosine. Zero-norm vectors yield a
+    NULL cosine and engines order NULLs differently under DESC, so they
+    are dropped before any ranking on ``sim``."""
+    words = (dim + 31) // 32
+    qb = quantize_binary(queries, qid_col, qvec_col, dim, keep=(qvec_col,))
+    qb = qb.select(
+        F.col(qid_col), F.col(qvec_col),
+        *[F.col(f"b{w}").alias(f"qb{w}") for w in range(words)],
+    )
+    cb = quantize_binary(emb, id_col, vec_col, dim, keep=(vec_col,))
+    ham = sum(
+        (F.bit_count(F.col(f"b{w}").bitwiseXOR(F.col(f"qb{w}"))) for w in range(words)),
+        F.lit(0),
+    )
+    scored = cb.join(F.broadcast(qb)).select(
+        F.col(qid_col), F.col(id_col), ham.alias("hamming"),
+        F.col(vec_col), F.col(qvec_col),
+    )
+    short = _rank_cut(scored, qid_col, kshort, "hamming", id_col, rnk="_hrnk", desc=False)
+    sim = _fcos(
+        f"cast(`{vec_col}` as array<double>)", f"cast(`{qvec_col}` as array<double>)",
+        round_digits,
+    )
+    return short.select(
+        F.col(qid_col), F.col(id_col), F.col("hamming"), F.col("_hrnk"), sim.alias("sim")
+    ).where(F.col("sim").isNotNull())
+
+
 def cosine_topk_binary(
     emb: DataFrame,
     queries: DataFrame,
@@ -1434,42 +1384,13 @@ def cosine_topk_binary(
     Output (query_id, vec_id, hamming, sim, rnk) keeps the shortlist
     distance as data, so recall-vs-int8/exact is measurable downstream."""
     from sarpro_spark.functions.partitioning import widen_if_narrow
-    from sarpro_spark.queries import fround
 
-    words = (dim + 31) // 32
-    qb = quantize_binary(queries, qid_col, qvec_col, dim, keep=(qvec_col,))
-    qb = qb.select(
-        F.col(qid_col), F.col(qvec_col),
-        *[F.col(f"b{w}").alias(f"qb{w}") for w in range(words)],
-    )
     emb = widen_if_narrow(emb, id_col)
-    cb = quantize_binary(emb, id_col, vec_col, dim, keep=(vec_col,))
-    j = cb.join(F.broadcast(qb))
-    ham = sum(
-        (F.bit_count(F.col(f"b{w}").bitwiseXOR(F.col(f"qb{w}"))) for w in range(words)),
-        F.lit(0),
+    rescored = _hamming_shortlist(
+        emb, queries, k * shortlist_mult, dim, id_col, vec_col, qid_col, qvec_col, round_digits
     )
-    scored = j.select(
-        F.col(qid_col), F.col(id_col), ham.alias("hamming"),
-        F.col(vec_col), F.col(qvec_col),
-    )
-    wsh = Window.partitionBy(qid_col).orderBy(F.col("hamming"), F.col(id_col))
-    short = (
-        scored.withColumn("_hrnk", F.row_number().over(wsh))
-        .where(F.col("_hrnk") <= k * shortlist_mult)
-    )
-    sim = fround(
-        cosine_expr(F.col(vec_col).cast("array<double>"), F.col(qvec_col).cast("array<double>")),
-        round_digits,
-    )
-    rescored = short.select(
-        F.col(qid_col), F.col(id_col), F.col("hamming"), sim.alias("sim")
-    ).where(F.col("sim").isNotNull())
-    wf = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        rescored.withColumn("rnk", F.row_number().over(wf))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "hamming", "sim", "rnk")
+    return _rank_cut(rescored, qid_col, k, "sim", id_col).select(
+        qid_col, id_col, "hamming", "sim", "rnk"
     )
 
 
@@ -1541,6 +1462,61 @@ SELECT query_id, {id_col}, hamming, sim, rnk FROM (
 """.strip()
 
 
+def _recall_ladder(
+    truth: DataFrame,
+    legs: list[tuple[dict, DataFrame]],
+    k: int,
+    qid_col: str,
+    id_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """The one recall-hit ladder: ``truth`` (query_id, ``_tid`` — the exact
+    top-k) left-joined to each leg's approximate top-k (query_id, id),
+    hits counted per query and labelled with the leg's knob values
+    (``{"nprobe": 2, "mult": 4}``), legs unioned. Returns (query_id,
+    *labels, hits, recall) plus ``monotone_ok`` when the legs carry a
+    ``mult``: a shortlist multiplier only widens a prefix of one ranked
+    relation, so hits is provably non-decreasing in mult within each
+    (query, other labels) and every row pins that."""
+    from sarpro_spark.queries import fround
+
+    out = None
+    for labels, top in legs:
+        hit = truth.join(
+            top.withColumn("_h", F.lit(1)),
+            (truth[qid_col] == top[qid_col]) & (F.col("_tid") == top[id_col]),
+            "left",
+        ).groupBy(truth[qid_col].alias(qid_col)).agg(
+            F.sum(F.coalesce(F.col("_h"), F.lit(0))).cast("long").alias("hits")
+        )
+        for name, v in labels.items():
+            hit = hit.withColumn(name, F.lit(v))
+        out = hit if out is None else out.unionByName(hit)
+    cols = [qid_col, *labels, "hits", fround(F.col("hits") / float(k), round_digits).alias("recall")]
+    if "mult" in labels:
+        wm = Window.partitionBy(qid_col, *[c for c in labels if c != "mult"]).orderBy("mult")
+        cols.append(
+            (F.col("hits") >= F.coalesce(F.lag("hits").over(wm), F.col("hits"))).alias("monotone_ok")
+        )
+    return out.select(*cols)
+
+
+def _mult_legs(
+    ranked: DataFrame, prefix: str, k: int, mults: tuple[int, ...],
+    qid_col: str, id_col: str, **labels,
+) -> list[tuple[dict, DataFrame]]:
+    """The shortlist-multiplier legs of :func:`_recall_ladder`: for each
+    m, the exact-``sim`` top-k among the rows of ``ranked`` whose
+    shortlist rank ``prefix`` is <= k*m — a prefix filter on one
+    rescored relation, so one scan and one rescoring serve every m."""
+    return [
+        ({**labels, "mult": m}, _rank_cut(
+            ranked.where(F.col(prefix) <= k * m), qid_col, k, "sim", id_col, rnk="_rnk"
+        ).select(qid_col, id_col))
+        for m in mults
+    ]
+
+
 def binary_recall_sweep(
     emb: DataFrame,
     queries: DataFrame,
@@ -1561,80 +1537,24 @@ def binary_recall_sweep(
     non-decreasing in m (a superset shortlist reranked by the same global
     order keeps at least as many truth items), asserted per row as
     monotone_ok. Returns (query_id, mult, hits, recall, monotone_ok)."""
-    from sarpro_spark.queries import fround
+    from sarpro_spark.llm.cluster import _checkpointer
 
     mmax = max(mults)
     truth = cosine_topk(
         emb, queries, k, id_col, vec_col, qid_col, qvec_col, round_digits
-    ).select(qid_col, id_col)
-    qb = quantize_binary(queries, qid_col, qvec_col, dim, keep=(qvec_col,))
-    words = (dim + 31) // 32
-    qb = qb.select(
-        F.col(qid_col), F.col(qvec_col),
-        *[F.col(f"b{w}").alias(f"qb{w}") for w in range(words)],
-    )
-    cb = quantize_binary(emb, id_col, vec_col, dim, keep=(vec_col,))
-    j = cb.join(F.broadcast(qb))
-    ham = sum(
-        (F.bit_count(F.col(f"b{w}").bitwiseXOR(F.col(f"qb{w}"))) for w in range(words)),
-        F.lit(0),
-    )
-    wsh = Window.partitionBy(qid_col).orderBy(ham.asc(), F.col(id_col))
-    short = (
-        j.select(
-            F.col(qid_col), F.col(id_col), F.col(vec_col), F.col(qvec_col),
-            F.row_number().over(
-                Window.partitionBy(qid_col).orderBy(ham.asc(), F.col(id_col))
-            ).alias("_hrnk"),
-        )
-        .where(F.col("_hrnk") <= k * mmax)
-    )
-    sim = fround(
-        cosine_expr(F.col(vec_col).cast("array<double>"), F.col(qvec_col).cast("array<double>")),
-        round_digits,
-    )
-    rescored = short.select(qid_col, id_col, "_hrnk", sim.alias("sim")).where(
-        # zero-norm vectors yield NULL cosine; engines order NULLs
-        # differently under DESC, so drop them BEFORE ranking (the same
-        # guard every topk variant applies)
-        F.col("sim").isNotNull()
-    )
+    ).select(qid_col, F.col(id_col).alias("_tid"))
+    rescored = _hamming_shortlist(
+        emb, queries, k * mmax, dim, id_col, vec_col, qid_col, qvec_col, round_digits
+    ).select(qid_col, id_col, "_hrnk", "sim")
     # the per-multiplier legs and the truth join each consume these
     # relations once per m — uncheckpointed, every leg re-runs the full
     # Hamming scan + shortlist window (measured 12.7 -> ~5 s at sf0.01).
     # Both are bounded: <= k*max(mults) rows per query and k per query.
-    from sarpro_spark.llm.cluster import _checkpointer
-
     ckpt = _checkpointer(emb)
     rescored = ckpt(rescored)
     truth = ckpt(truth)
-    legs = []
-    t = truth.select(F.col(qid_col), F.col(id_col).alias("_tid"))
-    for m in mults:
-        wf = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-        top = (
-            rescored.where(F.col("_hrnk") <= k * m)
-            .withColumn("_rnk", F.row_number().over(wf))
-            .where(F.col("_rnk") <= k)
-            .select(qid_col, id_col)
-        )
-        hit = t.join(
-            top.withColumn("_h", F.lit(1)),
-            (t[qid_col] == top[qid_col]) & (F.col("_tid") == top[id_col]),
-            "left",
-        ).groupBy(t[qid_col].alias(qid_col)).agg(
-            F.sum(F.coalesce(F.col("_h"), F.lit(0))).cast("long").alias("hits")
-        )
-        legs.append(hit.withColumn("mult", F.lit(m)))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    wm = Window.partitionBy(qid_col).orderBy("mult")
-    return out.select(
-        qid_col, "mult", "hits",
-        fround(F.col("hits") / float(k), round_digits).alias("recall"),
-        (F.col("hits") >= F.coalesce(F.lag("hits").over(wm), F.col("hits"))).alias("monotone_ok"),
-    )
+    legs = _mult_legs(rescored, "_hrnk", k, mults, qid_col, id_col)
+    return _recall_ladder(truth, legs, k, qid_col, id_col, round_digits)
 
 
 def sql_binary_recall_sweep(
@@ -1731,7 +1651,6 @@ def pq_codebooks(
     total (64 at the defaults): a codebook is ALWAYS broadcast-bounded,
     independent of corpus size."""
     from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
 
     if iters < 1:
         # the seed centroids are a lazy plan over the slice cache released
@@ -1751,28 +1670,13 @@ def pq_codebooks(
         F.col("_sv").cast("array<double>").alias("cvec"),
     )
     for _ in range(iters):
-        # fused assignment (r14, same equivalence as ivf_assign_carry):
-        # max(struct(sim, -cid, slice)) grouped by (id, subspace) IS the
-        # rank-1 window over (sim DESC, centroid_id), and carrying the
-        # member slice deletes the window's sort and the slices-rejoin
-        # exchange each Lloyd round paid; the dim-wide fround'd-AVG update
-        # parses as one expr() string (guide §7.3 — py4j round-trips are
-        # driver wall).
+        # _argmax grouped by (id, subspace) carries the member slice, so
+        # the update needs no slices rejoin; the dim-wide
+        # fround'd-AVG update parses as one expr() string (guide §7.3 —
+        # py4j round-trips are driver wall).
         j = slices.join(F.broadcast(cent), "subspace")
-        sim = fround(F.expr(cosine_sql("`_sv`", "`cvec`")), 6)
-        best = F.max(
-            F.struct(
-                sim.alias("s"),
-                (-F.col("centroid_id")).alias("nc"),
-                F.col("_sv").alias("v"),
-            )
-        ).alias("_best")
-        members = j.groupBy(id_col, "subspace").agg(best).select(
-            F.col(id_col),
-            F.col("subspace"),
-            F.col("_best.v").alias("_sv"),
-            (-F.col("_best.nc")).alias("centroid_id"),
-        )
+        sim = _fcos("`_sv`", "`cvec`")
+        members = _argmax(j, [id_col, "subspace"], sim, "centroid_id", ("_sv",))
         cent = checkpoint(
             members.groupBy("subspace", "centroid_id").agg(
                 _fround_avg_array_expr("_sv", sub).alias("cvec")
@@ -1804,8 +1708,6 @@ def pq_assign_codes(
     partition lists at runtime; one exploded scan has no Union to lie
     about and is the plan you want at scale anyway (m small rows per
     vector moving once)."""
-    from sarpro_spark.queries import fround
-
     sub = dim // m
     slices = emb.select(
         F.col(id_col),
@@ -1813,16 +1715,84 @@ def pq_assign_codes(
             F.array(*[F.slice(F.col(vec_col), j * sub + 1, sub) for j in range(m)])
         ).alias("subspace", "_sub_vec"),
     )
-    # fused argmax (r14, same equivalence as ivf_assign_carry): the rank-1
-    # window over (sim DESC, centroid_id) is max(struct(sim, -cid)) — one
-    # partial-aggregating exchange instead of a corpus sort
+    # only the code is kept: nothing rides the argmax
     j = slices.join(F.broadcast(codebooks), "subspace")
-    sim = fround(F.expr(cosine_sql("`_sub_vec`", "`cvec`")), 6)
-    best = F.max(
-        F.struct(sim.alias("s"), (-F.col("centroid_id")).alias("nc"))
-    ).alias("_best")
-    return j.groupBy(id_col, "subspace").agg(best).select(
-        F.col(id_col), F.col("subspace"), (-F.col("_best.nc")).alias("code")
+    sim = _fcos("`_sub_vec`", "`cvec`")
+    return _argmax(j, [id_col, "subspace"], sim, "centroid_id", out="code")
+
+
+def _adc_rerank(
+    scan: DataFrame,
+    keys: list[str],
+    books: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    shortlist_mult: int,
+    m: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    qid_col: str,
+    qvec_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """The one PQ asymmetric-distance (ADC) shortlist + exact rerank.
+    ``scan`` holds the codes to score — (id, subspace, code) for the whole
+    corpus, or with query_id for probed-list candidates — and joins the
+    broadcast per-query lookup table on ``keys``. Each query's table has
+    dot(q_j, c) and |c|^2 per codebook entry (m*ksub rows), so the scan is
+    one join + a SUM over m rows per (query, vector); the PQ-reconstructed
+    cosine ranks a k*mult shortlist that the exact float cosine against
+    ``vectors`` then reranks. Returns (query_id, id, adc_sim, sim, rnk)."""
+    from sarpro_spark.queries import fround
+
+    sub = dim // m
+    qsub = f"slice(`{qvec_col}`, `subspace` * {sub} + 1, {sub})"
+    lut = (
+        queries.join(F.broadcast(books))
+        .select(
+            F.col(qid_col),
+            "subspace",
+            F.col("centroid_id").alias("code"),
+            F.expr(_dot_sql(qsub, "`cvec`")).alias("_qdot"),
+            F.expr(_dot_sql("`cvec`", "`cvec`")).alias("_cn2"),
+        )
+    )
+    qn = queries.select(F.col(qid_col), F.expr(_norm_sql(f"`{qvec_col}`")).alias("_qnorm"))
+    adc = (
+        scan.join(F.broadcast(lut), keys)
+        .groupBy(qid_col, id_col)
+        .agg(F.sum("_qdot").alias("_dot"), F.sum("_cn2").alias("_cn2"))
+        .join(F.broadcast(qn), qid_col)
+        .where((F.col("_cn2") > 0) & (F.col("_qnorm") > 0))
+        .select(
+            F.col(qid_col),
+            F.col(id_col),
+            fround(F.col("_dot") / (F.sqrt("_cn2") * F.col("_qnorm")), round_digits).alias("adc_sim"),
+        )
+    )
+    short = _rank_cut(adc, qid_col, k * shortlist_mult, "adc_sim", id_col, rnk="_arnk")
+    # exact rescoring of the shortlist only: broadcast the (bounded,
+    # queries x k*mult rows) shortlist against the corpus vectors
+    qv = queries.select(F.col(qid_col), F.col(qvec_col))
+    rescored = (
+        vectors.select(F.col(id_col), F.col(vec_col))
+        .join(F.broadcast(short), id_col)
+        .join(F.broadcast(qv), qid_col)
+        .select(
+            F.col(qid_col),
+            F.col(id_col),
+            F.col("adc_sim"),
+            _fcos(
+                f"cast(`{vec_col}` as array<double>)", f"cast(`{qvec_col}` as array<double>)",
+                round_digits,
+            ).alias("sim"),
+        )
+        .where(F.col("sim").isNotNull())
+    )
+    return _rank_cut(rescored, qid_col, k, "sim", id_col).select(
+        qid_col, id_col, "adc_sim", "sim", "rnk"
     )
 
 
@@ -1840,83 +1810,23 @@ def cosine_topk_pq(
     qvec_col: str = "qvec",
     round_digits: int = 6,
 ) -> DataFrame:
-    """PQ-ADC ANN: asymmetric-distance shortlist + exact rerank.
+    """PQ-ADC ANN: asymmetric-distance shortlist + exact rerank
+    (:func:`_adc_rerank`) over the codes of the whole corpus.
 
     The scan side touches only m small-int codes per vector (m=4: half
-    the bytes of the 1-bit rung's words, 1/64 of f32); each query
-    precomputes an m*ksub lookup table (dot(q_j, c) and |c|^2 per
-    codebook entry — the ADC table), the scan is one broadcast-LUT join
-    + a SUM over m rows per (query, vector), and the PQ-reconstructed
-    cosine ranks a k*mult shortlist that the exact float cosine then
-    reranks.  Output (query_id, vec_id, adc_sim, sim, rnk) keeps the ADC
-    score as data next to the exact score, same doctrine as the Hamming
-    column of the 1-bit rung."""
+    the bytes of the 1-bit rung's words, 1/64 of f32).  Output
+    (query_id, vec_id, adc_sim, sim, rnk) keeps the ADC score as data
+    next to the exact score, same doctrine as the Hamming column of the
+    1-bit rung."""
     from sarpro_spark.functions.partitioning import widen_if_narrow
-    from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
 
-    sub = dim // m
-    ckpt = _checkpointer(emb)
-    # pq_codebooks already checkpoints its final iteration — a second
-    # eager checkpoint here was a redundant action (r14)
+    # pq_codebooks checkpoints its final iteration; no second checkpoint
     books = pq_codebooks(emb, m, ksub, 2, dim, id_col, vec_col)
     emb = widen_if_narrow(emb, id_col)
     codes = pq_assign_codes(emb, books, m, dim, id_col, vec_col)
-
-    # ADC lookup table: queries x codebook entries (m*ksub per query)
-    qsub = F.slice(F.col(qvec_col), F.col("subspace") * sub + 1, F.lit(sub))
-    lut = (
-        queries.join(F.broadcast(books))
-        .select(
-            F.col(qid_col),
-            "subspace",
-            F.col("centroid_id").alias("code"),
-            _dot(qsub, F.col("cvec")).alias("_qdot"),
-            _dot(F.col("cvec"), F.col("cvec")).alias("_cn2"),
-        )
-    )
-    qn = queries.select(F.col(qid_col), _norm(F.col(qvec_col)).alias("_qnorm"))
-    adc = (
-        codes.join(F.broadcast(lut), ["subspace", "code"])
-        .groupBy(qid_col, id_col)
-        .agg(F.sum("_qdot").alias("_dot"), F.sum("_cn2").alias("_cn2"))
-        .join(F.broadcast(qn), qid_col)
-        .where((F.col("_cn2") > 0) & (F.col("_qnorm") > 0))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            fround(F.col("_dot") / (F.sqrt("_cn2") * F.col("_qnorm")), round_digits).alias("adc_sim"),
-        )
-    )
-    wsh = Window.partitionBy(qid_col).orderBy(F.col("adc_sim").desc(), F.col(id_col))
-    short = adc.withColumn("_arnk", F.row_number().over(wsh)).where(
-        F.col("_arnk") <= k * shortlist_mult
-    )
-    # exact rescoring of the shortlist only: broadcast the (bounded,
-    # queries x k*mult rows) shortlist against the corpus vectors
-    qv = queries.select(F.col(qid_col), F.col(qvec_col))
-    rescored = (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .join(F.broadcast(short), id_col)
-        .join(F.broadcast(qv), qid_col)
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.col("adc_sim"),
-            fround(
-                cosine_expr(
-                    F.col(vec_col).cast("array<double>"), F.col(qvec_col).cast("array<double>")
-                ),
-                round_digits,
-            ).alias("sim"),
-        )
-        .where(F.col("sim").isNotNull())
-    )
-    wf = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        rescored.withColumn("rnk", F.row_number().over(wf))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "adc_sim", "sim", "rnk")
+    return _adc_rerank(
+        codes, ["subspace", "code"], books, emb, queries, k, shortlist_mult, m, dim,
+        id_col, vec_col, qid_col, qvec_col, round_digits,
     )
 
 
@@ -1948,20 +1858,13 @@ def cosine_topk_ivfpq(
     Output (query_id, vec_id, adc_sim, sim, rnk) keeps the ADC score next
     to the exact one, same doctrine as the PQ and 1-bit rungs."""
     from sarpro_spark.functions.partitioning import widen_if_narrow
-    from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
 
-    sub = dim // m
-    ckpt = _checkpointer(emb)
     centroids = ivf_centroids(emb, n_centroids, id_col, vec_col)
-    # pq_codebooks already checkpoints its final iteration — a second
-    # eager checkpoint here was a redundant action (r14)
+    # pq_codebooks checkpoints its final iteration; no second checkpoint
     books = pq_codebooks(emb, m, ksub, 2, dim, id_col, vec_col)
     emb = widen_if_narrow(emb, id_col)
     assign = ivf_assign(emb, centroids, id_col, vec_col)
     codes = pq_assign_codes(emb, books, m, dim, id_col, vec_col)
-
-    # probe: each query's nprobe nearest lists (same scoring as ivf_assign)
     return cosine_topk_ivfpq_from_index(
         centroids, books, assign, codes, emb, queries, k, nprobe,
         shortlist_mult, m, dim, id_col, vec_col, qid_col, qvec_col,
@@ -1994,77 +1897,13 @@ def cosine_topk_ivfpq_from_index(
     prune to their lists' files), ``codes`` (id, subspace, code), and
     ``vectors`` (id, vec) for the exact rerank.  Identical results to
     building the index inline (:func:`cosine_topk_ivfpq`)."""
-    from sarpro_spark.queries import fround
-
-    sub = dim // m
-    centroids = centroids.select("centroid_id", "cvec")
-    qsim = queries.join(F.broadcast(centroids)).select(
-        F.col(qid_col),
-        F.col("centroid_id"),
-        fround(cosine_expr(F.col(qvec_col), F.col("cvec")), round_digits).alias("sim"),
-    )
-    wq = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probed = (
-        qsim.withColumn("rnk", F.row_number().over(wq))
-        .where(F.col("rnk") <= nprobe)
-        .select(qid_col, "centroid_id")
-    )
+    probed = _ivf_probe(queries, centroids, nprobe, qid_col, qvec_col, round_digits)
     cand = probed.join(assign, "centroid_id").select(qid_col, id_col).distinct()
-
-    # ADC over the probed lists only: the LUT is (query x m*ksub) bounded,
-    # broadcast; the scan side is candidate codes, never the full corpus
-    qsub = F.slice(F.col(qvec_col), F.col("subspace") * sub + 1, F.lit(sub))
-    lut = (
-        queries.join(F.broadcast(books))
-        .select(
-            F.col(qid_col),
-            "subspace",
-            F.col("centroid_id").alias("code"),
-            _dot(qsub, F.col("cvec")).alias("_qdot"),
-            _dot(F.col("cvec"), F.col("cvec")).alias("_cn2"),
-        )
-    )
-    qn = queries.select(F.col(qid_col), _norm(F.col(qvec_col)).alias("_qnorm"))
-    adc = (
-        cand.join(codes, id_col)
-        .join(F.broadcast(lut), [qid_col, "subspace", "code"])
-        .groupBy(qid_col, id_col)
-        .agg(F.sum("_qdot").alias("_dot"), F.sum("_cn2").alias("_cn2"))
-        .join(F.broadcast(qn), qid_col)
-        .where((F.col("_cn2") > 0) & (F.col("_qnorm") > 0))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            fround(F.col("_dot") / (F.sqrt("_cn2") * F.col("_qnorm")), round_digits).alias("adc_sim"),
-        )
-    )
-    wsh = Window.partitionBy(qid_col).orderBy(F.col("adc_sim").desc(), F.col(id_col))
-    short = adc.withColumn("_arnk", F.row_number().over(wsh)).where(
-        F.col("_arnk") <= k * shortlist_mult
-    )
-    qv = queries.select(F.col(qid_col), F.col(qvec_col))
-    rescored = (
-        vectors.select(F.col(id_col), F.col(vec_col))
-        .join(F.broadcast(short), id_col)
-        .join(F.broadcast(qv), qid_col)
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.col("adc_sim"),
-            fround(
-                cosine_expr(
-                    F.col(vec_col).cast("array<double>"), F.col(qvec_col).cast("array<double>")
-                ),
-                round_digits,
-            ).alias("sim"),
-        )
-        .where(F.col("sim").isNotNull())
-    )
-    wf = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        rescored.withColumn("rnk", F.row_number().over(wf))
-        .where(F.col("rnk") <= k)
-        .select(qid_col, id_col, "adc_sim", "sim", "rnk")
+    # ADC over the probed lists only: the scan side is candidate codes,
+    # never the full corpus
+    return _adc_rerank(
+        cand.join(codes, id_col), [qid_col, "subspace", "code"], books, vectors, queries,
+        k, shortlist_mult, m, dim, id_col, vec_col, qid_col, qvec_col, round_digits,
     )
 
 
@@ -2094,8 +1933,8 @@ def ivfpq_recall_sweep(
     monotonicity is expected, not structural — the frontier shows it
     rather than asserting it.  One ADC scan + one rescoring pass (the
     largest shortlist) serves every multiplier of each nprobe leg."""
+    from sarpro_spark.functions.partitioning import widen_if_narrow
     from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
 
     mmax = max(mults)
     ckpt = _checkpointer(emb)
@@ -2110,11 +1949,8 @@ def ivfpq_recall_sweep(
     # corpus-sized relations, serve each leg from the shared index: the
     # from_index path is the inline path's own implementation, so results
     # are identical by construction.
-    from sarpro_spark.functions.partitioning import widen_if_narrow
-
     centroids = ivf_centroids(emb, n_centroids, id_col, vec_col)
-    # pq_codebooks already checkpoints its final iteration — a second
-    # eager checkpoint here was a redundant action (r14)
+    # pq_codebooks checkpoints its final iteration; no second checkpoint
     books = pq_codebooks(emb, m, ksub, 2, dim, id_col, vec_col)
     emb_w = widen_if_narrow(emb, id_col)
     assign = ckpt(ivf_assign(emb_w, centroids, id_col, vec_col))
@@ -2133,35 +1969,8 @@ def ivfpq_recall_sweep(
                 .alias("_arnk"),
             )
         )
-        for mm in mults:
-            wf = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-            top = (
-                ranked.where(F.col("_arnk") <= k * mm)
-                .withColumn("_rnk", F.row_number().over(wf))
-                .where(F.col("_rnk") <= k)
-                .select(qid_col, id_col)
-            )
-            hit = truth.join(
-                top.withColumn("_h", F.lit(1)),
-                (truth[qid_col] == top[qid_col]) & (F.col("_tid") == top[id_col]),
-                "left",
-            ).groupBy(truth[qid_col].alias(qid_col)).agg(
-                F.sum(F.coalesce(F.col("_h"), F.lit(0))).cast("long").alias("hits")
-            )
-            legs.append(
-                hit.withColumn("nprobe", F.lit(np_)).withColumn("mult", F.lit(mm))
-            )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    wm = Window.partitionBy(qid_col, "nprobe").orderBy("mult")
-    return out.select(
-        qid_col, "nprobe", "mult", "hits",
-        fround(F.col("hits") / float(k), round_digits).alias("recall"),
-        (
-            F.col("hits") >= F.coalesce(F.lag("hits").over(wm), F.col("hits"))
-        ).alias("monotone_ok"),
-    )
+        legs += _mult_legs(ranked, "_arnk", k, mults, qid_col, id_col, nprobe=np_)
+    return _recall_ladder(truth, legs, k, qid_col, id_col, round_digits)
 
 
 def pq_recall_sweep(
@@ -2183,12 +1992,11 @@ def pq_recall_sweep(
     multi-probe sweeps: ONE ADC scan and ONE rescoring pass (the largest
     shortlist) serve every multiplier; hits is provably non-decreasing."""
     from sarpro_spark.llm.cluster import _checkpointer
-    from sarpro_spark.queries import fround
 
     mmax = max(mults)
     truth = cosine_topk(
         emb, queries, k, id_col, vec_col, qid_col, qvec_col, round_digits
-    ).select(qid_col, id_col)
+    ).select(qid_col, F.col(id_col).alias("_tid"))
     ranked = cosine_topk_pq(
         emb, queries, k * mmax, 1, m, ksub, dim, id_col, vec_col, qid_col, qvec_col, round_digits
     )  # k*mmax shortlist, rescored; _arnk order == adc order by construction
@@ -2202,35 +2010,8 @@ def pq_recall_sweep(
             .alias("_arnk"),
         )
     )
-    t = truth.select(F.col(qid_col), F.col(id_col).alias("_tid"))
-    legs = []
-    for mm in mults:
-        wf = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(), F.col(id_col))
-        top = (
-            ranked.where(F.col("_arnk") <= k * mm)
-            .withColumn("_rnk", F.row_number().over(wf))
-            .where(F.col("_rnk") <= k)
-            .select(qid_col, id_col)
-        )
-        hit = t.join(
-            top.withColumn("_h", F.lit(1)),
-            (t[qid_col] == top[qid_col]) & (F.col("_tid") == top[id_col]),
-            "left",
-        ).groupBy(t[qid_col].alias(qid_col)).agg(
-            F.sum(F.coalesce(F.col("_h"), F.lit(0))).cast("long").alias("hits")
-        )
-        legs.append(hit.withColumn("mult", F.lit(mm)))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    wm = Window.partitionBy(qid_col).orderBy("mult")
-    return out.select(
-        qid_col, "mult", "hits",
-        fround(F.col("hits") / float(k), round_digits).alias("recall"),
-        (
-            F.col("hits") >= F.coalesce(F.lag("hits").over(wm), F.col("hits"))
-        ).alias("monotone_ok"),
-    )
+    legs = _mult_legs(ranked, "_arnk", k, mults, qid_col, id_col)
+    return _recall_ladder(truth, legs, k, qid_col, id_col, round_digits)
 
 
 # --- PQ DuckDB twins ------------------------------------------------------------

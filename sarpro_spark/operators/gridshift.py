@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sarpro_spark.localrel import local_relation
+from sarpro_spark.operators.tmerc import apply_steps
 
 #: synthetic fixture header: south-east Australia window (the AGD66 zone-55
 #: region the loud-failure example EPSG:28355 covers), 0.5-degree lattice
@@ -144,22 +145,6 @@ def grid_cells(grid: DataFrame, materialize: bool = False) -> DataFrame:
     return _checkpointer(cells)(cells)
 
 
-def _star_with(df: DataFrame, cols: list) -> DataFrame:
-    """``SELECT *, expr AS name`` with the ``apply_steps`` shadowing guard
-    (r14, ADVICE r13): ``withColumn`` REPLACES a same-named column while
-    ``SELECT *`` would APPEND a duplicate and poison every downstream
-    reference with an ambiguity error. All in-tree call sites use fresh
-    chain-prefixed names, so the guard costs one set lookup; a caller
-    passing a colliding ``out_lat``/prefix falls back to the replacing
-    withColumn chain instead of silently duplicating."""
-    existing = set(df.columns)
-    if any(n in existing for n, _ in cols):
-        for n, c in cols:
-            df = df.withColumn(n, c)
-        return df
-    return df.select("*", *[c.alias(n) for n, c in cols])
-
-
 def _interp_shift(
     pts: DataFrame,
     grid: DataFrame,
@@ -192,7 +177,7 @@ def _interp_shift(
     # session, guide §7.3: each withColumn re-runs the analyzer on a
     # growing plan); fy/fx reference the i0/j0 EXPRESSIONS directly —
     # identical arithmetic, and codegen CSE shares the duplicated subtree
-    out = _star_with(pts, [
+    out = apply_steps(pts, [
         (f"{p}_i0", i0),
         (f"{p}_j0", j0),
         (f"{p}_fy", fi - i0),
@@ -245,7 +230,7 @@ def grid_shift_forward(
     interpolation AT THE SOURCE coordinates, shift applied in degrees."""
     h = SYNTH_HEADER if hdr is None else hdr
     out = _interp_shift(pts, grid, h, lon, lat, p)
-    return _star_with(out, [
+    return apply_steps(out, [
         (out_lat, F.col(lat) + F.col(f"{p}_dlat") / 3600.0),
         (out_lon, F.col(lon) + F.col(f"{p}_dlon") / 3600.0),
     ])
@@ -275,11 +260,11 @@ def grid_shift_inverse(
     out = pts
     for k in range(iters):
         step = f"{p}{k}"
-        out = _star_with(out, [(f"{step}_lat", cur_lat), (f"{step}_lon", cur_lon)])
+        out = apply_steps(out, [(f"{step}_lat", cur_lat), (f"{step}_lon", cur_lon)])
         out = _interp_shift(out, grid, h, f"{step}_lon", f"{step}_lat", step, cells=cells)
         cur_lat = F.col(lat) - F.col(f"{step}_dlat") / 3600.0
         cur_lon = F.col(lon) - F.col(f"{step}_dlon") / 3600.0
-    return _star_with(out, [(out_lat, cur_lat), (out_lon, cur_lon)])
+    return apply_steps(out, [(out_lat, cur_lat), (out_lon, cur_lon)])
 
 
 # --- numpy twins (tests / anchors) -------------------------------------------

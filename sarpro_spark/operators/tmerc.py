@@ -25,7 +25,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # WGS84 (public datum constants)
@@ -143,12 +143,13 @@ def tm_inverse_steps(
     ]
 
 
-def apply_steps(df: DataFrame, steps: list[tuple[str, str]]) -> DataFrame:
+def apply_steps(df: DataFrame, steps: list[tuple[str, str | Column]]) -> DataFrame:
     """Spark side: the whole step chain in ONE select via lateral column
     aliases (each step may reference earlier steps' names; the analyzer
     rewrites the references into nested Projects — the exact plan the old
     per-step withColumn fold produced, still whole-stage codegen, no
-    Python in the row path).
+    Python in the row path). A step's expression is SQL text or a Column
+    (the grid-shift interpolation passes Columns).
 
     r13 optimization round (guide §7.3 — planning time is driver work):
     the old fold re-ran the analyzer once per step on a growing plan
@@ -157,16 +158,24 @@ def apply_steps(df: DataFrame, steps: list[tuple[str, str]]) -> DataFrame:
     cold / 3.9 → 3.5 s steady, results bit-identical (the oracle re-proved
     every TM-family query at sf0.01 + sf0.001).
 
-    withColumn REPLACES a same-named column while ``SELECT *, ...`` would
-    duplicate it, so a chain that shadows an existing column keeps the old
-    per-step fold (none of the current chains does — names are
-    chain-prefixed — but the semantics must not drift if one ever does)."""
+    The one shadowing guard: withColumn REPLACES a same-named column in
+    place while ``SELECT *, ...`` would append a duplicate and poison
+    every downstream reference with an ambiguity error, so a chain that
+    shadows an existing column keeps the per-step withColumn fold. Chain
+    names are prefixed, but names overlap across chains (``bd72_*`` /
+    ``lcc_*``, ``tm_inverse`` / ``ups_inverse``) and a caller may pass a
+    colliding output name, so the fallback stays."""
+    def col(expr: str | Column) -> Column:
+        return F.expr(expr) if isinstance(expr, str) else expr
+
     existing = set(df.columns)
     if any(name in existing for name, _ in steps):
         for name, expr in steps:
-            df = df.withColumn(name, F.expr(expr))
+            df = df.withColumn(name, col(expr))
         return df
-    return df.selectExpr("*", *[f"({expr}) AS {name}" for name, expr in steps])
+    if all(isinstance(expr, str) for _, expr in steps):
+        return df.selectExpr("*", *[f"({expr}) AS {name}" for name, expr in steps])
+    return df.select("*", *[col(expr).alias(name) for name, expr in steps])
 
 
 def sql_steps_select(src_rel: str, steps: list[tuple[str, str]], keep: str = "*") -> str:

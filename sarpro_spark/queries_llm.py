@@ -2122,26 +2122,14 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     a query's own probed list contains itself at sim 1.0).  Candidates
     come from the probed IVF lists (the production retrieve-then-mine
     shape); dedup exclusion and ranks are all inside the certificate."""
-    from pyspark.sql.window import Window
+    from sarpro_spark.functions.partitioning import widen_if_narrow
 
     e = frames.load_table(spark, sf_dir, "embeddings")
     queries = _spark_queries_frame(spark, sf_dir)
     centroids = sim.ivf_centroids(e, _IVF_K)
-    from sarpro_spark.functions.partitioning import widen_if_narrow
-
     emb = widen_if_narrow(e, "vec_id")
     assign = sim.ivf_assign(emb, centroids)
-    qsim = queries.join(F.broadcast(centroids)).select(
-        F.col("query_id"),
-        F.col("centroid_id"),
-        fround(sim.cosine_expr(F.col("qvec"), F.col("cvec")), 6).alias("sim"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("centroid_id"))
-    probed = (
-        qsim.withColumn("rnk", F.row_number().over(wq))
-        .where(F.col("rnk") <= _IVF_NPROBE)
-        .select("query_id", "centroid_id")
-    )
+    probed = sim._ivf_probe(queries, centroids, _IVF_NPROBE, "query_id", "qvec", 6)
     cand = probed.join(assign, "centroid_id").select("query_id", "vec_id").distinct()
     qv = queries.select("query_id", "qvec")
     scored = (
@@ -2150,13 +2138,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            fround(
-                sim.cosine_expr(
-                    F.col("embedding").cast("array<double>"),
-                    F.col("qvec").cast("array<double>"),
-                ),
-                6,
-            ).alias("sim"),
+            sim._fcos("cast(`embedding` as array<double>)", "cast(`qvec` as array<double>)")
+            .alias("sim"),
         )
         .where(F.col("sim").isNotNull())
     )
@@ -2165,11 +2148,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_excluded"))
     )
-    wf = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
-        scored.where(F.col("sim") < _NEG_DUP_T)
-        .withColumn("rnk", F.row_number().over(wf))
-        .where(F.col("rnk") <= _NEG_K)
+        sim._rank_cut(scored.where(F.col("sim") < _NEG_DUP_T), "query_id", _NEG_K, "sim", "vec_id")
         .join(F.broadcast(excl), "query_id", "left")
         .select(
             "query_id", "vec_id", "sim", "rnk",

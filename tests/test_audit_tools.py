@@ -194,3 +194,29 @@ def test_bench_idle_gate_refuses_to_clear_under_sustained_load(monkeypatch):
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py")).read()
     assert "BENCH_FULL_CONTAMINATED.json" in src
     assert "SPARK_GRAFT_FORCE" in src
+
+
+def test_infer_round_env_then_artifacts_then_none(tmp_path, monkeypatch):
+    """The one round rule bench.py and the tools stamp artifacts with: an
+    env override wins; else 1 + the newest BENCH_/CORRECTNESS_r*.json;
+    with neither, bench.py records None and a tool that cannot write
+    without a round exits loudly."""
+    bench = _load_bench()
+    repo = str(tmp_path)
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+    monkeypatch.delenv("PLANS_ROUND", raising=False)
+    assert bench._infer_round(repo=repo) is None
+    with pytest.raises(SystemExit, match="no round artifact"):
+        bench._infer_round(required="no round artifact", repo=repo)
+
+    for fn in ("BENCH_r03.json", "CORRECTNESS_r07.json", "SOAK_r09.json", "BENCH_r08_c8.json"):
+        (tmp_path / fn).write_text("{}")
+    assert bench._infer_round(repo=repo) == 8
+
+    # PLANS_ROUND counts only for the caller that names it (plan_dump)
+    monkeypatch.setenv("PLANS_ROUND", "21")
+    assert bench._infer_round(repo=repo) == 8
+    assert bench._infer_round(("SPARK_GRAFT_ROUND", "PLANS_ROUND"), repo=repo) == 21
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "12")
+    assert bench._infer_round(repo=repo) == 12
+    assert bench._infer_round(("SPARK_GRAFT_ROUND", "PLANS_ROUND"), "x", repo) == 12

@@ -151,6 +151,13 @@ def test_preset_save_load_roundtrip(tmp_path):
     p3 = build_params(parse_args(argv))
     assert p3 == p_saved
 
+    # a preset that turns continue_on_error off survives the argv round trip
+    p_stop = ProcessingParams.from_dict({**saved, "continue_on_error": False})
+    argv = params_to_cli(p_stop, "in.parquet", "outdir")
+    assert "--no-continue-on-error" in argv
+    assert build_params(parse_args(argv)) == p_stop
+    assert build_params(parse_args(["--load-preset", preset, "--no-continue-on-error"])) == p_stop
+
     # pipeline route flags equal under save->load (P4 warp-skip routing and
     # friends derive purely from params, so equality IS route equality)
     assert p_loaded.to_dict() == p_saved.to_dict()

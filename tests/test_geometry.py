@@ -359,6 +359,27 @@ def test_tmerc_spark_sql_steps_match_numpy(spark):
         assert abs(r["lat_inv"] - lat) < 1e-9
 
 
+def test_apply_steps_shadowing_replaces_in_place(spark):
+    """A step chain that names an existing column replaces it where it
+    stands (withColumn semantics, later steps see the new value) instead
+    of appending a duplicate; fresh names still append. Both step forms
+    (SQL text, Column) take the same guard."""
+    from sarpro_spark.operators import tmerc as tm
+
+    df = spark.createDataFrame([(1.0, 2.0, 3.0)], "a double, b double, c double")
+    out = tm.apply_steps(df, [("b", "a + 10"), ("d", "b * 2")])
+    assert out.columns == ["a", "b", "c", "d"]
+    assert tuple(out.first()) == (1.0, 11.0, 3.0, 22.0)
+
+    out = tm.apply_steps(df, [("c", F.col("a") - 1), ("e", F.col("b") + 1)])
+    assert out.columns == ["a", "b", "c", "e"]
+    assert tuple(out.first()) == (1.0, 2.0, 0.0, 3.0)
+
+    out = tm.apply_steps(df, [("d", "a + c"), ("e", "d * 2")])
+    assert out.columns == ["a", "b", "c", "d", "e"]
+    assert tuple(out.first()) == (1.0, 2.0, 3.0, 4.0, 8.0)
+
+
 def test_ups_polar_stereographic():
     """UPS (Polar Stereographic variant A): reproduces the EPSG Guidance
     Note 7-2 worked example, roundtrips both sheets to ~1e-11 deg, and the

@@ -82,18 +82,6 @@ def test_cosine_topk_exact(spark, emb):
     assert all(abs(r["sim"]) <= 1.0 + 1e-9 for r in out)
 
 
-def test_cosine_topk_pandas_agrees(spark, emb):
-    queries = emb.where(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    exact = {(r["query_id"], r["rnk"]): r["vec_id"] for r in sim.cosine_topk(emb, queries, k=5).collect()}
-    qrows = sorted(queries.collect(), key=lambda r: r["query_id"])
-    qmat = np.array([r["qvec"] for r in qrows])
-    qids = [r["query_id"] for r in qrows]
-    fast = {(r["query_id"], r["rnk"]): r["vec_id"] for r in sim.cosine_topk_pandas(emb, qmat, qids, k=5).collect()}
-    assert exact == fast
-
-
 def test_lsh_topk_is_subset_of_bucket(spark, emb):
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
@@ -563,7 +551,7 @@ def test_kmeans_deterministic_and_improves(spark, sf_dir):
         j = (
             e.join(assign, "vec_id")
             .join(cent.select("centroid_id", "cvec"), "centroid_id")
-            .select(sim.cosine_expr(F.col("embedding"), F.col("cvec")).alias("s"))
+            .select(F.expr(sim.cosine_sql("embedding", "cvec")).alias("s"))
         )
         return j.agg(F.avg("s")).first()[0]
 

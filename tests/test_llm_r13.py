@@ -101,8 +101,8 @@ def test_maxsim_is_asymmetric_order_sensitive(spark, emb):
         [(v[0], v[3])], "qvec array<float>, dvec array<float>"
     )
     ab, ba = pair.select(
-        li.maxsim_expr(F.col("qvec"), F.col("dvec"), t=4, dim=16).alias("ab"),
-        li.maxsim_expr(F.col("dvec"), F.col("qvec"), t=4, dim=16).alias("ba"),
+        F.expr(li.spark_maxsim_sql("qvec", "dvec", t=4, dim=16)).alias("ab"),
+        F.expr(li.spark_maxsim_sql("dvec", "qvec", t=4, dim=16)).alias("ba"),
     ).collect()[0]
     assert ab != ba  # sum-of-row-maxes vs sum-of-column-maxes
 
@@ -114,7 +114,7 @@ def test_maxsim_zero_slice_hits_sentinel(spark):
         [(q, z)], "qvec array<float>, dvec array<float>"
     )
     val = pair.select(
-        li.maxsim_expr(F.col("qvec"), F.col("dvec"), t=2, dim=8).alias("m")
+        F.expr(li.spark_maxsim_sql("qvec", "dvec", t=2, dim=8)).alias("m")
     ).collect()[0]["m"]
     # slice 0 of d is all-zero -> its cosine is the -2.0 sentinel, but the
     # nonzero slice 1 wins each greatest(); no NULLs escape

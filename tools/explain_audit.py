@@ -1742,7 +1742,11 @@ BROADCAST_ALLOW: dict[tuple[str, str], tuple[str, str]] = {
     ("llm/graph.py", "dm"): ("constant", "1-row dangling-mass scalar"),
     ("llm/similarity.py", "queries"): ("bounded-batch", "query batch bounded by serving contract"),
     ("llm/similarity.py", "qkeys"): ("bounded-batch", "LSH keys of the bounded query batch"),
-    ("llm/similarity.py", "centroids"): ("constant", "k IVF/k-means centroids"),
+    ("llm/similarity.py", "centroids"): (
+        "constant",
+        "k IVF/k-means centroids (list assignment and the one IVF probe, which "
+        "also gates the MaxSim and hard-negative candidates)",
+    ),
     ("llm/similarity.py", "qc"): ("bounded-batch", "query x probe-centroid rows, bounded batch"),
     ("llm/similarity.py", "qb"): ("bounded-batch", "sign-bit codes of the bounded query batch (r11 binary ANN)"),
     ("llm/similarity.py", "books"): (
@@ -1760,10 +1764,6 @@ BROADCAST_ALLOW: dict[tuple[str, str], tuple[str, str]] = {
     ),
     ("llm/dsir.py", "n_raw"): ("constant", "1-row corpus token total (r13 DSIR)"),
     ("llm/dsir.py", "n_tgt"): ("constant", "1-row target token total (r13 DSIR)"),
-    ("llm/lateinteraction.py", "centroids"): (
-        "constant",
-        "k IVF centroids gating the MaxSim candidate probe (r13)",
-    ),
     ("llm/lateinteraction.py", "queries"): (
         "bounded-batch",
         "the query batch scored against the corpus in the brute-force "
@@ -1812,9 +1812,6 @@ BROADCAST_ALLOW: dict[tuple[str, str], tuple[str, str]] = {
     ("queries_llm.py", "best"): (
         "constant",
         "1-row argmax (top language by mean DSIR log-weight, r13)",
-    ),
-    ("queries_llm.py", "centroids"): (
-        "constant", "k IVF centroids gating the hard-negative probe (r13)",
     ),
     ("queries_llm.py", "qv"): (
         "bounded-batch", "query vectors of the bounded batch (r13 negatives)",

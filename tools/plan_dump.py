@@ -15,33 +15,16 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+from bench import _infer_round  # noqa: E402
+
 #: single source of truth for the round stamp — file name AND header derive
 #: from it (the r6 artifact said "round 5" in the header; judge keyed off
-#: it). Same inference rule as bench.py (ADVICE r8: a frozen literal
-#: silently stamps a stale round): env wins, else 1 + newest driver
-#: artifact (the driver writes BENCH/CORRECTNESS_r{N} at the END of round
-#: N, so during round N+1 the max is N).
-
-
-def _infer_round() -> int:
-    # SPARK_GRAFT_ROUND is the cross-tool round override (ADVICE r9);
-    # PLANS_ROUND kept as this tool's historical spelling
-    env = os.environ.get("SPARK_GRAFT_ROUND") or os.environ.get("PLANS_ROUND")
-    if env:
-        return int(env)
-    import re as _re
-
-    ns = [
-        int(m.group(1))
-        for fn in os.listdir(REPO)
-        if (m := _re.match(r"(?:BENCH|CORRECTNESS)_r(\d+)\.json$", fn))
-    ]
-    if not ns:
-        raise SystemExit("plan_dump: no PLANS_ROUND env and no driver artifact to infer from")
-    return max(ns) + 1
-
-
-ROUND = _infer_round()
+#: it). PLANS_ROUND is this tool's historical spelling of the override.
+ROUND = _infer_round(
+    ("SPARK_GRAFT_ROUND", "PLANS_ROUND"),
+    required="plan_dump: no PLANS_ROUND env and no driver artifact to infer from",
+)
 OUT = os.path.join(REPO, os.environ.get("PLANS_OUT", f"PLANS_r{ROUND:02d}.md"))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 

@@ -33,31 +33,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC_SF = "/root/testdata/sf0.1"
 SOAK_DIR = os.path.join(REPO, ".soak", "sf1")
 
-
-def _infer_round() -> int:
-    """Same rule as bench.py/plan_dump.py: SPARK_GRAFT_ROUND wins (ADVICE
-    r9: the env really is consulted now — a post-driver re-run would
-    otherwise stamp max(artifact)+1 and mislabel output as the NEXT
-    round); else 1 + the newest driver artifact (correct while the
-    driver has not yet written this round's artifact); loud failure if
-    neither exists — a frozen literal would silently stamp a stale
-    round."""
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env:
-        return int(env)
-    import re as _re
-
-    ns = [
-        int(m.group(1))
-        for fn in os.listdir(REPO)
-        if (m := _re.match(r"(?:BENCH|CORRECTNESS)_r(\d+)\.json$", fn))
-    ]
-    if not ns:
-        raise SystemExit("no round artifact to infer from; set the *_OUT env var")
-    return max(ns) + 1
+from bench import _infer_round  # noqa: E402
 
 OUT_JSON = os.path.join(
-    REPO, os.environ.get("SOAK_OUT", f"SOAK_r{_infer_round():02d}.json")
+    REPO,
+    os.environ.get("SOAK_OUT")
+    or f"SOAK_r{_infer_round(required='no round artifact to infer from; set SOAK_OUT'):02d}.json",
 )
 FACTOR = 10
 
