@@ -5,7 +5,7 @@
         --autoscale standard|robust|adaptive|equalized|clahe|tamed|default \\
         --bit-depth 8|16 --format tiff|jpeg --size N --pad \\
         --target-crs auto|EPSG:XXXX|none --resample nearest|bilinear|cubic|lanczos \\
-        --batch --continue-on-error
+        --continue-on-error
 
 Input is a band frame parquet (product_id, band, row, col, v) — the rebuilt
 engine's equivalent of a pre-decoded SAFE measurement set (sources/safe.py

@@ -1,24 +1,49 @@
 """Connected components over near-duplicate pair graphs — the step that turns
 pairwise dedup evidence into keep/drop decisions (cluster -> canonical doc).
 
-Algorithm: min-label propagation to fixpoint. labels start as node ids; each
-round every node takes the min label over itself + neighbors; converged when
-no label changes. Rounds = graph diameter (tiny for dedup clusters: near-dup
-components are dense blobs). Each round is one join + one groupBy — all
-DataFrame ops, lineage cut with localCheckpoint so plans don't snowball.
-This is the simple variant of the large-star/small-star map-reduce CC
-algorithm; it is exactly as shuffle-bounded and converges in the same regime.
+The output, min node id per component, does not depend on the algorithm, so
+the algorithm is picked by the size of the materialized edge relation:
 
-An iterative algorithm with a driver-side convergence scalar per round — the
-documented exception pattern (the per-round collect is ONE long, not data).
+  * at or below :data:`UF_MAX_EDGES` edges, ONE ``mapInArrow`` task runs an
+    exact union-find over all edges (:func:`_union_find`): ids are ranked by
+    ``np.unique`` (so the min rank is the min id), every round hooks the
+    larger root of each edge that still joins two roots under the smaller
+    one (``np.minimum.at``) and pointer-jumps every rank to its root, until
+    no edge joins two roots. Near-dup graphs are sparse and small next to
+    the corpus, so this is the common case: two jobs, no rounds.
+  * above it, min-label propagation to fixpoint
+    (:func:`_label_propagation`): labels start as node ids; each round every
+    node takes the min label over itself + neighbors; converged when no
+    label changes. Rounds = graph diameter. Each round is one join + one
+    groupBy — all DataFrame ops, lineage cut with a checkpoint so plans
+    don't snowball. It is the simple variant of large-star/small-star
+    (Kiveris et al., SoCC 2014), which bounds the rounds by O(log n) and is
+    the upgrade for this side.
+
+The propagation loop is an iterative algorithm with a driver-side
+convergence scalar per round — the documented exception pattern (the
+per-round collect is ONE long, not data).
 """
 
 from __future__ import annotations
 
 import warnings
+from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
+
+#: Largest edge relation (self-loops included) that one union-find task
+#: takes. Random dedup-like graphs (blobs of 2-12 docs, 40-bit ids) measured
+#: in one Python process on a 4-core Xeon: 2^20 edges in 0.7 s at 258 MB
+#: peak RSS, 4x that in 3.3 s at 690 MB; above the cap the propagation
+#: loop spreads the graph over the cluster instead.
+UF_MAX_EDGES = 1 << 20
 
 
 def _checkpointer(df: DataFrame):
@@ -36,16 +61,97 @@ def _checkpointer(df: DataFrame):
     return lambda d: d.localCheckpoint(eager=True)
 
 
-def connected_components(
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` checkpointed, and its row count, read by an ``Observation`` off
+    the checkpoint's own job — no second pass over the rows."""
+    obs = Observation()
+    out = _checkpointer(df)(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return out, obs.get["n"]
+
+
+def _roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Root rank of each of ``n`` ranks joined by the edges ``u``-``v``; a
+    root is the min rank of its component. Each round hooks the larger root
+    of every edge that joins two roots under the smaller one, then
+    pointer-jumps every rank to its root."""
+    parent = np.arange(n)
+    while True:
+        u, v = parent[u], parent[v]
+        live = u != v
+        if not live.any():
+            return parent
+        u, v = u[live], v[live]
+        np.minimum.at(parent, np.maximum(u, v), np.minimum(u, v))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _components(rel: pa.Table, arrow: pa.Schema) -> pa.RecordBatch:
+    """(id, cluster_id) of an (a, b, own) edge table; ``own`` marks rows whose
+    endpoints are nodes. A component's label is its min node id; one that
+    holds no node gets no rows, as label propagation never reaches it.
+
+    A NULL endpoint joins nothing (as in any join); it gets a row when it is
+    a node or has a labelled neighbour, labelled with the min label of its
+    neighbours, NULL when it has none."""
+    null_a, null_b = (rel.column(c).is_null().to_numpy() for c in "ab")
+    a, b = (pc.fill_null(rel.column(c), 0).to_numpy() for c in "ab")
+    own = rel.column("own").to_numpy()
+    ids, rank = np.unique(np.concatenate([a[~null_a], b[~null_b]]), return_inverse=True)
+    n = ids.size
+    ra, rb = np.full(a.size, n), np.full(b.size, n)
+    ra[~null_a], rb[~null_b] = np.split(rank, [int((~null_a).sum())])
+    root = _roots(ra[~(null_a | null_b)], rb[~(null_a | null_b)], n)
+    nodes = np.concatenate([ra[own & ~null_a], rb[own & ~null_b]])
+    # label rank of every rank: the min node rank of its root (n: no node)
+    label = np.full(n, n)
+    np.minimum.at(label, root[nodes], nodes)
+    label = label[root]
+    keep = label < n
+    out_id = pa.array(ids[keep], arrow.field(0).type)
+    out_label = pa.array(ids[label[keep]], arrow.field(1).type)
+    near = np.concatenate([rb[null_a], ra[null_b]])
+    near = label[near[near < n]]
+    near = near[near < n]
+    if near.size or (own & (null_a | null_b)).any():
+        out_id = pa.concat_arrays([out_id, pa.nulls(1, out_id.type)])
+        tail = pa.array(ids[[near.min()]] if near.size else [None], out_label.type)
+        out_label = pa.concat_arrays([out_label, tail])
+    return pa.RecordBatch.from_arrays([out_id, out_label], schema=arrow)
+
+
+def _union_find(rel: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, cluster_id) of an (a, b, own) edge relation
+    (:func:`_components`), computed in ONE task and checkpointed. The ids
+    keep their type: int in, int out."""
+    typ = rel.select(F.coalesce("a", "b")).schema[0].dataType
+    schema = StructType([StructField(id_col, typ), StructField("cluster_id", typ)])
+    arrow = to_arrow_schema(schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        if batches:
+            yield _components(pa.Table.from_batches(batches), arrow)
+
+    rel = rel.select(F.col("a").cast(typ), F.col("b").cast(typ), "own")
+    # the relation is already materialized: coalesce(1) reads its blocks in
+    # one task without a shuffle
+    return _checkpointer(rel)(rel.coalesce(1).mapInArrow(kernel, schema))
+
+
+def _label_propagation(
     nodes: DataFrame,
     edges: DataFrame,
-    node_col: str = "id",
-    src: str = "a",
-    dst: str = "b",
+    node_col: str,
+    src: str,
+    dst: str,
     max_iter: int = 20,
     check_every: int = 2,
 ) -> DataFrame:
-    """Returns (id, cluster_id) with cluster_id = min node id in component.
+    """Min-label propagation to fixpoint: (node_col, cluster_id).
 
     Per round: one join + one groupBy + one checkpoint job. The previous
     label rides through the aggregation (``min(lbl) FILTER own``), so the
@@ -89,9 +195,38 @@ def connected_components(
             f"connected_components: no fixpoint after {max_iter} rounds — "
             "labels are an over-segmentation; raise max_iter",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
     return labels.select(F.col("u").alias(node_col), F.col("lbl").alias("cluster_id"))
+
+
+def connected_components(
+    nodes: DataFrame,
+    edges: DataFrame,
+    node_col: str = "id",
+    src: str = "a",
+    dst: str = "b",
+    max_iter: int = 20,
+    check_every: int = 2,
+) -> DataFrame:
+    """Returns (id, cluster_id) with cluster_id = min node id in component.
+
+    The edges plus one self-loop per node are checkpointed once and counted
+    off that same job. At or below :data:`UF_MAX_EDGES` rows they go to the
+    one-task union-find, which is exact on any graph; above it to label
+    propagation, whose ``max_iter`` and ``check_every`` apply there only. The
+    cap keeps the one task's memory bounded: a graph too big for one Python
+    worker is spread over the cluster instead."""
+    loops = nodes.select(
+        F.col(node_col).alias("a"), F.col(node_col).alias("b"), F.lit(True).alias("own")
+    )
+    rel, n_edges = _counted(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"), F.lit(False).alias("own"))
+        .unionByName(loops)
+    )
+    if n_edges <= UF_MAX_EDGES:
+        return _union_find(rel, node_col)
+    return _label_propagation(nodes, rel, node_col, "a", "b", max_iter, check_every)
 
 
 def dedup_clusters(
@@ -105,22 +240,27 @@ def dedup_clusters(
     min-id doc of each cluster canonical — drop the rest for a deduplicated
     corpus.
 
-    Only nodes that appear in an edge ride the iteration: near-dup docs are a
-    small fraction of any real corpus, so label propagation runs on the
+    Only nodes that appear in an edge ride the components: near-dup docs are
+    a small fraction of any real corpus, so components run on the
     pair-connected subgraph (orders of magnitude smaller than the corpus at
     100 TB) and the singleton majority joins back in one anti-join with
-    ``cluster_id = id``."""
+    ``cluster_id = id``. The pairs are checkpointed and counted once; at or
+    below :data:`UF_MAX_EDGES` the union-find's checkpointed output feeds
+    both the anti-join and the union."""
     nodes = docs.select(F.col(id_col).alias("id"))
-    # materialize the pair computation ONCE — it feeds the edge relation, the
-    # label init, and the singleton anti-join, and is typically an expensive
+    # materialize the pair computation ONCE — it is typically an expensive
     # LSH/verify pipeline that must not re-execute per consumer
-    pairs = _checkpointer(pairs)(pairs.select(F.col(a).alias(a), F.col(b).alias(b)))
-    edge_nodes = (
-        pairs.select(F.col(a).alias("id"))
-        .unionByName(pairs.select(F.col(b).alias("id")))
-        .distinct()
-    )
-    cc = connected_components(edge_nodes, pairs, "id", a, b)
+    pairs, n_edges = _counted(pairs.select(F.col(a).alias("a"), F.col(b).alias("b")))
+    if n_edges <= UF_MAX_EDGES:
+        cc = _union_find(pairs.withColumn("own", F.lit(True)), "id")
+        edge_nodes = cc.select("id")
+    else:
+        edge_nodes = (
+            pairs.select(F.col("a").alias("id"))
+            .unionByName(pairs.select(F.col("b").alias("id")))
+            .distinct()
+        )
+        cc = _label_propagation(edge_nodes, pairs, "id", "a", "b")
     singletons = nodes.join(edge_nodes, "id", "left_anti").select(
         "id", F.col("id").alias("cluster_id")
     )

@@ -436,12 +436,15 @@ def cosine_topk_ivf_from_index(
     cvec) + ``lists`` (vec_id, embedding, centroid_id — e.g. a parquet
     table partitioned by centroid_id, so probing reads only the probed
     lists' files via partition pruning). Identical results to building the
-    index inline (:func:`cosine_topk_ivf`)."""
+    index inline (:func:`cosine_topk_ivf`).
+
+    A vector sits in one list and a query's probed lists are distinct, so
+    the probe join yields each (query, list row) once: no dedup pass over
+    the vectors, and a duplicated corpus row stays two candidates, as in
+    :func:`cosine_topk`."""
     probed = _ivf_probe(queries, centroids, nprobe, qid_col, qvec_col, round_digits)
-    cand = (
-        probed.join(lists.select("centroid_id", id_col, vec_col), "centroid_id")
-        .select(qid_col, id_col, vec_col)
-        .distinct()
+    cand = probed.join(lists.select("centroid_id", id_col, vec_col), "centroid_id").select(
+        qid_col, id_col, vec_col
     )
     j = cand.join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
     return _exact_topk(j, k, id_col, vec_col, qid_col, qvec_col, round_digits)

@@ -161,3 +161,36 @@ def test_preset_save_load_roundtrip(tmp_path):
     # pipeline route flags equal under save->load (P4 warp-skip routing and
     # friends derive purely from params, so equality IS route equality)
     assert p_loaded.to_dict() == p_saved.to_dict()
+
+
+def _usage_argvs() -> list[list[str]]:
+    """One argv per flag and per listed value of the module docstring's
+    usage block, placeholders filled with a valid value."""
+    import sarpro_spark.__main__ as cli
+
+    tokens = cli.__doc__.split("\n\n")[1].replace("\\", " ").split()
+    tokens = tokens[tokens.index("sarpro_spark") + 1:]  # after "python -m sarpro_spark"
+    fill = {"N": "512", "EPSG:XXXX": "EPSG:32633"}
+    argvs = []
+    for i, tok in enumerate(tokens):
+        if not tok.startswith("-"):
+            continue
+        value = tokens[i + 1] if i + 1 < len(tokens) and not tokens[i + 1].startswith("-") else None
+        if value is None:
+            argvs.append([tok])
+        else:
+            argvs += [[tok, fill.get(v, v)] for v in value.split("|")]
+    return argvs
+
+
+def test_usage_block_flags_parse():
+    """Every flag and value the usage block advertises is accepted."""
+    from sarpro_spark.__main__ import parse_args
+
+    argvs = _usage_argvs()
+    assert ["--pad"] in argvs and ["--format", "jpeg"] in argvs
+    for argv in argvs:
+        try:
+            parse_args(argv)
+        except SystemExit:
+            pytest.fail(f"usage block advertises {' '.join(argv)!r}, which the parser rejects")

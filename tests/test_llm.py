@@ -258,6 +258,21 @@ def test_ivf_topk_contains_self(spark, emb):
         assert hits and hits[0]["rnk"] == 1
 
 
+def test_ivf_full_probe_equals_brute_force(spark, emb):
+    """Probing every list scores every list row once, so IVF equals the
+    brute-force top-k row for row — a duplicated corpus row included."""
+    dup = emb.unionByName(emb.where(F.col("vec_id") == 20))
+    centroids = sim.ivf_centroids(dup, 8)
+    lists = dup.join(sim.ivf_assign(dup, centroids), "vec_id")
+    queries = dup.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    ivf = sim.cosine_topk_ivf_from_index(centroids, lists, queries, k=41, nprobe=8)
+    brute = sim.cosine_topk(dup, queries, k=41)
+    assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, brute.collect()))
+    assert ivf.count() == 3 * 41
+
+
 def test_simhash_neardup_pairs(spark):
     rows = [
         (0, "the quick brown fox jumps over the lazy dog again and again"),

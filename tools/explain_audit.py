@@ -709,13 +709,16 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_corpus_summary": {
-        # cluster components + anti-join drop set; LeftAnti keyed, never
-        # re-executed per row
-        "require": ["LeftAnti", "HashAggregate"],
+        # checkpointed component labels unioned with the anti-joined
+        # singletons (LeftAnti keyed, never re-executed per row), then the
+        # summary aggregate
+        "require": ["LeftAnti", "Union", "HashAggregate"],
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_cluster_components": {
-        "require": ["LeftAnti", "HashAggregate"],
+        # the union-find output is checkpointed and feeds both union legs:
+        # no edge-node distinct aggregate left in the plan
+        "require": ["LeftAnti", "Union"],
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "window_rank_orders": {
@@ -1321,11 +1324,12 @@ AUDITS: dict[str, dict] = {
         "require": ['HashAggregate', 'Window', 'Union'],
         "forbid": ['CartesianProduct', 'BatchEvalPython', 'ArrowEvalPython', 'SortMergeJoin'],
     },
-    # r13: incremental CC maintenance — contracted-graph label propagation
-    # (SMJ rounds + aggregates) composed over the old labels by left joins;
-    # the pair pipeline sits behind a checkpoint so it runs once
+    # r13: incremental CC maintenance — contracted-graph components composed
+    # over the old labels (+ anti-joined singletons) by left joins on the
+    # representative; components and the pair pipeline are checkpointed
+    # scans, so each runs once
     "dedup_incremental_clusters": {
-        "require": ['HashAggregate', 'SortMergeJoin', 'Union'],
+        "require": ['LeftAnti', 'SortMergeJoin', 'Union'],
         "forbid": ['CartesianProduct', 'BatchEvalPython', 'ArrowEvalPython'],
     },
     # r13: hard-negative mining — IVF-gated scoring, near-dup exclusion agg,
