@@ -61,12 +61,15 @@ def _checkpointer(df: DataFrame):
     return lambda d: d.localCheckpoint(eager=True)
 
 
-def _counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """``df`` checkpointed, and its row count, read by an ``Observation`` off
-    the checkpoint's own job — no second pass over the rows."""
+def _counted(df: DataFrame, *sums: str) -> tuple:
+    """``df`` checkpointed, its row count, then the sum of each column named
+    in ``sums`` (0 over no rows), all read by ONE ``Observation`` off the
+    checkpoint's own job — no second pass over the rows."""
     obs = Observation()
-    out = _checkpointer(df)(df.observe(obs, F.count(F.lit(1)).alias("n")))
-    return out, obs.get["n"]
+    totals = [F.coalesce(F.sum(c), F.lit(0)).alias(f"sum_{c}") for c in sums]
+    out = _checkpointer(df)(df.observe(obs, F.count(F.lit(1)).alias("n"), *totals))
+    got = obs.get
+    return (out, got["n"], *(got[f"sum_{c}"] for c in sums))
 
 
 def _roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
@@ -246,14 +249,17 @@ def dedup_clusters(
     100 TB) and the singleton majority joins back in one anti-join with
     ``cluster_id = id``. The pairs are checkpointed and counted once; at or
     below :data:`UF_MAX_EDGES` the union-find's checkpointed output feeds
-    both the anti-join and the union."""
+    both the union and, broadcast (at most two ids per edge), the anti-join,
+    so the corpus ids are not shuffled."""
     nodes = docs.select(F.col(id_col).alias("id"))
     # materialize the pair computation ONCE — it is typically an expensive
     # LSH/verify pipeline that must not re-execute per consumer
     pairs, n_edges = _counted(pairs.select(F.col(a).alias("a"), F.col(b).alias("b")))
     if n_edges <= UF_MAX_EDGES:
         cc = _union_find(pairs.withColumn("own", F.lit(True)), "id")
-        edge_nodes = cc.select("id")
+        # at most 2 * UF_MAX_EDGES ids: the anti-join broadcasts them rather
+        # than sending the corpus ids through a sort-merge exchange
+        edge_nodes = F.broadcast(cc.select("id"))
     else:
         edge_nodes = (
             pairs.select(F.col("a").alias("id"))

@@ -30,15 +30,22 @@ each the single home of one decision, with its DuckDB twin beside it:
   _band_pairs  the keyed self-join of those keys (doc_a < doc_b).
   _set_jaccard / _sql_hash_sets + _sql_set_jaccard
                exact set Jaccard of candidate pairs.
+  _one_task_pairs + _local_jaccard
+               the same banding and verify in ONE Arrow task (equal kept
+               signature values = one bucket), taken by
+               minhash_jaccard_pairs at or below LSH_MAX_HASHES hashes;
+               the two builders above run beyond it.
   sql_minhash_agreement
                the signature-agreement fraction (est_sim) in SQL.
 
 Spark-side logic is native column expressions (codegen) except the MinHash
-signature: ``_minhash_frame`` hashes each row in an Arrow kernel (hashlib
-md5 per distinct shingle, numpy for the k permutations and mins) and merges
-the rows of one id in a second, around one exchange on id. ``shingle_hashes`` and ``minhash_blocks`` are the
-only Python form of the hash chain; the streaming signature stage
-(``streaming/dedup.py:doc_sig_bands``) runs the same two.
+signature and the one-task pairs: ``_minhash_frame`` hashes each row in an
+Arrow kernel (hashlib md5 per distinct shingle, numpy for the k permutations
+and mins) and merges the rows of one id in a second, around one exchange on
+id; ``_local_jaccard`` bands and verifies a small signature frame in numpy.
+``shingle_hashes`` and ``minhash_blocks`` are the only Python form of the
+hash chain; the streaming signature stage (``streaming/dedup.py:doc_sig_bands``)
+runs the same two.
 """
 
 from __future__ import annotations
@@ -49,12 +56,13 @@ from itertools import combinations
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
 
-from sarpro_spark.llm.cluster import _checkpointer
+from sarpro_spark.llm.cluster import _checkpointer, _counted
 
 DEFAULT_SHINGLE = 5
 DEFAULT_NUM_HASHES = 8
@@ -526,6 +534,91 @@ def _set_jaccard(
     )
 
 
+#: Largest signature frame, in int64 hashes (hash-set entries plus k
+#: min-hashes per doc), that one task bands and verifies. It caps the hashes,
+#: not the docs, as the task's memory follows the hashes it holds. Measured
+#: at the cap in one Python process on a 4-core Xeon (k = 16, 4 bands, 10%
+#: planted copies): from 18 808 docs of 430 hashes to 493 447 docs of one,
+#: 0.35-2.2 s and 245-317 MB peak RSS, of which 80 MB is the interpreter
+#: and 65-73 MB the input batches.
+LSH_MAX_HASHES = 1 << 23
+
+
+def _equal_pairs(keys: np.ndarray) -> np.ndarray:
+    """``i * n + j`` for every pair of rows i < j of the (n, r) ``keys`` that
+    are equal: rows sorted by key (``np.lexsort`` is stable, so equal keys
+    keep row order), each row paired with every later row of its run. A run
+    of m equal rows yields m(m-1)/2 pairs."""
+    n = len(keys)
+    if n < 2:
+        return _NO_HASHES
+    rows = np.lexsort(keys.T[::-1])
+    k = keys[rows]
+    start = np.flatnonzero(np.r_[True, (k[1:] != k[:-1]).any(axis=1)])
+    # pairs of sorted position p: the later positions of its run
+    later = np.repeat(np.r_[start[1:], n], np.diff(np.r_[start, n])) - np.arange(n) - 1
+    first = np.repeat(np.arange(n), later)
+    step = np.arange(first.size) - np.repeat(np.cumsum(later) - later, later)
+    return rows[first] * n + rows[first + 1 + step]
+
+
+def _local_jaccard(
+    sig: pa.Table, slices: list[tuple[int, int, list[int]]], threshold: float, arrow: pa.Schema
+) -> pa.RecordBatch:
+    """(doc_a, doc_b, jaccard >= threshold) of a whole (id, sig_0..,
+    hset, sz) table: the pairs of :func:`_band_pairs` and the Jaccard of
+    :func:`_set_jaccard`, in numpy. Docs share a bucket iff their kept
+    signature values are equal (the md5 of the '|'-joined values differs
+    only on an md5 collision). A NULL id pairs with nothing, as in the
+    join."""
+    if sig.column(0).null_count:
+        sig = sig.filter(pc.is_valid(sig.column(0)))
+    ids = sig.column(0).combine_chunks()
+    # rank -> row: ranks in id order, so rank a < rank b means id a < id b
+    order = pc.sort_indices(ids).to_numpy()
+    n = order.size
+    at = {i: sig.column(f"sig_{i}").to_numpy()[order] for _b, _c, kept in slices for i in kept}
+    codes = [_equal_pairs(np.stack([at[i] for i in kept], axis=1)) for _b, _c, kept in slices]
+    # one pair per doc pair, however many bands it shares
+    ra, rb = np.divmod(np.unique(np.concatenate([_NO_HASHES, *codes])), n)
+    a, b = order[ra], order[rb]
+    hset = sig.column("hset").combine_chunks()
+    offs, vals = hset.offsets.to_numpy(), hset.values.to_numpy()
+    inter = np.array(
+        [
+            np.intersect1d(vals[offs[i]:offs[i + 1]], vals[offs[j]:offs[j + 1]], assume_unique=True).size
+            for i, j in zip(a.tolist(), b.tolist())
+        ],
+        dtype=np.int64,
+    )
+    size = np.diff(offs)
+    jaccard = inter / (size[a] + size[b] - inter)
+    keep = jaccard >= threshold
+    cols = [ids.take(a[keep]), ids.take(b[keep]), pa.array(jaccard[keep])]
+    return pa.RecordBatch.from_arrays(cols, schema=arrow)
+
+
+def _one_task_pairs(
+    sig: DataFrame, id_col: str, slices: list[tuple[int, int, list[int]]], threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the materialized signature frame, computed
+    in ONE task by :func:`_local_jaccard`. The ids keep their type."""
+    typ = sig.schema[id_col].dataType
+    schema = StructType([
+        StructField("doc_a", typ), StructField("doc_b", typ), StructField("jaccard", DoubleType()),
+    ])
+    arrow = to_arrow_schema(schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        if batches:
+            yield _local_jaccard(pa.Table.from_batches(batches), slices, threshold, arrow)
+
+    # the frame is already materialized: coalesce(1) reads its blocks in one
+    # task without a shuffle
+    return sig.coalesce(1).mapInArrow(kernel, schema)
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -592,17 +685,27 @@ def minhash_jaccard_pairs(
     1-(1-s^r)^b — with 4 bands x 4 rows: ~87% at s=0.8, ~23% at s=0.5.
     Rows-per-band must stay high enough that baseline-similar corpora (shared
     vocab) don't flood the buckets; raise `bands` for recall, `rows` for
-    selectivity."""
-    # min-hashes, hash set and set size all come out of ONE shuffle
-    sig = _minhash_frame(df, id_col, text_col, n, num_hashes, sets=True)
-    # reliable checkpoint on a cluster (executor-loss-safe), local otherwise —
-    # same policy as every other iteration/multi-consumer materialization
-    sig = _checkpointer(sig)(sig)
-    cand = (
-        _band_pairs(sig, id_col, _band_slices(num_hashes, bands))
-        .select("doc_a", "doc_b")
-        .distinct()
+    selectivity. On either path a hot bucket of m docs yields m(m-1)/2
+    candidates.
+
+    The signature frame is checkpointed and its docs and hash-set entries
+    counted off that same job. The pairs do not depend on how the buckets
+    are joined, so the path is picked by size: at or below
+    :data:`LSH_MAX_HASHES` hashes (set entries plus k min-hashes per doc)
+    ONE task bands and verifies the whole frame (:func:`_one_task_pairs`);
+    above it the keyed bucket self-join (:func:`_band_pairs`) and the
+    set-Jaccard joins (:func:`_set_jaccard`) spread the work over the
+    cluster."""
+    # min-hashes, hash set and set size all come out of ONE shuffle; the
+    # checkpoint is reliable on a cluster (executor-loss-safe), local
+    # otherwise — same policy as every other multi-consumer materialization
+    sig, docs, hashes = _counted(
+        _minhash_frame(df, id_col, text_col, n, num_hashes, sets=True), "sz"
     )
+    slices = _band_slices(num_hashes, bands)
+    if hashes + docs * num_hashes <= LSH_MAX_HASHES:
+        return _one_task_pairs(sig, id_col, slices, threshold)
+    cand = _band_pairs(sig, id_col, slices).select("doc_a", "doc_b").distinct()
     return _set_jaccard(cand, sig, id_col).where(F.col("jaccard") >= threshold)
 
 

@@ -44,6 +44,17 @@ def iterate_safe_products(spark: SparkSession, input_dir: str) -> DataFrame:
 # --- S3: polarization file discovery -----------------------------------------
 
 
+def _by_product(products: DataFrame) -> DataFrame:
+    """``products`` spread over tasks by product, BY NUMBER
+    (:func:`~sarpro_spark.functions.partitioning.shuffle_partition_count`):
+    AQE sizes a by-column repartition by its bytes, and a manifest's few
+    bytes coalesce to one task, which would open or decode every product
+    serially."""
+    from sarpro_spark.functions.partitioning import shuffle_partition_count
+
+    return products.repartition(shuffle_partition_count(products), "product_path")
+
+
 def list_measurement_files(spark: SparkSession, products: DataFrame) -> DataFrame:
     """File listing per product — distributed: each executor task lists the
     measurement/ dirs of the products it owns (mapInPandas over the driving
@@ -61,10 +72,8 @@ def list_measurement_files(spark: SparkSession, products: DataFrame) -> DataFram
                         out.append((ppath, os.path.join(mdir, name), name))
             yield pd.DataFrame(out, columns=["product_path", "path", "name"])
 
-    return (
-        products.select("product_path")
-        .repartition("product_path")
-        .mapInPandas(fn, schema="product_path string, path string, name string")
+    return _by_product(products.select("product_path")).mapInPandas(
+        fn, schema="product_path string, path string, name string"
     )
 
 
@@ -328,8 +337,7 @@ def open_product_dirs(products: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=OPEN_COLS)
 
     return (
-        products.select("product_path")
-        .repartition("product_path")
+        _by_product(products.select("product_path"))
         .mapInPandas(fn, schema=OPEN_SCHEMA)
     )
 
@@ -470,6 +478,6 @@ def read_bands_px(
 
     cols = ["product_path", path_col]
     return (
-        products.select(*cols).repartition("product_path")
+        _by_product(products.select(*cols))
         .mapInPandas(fn, schema=schema).hint("shuffle_merge")
     )

@@ -437,6 +437,40 @@ def test_read_bands_px_pixel_join_never_broadcasts(spark, tmp_path):
     assert len(rows) == len(want) and got == want
 
 
+def test_band_decode_spreads_over_tasks(spark, tmp_path):
+    """The decode of a 4-product read runs one task per shuffle partition:
+    the manifest is repartitioned by number, so AQE cannot coalesce its few
+    bytes into one task that would decode every product serially."""
+    import numpy as np
+
+    from sarpro_spark.functions.partitioning import shuffle_partition_count
+    from sarpro_spark.sinks import tiff as t
+
+    for i in range(4):
+        p = tmp_path / f"Q{i}.SAFE"
+        (p / "annotation").mkdir(parents=True)
+        (p / "measurement").mkdir()
+        (p / "manifest.safe").write_text(MANIFEST)
+        (p / "annotation" / "iw-vv.xml").write_text(ANNOTATION)
+        t.write_tiff(str(p / "measurement" / f"s1a-iw-grd-vv-{i}.tiff"), np.full((3, 4), i, np.uint16))
+
+    sc = spark.sparkContext
+    group = "test_band_decode_spreads_over_tasks"
+    sc.setJobGroup(group, group)
+    try:
+        prods = safe.open_products(spark, str(tmp_path)).where(F.col("status") == "ok")
+        px = safe.read_bands_px(prods, "vv")
+        rows = px.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 4 * 12
+    tracker = sc.statusTracker()
+    last = max(tracker.getJobIdsForGroup(group))
+    decode = max(tracker.getJobInfo(last).stageIds)
+    assert tracker.getStageInfo(decode).numTasks == shuffle_partition_count(px)
+
+
 # --- W3: JPEG codec + sink ----------------------------------------------------
 
 

@@ -702,10 +702,10 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_minhash_verified": {
-        # banded candidates + exact verify: key equi-joins and aggregates
-        # only — an all-pairs cartesian is the failure this pipeline exists
-        # to avoid
-        "require": ["HashAggregate"],
+        # below LSH_MAX_HASHES the banding and exact verify run in one
+        # mapInArrow task over the checkpointed signature frame — an
+        # all-pairs cartesian is the failure this pipeline exists to avoid
+        "require": ["MapInArrow"],
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_corpus_summary": {
@@ -1393,9 +1393,11 @@ AUDITS: dict[str, dict] = {
         "require": ['BroadcastHashJoin', 'Generate', 'HashAggregate', 'TakeOrderedAndProject'],
         "forbid": ['CartesianProduct', 'BatchEvalPython', 'ArrowEvalPython', 'SortMergeJoin'],
     },
-    # r12 ratchet: component labels SMJ to docs; split counts union; 1-row totals BNLJ
+    # r12 ratchet: component labels anti-join to docs (the union-find's label
+    # ids broadcast, bounded by UF_MAX_EDGES); split counts union; 1-row
+    # totals BNLJ
     "corpus_leakage_safe_split": {
-        "require": ['BroadcastNestedLoopJoin', 'HashAggregate', 'SortMergeJoin', 'Union'],
+        "require": ['BroadcastNestedLoopJoin', 'HashAggregate', 'LeftAnti', 'Union'],
         "forbid": ['CartesianProduct', 'BatchEvalPython', 'ArrowEvalPython'],
     },
     # r12 ratchet: token explode + signed-hash aggregate; dims broadcast
@@ -1736,6 +1738,11 @@ BROADCAST_ALLOW: dict[tuple[str, str], tuple[str, str]] = {
     ("llm/dedup.py", "sb"): (
         "bounded-batch",
         "same panel-bounded contract as sa (broadcast_sets=True only)",
+    ),
+    ("llm/cluster.py", "cc"): (
+        "bounded-batch",
+        "union-find label ids, taken only at or below UF_MAX_EDGES edges: "
+        "at most two ids per edge, the build side of the singleton anti-join",
     ),
     ("llm/sampling.py", "rate_df"): ("constant", "per-stratum rates over enumerated strata"),
     ("llm/text.py", "freqs"): ("bounded-batch", "vocabulary CAPPED to top-K before broadcast"),
