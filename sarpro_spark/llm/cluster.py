@@ -28,7 +28,7 @@ per-round collect is ONE long, not data).
 from __future__ import annotations
 
 import warnings
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -70,6 +70,23 @@ def _counted(df: DataFrame, *sums: str) -> tuple:
     out = _checkpointer(df)(df.observe(obs, F.count(F.lit(1)).alias("n"), *totals))
     got = obs.get
     return (out, got["n"], *(got[f"sum_{c}"] for c in sums))
+
+
+def _in_one_task(
+    df: DataFrame, schema: StructType, fn: Callable[[pa.Table, pa.Schema], pa.RecordBatch]
+) -> DataFrame:
+    """``fn(table, arrow_schema)``: one batch of ``schema`` from ALL of
+    ``df`` read as one Arrow table, in ONE task; no rows in, no rows out.
+    ``df`` is already materialized, so coalesce(1) reads its blocks in one
+    task without a shuffle."""
+    arrow = to_arrow_schema(schema)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        if batches:
+            yield fn(pa.Table.from_batches(batches), arrow)
+
+    return df.coalesce(1).mapInArrow(kernel, schema)
 
 
 def _roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
@@ -132,17 +149,8 @@ def _union_find(rel: DataFrame, id_col: str) -> DataFrame:
     keep their type: int in, int out."""
     typ = rel.select(F.coalesce("a", "b")).schema[0].dataType
     schema = StructType([StructField(id_col, typ), StructField("cluster_id", typ)])
-    arrow = to_arrow_schema(schema)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        batches = list(batches)
-        if batches:
-            yield _components(pa.Table.from_batches(batches), arrow)
-
     rel = rel.select(F.col("a").cast(typ), F.col("b").cast(typ), "own")
-    # the relation is already materialized: coalesce(1) reads its blocks in
-    # one task without a shuffle
-    return _checkpointer(rel)(rel.coalesce(1).mapInArrow(kernel, schema))
+    return _checkpointer(rel)(_in_one_task(rel, schema, _components))
 
 
 def _label_propagation(

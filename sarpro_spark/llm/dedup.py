@@ -3,11 +3,12 @@
 Five surfaces, each shuffle-bounded for 100 TB:
 
   exact        md5 hash -> groupBy. One shuffle; canonical = min(doc_id).
-  n-gram Jaccard  char-n-gram inverted index self-join — candidate pairs come
-               from shared shingles (never a crossJoin); |A ∩ B| counted in the
-               join, |A|,|B| broadcast back. Hot shingles are the skew risk:
-               drop shingles with document-frequency above a cap (stop-shingle
-               filter), the standard trick at web scale.
+  n-gram Jaccard  inverted index self-join over each doc's set of char-n-gram
+               hashes (the MinHash chain's sets) — candidate pairs come from
+               shared hashes (never a crossJoin); |A ∩ B| is the
+               array_intersect of the two sets. Hot shingles are the skew
+               risk: drop hashes with document-frequency above a cap
+               (stop-shingle filter), the standard trick at web scale.
   MinHash+LSH  k min-hashes per doc via ONE md5 per shingle + k seeded linear
                permutations (a_i*h + b_i mod 2^31-1, exact int64 arithmetic on
                both engines — 16x fewer md5 calls than hashing per permutation
@@ -29,14 +30,17 @@ each the single home of one decision, with its DuckDB twin beside it:
                leave-one/two-out keys, probe=0 is the plain banding.
   _band_pairs  the keyed self-join of those keys (doc_a < doc_b).
   _set_jaccard / _sql_hash_sets + _sql_set_jaccard
-               exact set Jaccard of candidate pairs.
+               exact set Jaccard (with |A ∩ B|, |A|, |B|) of candidate
+               pairs: the verify of ngram_jaccard_pairs, incremental_dedup
+               and minhash_jaccard_pairs above LSH_MAX_HASHES.
   _one_task_pairs + _local_jaccard
                the same banding and verify in ONE Arrow task (equal kept
                signature values = one bucket), taken by
                minhash_jaccard_pairs at or below LSH_MAX_HASHES hashes;
                the two builders above run beyond it.
-  sql_minhash_agreement
-               the signature-agreement fraction (est_sim) in SQL.
+  minhash_agreement / sql_minhash_agreement
+               the signature-agreement fraction (est_sim) of minhash_lsh_pairs
+               and the streaming batch twins.
 
 Spark-side logic is native column expressions (codegen) except the MinHash
 signature and the one-task pairs: ``_minhash_frame`` hashes each row in an
@@ -51,8 +55,10 @@ runs the same two.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 from hashlib import md5
 from itertools import combinations
+from operator import add
 
 import numpy as np
 import pyarrow as pa
@@ -62,7 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
 
-from sarpro_spark.llm.cluster import _checkpointer, _counted
+from sarpro_spark.llm.cluster import _checkpointer, _counted, _in_one_task
 
 DEFAULT_SHINGLE = 5
 DEFAULT_NUM_HASHES = 8
@@ -111,13 +117,9 @@ def normalize_text_expr(text: Column) -> Column:
 
 
 def exact_dedup_normalized(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Exact dedup over the normalized text form."""
-    h = F.md5(normalize_text_expr(F.col(text_col)))
-    return (
-        df.select(F.col(id_col), h.alias("h"))
-        .groupBy("h")
-        .agg(F.min(id_col).alias("canonical_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    """:func:`exact_dedup` over the normalized text form."""
+    norm = df.select(F.col(id_col), normalize_text_expr(F.col(text_col)).alias(text_col))
+    return exact_dedup(norm, id_col, text_col)
 
 
 # --- character shingles ------------------------------------------------------
@@ -174,64 +176,69 @@ def ngram_jaccard_pairs(
     n: int = DEFAULT_SHINGLE,
     threshold: float = 0.5,
     max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
+    broadcast_sets: bool = False,
 ) -> DataFrame:
-    """Near-dup pairs with EXACT jaccard = inter/(|A|+|B|-inter) >= threshold.
+    """Near-dup pairs (doc_a, doc_b, inter, sz_a, sz_b, jaccard) with EXACT
+    jaccard = inter/(sz_a+sz_b-inter) >= threshold over each doc's set of
+    distinct shingle hashes (:func:`shingle_hashes`, the sets of
+    :func:`_minhash_frame`); the counts are BIGINT.
 
     Two phases — the shape that survives corpus scale:
-      1. candidates from the inverted index over shingles with document
-         frequency <= ``max_shingle_df``. Ultra-common shingles produce df^2
-         join rows for zero selectivity (every doc pairs with every doc) —
-         the cap is what keeps the self-join linear-ish. A high-jaccard pair
-         that shares ONLY ubiquitous shingles would be missed; at threshold
-         0.5 such a pair must share half its shingle set, so in any real
-         corpus it also shares rare shingles.
-      2. exact intersection counted ONLY for candidate pairs (join of the
-         full shingle sets restricted to candidates) — jaccard values are
-         exact, not capped.
-    """
-    sh = char_shingles(df, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+      1. candidates from the inverted index over hashes with document
+         frequency <= ``max_shingle_df`` (None: no cap). Ultra-common
+         shingles produce df^2 join rows for zero selectivity (every doc
+         pairs with every doc) — the cap is what keeps the self-join
+         linear-ish. A high-jaccard pair that shares ONLY ubiquitous
+         shingles would be missed; at threshold 0.5 such a pair must share
+         half its shingle set, so in any real corpus it also shares rare
+         shingles.
+      2. exact |A ∩ B| for candidate pairs only (:func:`_set_jaccard`, the
+         :func:`minhash_jaccard_pairs` verifier): each doc's set moves once
+         per pair side, where a per-shingle verify join moves |cand| x
+         shingles-per-doc rows (measured 200M+ rows / 40 s on a
+         high-overlap 1500-doc panel). Jaccard values are exact, not
+         capped.
+
+    A hash set equals the shingle set unless two of its shingles share a
+    hash (see :func:`_set_jaccard` for the bound); the DuckDB twin hashes
+    the same way, so both engines agree on any collision.
+
+    ``broadcast_sets=True`` pins the set relation broadcast: ONLY valid
+    when ``df`` is a bounded panel (the recall-measurement contract — the
+    checkpointed set relation reports no stats, so Spark would otherwise
+    shuffle every candidate pair's two ~KB arrays through a sort-merge
+    join; measured 13 s -> ~2 s on the 1000-doc panel). Default False: a
+    corpus-scale set relation must never be broadcast, AQE sizes it."""
+    sets = _minhash_frame(df, id_col, text_col, n, 0, sets=True)
+    sets = _checkpointer(sets)(sets)
+    hdist = sets.select(id_col, F.explode("hset").alias("h"))
     if max_shingle_df is not None:
-        # No broadcast hint: the sub-cap shingle set is the unbounded Zipf
-        # long tail (billions of rows at corpus scale); a forced broadcast
-        # ignores size and OOMs the driver. The semi-join key matches
-        # dfreq's grouping key, so sort-merge reuses the partitioning, and
-        # AQE may still downgrade to broadcast at small SF.
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        rare = sh.join(
-            dfreq.where(F.col("df_") <= max_shingle_df), "shingle", "left_semi"
+        # no broadcast hint: the sub-cap hashes are the unbounded Zipf long
+        # tail; the semi-join key matches dfreq's grouping key, so
+        # sort-merge reuses the partitioning
+        dfreq = hdist.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
+        rare = hdist.join(
+            dfreq.where(F.col("df_") <= max_shingle_df), "h", "left_semi"
         )
     else:
-        rare = sh
+        rare = hdist
     cand = (
-        rare.select(F.col(id_col).alias("doc_a"), "shingle")
-        .join(rare.select(F.col(id_col).alias("doc_b"), "shingle"), "shingle")
+        rare.select(F.col(id_col).alias("doc_a"), "h")
+        .join(rare.select(F.col(id_col).alias("doc_b"), "h"), "h")
         .where(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sa = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    sb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+    # the per-pair array_intersect is COMPUTE-bound, but the cand
+    # relation is byte-tiny (16 B/row) so AQE coalesces it to ~one
+    # partition and the whole verify runs on one core (measured: 481 k
+    # pairs -> ~10 s serial). Spread the compute explicitly; the extra
+    # shuffle moves only the skinny pair list.
+    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    pairs = _set_jaccard(cand, sets, id_col, broadcast_sets=broadcast_sets)
+    return pairs.where(F.col("jaccard") >= threshold).select(
+        "doc_a", "doc_b", *[F.col(c).cast("long").alias(c) for c in ("inter", "sz_a", "sz_b")], "jaccard"
     )
-    # sizes is one row PER DOC — unbounded at corpus scale, so no forced
-    # broadcast; the candidate-pair side is the small one after filtering
-    # and AQE picks the right strategy per actual sizes.
-    out = (
-        inter.join(sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
 
 
 def sql_ngram_jaccard(
@@ -240,34 +247,24 @@ def sql_ngram_jaccard(
     text_col: str = "text",
     n: int = DEFAULT_SHINGLE,
     threshold: float = 0.5,
-    max_shingle_df: int = DEFAULT_MAX_SHINGLE_DF,
+    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
 ) -> str:
-    """DuckDB twin of :func:`ngram_jaccard_pairs` (same candidate/verify
-    split so results hash-match)."""
-    shingles = sql_char_shingles(src_rel, id_col, text_col, n)
+    """DuckDB twin of :func:`ngram_jaccard_pairs`: the same hash sets
+    (``_sql_hashed`` + ``_sql_hash_sets``), df cap, candidates and verify
+    (``_sql_set_jaccard``)."""
+    cap = "" if max_shingle_df is None else f"WHERE hdf.df_ <= {max_shingle_df}"
     return f"""
-WITH {shingles},
-sizes AS (SELECT {id_col}, COUNT(*) AS sz FROM shingles GROUP BY {id_col}),
-sdf AS (SELECT shingle, COUNT(*) AS df_ FROM shingles GROUP BY shingle),
-rare AS (SELECT s.* FROM shingles s JOIN sdf USING (shingle) WHERE sdf.df_ <= {max_shingle_df}),
+WITH {_sql_hashed(src_rel, id_col, text_col, n)},
+{_sql_hash_sets(id_col)},
+hdf AS (SELECT h, COUNT(*) AS df_ FROM hdist GROUP BY h),
+rare AS (SELECT d.* FROM hdist d JOIN hdf USING (h) {cap}),
 cand AS (
   SELECT DISTINCT a.{id_col} AS doc_a, b.{id_col} AS doc_b
-  FROM rare a JOIN rare b USING (shingle)
+  FROM rare a JOIN rare b USING (h)
   WHERE a.{id_col} < b.{id_col}
 ),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-  FROM cand c
-  JOIN shingles sa ON sa.{id_col} = c.doc_a
-  JOIN shingles sb ON sb.{id_col} = c.doc_b AND sb.shingle = sa.shingle
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b, i.inter, za.sz AS sz_a, zb.sz AS sz_b,
-       CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) AS jaccard
-FROM inter i
-JOIN sizes za ON za.{id_col} = i.doc_a
-JOIN sizes zb ON zb.{id_col} = i.doc_b
-WHERE CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) >= {threshold!r}
+{_sql_set_jaccard(id_col)}
+SELECT doc_a, doc_b, inter, sz_a, sz_b, jaccard FROM verified WHERE jaccard >= {threshold!r}
 """.strip()
 
 
@@ -513,13 +510,20 @@ def _set_jaccard(
     b: str = "doc_b",
     broadcast_sets: bool = False,
 ) -> DataFrame:
-    """(a, b, jaccard) for every candidate pair: exact |A ∩ B| via
-    array_intersect of the two docs' sorted hash sets — two joins of the
-    candidate list against the (id, hset, sz) frame, zero further shuffles
-    of the corpus. The 60-bit md5-prefix stream is identical on both
-    engines, so the oracle stays in lock-step (an intra-pair collision is
-    ~1e-12 and affects both sides identically). ``broadcast_sets`` is the
-    caller's bounded-panel contract (:func:`ngram_jaccard_pairs_sets`)."""
+    """(a, b, inter, sz_a, sz_b, jaccard) for every candidate pair: exact
+    |A ∩ B| via array_intersect of the two docs' sorted hash sets — two
+    joins of the candidate list against the (id, hset, sz) frame, zero
+    further shuffles of the corpus.
+
+    Set entries are 31-bit values (the 60-bit md5 prefix reduced mod
+    :data:`MINHASH_PRIME`), so two distinct shingles share a hash with
+    probability about 1/(2^31-1): a pair of sets A, B expects about
+    |A|·|B|/(2^31-1) spurious matches (~7e-5 at 400 shingles each), and a
+    doc whose own shingles collide has a set one smaller. No ``documents``
+    row of the sf0.001, sf0.01 or sf0.1 fixture has two shingles sharing a
+    hash. The DuckDB twin hashes the same way, so both engines agree on
+    any collision. ``broadcast_sets`` is the caller's bounded-panel
+    contract (:func:`ngram_jaccard_pairs`)."""
     sa = sets.select(F.col(id_col).alias(a), F.col("hset").alias("set_a"), F.col("sz").alias("sz_a"))
     sb = sets.select(F.col(id_col).alias(b), F.col("hset").alias("set_b"), F.col("sz").alias("sz_b"))
     if broadcast_sets:
@@ -530,7 +534,7 @@ def _set_jaccard(
         cand.join(sa, a)
         .join(sb, b)
         .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")))
-        .select(a, b, jaccard.alias("jaccard"))
+        .select(a, b, "inter", "sz_a", "sz_b", jaccard.alias("jaccard"))
     )
 
 
@@ -607,16 +611,7 @@ def _one_task_pairs(
     schema = StructType([
         StructField("doc_a", typ), StructField("doc_b", typ), StructField("jaccard", DoubleType()),
     ])
-    arrow = to_arrow_schema(schema)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        batches = list(batches)
-        if batches:
-            yield _local_jaccard(pa.Table.from_batches(batches), slices, threshold, arrow)
-
-    # the frame is already materialized: coalesce(1) reads its blocks in one
-    # task without a shuffle
-    return sig.coalesce(1).mapInArrow(kernel, schema)
+    return _in_one_task(sig, schema, lambda table, arrow: _local_jaccard(table, slices, threshold, arrow))
 
 
 def minhash_signatures(
@@ -652,21 +647,11 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    sa = sig.select(F.col(id_col).alias("doc_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(num_hashes)])
-    sb = sig.select(F.col(id_col).alias("doc_b"), *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(num_hashes)])
-    est = None
-    for i in range(num_hashes):
-        term = F.when(F.col(f"a_{i}") == F.col(f"b_{i}"), 1).otherwise(0)
-        est = term if est is None else est + term
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (est.cast("double") / F.lit(float(num_hashes))).alias("est_sim"),
-        )
-    )
+    k = range(num_hashes)
+    sa = sig.select(F.col(id_col).alias("doc_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in k])
+    sb = sig.select(F.col(id_col).alias("doc_b"), *[F.col(f"sig_{i}").alias(f"b_{i}") for i in k])
+    est = minhash_agreement([F.col(f"a_{i}") for i in k], [F.col(f"b_{i}") for i in k])
+    return cand.join(sa, "doc_a").join(sb, "doc_b").select("doc_a", "doc_b", est.alias("est_sim"))
 
 
 def minhash_jaccard_pairs(
@@ -706,7 +691,8 @@ def minhash_jaccard_pairs(
     if hashes + docs * num_hashes <= LSH_MAX_HASHES:
         return _one_task_pairs(sig, id_col, slices, threshold)
     cand = _band_pairs(sig, id_col, slices).select("doc_a", "doc_b").distinct()
-    return _set_jaccard(cand, sig, id_col).where(F.col("jaccard") >= threshold)
+    pairs = _set_jaccard(cand, sig, id_col).where(F.col("jaccard") >= threshold)
+    return pairs.select("doc_a", "doc_b", "jaccard")
 
 
 def sql_minhash_jaccard(
@@ -729,88 +715,6 @@ cand AS (
   WHERE a.{id_col} < b.{id_col}
 ),
 {_sql_hash_sets(id_col)},
-{_sql_set_jaccard(id_col)}
-SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {threshold!r}
-""".strip()
-
-
-def ngram_jaccard_pairs_sets(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-    max_shingle_df: int | None = DEFAULT_MAX_SHINGLE_DF,
-    broadcast_sets: bool = False,
-) -> DataFrame:
-    """Exact n-gram jaccard pairs via per-doc HASH SETS (r10): same
-    candidates as :func:`ngram_jaccard_pairs` (inverted index with the
-    df cap), but verification is ``array_intersect`` of each doc's
-    sorted 60-bit shingle-hash set — the :func:`minhash_jaccard_pairs`
-    verifier. On HIGH-OVERLAP corpora (tiny shared vocabulary, candidate
-    set ~ all pairs) the classic verifier shuffles |cand| x
-    shingles-per-doc rows (measured 200M+ rows / 40 s on a 1500-doc
-    panel); this one moves each doc's set ONCE per pair side. Returns
-    (doc_a, doc_b, jaccard) — jaccard over distinct shingle HASHES,
-    identical to shingle-set jaccard up to the ~1e-12 md5-prefix
-    collision both engine twins share.
-
-    ``broadcast_sets=True`` pins the set relation broadcast: ONLY valid
-    when the caller's ``df`` is a bounded panel (the recall-measurement
-    contract — the checkpointed set relation reports no stats, so Spark
-    would otherwise shuffle every candidate pair's two ~KB arrays
-    through a sort-merge join; measured 13 s -> ~2 s on the 1000-doc
-    panel). Default False: a corpus-scale set relation must never be
-    broadcast, AQE sizes it."""
-    sets = _minhash_frame(df, id_col, text_col, n, 0, sets=True)
-    sets = _checkpointer(sets)(sets)
-    hdist = sets.select(id_col, F.explode("hset").alias("h"))
-    if max_shingle_df is not None:
-        dfreq = hdist.groupBy("h").agg(F.count(F.lit(1)).alias("df_"))
-        rare = hdist.join(
-            dfreq.where(F.col("df_") <= max_shingle_df), "h", "left_semi"
-        )
-    else:
-        rare = hdist
-    cand = (
-        rare.select(F.col(id_col).alias("doc_a"), "h")
-        .join(rare.select(F.col(id_col).alias("doc_b"), "h"), "h")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # the per-pair array_intersect is COMPUTE-bound, but the cand
-    # relation is byte-tiny (16 B/row) so AQE coalesces it to ~one
-    # partition and the whole verify runs on one core (measured: 481 k
-    # pairs -> ~10 s serial). Spread the compute explicitly; the extra
-    # shuffle moves only the skinny pair list.
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-    return _set_jaccard(cand, sets, id_col, broadcast_sets=broadcast_sets).where(
-        F.col("jaccard") >= threshold
-    )
-
-
-def sql_ngram_jaccard_sets(
-    src_rel: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = DEFAULT_SHINGLE,
-    threshold: float = 0.5,
-    max_shingle_df: int = DEFAULT_MAX_SHINGLE_DF,
-) -> str:
-    """DuckDB twin of :func:`ngram_jaccard_pairs_sets` — jaccard over the
-    same 60-bit md5-prefix hash stream, so both engines share any
-    collision identically."""
-    return f"""
-WITH {_sql_hashed(src_rel, id_col, text_col, n)},
-{_sql_hash_sets(id_col)},
-hdf AS (SELECT h, COUNT(*) AS df_ FROM hdist GROUP BY h),
-rare AS (SELECT d.* FROM hdist d JOIN hdf USING (h) WHERE hdf.df_ <= {max_shingle_df}),
-cand AS (
-  SELECT DISTINCT a.{id_col} AS doc_a, b.{id_col} AS doc_b
-  FROM rare a JOIN rare b USING (h)
-  WHERE a.{id_col} < b.{id_col}
-),
 {_sql_set_jaccard(id_col)}
 SELECT doc_a, doc_b, jaccard FROM verified WHERE jaccard >= {threshold!r}
 """.strip()
@@ -942,9 +846,17 @@ def sql_minhash_bands(
     return f"banded AS (\n  {selects}\n)"
 
 
+def minhash_agreement(a: list[Column], b: list[Column]) -> Column:
+    """The fraction of agreeing min-hashes between the signatures ``a`` and
+    ``b``, one Column per position (exact rational, DOUBLE): est_sim of
+    :func:`minhash_lsh_pairs` and of the streaming batch twins."""
+    agree = reduce(add, [F.when(x == y, 1).otherwise(0) for x, y in zip(a, b)])
+    return agree.cast("double") / F.lit(float(len(a)))
+
+
 def sql_minhash_agreement(num_hashes: int = DEFAULT_NUM_HASHES) -> str:
-    """DuckDB expression: the fraction of agreeing min-hashes between the
-    ``sa`` and ``sb`` rows of ``sigs`` (exact rational, DOUBLE)."""
+    """DuckDB twin of :func:`minhash_agreement` between the ``sa`` and
+    ``sb`` rows of ``sigs``."""
     agree = " + ".join(
         f"(CASE WHEN sa.sig_{i} = sb.sig_{i} THEN 1 ELSE 0 END)" for i in range(num_hashes)
     )
@@ -960,9 +872,10 @@ sizes AS (SELECT {id_col}, COUNT(*) AS sz FROM hdist GROUP BY {id_col})"""
 
 
 def _sql_set_jaccard(id_col: str, a: str = "doc_a", b: str = "doc_b") -> str:
-    """DuckDB CTEs ``inter`` + ``verified`` (a, b, jaccard) for the pairs of
-    CTE ``cand`` — the twin of :func:`_set_jaccard`: |A ∩ B| counted by an
-    h-keyed join of the two docs' ``hdist`` rows."""
+    """DuckDB CTEs ``inter`` + ``verified`` (a, b, inter, sz_a, sz_b,
+    jaccard) for the pairs of CTE ``cand`` — the twin of
+    :func:`_set_jaccard`: |A ∩ B| counted by an h-keyed join of the two
+    docs' ``hdist`` rows."""
     return f"""inter AS (
   SELECT c.{a}, c.{b}, COUNT(*) AS inter
   FROM cand c
@@ -971,7 +884,7 @@ def _sql_set_jaccard(id_col: str, a: str = "doc_a", b: str = "doc_b") -> str:
   GROUP BY c.{a}, c.{b}
 ),
 verified AS (
-  SELECT i.{a}, i.{b},
+  SELECT i.{a}, i.{b}, i.inter, za.sz AS sz_a, zb.sz AS sz_b,
          CAST(i.inter AS DOUBLE) / CAST(za.sz + zb.sz - i.inter AS DOUBLE) AS jaccard
   FROM inter i
   JOIN sizes za ON za.{id_col} = i.{a}

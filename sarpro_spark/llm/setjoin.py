@@ -2,10 +2,11 @@
 
 The LOSSLESS complement to MinHash-LSH (llm/dedup.py) in the dedup matrix:
 MinHash trades recall for a bounded candidate volume; the df-capped exact
-n-gram join (dedup_ngram_jaccard) keeps exact Jaccard values but can MISS a
-pair whose only shared shingles are hotter than the cap.  Prefix filtering
-(Chaudhuri, Ganti & Kaushik, ICDE'06; Bayardo, Ma & Srikant, WWW'07
-"Scaling Up All Pairs Similarity Search") is exact AND complete: order every
+n-gram join over shingle-hash sets (dedup_ngram_jaccard) keeps exact Jaccard
+values but can MISS a pair whose only shared shingles are hotter than the
+cap.  Prefix filtering (Chaudhuri, Ganti & Kaushik, ICDE'06; Bayardo, Ma &
+Srikant, WWW'07 "Scaling Up All Pairs Similarity Search") is exact AND
+complete: order every
 document's shingle set by GLOBAL rarity (ascending document frequency, ties
 by shingle) and probe only each set's PREFIX —
 

@@ -55,9 +55,10 @@ _JACCARD_SQL = dd.sql_ngram_jaccard("documents", threshold=0.5)
 
 @query("dedup_ngram_jaccard", sql=_JACCARD_SQL, tags=("llm", "dedup"))
 def q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram Jaccard near-dup: DF-capped candidate generation + exact
-    verification on candidates only (the hot-shingle df^2 explosion never
-    happens; jaccard values stay exact)."""
+    """n-gram Jaccard near-dup over per-doc shingle-hash sets: DF-capped
+    candidate generation + exact set-intersect verification on candidates
+    only (the hot-shingle df^2 explosion never happens; jaccard values stay
+    exact)."""
     d = frames.load_table(spark, sf_dir, "documents")
     return dd.ngram_jaccard_pairs(d, threshold=0.5)
 
@@ -703,7 +704,7 @@ WITH docpanel AS (
 ),
 {dd.sql_minhash_probe_candidates("docpanel", probe=2)},
 truth AS (
-  SELECT doc_a, doc_b FROM ({dd.sql_ngram_jaccard_sets("docpanel", threshold=_NEARDUP_MP_TAU)}) tp
+  SELECT doc_a, doc_b FROM ({dd.sql_ngram_jaccard("docpanel", threshold=_NEARDUP_MP_TAU)}) tp
 ),
 hits AS (
   SELECT COUNT(*) AS n_true,
@@ -748,9 +749,9 @@ def q_neardup_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded subset beyond): exact all-pairs truth corpus-wide IS the
     quadratic LSH exists to avoid, so the line is O(1) in corpus scale
     by construction (44 s -> ~9 s at sf0.1; constant at sf1+). Truth
-    verification uses the set-intersect variant (ngram_jaccard_pairs_sets)
-    — the classic per-shingle verify join shuffled 200M+ rows on this
-    high-overlap panel."""
+    is ngram_jaccard_pairs, whose verify intersects per-doc hash sets — a
+    per-shingle verify join shuffled 200M+ rows on this high-overlap
+    panel."""
     from sarpro_spark.llm.cluster import _checkpointer
 
     d = frames.load_table(spark, sf_dir, "documents").where(
@@ -760,7 +761,7 @@ def q_neardup_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and cand are checkpointed because the hits/cost branches would
     # otherwise each re-execute the full pipelines (both are panel-bounded
     # pair lists, a few thousand skinny rows)
-    truth = dd.ngram_jaccard_pairs_sets(
+    truth = dd.ngram_jaccard_pairs(
         d, threshold=_NEARDUP_MP_TAU, broadcast_sets=True
     ).select("doc_a", "doc_b")
     cand = dd.minhash_probe_candidates(d, probe=2)
@@ -2353,7 +2354,7 @@ FROM documents d LEFT JOIN hits h USING (doc_id)
 def q_dedup_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental near-dup, certified through its batch twin
     (streaming/dedup.py): a document STREAM dedups against the accumulated
-    corpus via a stateless MinHash signature kernel (mapInPandas) + ONE
+    corpus via a stateless MinHash signature kernel (mapInArrow) + ONE
     applyInPandasWithState stage keyed by (band, bucket); the drained
     stream's match rows equal the pairwise batch rule 'doc b matches every
     earlier a sharing a band bucket with signature agreement >= 0.75'

@@ -49,9 +49,10 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from hashlib import md5
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -67,6 +68,8 @@ from pyspark.sql.types import (
 
 from sarpro_spark.llm.dedup import (
     DEFAULT_SHINGLE,
+    _band_slices,
+    minhash_agreement,
     minhash_blocks,
     minhash_coeffs,
 )
@@ -110,17 +113,16 @@ def doc_sig_bands(
         ]
     )
     coeffs = minhash_coeffs(num_hashes)
-    rows_per_band = num_hashes // bands
+    slices = _band_slices(num_hashes, bands)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for ids, sigs, _offsets, _hashes in minhash_blocks(batches, id_col, text_col, n, coeffs):
             out_ids, bnds, bkts, sigs_out = [], [], [], []
             for i, sig in zip(ids, sigs.T.tolist()):
-                for b in range(bands):
-                    chunk = sig[b * rows_per_band:(b + 1) * rows_per_band]
+                for b, _dropped, kept in slices:
                     out_ids.append(i)
                     bnds.append(b)
-                    bkts.append(md5("|".join(map(str, chunk)).encode()).hexdigest())
+                    bkts.append(md5("|".join(str(sig[p]) for p in kept).encode()).hexdigest())
                     sigs_out.append(sig)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -164,6 +166,23 @@ _STATE_SCHEMA = StructType(
 )
 
 
+def _agreeing(
+    sig: list[int], flat: list[int], num_hashes: int, threshold: float
+) -> Iterator[tuple[int, float]]:
+    """(j, est_sim) of every stored signature j of the bucket's row-major
+    (m, k) ``flat`` whose agreement with ``sig`` reaches ``threshold``, in
+    stored order; est_sim is the count of equal positions over k, the same
+    int / float64 division as :func:`~sarpro_spark.llm.dedup.minhash_agreement`."""
+    est = (np.reshape(flat, (-1, num_hashes)) == sig).sum(axis=1) / float(num_hashes)
+    hit = np.flatnonzero(est >= threshold)
+    return zip(hit.tolist(), est[hit].tolist())
+
+
+def _positions(sig: str, num_hashes: int) -> list[Column]:
+    """The k positions of the array column ``sig``."""
+    return [F.element_at(sig, i + 1) for i in range(num_hashes)]
+
+
 def _make_update(num_hashes: int, threshold: float, bucket_cap: int):
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -178,24 +197,21 @@ def _make_update(num_hashes: int, threshold: float, bucket_cap: int):
         for _, row in batch.iterrows():
             sig = [int(v) for v in row["sig"]]
             did = int(row["doc_id"])
-            for j, prev_id in enumerate(ids):
-                prev = flat[j * num_hashes : (j + 1) * num_hashes]
-                agree = sum(1 for x, y in zip(sig, prev) if x == y)
-                est = agree / float(num_hashes)
-                if est >= threshold:
-                    # orientation-insensitive emission (r8, ADVICE r7): the
-                    # pair is always (max_id, min_id) so a doc arriving
-                    # AFTER a higher-id neighbor (out-of-order micro-batch)
-                    # emits the same row the batch twin produces — drained
-                    # stream == batch twin for ANY arrival order, not just
-                    # id-ordered feeds
-                    out_doc.append(max(did, prev_id))
-                    out_match.append(min(did, prev_id))
-                    out_sim.append(est)
-                    # bucket's capped status AS OF this emission (r9): a
-                    # True here taints the batch-twin equivalence for this
-                    # bucket, a run with all-False rows certifies it
-                    out_capped.append(capped)
+            for j, est in _agreeing(sig, flat, num_hashes, threshold):
+                prev_id = ids[j]
+                # orientation-insensitive emission (r8, ADVICE r7): the
+                # pair is always (max_id, min_id) so a doc arriving
+                # AFTER a higher-id neighbor (out-of-order micro-batch)
+                # emits the same row the batch twin produces — drained
+                # stream == batch twin for ANY arrival order, not just
+                # id-ordered feeds
+                out_doc.append(max(did, prev_id))
+                out_match.append(min(did, prev_id))
+                out_sim.append(est)
+                # bucket's capped status AS OF this emission (r9): a
+                # True here taints the batch-twin equivalence for this
+                # bucket, a run with all-False rows certifies it
+                out_capped.append(capped)
             if len(ids) < bucket_cap:
                 ids.append(did)
                 flat.extend(sig)
@@ -265,13 +281,7 @@ def streaming_neardup_batch(
     b = sb.select(
         "band", "bucket", F.col(id_col).alias("doc_id"), F.col("sig").alias("sig_b")
     )
-    agree = None
-    for i in range(num_hashes):
-        term = F.when(
-            F.element_at("sig_a", i + 1) == F.element_at("sig_b", i + 1), 1
-        ).otherwise(0)
-        agree = term if agree is None else agree + term
-    est = agree.cast("double") / F.lit(float(num_hashes))
+    est = minhash_agreement(_positions("sig_a", num_hashes), _positions("sig_b", num_hashes))
     return (
         a.join(b, ["band", "bucket"])
         .where(F.col("matched_id") < F.col("doc_id"))
@@ -358,18 +368,15 @@ def _make_update2(num_hashes: int, threshold: float, bucket_cap: int):
             did = int(row["doc_id"])
             side = str(row["side"])
             other_ids, other_flat = sides["b" if side == "a" else "a"]
-            for j, prev_id in enumerate(other_ids):
-                prev = other_flat[j * num_hashes : (j + 1) * num_hashes]
-                agree = sum(1 for x, y in zip(sig, prev) if x == y)
-                est = agree / float(num_hashes)
-                if est >= threshold:
-                    # fixed (a_id, b_id) orientation: the pair's identity,
-                    # not its arrival order (same doctrine as the r8
-                    # single-stream max/min orientation)
-                    out_a.append(did if side == "a" else prev_id)
-                    out_b.append(prev_id if side == "a" else did)
-                    out_sim.append(est)
-                    out_capped.append(capped)
+            for j, est in _agreeing(sig, other_flat, num_hashes, threshold):
+                prev_id = other_ids[j]
+                # fixed (a_id, b_id) orientation: the pair's identity,
+                # not its arrival order (same doctrine as the r8
+                # single-stream max/min orientation)
+                out_a.append(did if side == "a" else prev_id)
+                out_b.append(prev_id if side == "a" else did)
+                out_sim.append(est)
+                out_capped.append(capped)
             own_ids, own_flat = sides[side]
             if len(own_ids) < bucket_cap:
                 own_ids.append(did)
@@ -443,13 +450,7 @@ def stream_stream_neardup_batch(
     b = doc_sig_bands(b_docs, id_col, text_col, n, num_hashes, bands).select(
         "band", "bucket", F.col(id_col).alias("b_id"), F.col("sig").alias("sig_b")
     )
-    agree = None
-    for i in range(num_hashes):
-        term = F.when(
-            F.element_at("sig_a", i + 1) == F.element_at("sig_b", i + 1), 1
-        ).otherwise(0)
-        agree = term if agree is None else agree + term
-    est = agree.cast("double") / F.lit(float(num_hashes))
+    est = minhash_agreement(_positions("sig_a", num_hashes), _positions("sig_b", num_hashes))
     return (
         a.join(b, ["band", "bucket"])
         .select(

@@ -43,6 +43,34 @@ def test_ngram_jaccard_finds_neardups(spark, docs):
     assert (0, 3) not in pairs  # unrelated
 
 
+@pytest.mark.parametrize("cap", [2, None])
+def test_ngram_jaccard_matches_the_twin(spark, cap):
+    """Rows and column types equal the DuckDB twin with and without the df
+    cap. The 'alpha beta gamma ' shingles sit in three docs, above a cap of
+    2, so at that cap only (1, 2) shares a shingle below it."""
+    import duckdb
+    import pyarrow as pa
+
+    rows = [
+        (1, "alpha beta gamma delta"), (2, "alpha beta gamma delte"),
+        (3, "alpha beta gamma zzzzz"), (4, "zzzzz yyyy"), (5, "abc"),
+        (6, None), (None, "null id, never paired"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = dd.ngram_jaccard_pairs(df, threshold=0.5, max_shingle_df=cap)
+    con = duckdb.connect()
+    con.register("docs_t", pa.table({
+        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+        "text": pa.array([r[1] for r in rows], pa.string()),
+    }))
+    twin = con.sql(dd.sql_ngram_jaccard("docs_t", threshold=0.5, max_shingle_df=cap))
+    got = sorted(map(tuple, out.collect()))
+    assert got == sorted(twin.fetchall())
+    assert {(a, b) for a, b, *_ in got} == ({(1, 2)} if cap else {(1, 2), (1, 3), (2, 3)})
+    assert out.dtypes == list(zip(twin.columns, ["bigint"] * 5 + ["double"]))
+    assert [str(t) for t in twin.types] == ["BIGINT"] * 5 + ["DOUBLE"]
+
+
 def test_minhash_lsh_candidates(spark, docs):
     out = {(r["doc_a"], r["doc_b"]): r["est_sim"] for r in dd.minhash_lsh_pairs(docs).collect()}
     assert out[(0, 1)] == 1.0  # identical docs always collide with est 1.0
@@ -328,7 +356,7 @@ def test_minhash_pairs_independent_of_partitioning(spark):
     # one verifier: every banded pair carries the exact set jaccard
     exact = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dd.ngram_jaccard_pairs_sets(df, threshold=0.5, max_shingle_df=None).collect()
+        for r in dd.ngram_jaccard_pairs(df, threshold=0.5, max_shingle_df=None).collect()
     }
     assert all(exact.get((da, db)) == j for da, db, j in a)
 

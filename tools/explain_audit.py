@@ -963,9 +963,13 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_ngram_jaccard": {
-        # shingle keys drive a semi-gated equi-join; the verify never
-        # cross-joins docs
-        "require": ["HashAggregate", "Generate"],
+        # the per-doc hash sets come from the MinHash chain's Arrow kernels,
+        # which run inside the eager checkpoint, so this plan reads them
+        # back (Scan ExistingRDD) rather than showing a MapInArrow; their
+        # exploded hash keys drive the df-cap semi-join and the
+        # inverted-index equi-join; the verify intersects the two docs'
+        # sets and never cross-joins docs
+        "require": ["HashAggregate", "Generate", "Scan ExistingRDD"],
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "dedup_minhash_signatures": {
