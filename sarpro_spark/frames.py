@@ -67,11 +67,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 #: memoized cached band frames per (session, sf_dir) — the grid derivation is
 #: a window over lineitem and nearly every raster query reads it (often more
 #: than once per plan); caching it is the moral equivalent of a materialized

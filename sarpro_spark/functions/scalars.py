@@ -20,17 +20,6 @@ def clamp(x: Column, lo, hi) -> Column:
     return F.least(F.greatest(x, F.lit(lo)), F.lit(hi))
 
 
-def round_half_away_positive(x: Column) -> Column:
-    """Rust .round() for non-negative values: floor(x + 0.5) — the shape both
-    engines evaluate identically (see queries.fround for the rationale)."""
-    return F.floor(x + F.lit(0.5))
-
-
-def log10_floored(x: Column, eps: float = 1e-10) -> Column:
-    """log10 with the reference's intensity floor (pipeline.rs:19)."""
-    return F.log10(F.greatest(x.cast("double"), F.lit(eps)))
-
-
 def safe_div(num: Column, den: Column, eps: float = 1e-10, default: float = 0.0) -> Column:
     """Zero-denominator-guarded division (ops.rs:16)."""
     return F.when(F.abs(den) > F.lit(eps), num / den).otherwise(F.lit(default))
@@ -56,30 +45,3 @@ def count_occurrences(haystack: Column, needle: str) -> Column:
         (F.length(haystack) - F.length(F.regexp_replace(haystack, needle, "")))
         / F.lit(len(needle))
     ).cast("int")
-
-
-# --- date / time ------------------------------------------------------------
-
-
-def rfc3339(ts: Column) -> Column:
-    """Format a timestamp as the RFC-3339 strings the reference's metadata
-    carries (sentinel1.rs:1158)."""
-    return F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-
-
-def epoch_bucket(ts: Column, seconds: int) -> Column:
-    """Tumbling bucket index (floor of epoch seconds / width)."""
-    return F.floor(F.unix_timestamp(ts) / F.lit(seconds)).cast("bigint")
-
-
-# --- JSON -------------------------------------------------------------------
-
-
-def json_get(js: Column, path: str) -> Column:
-    """JSON path access (the sidecar/props read path)."""
-    return F.get_json_object(js, path)
-
-
-def to_json_struct(*cols_and_names: tuple[Column, str]) -> Column:
-    """Pack named columns into a JSON object string (W8 sidecar shape)."""
-    return F.to_json(F.struct(*[c.alias(n) for c, n in cols_and_names]))

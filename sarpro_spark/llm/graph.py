@@ -131,13 +131,6 @@ def pagerank(
     )
 
 
-def _py_r9(x: float) -> float:
-    import math
-
-    scale = float(10**STATE_DIGITS)
-    return math.floor(x * scale + 0.5) / scale
-
-
 # --- DuckDB twin --------------------------------------------------------------
 
 

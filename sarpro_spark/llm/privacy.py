@@ -55,13 +55,3 @@ SELECT {qc}, CAST(COUNT(*) AS BIGINT) AS group_n,
        CASE WHEN COUNT(*) >= {k} THEN 0 ELSE COUNT(*) END AS suppressed_rows
 FROM {src_rel} GROUP BY {qc}
 """.strip()
-
-
-def sql_k_anonymize_count(src_rel: str, quasi_cols: list[str], k: int) -> str:
-    """DuckDB twin for certifying :func:`k_anonymize` row membership at
-    group grain (released groups with their sizes)."""
-    qc = ", ".join(quasi_cols)
-    return f"""
-SELECT {qc}, CAST(COUNT(*) AS BIGINT) AS n_rows
-FROM {src_rel} GROUP BY {qc} HAVING COUNT(*) >= {k}
-""".strip()

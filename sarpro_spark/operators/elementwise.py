@@ -72,11 +72,6 @@ def valid_mask(db: Column) -> Column:
     return db > F.lit(DB_VALID_THRESHOLD)
 
 
-def apply_operation(df: DataFrame, op: PolarizationOperation, a: str = "vv", b: str = "vh") -> DataFrame:
-    """Apply a polarization op to a wide band frame, producing column ``v``."""
-    return df.withColumn("v", POLARIZATION_OPS[op](F.col(a), F.col(b)))
-
-
 def with_db_mask(df: DataFrame, v: str = "v") -> DataFrame:
     """Attach ``db`` and ``valid`` columns (E6 + P2) to a band frame."""
     db = to_db(F.col(v))

@@ -931,10 +931,6 @@ def nad27_grid_rows(hdr: dict | None = None) -> list[tuple[int, int, float, floa
     ]
 
 
-def nad27_grid_df(spark: SparkSession, hdr: dict | None = None) -> DataFrame:
-    return local_relation(spark, nad27_grid_rows(hdr), GRID_SCHEMA)
-
-
 def sql_nad27_grid_cte(name: str = "nadgrid", hdr: dict | None = None) -> str:
     rows = ",\n  ".join(
         f"({i}, {j}, {la!r}, {lo!r})" for i, j, la, lo in nad27_grid_rows(hdr)

@@ -596,15 +596,6 @@ def webmerc_forward_np(lon, lat):
     )
 
 
-def webmerc_inverse_np(e, n):
-    e = np.asarray(e, dtype=np.float64)
-    n = np.asarray(n, dtype=np.float64)
-    return (
-        np.degrees(e / WGS84_A),
-        np.degrees(2.0 * np.arctan(np.exp(n / WGS84_A)) - np.pi / 2.0),
-    )
-
-
 # --- LCC: Lambert Conformal Conic 2SP (EPSG:2154 RGF93 / Lambert-93) ---------
 # Third non-UTM family (r7; after LAEA and Web Mercator): the conformal conic
 # used by most national grids (France, Belgium, US state planes...). Public

@@ -205,19 +205,6 @@ def convert_metadata_to_json(fields: dict[str, str], geotransform: list[float] |
 # --- parquet/json data sinks -------------------------------------------------
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:
-    """Primary columnar sink; partition_by product-grain keys so downstream
-    scans prune (the 100 TB read path)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
 # --- W1/W2/W3: image encode + read-back (pure-Python codecs, executor-side) --
 
 #: manifest fields every image writer returns after the product's keys

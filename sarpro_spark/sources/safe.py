@@ -254,13 +254,6 @@ def lonlat_to_epsg(lon: float, lat: float) -> str:
     return f"EPSG:326{zone:02d}" if lat >= 0.0 else f"EPSG:327{zone:02d}"
 
 
-def resolve_auto_target_crs_from_centroid(lon: float, lat: float) -> str:
-    """S10 wrapper: the reference derives the centroid from GCPs via GDAL or
-    `gdalinfo -json`; here the centroid arrives as data (the avg(lon),
-    avg(lat) aggregation over the GCP frame)."""
-    return lonlat_to_epsg(lon, lat)
-
-
 def epsg_column(lon: F.Column, lat: F.Column) -> F.Column:
     """Column-expression twin of :func:`lonlat_to_epsg` — the same UTM/UPS
     zone rules (polar sheets, Norway, Svalbard) as a pure ``F.when`` chain,

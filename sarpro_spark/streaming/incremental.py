@@ -39,7 +39,7 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 
 from sarpro_spark.operators.cdc import apply_changelog
-from sarpro_spark.operators.incremental import group_aggregate, maintain_group_aggregate
+from sarpro_spark.operators.incremental import maintain_group_aggregate
 from sarpro_spark.streaming.cdc import _committed_versions
 
 
@@ -114,35 +114,3 @@ def maintain_group_aggregate_stream(
         .outputMode("update")
         .start()
     )
-
-
-def view_certificate(
-    spark: SparkSession, out_dir: str, snapshot: DataFrame, group_col: str, val_col: str
-) -> DataFrame:
-    """(grp, n, total, vmin, vmax, view_ok) — the drained view full-outer
-    joined with the batch full recompute over ``snapshot``; every value
-    column's equality is carried as data (the stream==batch certificate
-    shape used by the tests)."""
-    from pyspark.sql import functions as F
-
-    view = latest_view(spark, out_dir)
-    truth = group_aggregate(snapshot, group_col, val_col)
-    if view is None:
-        return truth.select(
-            "grp", "n", "total", "vmin", "vmax", F.lit(False).alias("view_ok")
-        )
-    v = view.select(
-        "grp",
-        F.col("n").alias("v_n"),
-        F.col("total").alias("v_total"),
-        F.col("vmin").alias("v_vmin"),
-        F.col("vmax").alias("v_vmax"),
-    )
-    j = truth.join(v, "grp", "full_outer")
-    ok = (
-        (F.col("n") == F.col("v_n"))
-        & (F.col("total") == F.col("v_total"))
-        & (F.col("vmin").eqNullSafe(F.col("v_vmin")))
-        & (F.col("vmax").eqNullSafe(F.col("v_vmax")))
-    )
-    return j.select("grp", "n", "total", "vmin", "vmax", ok.alias("view_ok"))

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -133,7 +135,17 @@ def test_stateful_running_totals(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # the ProcessingTimeTimeout state keeps the availableNow query running
+    # empty batches, so it never terminates and processAllAvailable never
+    # returns: drain until every source row has passed a committed batch,
+    # failing on a query error or a hang
+    n_src = batch.count()
+    deadline = time.monotonic() + 120
+    while sum(p["numInputRows"] for p in q.recentProgress) < n_src:
+        assert q.exception() is None
+        assert time.monotonic() < deadline, "stream did not drain in 120 s"
+        time.sleep(0.2)
+    assert q.exception() is None
     rows = spark.sql(
         "SELECT user_id, n_events, total_value FROM user_totals"
     ).collect()

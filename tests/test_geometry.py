@@ -853,7 +853,7 @@ def test_osgb_worked_example_and_datum_chain():
     x, y, z = tmx._geodetic_to_geocentric_np(tmx.WGS84_A, tmx.WGS84_F, [1.5], [55.0])
     x2, y2, z2 = tmx._helmert_np(c, x, y, z)
     # the shift is a real datum shift: order 100 m, not a no-op
-    d = float(np.sqrt((x2 - x) ** 2 + (y2 - y) ** 2 + (z2 - z) ** 2))
+    d = float(np.sqrt((x2 - x) ** 2 + (y2 - y) ** 2 + (z2 - z) ** 2).item())
     assert 50.0 < d < 1000.0
     x3, y3, z3 = tmx._helmert_np(c, x2, y2, z2, inverse=True)
     assert float(abs(x3 - x)[0]) < 1e-6
@@ -1614,3 +1614,30 @@ def test_multigrid_dispatch_is_format_agnostic(spark, tmp_path):
     for p in (0, 1):
         assert abs(rows[p]["rt_lat"] - rows[p]["lat"]) < 1e-9
         assert abs(rows[p]["rt_lon"] - rows[p]["lon"]) < 1e-9
+
+
+_CERTIFICATES = [
+    "ups_roundtrip_points", "laea_roundtrip_points", "lcc_roundtrip_points",
+    "osgb_roundtrip_points", "bd72_roundtrip_points", "albers_roundtrip_points",
+    "webmerc_roundtrip_points", "ntv2_roundtrip_points", "nad27_roundtrip_points",
+    "gtg_roundtrip_points", "mga_roundtrip_points", "ntv2_multigrid_points",
+]
+
+
+@pytest.mark.parametrize("name", _CERTIFICATES)
+def test_crs_certificate_certifies(spark, sf_dir, name):
+    """The oracle only proves both engines compute the same flags; this
+    proves the flags hold. Every lattice point of every round-trip
+    certificate must come back within its tolerance (rt_ok), and every
+    grid-shift row must apply a shift of the fixture's magnitude
+    (shift_ok). ups_roundtrip_points covers lon = -180, which the UPS
+    inverse returns as +180: the longitude check is on the circle."""
+    from sarpro_spark.queries import spark_queries
+
+    df = spark_queries()[name](spark, sf_dir)
+    flags = [c for c in ("rt_ok", "shift_ok") if c in df.columns]
+    assert "rt_ok" in flags
+    rows = df.select("product_id", "gi", "gj", *flags).collect()
+    assert rows
+    bad = [r for r in rows if not all(r[c] is True for c in flags)]
+    assert not bad, f"{len(bad)}/{len(rows)} rows fail: {bad[:5]}"

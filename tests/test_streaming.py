@@ -10,6 +10,14 @@ from sarpro_spark import frames
 from sarpro_spark.streaming import events as se
 
 
+def _drain(q):
+    """Run a never-ending stream until its source is exhausted, fail on a
+    query error, then stop it (no timeout to wait out)."""
+    q.processAllAvailable()
+    assert q.exception() is None
+    q.stop()
+
+
 def test_tumbling_batch_equals_streaming(spark, sf_dir, tmp_path):
     batch_events = frames.load_table(spark, sf_dir, "events")
     batch = {
@@ -963,7 +971,7 @@ def test_streaming_cdc_snapshot_restart_exactly_once(spark, tmp_path):
         .parquet(str(land / "*"))
     )
     q2 = maintain_snapshot_stream(stream2, base, "k", out, ckpt)
-    assert q2.awaitTermination(180) or q2.stop() is None
+    _drain(q2)
 
     final = {r["k"]: r["v"] for r in latest_snapshot(spark, out, base).collect()}
     # batch ground truth: fold the three files in landing order
@@ -1041,7 +1049,7 @@ def test_streaming_scd2_restart_exactly_once(spark, tmp_path):
         .parquet(str(land / "*"))
     )
     q2 = maintain_scd2_stream(stream2, "k", out, ckpt)
-    assert q2.awaitTermination(180) or q2.stop() is None
+    _drain(q2)
 
     cols = ("k", "v", "op", "valid_from", "valid_to", "is_current")
     got = {tuple(r[c] for c in cols) for r in latest_scd2(spark, out).collect()}
@@ -1276,8 +1284,7 @@ def test_cdc_time_travel_and_changes_between(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(land / "*"))
     )
-    q = maintain_snapshot_stream(stream, base, "k", out, ckpt)
-    q.awaitTermination(180)
+    _drain(maintain_snapshot_stream(stream, base, "k", out, ckpt))
 
     vs = _committed_versions(spark, out)
     assert len(vs) == 3
@@ -1351,7 +1358,7 @@ def test_vacuum_versions_bounds_store_and_preserves_time_travel(spark, tmp_path)
         return (spark.readStream.schema("k long, v string, seq long, op string")
                 .option("maxFilesPerTrigger", 1).parquet(str(land / "*")))
 
-    maintain_snapshot_stream(mk_stream(), base, "k", out, ckpt).awaitTermination(180)
+    _drain(maintain_snapshot_stream(mk_stream(), base, "k", out, ckpt))
     vs = _committed_versions(spark, out)
     assert len(vs) == 5
 
@@ -1391,7 +1398,7 @@ def test_vacuum_versions_bounds_store_and_preserves_time_travel(spark, tmp_path)
     # maintenance resumed after the vacuum folds on top of the newest kept
     drop("c6", [(5, "e", 1, "I")])
     files.append(("c6", None))
-    maintain_snapshot_stream(mk_stream(), base, "k", out, ckpt).awaitTermination(180)
+    _drain(maintain_snapshot_stream(mk_stream(), base, "k", out, ckpt))
     snap = base
     for name in ("c1", "c2", "c3", "c4", "c5", "c6"):
         snap = apply_changelog(snap, spark.read.parquet(str(land / name)), "k").select("k", "v")
@@ -1472,7 +1479,7 @@ def test_streaming_incremental_agg_restart_exactly_once(spark, tmp_path):
     drop("c3", [(4, "y", 50, 3, "U")])  # lands during the outage
 
     q2 = maintain_group_aggregate_stream(mk_stream(), base, "k", "g", "val", out, ckpt)
-    assert q2.awaitTermination(180) or q2.stop() is None
+    _drain(q2)
 
     # ground truth: full recompute over the batch-folded snapshot
     snap = base
