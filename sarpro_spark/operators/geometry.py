@@ -21,6 +21,9 @@ keyed by product — the same partitioning unit the batch dataflow already uses.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+from typing import Callable, NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -291,7 +294,7 @@ def geotransform_update(
     return d
 
 
-# --- G5: in-engine affine warp (near / bilinear / cubic) ---------------------
+# --- G5: in-engine affine warp (near / bilinear / cubic / lanczos) -----------
 
 
 def affine_warp(
@@ -323,11 +326,12 @@ def affine_warp(
     exact in f64, so the 4-corner sum is order-independent — the oracle twin
     (sql_affine_warp) hash-matches bit-for-bit.
 
-    ``alg`` selects the reference's ``-r {near,bilinear,cubic}`` resampling
-    kernel family (src/io/sentinel1.rs:988-1032, CLI mapping
+    ``alg`` selects the reference's ``-r {near,bilinear,cubic,lanczos}``
+    resampling kernel (src/io/sentinel1.rs:988-1032, CLI mapping
     src/cli/runner.rs:61-67): nearest = 1 tap, bilinear = 4 taps, cubic =
-    16-tap Keys cubic convolution (a = -0.5, GDAL's cubic) — same canvas /
-    coords plan, only the gather stage differs.
+    16-tap Keys cubic convolution (a = -0.5, GDAL's cubic), lanczos = 36-tap
+    Lanczos3 — same canvas / coords plan, only the gather's kernel table
+    entry differs (:func:`resample_gather`).
     """
     coords = affine_coords(geo, group_cols)
     return resample_gather(coords, px, group_cols, value, alg=alg)
@@ -361,213 +365,13 @@ def affine_coords(geo: DataFrame, group_cols: list[str]) -> DataFrame:
     return cells.select(*gcols, "row", "col", cs.alias("cs"), rs.alias("rs"))
 
 
-def affine_warp_bilinear(
-    px: DataFrame,
-    geo: DataFrame,
-    group_cols: list[str],
-    value: str = "v",
-) -> DataFrame:
-    """Back-compat alias: :func:`affine_warp` with the bilinear kernel."""
-    return affine_warp(px, geo, group_cols, value, alg="bilinear")
-
-
-def resample_gather(
-    coords: DataFrame,
-    px: DataFrame,
-    group_cols: list[str],
-    value: str = "v",
-    alg: str = "bilinear",
-) -> DataFrame:
-    """Kernel dispatch for the gather stage shared by every warp route —
-    the execution-side consumer of ProcessingParams.resample_alg (the
-    reference's ``-r`` flag, src/cli/runner.rs:61-67). ``lanczos`` is the
-    TRUE 36-tap windowed sinc since r11 (lanczos_gather) — the reference's
-    warp silently degrades it to bilinear (sentinel1.rs:937-941
-    ``_ => "bilinear"``) even though its RESIZE stage is Lanczos3; this
-    engine honors the request exactly instead (documented deviation — a
-    user needing byte-parity with the reference's degraded output passes
-    ``-r bilinear`` explicitly)."""
-    if alg == "bilinear":
-        return bilinear_gather(coords, px, group_cols, value)
-    if alg in ("near", "nearest"):
-        return nearest_gather(coords, px, group_cols, value)
-    if alg == "cubic":
-        return cubic_gather(coords, px, group_cols, value)
-    if alg == "lanczos":
-        return lanczos_gather(coords, px, group_cols, value)
-    raise ValueError(f"unsupported resample alg {alg!r} (near|bilinear|cubic|lanczos)")
-
-
-def bilinear_gather(
-    coords: DataFrame,
-    px: DataFrame,
-    group_cols: list[str],
-    value: str = "v",
-) -> DataFrame:
-    """Shared bilinear resampler: ``coords`` carries one row per TARGET cell
-    (group, row, col, cs, rs) with fractional source pixel coordinates;
-    returns the weighted 4-corner sample from ``px``. Corner explode -> one
-    co-partitioned join -> per-cell weighted agg (edge cells renormalize by
-    the present-corner weight mass; fully out-of-footprint cells drop)."""
-    gcols = [F.col(c) for c in group_cols]
-    cs, rs = F.col("cs"), F.col("rs")
-    src = coords.select(
-        *gcols, "row", "col",
-        F.floor(cs).cast("int").alias("c0"),
-        F.floor(rs).cast("int").alias("r0"),
-        (cs - F.floor(cs)).alias("wc"),
-        (rs - F.floor(rs)).alias("wr"),
-    )
-    corners = src.select(
-        *gcols, "row", "col", "c0", "r0", "wc", "wr",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-                    for dr in (0, 1)
-                    for dc in (0, 1)
-                ]
-            )
-        ).alias("k"),
-    ).select(
-        *gcols, "row", "col",
-        (F.col("r0") + F.col("k.dr")).alias("srow"),
-        (F.col("c0") + F.col("k.dc")).alias("scol"),
-        (
-            F.when(F.col("k.dr") == 1, F.col("wr")).otherwise(1.0 - F.col("wr"))
-            * F.when(F.col("k.dc") == 1, F.col("wc")).otherwise(1.0 - F.col("wc"))
-        ).alias("w"),
-    )
-    srcpx = px.select(
-        *gcols, F.col("row").alias("srow"), F.col("col").alias("scol"),
-        F.col(value).cast("double").alias("_v"),
-    )
-    # Structural intent: cells x pixels is BIG x BIG and must never be
-    # planned as a broadcast. Without the hint, a CACHED px lineage reports
-    # optimistic in-memory stats, the 64 MB threshold bites, and the driver
-    # dies building a multi-GiB broadcast (reproduced in the r5 sf1 soak —
-    # the exact failure a mis-estimated relation causes at 100 TB).
-    hit = corners.join(srcpx.hint("shuffle_merge"), [*group_cols, "srow", "scol"])
-    return (
-        hit.groupBy(*group_cols, "row", "col")
-        .agg(F.sum(F.col("w") * F.col("_v")).alias("_wv"), F.sum("w").alias("_w"))
-        .where(F.col("_w") > 0.0)
-        .select(*gcols, "row", "col", (F.col("_wv") / F.col("_w")).alias(value))
-    )
-
-
-def nearest_gather(
-    coords: DataFrame,
-    px: DataFrame,
-    group_cols: list[str],
-    value: str = "v",
-) -> DataFrame:
-    """``-r near``: single-tap gather at the rounded source coordinate —
-    no corner explode, no weights, no aggregate; one co-partitioned join.
-    Bit-exact by construction (the value passes through untouched), so this
-    kernel certifies against the oracle with no rounding doctrine at all.
-    Out-of-footprint cells drop via the inner join, as in bilinear."""
-    gcols = [F.col(c) for c in group_cols]
-    taps = coords.select(
-        *gcols, "row", "col",
-        F.floor(F.col("rs") + F.lit(0.5)).cast("int").alias("srow"),
-        F.floor(F.col("cs") + F.lit(0.5)).cast("int").alias("scol"),
-    )
-    srcpx = px.select(
-        *gcols, F.col("row").alias("srow"), F.col("col").alias("scol"),
-        F.col(value).cast("double").alias("_v"),
-    )
-    # same BIG x BIG structural pin as bilinear_gather: a cached px lineage
-    # must never flip this to a broadcast (r5 soak reproduced the OOM)
-    hit = taps.join(srcpx.hint("shuffle_merge"), [*group_cols, "srow", "scol"])
-    return hit.select(*gcols, "row", "col", F.col("_v").alias(value))
-
+# --- the -r kernel table and the one gather built from it --------------------
 
 #: Keys cubic-convolution free parameter — a = -0.5 is the classic Keys
 #: (1981) choice and what GDAL's `-r cubic` uses; the reference exposes it
 #: via `-r cubic` (src/io/sentinel1.rs:933-936; the reference DEFAULT is
 #: lanczos→bilinear, core/params.rs:38 + sentinel1.rs:937-941).
 CUBIC_A = -0.5
-
-
-def _cubic_w(dist_from_tap):
-    """1-D Keys cubic weight for a tap at |x| = dist_from_tap in [0, 2).
-    Horner forms with a = -0.5 baked in, written with the IDENTICAL
-    operation order as the SQL twin so dyadic inputs stay bit-exact:
-      |x| <= 1:  (1.5*x - 2.5)*x*x + 1
-      1 < |x| < 2: ((-0.5*x + 2.5)*x - 4.0)*x + 2.0
-    """
-    x = dist_from_tap
-    return F.when(
-        x <= 1.0, (F.lit(1.5) * x - F.lit(2.5)) * x * x + F.lit(1.0)
-    ).otherwise(((F.lit(-0.5) * x + F.lit(2.5)) * x - F.lit(4.0)) * x + F.lit(2.0))
-
-
-def cubic_gather(
-    coords: DataFrame,
-    px: DataFrame,
-    group_cols: list[str],
-    value: str = "v",
-) -> DataFrame:
-    """``-r cubic``: 16-tap Keys cubic-convolution gather — the reference's
-    default warp kernel. Same plan shape as bilinear (tap explode -> one
-    co-partitioned join -> per-cell weighted agg), 4x the tap fan-out (a
-    bounded constant — shuffle stays linear in the canvas). Edge cells
-    renormalize by the present-tap weight mass like bilinear; cubic weights
-    can be negative, so the drop test is on |mass| (deterministic: with
-    dyadic fractions every weight is exact, and both engines compute the
-    identical sum)."""
-    gcols = [F.col(c) for c in group_cols]
-    cs, rs = F.col("cs"), F.col("rs")
-    src = coords.select(
-        *gcols, "row", "col",
-        F.floor(cs).cast("int").alias("c0"),
-        F.floor(rs).cast("int").alias("r0"),
-        (cs - F.floor(cs)).alias("fc"),
-        (rs - F.floor(rs)).alias("fr"),
-    )
-    taps = src.select(
-        *gcols, "row", "col", "c0", "r0", "fc", "fr",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-                    for dr in (-1, 0, 1, 2)
-                    for dc in (-1, 0, 1, 2)
-                ]
-            )
-        ).alias("k"),
-    )
-    # |x| per axis: d=-1 -> 1+f, d=0 -> f, d=1 -> 1-f, d=2 -> 2-f
-    def axis_dist(d, f):
-        return (
-            F.when(d == -1, F.lit(1.0) + f)
-            .when(d == 0, f)
-            .when(d == 1, F.lit(1.0) - f)
-            .otherwise(F.lit(2.0) - f)
-        )
-
-    wr = _cubic_w(axis_dist(F.col("k.dr"), F.col("fr")))
-    wc = _cubic_w(axis_dist(F.col("k.dc"), F.col("fc")))
-    tapped = taps.select(
-        *gcols, "row", "col",
-        (F.col("r0") + F.col("k.dr")).alias("srow"),
-        (F.col("c0") + F.col("k.dc")).alias("scol"),
-        (wr * wc).alias("w"),
-    )
-    srcpx = px.select(
-        *gcols, F.col("row").alias("srow"), F.col("col").alias("scol"),
-        F.col(value).cast("double").alias("_v"),
-    )
-    hit = tapped.join(srcpx.hint("shuffle_merge"), [*group_cols, "srow", "scol"])
-    return (
-        hit.groupBy(*group_cols, "row", "col")
-        .agg(F.sum(F.col("w") * F.col("_v")).alias("_wv"), F.sum("w").alias("_w"))
-        .where(F.abs(F.col("_w")) > 1e-9)
-        .select(*gcols, "row", "col", (F.col("_wv") / F.col("_w")).alias(value))
-    )
-
-
 #: Lanczos window half-width (a = 3 -> 6 taps/axis, 36 taps total) — the
 #: same Lanczos3 the reference's RESIZE stage uses (fast_image_resize;
 #: lanczos_resize_array above); r11 brings it to the WARP gather too.
@@ -587,6 +391,54 @@ LANCZOS_PHASES = 32
 _LANCZOS_WSCALE = 16777216.0  # 2^24
 
 
+class _Sql:
+    """DuckDB SQL text that composes with the operators of a Spark Column,
+    so one weight expression renders for both engines. Every operation is
+    parenthesized: the text keeps the Python expression's operation order,
+    which is what keeps the twins bit-exact."""
+
+    def __init__(self, text):
+        self.text = str(text) if isinstance(text, (str, _Sql)) else repr(text)
+
+    def __str__(self):
+        return self.text
+
+    def _op(op):
+        return lambda a, b: _Sql(f"({a} {op} {_Sql(b)})")
+
+    __add__, __sub__, __mul__, __truediv__ = _op("+"), _op("-"), _op("*"), _op("/")
+    __le__, __gt__, __eq__ = _op("<="), _op(">"), _op("=")
+    __hash__ = None
+    del _op
+
+
+#: the expression forms a kernel statement uses, once per engine
+_SPARK = SimpleNamespace(
+    lit=F.lit, abs=F.abs, floor=F.floor, int=lambda x: x.cast("int"),
+    when=lambda c, a, b: F.when(c, a).otherwise(b),
+    at=lambda tab, i: F.element_at(F.array(*[F.lit(w) for w in tab]), i),
+)
+_DUCK = SimpleNamespace(
+    lit=_Sql, abs=lambda x: _Sql(f"ABS({x})"), floor=lambda x: _Sql(f"FLOOR({x})"),
+    int=lambda x: _Sql(f"CAST({x} AS INTEGER)"),
+    when=lambda c, a, b: _Sql(f"(CASE WHEN {c} THEN {a} ELSE {b} END)"),
+    at=lambda tab, i: _Sql(f"list_extract([{', '.join(map(repr, tab))}], {i})"),
+)
+
+
+def _cubic_w(x, e):
+    """1-D Keys cubic weight for a tap at distance x in [0, 2].
+    Horner forms with a = -0.5 baked in (one statement for both engines,
+    so dyadic inputs stay bit-exact):
+      |x| <= 1:  (1.5*x - 2.5)*x*x + 1
+      1 < |x| < 2: ((-0.5*x + 2.5)*x - 4.0)*x + 2.0
+    """
+    return e.when(
+        x <= 1.0, (e.lit(1.5) * x - e.lit(2.5)) * x * x + e.lit(1.0),
+        ((e.lit(-0.5) * x + e.lit(2.5)) * x - e.lit(4.0)) * x + e.lit(2.0),
+    )
+
+
 def _lanczos_phase_table() -> list[float]:
     """6x33 separable weight table: index (d+2)*33 + phase, where tap
     offset d in [-2, 3] and the source fraction f snapped to phase/32.
@@ -600,173 +452,154 @@ def _lanczos_phase_table() -> list[float]:
     return tab
 
 
-def _lanczos_w_col(d, phase) -> "F.Column":
-    """1-D Lanczos weight as a literal-array lookup (codegen, no libm):
-    ``d`` tap-offset column in [-2, 3], ``phase`` snapped-fraction column
-    in [0, 32]."""
-    arr = F.array(*[F.lit(w) for w in _lanczos_phase_table()])
-    return F.element_at(arr, (d + F.lit(2)) * F.lit(LANCZOS_PHASES + 1) + phase + F.lit(1))
+def _lanczos_w(d, phase, e):
+    """1-D Lanczos weight as a literal-list lookup (codegen, no libm): tap
+    offset ``d`` in [-2, 3], snapped fraction ``phase`` in [0, 32]."""
+    return e.at(_lanczos_phase_table(), (d + e.lit(2)) * e.lit(LANCZOS_PHASES + 1) + phase + e.lit(1))
 
 
-def lanczos_gather(
+#: per-axis weight arguments, computed once per target cell from the
+#: fraction f = x - floor(x)
+_ARGS = {
+    "frac": lambda f, e: f,
+    "phase": lambda f, e: e.int(e.floor(f * e.lit(LANCZOS_PHASES) + e.lit(0.5))),
+}
+
+
+class _Kernel(NamedTuple):
+    offsets: tuple[int, ...]  # tap offsets per axis, from the base
+    half: bool  # base floor(x + 0.5) (the rounded pixel) instead of floor(x)
+    arg: str  # the per-axis weight argument (_ARGS)
+    w1: Callable  # 1-D weight (offset, arg, engine)
+    snap: bool  # 2-D weight floor(w_r*w_c*2^24 + 0.5)/2^24, else w_r*w_c
+    mass: Callable  # which cells keep a value, from the present-tap weight sum
+
+
+#: The reference's ``-r`` kernels (src/cli/runner.rs:61-67), each stated
+#: once: both engines' gathers are built from this table. Cubic and Lanczos
+#: weights go negative, so their mass rule is |mass| > 1e-9; nearest's one
+#: tap weighs 1, so its mass is positive exactly when the tap is present.
+_KERNELS = {
+    "near": _Kernel((0,), True, "frac", lambda d, f, e: e.lit(1.0), False, lambda m, e: m > 0.0),
+    "bilinear": _Kernel(
+        (0, 1), False, "frac", lambda d, f, e: e.when(d == 1, f, e.lit(1.0) - f), False,
+        lambda m, e: m > 0.0,
+    ),
+    "cubic": _Kernel(
+        (-1, 0, 1, 2), False, "frac", lambda d, f, e: _cubic_w(e.abs(d - f), e), False,
+        lambda m, e: e.abs(m) > 1e-9,
+    ),
+    "lanczos": _Kernel(
+        tuple(range(1 - LANCZOS_A, LANCZOS_A + 1)), False, "phase", _lanczos_w, True,
+        lambda m, e: e.abs(m) > 1e-9,
+    ),
+}
+
+
+def _kernel(alg: str) -> _Kernel:
+    k = _KERNELS.get("near" if alg == "nearest" else alg)
+    if k is None:
+        raise ValueError(f"unsupported resample alg {alg!r} (near|bilinear|cubic|lanczos)")
+    return k
+
+
+def _base(x, half, e):
+    return e.int(e.floor(x + e.lit(0.5)) if half else e.floor(x))
+
+
+def _tap_weight(k: _Kernel, dr, dc, ar, ac, e):
+    w = k.w1(dr, ar, e) * k.w1(dc, ac, e)
+    return e.floor(w * e.lit(_LANCZOS_WSCALE) + e.lit(0.5)) / e.lit(_LANCZOS_WSCALE) if k.snap else w
+
+
+def resample_gather(
     coords: DataFrame,
     px: DataFrame,
     group_cols: list[str],
     value: str = "v",
+    alg: str | tuple[str, ...] = "bilinear",
 ) -> DataFrame:
-    """``-r lanczos``: TRUE 36-tap Lanczos3 windowed-sinc gather (r11) —
-    the kernel the reference resizes with but degrades to bilinear in the
-    warp (sentinel1.rs:937-941). Same plan shape as cubic (tap explode ->
-    one co-partitioned join -> per-cell weighted agg), 6x6 taps; the
-    fractional phase snaps to 1/32 pixel and weights come from the
-    precomputed table (see LANCZOS_PHASES — determinism is structural,
-    not a rounding afterthought). Edge renormalization and the |mass|
-    drop rule match cubic (lanczos lobes go negative too)."""
+    """The gather stage every warp route ends in — the execution-side
+    consumer of ProcessingParams.resample_alg (the reference's ``-r`` flag).
+    ``coords`` carries one row per TARGET cell (group, row, col, cs, rs)
+    with fractional source pixel coordinates; the plan is a tap explode ->
+    ONE co-partitioned join against ``px`` -> ONE per-cell weighted
+    aggregate, sum(w*v)/sum(w) over the present taps (edge cells
+    renormalize; a cell failing its kernel's mass rule drops).
+
+    ``alg`` is one kernel name (returns ``value``) or a tuple of names
+    (returns one nullable ``q_<name>`` column per kernel, null where that
+    kernel's mass rule fails). A tuple explodes the union of its kernels'
+    taps — the nearest tap, the bilinear corners and the cubic patch all
+    lie inside the Lanczos3 6x6 patch — so one pixel shuffle serves every
+    kernel. Each leg is bit-identical to its single-kernel gather: under
+    the dyadic fixture doctrine every weight is exact IEEE, a kernel's
+    weight is a literal 0.0 on taps outside its own patch and x + 0.0 = x,
+    so each per-leg sum is the same in any order (the lanczos addends are
+    exact 2^-24 multiples — see _LANCZOS_WSCALE). Nearest alone is one
+    tap: the value passes through untouched on a join-only plan.
+
+    ``lanczos`` is the TRUE 36-tap windowed sinc since r11 — the
+    reference's warp silently degrades it to bilinear (sentinel1.rs:937-941
+    ``_ => "bilinear"``) even though its RESIZE stage is Lanczos3; this
+    engine honors the request exactly instead (documented deviation — a
+    user needing byte-parity with the reference's degraded output passes
+    ``-r bilinear`` explicitly)."""
+    names = (alg,) if isinstance(alg, str) else tuple(alg)
+    ks = {n: _kernel(n) for n in names}
+    half = all(k.half for k in ks.values())
+    # a rounding kernel under a floor(x) base: floor(x + 0.5) is floor(x)
+    # or floor(x) + 1, so its taps reach one further per axis
+    span = sorted({d + s for k in ks.values() for d in k.offsets for s in range(1 + (k.half > half))})
     gcols = [F.col(c) for c in group_cols]
-    cs, rs = F.col("cs"), F.col("rs")
-    src = coords.select(
-        *gcols, "row", "col",
-        F.floor(cs).cast("int").alias("c0"),
-        F.floor(rs).cast("int").alias("r0"),
-        F.floor((cs - F.floor(cs)) * LANCZOS_PHASES + F.lit(0.5)).cast("int").alias("pc"),
-        F.floor((rs - F.floor(rs)) * LANCZOS_PHASES + F.lit(0.5)).cast("int").alias("pr"),
-    )
-    taps = src.select(
-        *gcols, "row", "col", "c0", "r0", "pc", "pr",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-                    for dr in range(-(LANCZOS_A - 1), LANCZOS_A + 1)
-                    for dc in range(-(LANCZOS_A - 1), LANCZOS_A + 1)
-                ]
-            )
-        ).alias("k"),
-    )
-    wr = _lanczos_w_col(F.col("k.dr"), F.col("pr"))
-    wc = _lanczos_w_col(F.col("k.dc"), F.col("pc"))
-    w = F.floor(wr * wc * F.lit(_LANCZOS_WSCALE) + F.lit(0.5)) / F.lit(_LANCZOS_WSCALE)
-    tapped = taps.select(
-        *gcols, "row", "col",
-        (F.col("r0") + F.col("k.dr")).alias("srow"),
-        (F.col("c0") + F.col("k.dc")).alias("scol"),
-        w.alias("w"),
-    )
+    per_cell = {}
+    for a in "rc":
+        x = F.col(f"{a}s")
+        per_cell[f"_{a}0"] = _base(x, half, _SPARK)
+        for k in ks.values():
+            per_cell[f"_{k.arg}_{a}"] = _ARGS[k.arg](x - F.floor(x), _SPARK)
+            if k.half > half:
+                per_cell[f"_{a}n"] = _base(x, True, _SPARK)
+    cells = coords.select(*gcols, "row", "col", *[c.alias(n) for n, c in per_cell.items()])
     srcpx = px.select(
         *gcols, F.col("row").alias("srow"), F.col("col").alias("scol"),
         F.col(value).cast("double").alias("_v"),
     )
-    # same BIG x BIG structural pin as every gather (r5 soak OOM class)
-    hit = tapped.join(srcpx.hint("shuffle_merge"), [*group_cols, "srow", "scol"])
-    return (
-        hit.groupBy(*group_cols, "row", "col")
-        .agg(F.sum(F.col("w") * F.col("_v")).alias("_wv"), F.sum("w").alias("_w"))
-        .where(F.abs(F.col("_w")) > 1e-9)
-        .select(*gcols, "row", "col", (F.col("_wv") / F.col("_w")).alias(value))
-    )
-
-
-def all_kernels_gather(
-    coords: DataFrame,
-    px: DataFrame,
-    group_cols: list[str],
-    value: str = "v",
-) -> DataFrame:
-    """All four ``-r`` kernels from ONE gather: the nearest tap, the 4
-    bilinear corners, and the cubic 4x4 patch are subsets of the Lanczos3
-    6x6 patch (r11), so a single 36-tap explode + ONE co-partitioned join
-    computes q_near / q_bilinear / q_cubic / q_lanczos simultaneously (one
-    shuffle of the pixel frame instead of four). Hash-equivalence with the
-    single-kernel gathers is exact, not approximate: under the dyadic
-    fixture doctrine every weight is exact IEEE, the bilinear/cubic
-    weights are literal 0.0 on taps outside their own patch, and
-    x + 0.0 = x — so each per-leg sum is bit-identical to the sum the
-    dedicated gather computes over its own tap subset, in any order (the
-    lanczos addends are exact 2^-24 multiples — see _LANCZOS_WSCALE).
-    Per-leg presence mirrors each gather's drop rule: nearest needs its
-    tap matched, bilinear positive corner mass, cubic/lanczos |mass| >
-    1e-9."""
-    gcols = [F.col(c) for c in group_cols]
-    cs, rs = F.col("cs"), F.col("rs")
-    src = coords.select(
-        *gcols, "row", "col",
-        F.floor(cs).cast("int").alias("c0"),
-        F.floor(rs).cast("int").alias("r0"),
-        (cs - F.floor(cs)).alias("fc"),
-        (rs - F.floor(rs)).alias("fr"),
-        F.floor(cs + F.lit(0.5)).cast("int").alias("cn"),
-        F.floor(rs + F.lit(0.5)).cast("int").alias("rn"),
-        F.floor((cs - F.floor(cs)) * LANCZOS_PHASES + F.lit(0.5)).cast("int").alias("pc"),
-        F.floor((rs - F.floor(rs)) * LANCZOS_PHASES + F.lit(0.5)).cast("int").alias("pr"),
-    )
-    taps = src.select(
-        *gcols, "row", "col", "c0", "r0", "fc", "fr", "cn", "rn", "pc", "pr",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc"))
-                    for dr in range(-(LANCZOS_A - 1), LANCZOS_A + 1)
-                    for dc in range(-(LANCZOS_A - 1), LANCZOS_A + 1)
-                ]
-            )
-        ).alias("k"),
-    )
-
-    def axis_dist(d, f):
-        return (
-            F.when(d == -1, F.lit(1.0) + f)
-            .when(d == 0, f)
-            .when(d == 1, F.lit(1.0) - f)
-            .otherwise(F.lit(2.0) - f)
-        )
-
+    # Structural intent: cells x pixels is BIG x BIG and must never be
+    # planned as a broadcast. Without the hint, a CACHED px lineage reports
+    # optimistic in-memory stats, the 64 MB threshold bites, and the driver
+    # dies building a multi-GiB broadcast (reproduced in the r5 sf1 soak —
+    # the exact failure a mis-estimated relation causes at 100 TB).
+    keys = [*group_cols, "srow", "scol"]
+    if len(span) == 1:  # nearest alone: the one tap's value passes through
+        taps = cells.select(*gcols, "row", "col", F.col("_r0").alias("srow"), F.col("_c0").alias("scol"))
+        hit = taps.join(srcpx.hint("shuffle_merge"), keys)
+        return hit.select(*gcols, "row", "col", F.col("_v").alias(value if isinstance(alg, str) else f"q_{names[0]}"))
+    tap = F.explode(F.array(*[
+        F.struct(F.lit(dr).alias("dr"), F.lit(dc).alias("dc")) for dr in span for dc in span
+    ])).alias("k")
+    taps = cells.select(*gcols, "row", "col", *per_cell, tap)
     dr, dc = F.col("k.dr"), F.col("k.dc")
-    cub_taps = (-1, 0, 1, 2)
-    w_cub = F.when(
-        dr.isin(*cub_taps) & dc.isin(*cub_taps),
-        _cubic_w(axis_dist(dr, F.col("fr"))) * _cubic_w(axis_dist(dc, F.col("fc"))),
-    ).otherwise(F.lit(0.0))
-    w_bil = F.when(
-        dr.isin(0, 1) & dc.isin(0, 1),
-        F.when(dr == 1, F.col("fr")).otherwise(1.0 - F.col("fr"))
-        * F.when(dc == 1, F.col("fc")).otherwise(1.0 - F.col("fc")),
-    ).otherwise(F.lit(0.0))
-    w_lan = (
-        F.floor(
-            _lanczos_w_col(dr, F.col("pr")) * _lanczos_w_col(dc, F.col("pc"))
-            * F.lit(_LANCZOS_WSCALE) + F.lit(0.5)
-        ) / F.lit(_LANCZOS_WSCALE)
+    srow, scol = F.col("_r0") + dr, F.col("_c0") + dc
+    ws = []
+    for n, k in ks.items():
+        own_r, own_c = (srow - F.col("_rn"), scol - F.col("_cn")) if k.half > half else (dr, dc)
+        w = _tap_weight(k, own_r, own_c, F.col(f"_{k.arg}_r"), F.col(f"_{k.arg}_c"), _SPARK)
+        if k.half > half or list(k.offsets) != span:
+            w = F.when(own_r.isin(*k.offsets) & own_c.isin(*k.offsets), w).otherwise(F.lit(0.0))
+        ws.append(w.alias(f"_w_{n}"))
+    hit = taps.select(*gcols, "row", "col", srow.alias("srow"), scol.alias("scol"), *ws).join(
+        srcpx.hint("shuffle_merge"), keys
     )
-    tapped = taps.select(
-        *gcols, "row", "col", "cn", "rn",
-        (F.col("r0") + dr).alias("srow"),
-        (F.col("c0") + dc).alias("scol"),
-        w_cub.alias("w_cub"),
-        w_bil.alias("w_bil"),
-        w_lan.alias("w_lan"),
-    )
-    srcpx = px.select(
-        *gcols, F.col("row").alias("srow"), F.col("col").alias("scol"),
-        F.col(value).cast("double").alias("_v"),
-    )
-    hit = tapped.join(srcpx.hint("shuffle_merge"), [*group_cols, "srow", "scol"])
-    near_v = F.when((F.col("srow") == F.col("rn")) & (F.col("scol") == F.col("cn")), F.col("_v"))
-    agg = hit.groupBy(*group_cols, "row", "col").agg(
-        F.sum(F.col("w_cub") * F.col("_v")).alias("_wv_c"),
-        F.sum("w_cub").alias("_w_c"),
-        F.sum(F.col("w_bil") * F.col("_v")).alias("_wv_b"),
-        F.sum("w_bil").alias("_w_b"),
-        F.sum(F.col("w_lan") * F.col("_v")).alias("_wv_l"),
-        F.sum("w_lan").alias("_w_l"),
-        F.max(near_v).alias("_v_n"),
-    )
-    return agg.select(
-        *gcols, "row", "col",
-        F.col("_v_n").alias("q_near"),
-        F.when(F.col("_w_b") > 0.0, F.col("_wv_b") / F.col("_w_b")).alias("q_bilinear"),
-        F.when(F.abs(F.col("_w_c")) > 1e-9, F.col("_wv_c") / F.col("_w_c")).alias("q_cubic"),
-        F.when(F.abs(F.col("_w_l")) > 1e-9, F.col("_wv_l") / F.col("_w_l")).alias("q_lanczos"),
-    )
+    agg = hit.groupBy(*group_cols, "row", "col").agg(*[
+        f for n in ks
+        for f in (F.sum(F.col(f"_w_{n}") * F.col("_v")).alias(f"_wv_{n}"), F.sum(f"_w_{n}").alias(f"_m_{n}"))
+    ])
+    legs = {n: (F.col(f"_wv_{n}") / F.col(f"_m_{n}"), k.mass(F.col(f"_m_{n}"), _SPARK)) for n, k in ks.items()}
+    if isinstance(alg, str):
+        v, keep = legs[alg]
+        return agg.where(keep).select(*gcols, "row", "col", v.alias(value))
+    return agg.select(*gcols, "row", "col", *[F.when(keep, v).alias(f"q_{n}") for n, (v, keep) in legs.items()])
 
 
 # --- G5b: piecewise-affine warp from a GCP grid (the reference's TPS path) ---
@@ -1279,71 +1112,24 @@ def sql_resample_gather(
     alg: str = "bilinear",
     corners_name: str = "cornersw",
 ) -> str:
-    """DuckDB twin of :func:`resample_gather`: the gather-stage CTEs shared
-    by every warp route, ending in ``warped``. ``coords_rel`` yields
-    (group, row, col, cs, rs). Weight expressions are written in the
-    IDENTICAL Horner operation order as the Spark columns so dyadic
-    fixtures stay bit-exact across engines."""
+    """DuckDB twin of :func:`resample_gather` for one kernel: the tap CTE
+    ``corners_name`` and ``warped``, rendered from the same kernel table
+    (same weight statements, same operation order, same literals), so
+    dyadic fixtures stay bit-exact across engines. ``coords_rel`` yields
+    (group, row, col, cs, rs)."""
+    k = _kernel(alg)
     g = ", ".join(group_cols)
     on = " AND ".join(f"p.{c} = c.{c}" for c in group_cols)
-    if alg in ("near", "nearest"):
-        gc = ", ".join(f"c.{c}" for c in group_cols)
-        return f"""warped AS (
-  SELECT {gc}, c.row, c.col, CAST(p.{value} AS DOUBLE) AS {value}
-  FROM (
-    SELECT {g}, row, col,
-           CAST(FLOOR(rs + 0.5) AS INTEGER) AS srow,
-           CAST(FLOOR(cs + 0.5) AS INTEGER) AS scol
-    FROM {coords_rel}
-  ) c
-  JOIN {px_rel} p ON {on} AND p.row = c.srow AND p.col = c.scol
-)"""
-    if alg == "bilinear":
-        return f"""{corners_name} AS (
-  SELECT {g}, row, col,
-         CAST(FLOOR(rs) AS INTEGER) + kk.dr AS srow,
-         CAST(FLOOR(cs) AS INTEGER) + kk.dc AS scol,
-         (CASE WHEN kk.dr = 1 THEN rs - FLOOR(rs) ELSE 1.0 - (rs - FLOOR(rs)) END)
-       * (CASE WHEN kk.dc = 1 THEN cs - FLOOR(cs) ELSE 1.0 - (cs - FLOOR(cs)) END) AS w
-  FROM {coords_rel},
-       LATERAL (SELECT UNNEST([0,0,1,1]) AS dr, UNNEST([0,1,0,1]) AS dc) kk
-),
-warped AS (
-  SELECT {g}, row, col, SUM(w * _v) / SUM(w) AS {value}
-  FROM (
-    SELECT c.*, CAST(p.{value} AS DOUBLE) AS _v
-    FROM {corners_name} c
-    JOIN {px_rel} p
-      ON {on}
-     AND p.row = c.srow AND p.col = c.scol
-  ) j
-  GROUP BY {g}, row, col
-  HAVING SUM(w) > 0.0
-)"""
-    if alg == "cubic":
-        # Keys a=-0.5; per-axis |x| by tap offset: -1 -> 1+f, 0 -> f,
-        # 1 -> 1-f, 2 -> 2-f. Inner (|x|<=1): (1.5*x - 2.5)*x*x + 1.0;
-        # outer: ((-0.5*x + 2.5)*x - 4.0)*x + 2.0 — Horner forms in
-        # lock-step with _cubic_w. (At the only overlap point |x|=1 both
-        # forms give exactly 0.0 in the dyadic fixture arithmetic.)
-        def axis(off_col: str, f: str) -> str:
-            inner = lambda x: f"((1.5 * {x} - 2.5) * {x} * {x} + 1.0)"
-            outer = lambda x: f"(((-0.5 * {x} + 2.5) * {x} - 4.0) * {x} + 2.0)"
-            return (f"(CASE {off_col} WHEN -1 THEN {outer(f'(1.0 + {f})')} "
-                    f"WHEN 0 THEN {inner(f)} "
-                    f"WHEN 1 THEN {inner(f'(1.0 - {f})')} "
-                    f"ELSE {outer(f'(2.0 - {f})')} END)")
-        taps = ",".join(str(d) for d in (-1, 0, 1, 2) for _ in range(4))
-        tapsc = ",".join(str(d) for _ in range(4) for d in (-1, 0, 1, 2))
-        wr = axis("kk.dr", "fr")
-        wc = axis("kk.dc", "fc")
-        return f"""{corners_name} AS (
-  SELECT {g}, row, col,
-         CAST(FLOOR(rs) AS INTEGER) + kk.dr AS srow,
-         CAST(FLOOR(cs) AS INTEGER) + kk.dc AS scol,
-         {wr}
-       * {wc} AS w
-  FROM (SELECT *, rs - FLOOR(rs) AS fr, cs - FLOOR(cs) AS fc FROM {coords_rel}),
+    cell = ", ".join(
+        f"{_base(x, k.half, _DUCK)} AS _{a}0, {_ARGS[k.arg](x - _DUCK.floor(x), _DUCK)} AS _{a}a"
+        for a, x in (("r", _Sql("rs")), ("c", _Sql("cs")))
+    )
+    w = _tap_weight(k, _Sql("kk.dr"), _Sql("kk.dc"), _Sql("_ra"), _Sql("_ca"), _DUCK)
+    taps = ",".join(str(d) for d in k.offsets for _ in k.offsets)
+    tapsc = ",".join(str(d) for _ in k.offsets for d in k.offsets)
+    return f"""{corners_name} AS (
+  SELECT {g}, row, col, _r0 + kk.dr AS srow, _c0 + kk.dc AS scol, {w} AS w
+  FROM (SELECT *, {cell} FROM {coords_rel}),
        LATERAL (SELECT UNNEST([{taps}]) AS dr, UNNEST([{tapsc}]) AS dc) kk
 ),
 warped AS (
@@ -1356,48 +1142,8 @@ warped AS (
      AND p.row = c.srow AND p.col = c.scol
   ) j
   GROUP BY {g}, row, col
-  HAVING ABS(SUM(w)) > 1e-9
+  HAVING {k.mass(_Sql("SUM(w)"), _DUCK)}
 )"""
-    if alg == "lanczos":
-        # r11 TRUE Lanczos3: phase-snapped table lookup — the weight list
-        # is the SAME Python-computed literals the Spark plan carries, so
-        # no libm runs in either engine (see LANCZOS_PHASES) and the
-        # 2^-24-grain combined weights make the 36-tap sums
-        # order-independent (see _LANCZOS_WSCALE)
-        wlist = "[" + ", ".join(repr(w) for w in _lanczos_phase_table()) + "]"
-        nper = LANCZOS_PHASES + 1
-        offs = list(range(-(LANCZOS_A - 1), LANCZOS_A + 1))
-        taps = ",".join(str(d) for d in offs for _ in offs)
-        tapsc = ",".join(str(d) for _ in offs for d in offs)
-        wr = f"list_extract(lwtab.t, (kk.dr + 2) * {nper} + pr + 1)"
-        wc = f"list_extract(lwtab.t, (kk.dc + 2) * {nper} + pc + 1)"
-        return f"""lwtab AS (SELECT {wlist} AS t),
-{corners_name} AS (
-  SELECT {g}, row, col,
-         CAST(FLOOR(rs) AS INTEGER) + kk.dr AS srow,
-         CAST(FLOOR(cs) AS INTEGER) + kk.dc AS scol,
-         FLOOR({wr} * {wc} * {_LANCZOS_WSCALE!r} + 0.5) / {_LANCZOS_WSCALE!r} AS w
-  FROM (SELECT *,
-          CAST(FLOOR((rs - FLOOR(rs)) * {LANCZOS_PHASES} + 0.5) AS INTEGER) AS pr,
-          CAST(FLOOR((cs - FLOOR(cs)) * {LANCZOS_PHASES} + 0.5) AS INTEGER) AS pc
-        FROM {coords_rel}),
-       lwtab,
-       LATERAL (SELECT UNNEST([{taps}]) AS dr, UNNEST([{tapsc}]) AS dc) kk
-),
-warped AS (
-  SELECT {g}, row, col, SUM(w * _v) / SUM(w) AS {value}
-  FROM (
-    SELECT c.*, CAST(p.{value} AS DOUBLE) AS _v
-    FROM {corners_name} c
-    JOIN {px_rel} p
-      ON {on}
-     AND p.row = c.srow AND p.col = c.scol
-  ) j
-  GROUP BY {g}, row, col
-  HAVING ABS(SUM(w)) > 1e-9
-)"""
-    raise ValueError(f"unsupported resample alg {alg!r} (near|bilinear|cubic|lanczos)")
-
 
 
 def sql_warp_gcp_grid(
@@ -1526,8 +1272,8 @@ def sql_affine_warp(
 ) -> str:
     """DuckDB twin of :func:`affine_warp`. ``px_rel`` yields
     (group, row, col, value); ``geo_rel`` yields (group, sg0..sg5, dg0..dg5,
-    dst_rows, dst_cols). ``alg`` in near|bilinear|cubic selects the gather
-    kernel (sql_resample_gather). Returns CTEs ending in ``warped``."""
+    dst_rows, dst_cols). ``alg`` in near|bilinear|cubic|lanczos selects the
+    gather kernel (sql_resample_gather). Returns CTEs ending in ``warped``."""
     g = ", ".join(group_cols)
     gg = ", ".join(f"g.{c}" for c in group_cols)
     return f"""

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from sarpro_spark.operators import elementwise as ew
 from sarpro_spark.operators import geometry as geom
 from sarpro_spark.operators import kernel as krn
+from sarpro_spark.operators import tmerc as tmx
 from sarpro_spark.types import (
     AutoscaleStrategy,
     BitDepth,
@@ -260,13 +261,8 @@ def warp_route(
                 return "gcp_ntv2"
             raise ValueError(
                 f"unsupported target CRS {target_crs!r} for geographic GCPs: "
-                "in-engine projection covers UTM (EPSG:326xx/327xx, zones "
-                "1-60), UPS (EPSG:32661/32761), LAEA Europe (EPSG:3035), "
-                "Web Mercator (EPSG:3857), Lambert-93 (EPSG:2154), Conus "
-                "Albers (EPSG:5070), GDA94/MGA zones 49-56 "
-                "(EPSG:28349-28356), and the Helmert datum-shift families "
-                "British National Grid (EPSG:27700) and Belgian Lambert 72 "
-                "(EPSG:31370); CRSs whose datum needs a distortion GRID "
+                f"in-engine projection covers {_coverage()}; "
+                "CRSs whose datum needs a distortion GRID "
                 "(e.g. AGD66 EPSG:20255) route 'gcp_ntv2' ONLY when their "
                 "NTv2 shift grid is supplied (operators/gridshift.py) — "
                 "otherwise reproject externally or supply GCPs in target "
@@ -274,6 +270,44 @@ def warp_route(
             )
         return "gcp"
     return "affine"
+
+
+#: crs_projection_support family -> (label, forward steps (code, lon, lat),
+#: easting, northing): what project_gcps applies to geographic GCPs, and the
+#: coverage the unsupported-CRS errors list
+_GCP_FAMILIES: dict[str, tuple] = {
+    # an explicit UTM target pins zone/hemisphere from the CODE, unlike the
+    # auto-CRS flow where utm_zone_steps derives them per GCP centroid
+    "utm": ("UTM (EPSG:326xx/327xx, zones 1-60)", lambda code, lon, lat: [
+        ("lon0", F.lit(int(code[-2:]) * 6.0 - 183.0)), ("south", F.lit(code[:8] == "EPSG:327")),
+        *tmx.tm_forward_steps(lon=lon, lat=lat),
+    ], "easting", "northing"),
+    "ups": ("UPS (EPSG:32661/32761)", lambda code, lon, lat: [
+        ("south", F.lit(code == "EPSG:32761")), *tmx.ups_forward_steps(lon=lon, lat=lat),
+    ], "ups_easting", "ups_northing"),
+    "laea": ("LAEA Europe (EPSG:3035)", lambda code, lon, lat: tmx.laea_forward_steps(lon=lon, lat=lat),
+             "laea_easting", "laea_northing"),
+    "webmerc": ("Web Mercator (EPSG:3857)", lambda code, lon, lat: tmx.webmerc_forward_steps(lon=lon, lat=lat),
+                "wm_easting", "wm_northing"),
+    "lcc": ("Lambert-93 (EPSG:2154)", lambda code, lon, lat: tmx.lcc_forward_steps(lon=lon, lat=lat),
+            "lcc_easting", "lcc_northing"),
+    "albers": ("Conus Albers (EPSG:5070)", lambda code, lon, lat: tmx.albers_forward_steps(lon=lon, lat=lat),
+               "alb_easting", "alb_northing"),
+    "mga": ("GDA94/MGA zones 49-56 (EPSG:28349-28356)", lambda code, lon, lat: tmx.tm_forward_steps_c(
+        tmx.mga_tm(int(code[-2:])), lon=lon, lat=lat, p="mga", easting="mga_easting", northing="mga_northing",
+    ), "mga_easting", "mga_northing"),
+    # r8/r9 Helmert datum shifts: WGS84 geocentric -> Helmert -> the local
+    # ellipsoid -> the national projection, in ONE flat step chain
+    "osgb": ("British National Grid (EPSG:27700, Helmert datum shift)", lambda code, lon, lat: tmx.osgb_forward_steps(lon=lon, lat=lat),
+             "osgb_easting", "osgb_northing"),
+    "bd72": ("Belgian Lambert 72 (EPSG:31370, Helmert datum shift)", lambda code, lon, lat: tmx.bd72_forward_steps(lon=lon, lat=lat),
+             "bd72_easting", "bd72_northing"),
+}
+
+
+def _coverage() -> str:
+    labels = [label for label, *_ in _GCP_FAMILIES.values()]
+    return ", ".join(labels[:-1]) + " and " + labels[-1]
 
 
 def project_gcps(
@@ -294,8 +328,6 @@ def project_gcps(
     shift-grid relation + header (the 'gcp_ntv2' route): NTv2 INVERSE
     shift (WGS84/GDA-side -> grid datum, operators/gridshift.py) then the
     family's projection. Unsupported CRSs raise, mirroring warp_route."""
-    from sarpro_spark.operators import tmerc as tmx
-
     fam = crs_projection_support(target_crs)
     code = target_crs.strip().upper()
     if fam is None and code in NTV2_FAMILIES and ntv2_grid is not None:
@@ -329,80 +361,23 @@ def project_gcps(
         return proj.withColumn("gx", F.col("ntv2_easting")).withColumn(
             "gy", F.col("ntv2_northing")
         )
-    if fam == "utm":
-        zone = int(code[-2:])
-        south = code[:8] == "EPSG:327"
-        proj = gcps.withColumn("lon0", F.lit(zone * 6.0 - 183.0)).withColumn(
-            "south", F.lit(south)
+    if fam is None:
+        raise ValueError(
+            f"unsupported target CRS {target_crs!r}: in-engine projection covers "
+            + _coverage()
         )
-        proj = tmx.apply_steps(proj, tmx.tm_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("easting")).withColumn("gy", F.col("northing"))
-    if fam == "ups":
-        proj = gcps.withColumn("south", F.lit(code == "EPSG:32761"))
-        proj = tmx.apply_steps(proj, tmx.ups_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("ups_easting")).withColumn(
-            "gy", F.col("ups_northing")
-        )
-    if fam == "laea":
-        proj = tmx.apply_steps(gcps, tmx.laea_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("laea_easting")).withColumn(
-            "gy", F.col("laea_northing")
-        )
-    if fam == "webmerc":
-        proj = tmx.apply_steps(gcps, tmx.webmerc_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("wm_easting")).withColumn(
-            "gy", F.col("wm_northing")
-        )
-    if fam == "lcc":
-        proj = tmx.apply_steps(gcps, tmx.lcc_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("lcc_easting")).withColumn(
-            "gy", F.col("lcc_northing")
-        )
-    if fam == "osgb":
-        # r8: datum shift + projection in ONE flat step chain (WGS84
-        # geocentric -> Helmert 9606 -> Airy geodetic -> National Grid TM)
-        proj = tmx.apply_steps(gcps, tmx.osgb_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("osgb_easting")).withColumn(
-            "gy", F.col("osgb_northing")
-        )
-    if fam == "bd72":
-        # r9: second Helmert family (exact-inverse leg of the published
-        # BD72->WGS84 set, then Belgian Lambert 72 LCC-2SP)
-        proj = tmx.apply_steps(gcps, tmx.bd72_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("bd72_easting")).withColumn(
-            "gy", F.col("bd72_northing")
-        )
-    if fam == "albers":
-        proj = tmx.apply_steps(gcps, tmx.albers_forward_steps(lon=lon, lat=lat))
-        return proj.withColumn("gx", F.col("alb_easting")).withColumn(
-            "gy", F.col("alb_northing")
-        )
-    if fam == "mga":
-        proj = tmx.apply_steps(
-            gcps,
-            tmx.tm_forward_steps_c(
-                tmx.mga_tm(int(code[-2:])), lon=lon, lat=lat, p="mga",
-                easting="mga_easting", northing="mga_northing",
-            ),
-        )
-        return proj.withColumn("gx", F.col("mga_easting")).withColumn(
-            "gy", F.col("mga_northing")
-        )
-    raise ValueError(
-        f"unsupported target CRS {target_crs!r}: in-engine projection covers "
-        "UTM (EPSG:326xx/327xx, zones 1-60), UPS (EPSG:32661/32761), "
-        "LAEA Europe (EPSG:3035), Web Mercator (EPSG:3857), Lambert-93 "
-        "(EPSG:2154), Conus Albers (EPSG:5070), British National Grid "
-        "(EPSG:27700) and Belgian Lambert 72 (EPSG:31370)"
-    )
+    _, steps, easting, northing = _GCP_FAMILIES[fam]
+    proj = tmx.apply_steps(gcps, steps(code, lon, lat))
+    return proj.withColumn("gx", F.col(easting)).withColumn("gy", F.col(northing))
 
 
 def resample_kernel(params) -> str:
     """Execution-side consumer of ProcessingParams.resample_alg (the
     reference's `-r` flag, src/cli/runner.rs:61-67; the reference DEFAULT is
-    lanczos — core/params.rs:38, api/mod.rs:498 — which the warp maps to
-    bilinear, sentinel1.rs:937-941): maps the param to the
-    geometry.resample_gather kernel name every warp route passes through.
+    lanczos — core/params.rs:38, api/mod.rs:498 — which the reference's warp
+    maps to bilinear, sentinel1.rs:937-941, and this engine does not): maps
+    the param to the geometry.resample_gather kernel name every warp route
+    passes through.
     Until round 6 this knob was parsed and round-tripped but never
     consumed — `--resample cubic` silently produced bilinear output."""
     from sarpro_spark.types import ResampleAlg
@@ -411,7 +386,7 @@ def resample_kernel(params) -> str:
         ResampleAlg.NEAREST: "near",
         ResampleAlg.BILINEAR: "bilinear",
         ResampleAlg.CUBIC: "cubic",
-        # r11: TRUE Lanczos3 in the warp (geometry.lanczos_gather). The
+        # r11: TRUE Lanczos3 in the warp (geometry.resample_gather). The
         # reference DEGRADES -r lanczos to bilinear in its warp
         # (sentinel1.rs:937-941 '_ => "bilinear"') even though its resize
         # stage is Lanczos3 — this engine honors the request exactly

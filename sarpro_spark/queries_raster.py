@@ -769,11 +769,62 @@ SELECT product_id, row, col, {sql_fround('q')} AS q FROM warped
 _GCP_K = 16
 
 
-def _warp_gcp_sql() -> str:
-    from sarpro_spark.operators.geometry import sql_warp_gcp_grid
+def _gcp_warp(u8: DataFrame, gcps: DataFrame, snap: bool) -> DataFrame:
+    """The GCP-warp certificates' shared tail: with ``snap``, projected
+    easting/northing snap to a 0.25 m lattice as gx/gy; then an 8-unit
+    target grid over the GCP extent, the piecewise-bilinear warp of ``u8``
+    (k = _GCP_K, 256-unit buckets) and the fround'd ``q``. The DuckDB twin
+    is :func:`_sql_gcp_warp`.
 
+    8 ground units/px: the curvilinear warp_gcp_grid fixture spans 64-256
+    units per 16 source px, so the target still oversamples the sparse
+    tiles and undersamples the dense ones (fractional gather on both
+    sides) at 1/4 the canvas cells of the earlier 4-unit grid."""
+    if snap:
+        gcps = gcps.select(
+            "product_id", "gi", "gj",
+            (F.floor(F.col("easting") * 4.0 + F.lit(0.5)) / 4.0).alias("gx"),
+            (F.floor(F.col("northing") * 4.0 + F.lit(0.5)) / 4.0).alias("gy"),
+        )
+    geo = gcps.groupBy("product_id").agg(
+        F.min("gx").alias("dg0"),
+        F.lit(8.0).alias("dg1"),
+        F.lit(0.0).alias("dg2"),
+        F.max("gy").alias("dg3"),
+        F.lit(0.0).alias("dg4"),
+        F.lit(-8.0).alias("dg5"),
+        F.ceil((F.max("gy") - F.min("gy")) / 8.0).cast("long").alias("dst_rows"),
+        F.ceil((F.max("gx") - F.min("gx")) / 8.0).cast("long").alias("dst_cols"),
+    )
+    out = geom.warp_gcp_grid(u8, gcps, geo, ["product_id"], k=_GCP_K, bucket=256.0, value="q")
+    return out.select("product_id", "row", "col", fround(F.col("q")).alias("q"))
+
+
+def _sql_gcp_warp(gcp_rel: str, snap: bool) -> str:
+    """DuckDB twin of :func:`_gcp_warp` over the ``u8`` relation in scope:
+    the CTEs from ``gcp_rel`` on, then the final SELECT."""
+    src = "gcpz" if snap else gcp_rel
+    snapped = f"""gcpz AS (
+  SELECT product_id, gi, gj,
+         FLOOR(easting * 4.0 + 0.5) / 4.0 AS gx,
+         FLOOR(northing * 4.0 + 0.5) / 4.0 AS gy
+  FROM {gcp_rel}
+),
+""" if snap else ""
+    warp = geom.sql_warp_gcp_grid("u8", src, "wgeo", ["product_id"], _GCP_K, 256.0, "q")
+    return f"""{snapped}wgeo AS (
+  SELECT product_id, MIN(gx) AS dg0, 8.0 AS dg1, 0.0 AS dg2,
+         MAX(gy) AS dg3, 0.0 AS dg4, -8.0 AS dg5,
+         CAST(CEIL((MAX(gy) - MIN(gy)) / 8.0) AS BIGINT) AS dst_rows,
+         CAST(CEIL((MAX(gx) - MIN(gx)) / 8.0) AS BIGINT) AS dst_cols
+  FROM {src} GROUP BY product_id
+),
+{warp}
+SELECT product_id, row, col, {sql_fround('q')} AS q FROM warped"""
+
+
+def _warp_gcp_sql() -> str:
     u8 = asc.oracle_autoscale_sql(_VV_SRC_CTE, ["product_id"], _KEYS, "standard-a2", BitDepth.U8)
-    warp = sql_warp_gcp_grid("u8", "gcp", "wgeo", ["product_id"], _GCP_K, 256.0, "q")
     return f"""
 WITH u8 AS ({u8}),
 wdims AS (
@@ -808,19 +859,7 @@ gcp AS (
          CAST(gi_.product_id AS DOUBLE) * -4096.0 - gi_.syc AS gy
   FROM gic gi_ JOIN gjc gj_ USING (product_id)
 ),
-wgeo AS (
-  -- 8 ground units/px target: the curvilinear grid spans 64-256 units per
-  -- 16 source px, so this still oversamples the sparse tiles and
-  -- undersamples the dense ones (fractional gather on both sides) at 1/4
-  -- the canvas cells of the earlier 4-unit grid
-  SELECT product_id, MIN(gx) AS dg0, 8.0 AS dg1, 0.0 AS dg2,
-         MAX(gy) AS dg3, 0.0 AS dg4, -8.0 AS dg5,
-         CAST(CEIL((MAX(gy) - MIN(gy)) / 8.0) AS BIGINT) AS dst_rows,
-         CAST(CEIL((MAX(gx) - MIN(gx)) / 8.0) AS BIGINT) AS dst_cols
-  FROM gcp GROUP BY product_id
-),
-{warp}
-SELECT product_id, row, col, {sql_fround('q')} AS q FROM warped
+{_sql_gcp_warp("gcp", snap=False)}
 """.strip()
 
 
@@ -1283,11 +1322,7 @@ _step_roundtrip(
 
 
 def _warp_utm_sql() -> str:
-    from sarpro_spark.operators.geometry import sql_warp_gcp_grid
-    from sarpro_spark.queries import sql_fround
-
     u8 = asc.oracle_autoscale_sql(_VV_SRC_CTE, ["product_id"], _KEYS, "standard-a2", BitDepth.U8)
-    warp = sql_warp_gcp_grid("u8", "gcpz", "wgeo", ["product_id"], _GCP_K, 256.0, "q")
     return f"""
 WITH u8 AS ({u8}),
 wdims AS (
@@ -1295,21 +1330,7 @@ wdims AS (
   FROM u8 GROUP BY product_id
 ),
 {_utm_fixture_sql()},
-gcpz AS (
-  SELECT product_id, gi, gj,
-         FLOOR(easting * 4.0 + 0.5) / 4.0 AS gx,
-         FLOOR(northing * 4.0 + 0.5) / 4.0 AS gy
-  FROM fw
-),
-wgeo AS (
-  SELECT product_id, MIN(gx) AS dg0, 8.0 AS dg1, 0.0 AS dg2,
-         MAX(gy) AS dg3, 0.0 AS dg4, -8.0 AS dg5,
-         CAST(CEIL((MAX(gy) - MIN(gy)) / 8.0) AS BIGINT) AS dst_rows,
-         CAST(CEIL((MAX(gx) - MIN(gx)) / 8.0) AS BIGINT) AS dst_cols
-  FROM gcpz GROUP BY product_id
-),
-{warp}
-SELECT product_id, row, col, {sql_fround('q')} AS q FROM warped
+{_sql_gcp_warp("fw", snap=True)}
 """.strip()
 
 
@@ -1320,27 +1341,8 @@ def q_warp_utm_from_lonlat(spark: SparkSession, sf_dir: str) -> DataFrame:
     GCP warp to the projected target grid. The end-to-end path the
     reference delegates to gdalwarp (sentinel1.rs:914-1072), now expressed
     as one relational plan; products span UTM zones and both hemispheres."""
-    from sarpro_spark.operators.geometry import warp_gcp_grid
-    from sarpro_spark.queries import fround
-
     u8, fw = _utm_gcps_spark(spark, sf_dir)
-    gcps = fw.select(
-        "product_id", "gi", "gj",
-        (F.floor(F.col("easting") * 4.0 + F.lit(0.5)) / 4.0).alias("gx"),
-        (F.floor(F.col("northing") * 4.0 + F.lit(0.5)) / 4.0).alias("gy"),
-    )
-    geo = gcps.groupBy("product_id").agg(
-        F.min("gx").alias("dg0"),
-        F.lit(8.0).alias("dg1"),
-        F.lit(0.0).alias("dg2"),
-        F.max("gy").alias("dg3"),
-        F.lit(0.0).alias("dg4"),
-        F.lit(-8.0).alias("dg5"),
-        F.ceil((F.max("gy") - F.min("gy")) / 8.0).cast("long").alias("dst_rows"),
-        F.ceil((F.max("gx") - F.min("gx")) / 8.0).cast("long").alias("dst_cols"),
-    )
-    out = warp_gcp_grid(u8, gcps, geo, ["product_id"], k=_GCP_K, bucket=256.0, value="q")
-    return out.select("product_id", "row", "col", fround(F.col("q")).alias("q"))
+    return _gcp_warp(u8, fw, snap=True)
 
 
 @query("warp_gcp_grid", sql=_warp_gcp_sql(), tags=("raster", "geometry", "warp", "gcp"))
@@ -1352,8 +1354,7 @@ def q_warp_gcp_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     via plans.pipeline.warp_route when projection is absent (P4 mirror)."""
     from pyspark.sql.window import Window as W
 
-    from sarpro_spark.operators.geometry import product_dims, warp_gcp_grid
-    from sarpro_spark.queries import fround
+    from sarpro_spark.operators.geometry import product_dims
 
     import sarpro_spark.operators.kernel as krn
 
@@ -1399,18 +1400,7 @@ def q_warp_gcp_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         (pid.cast("double") * 4096.0 + F.col("sxc") + 2.0 * (kf * F.col("gi"))).alias("gx"),
         (pid.cast("double") * -4096.0 - F.col("syc")).alias("gy"),
     )
-    geo = gcps.groupBy("product_id").agg(
-        F.min("gx").alias("dg0"),
-        F.lit(8.0).alias("dg1"),
-        F.lit(0.0).alias("dg2"),
-        F.max("gy").alias("dg3"),
-        F.lit(0.0).alias("dg4"),
-        F.lit(-8.0).alias("dg5"),
-        F.ceil((F.max("gy") - F.min("gy")) / 8.0).cast("long").alias("dst_rows"),
-        F.ceil((F.max("gx") - F.min("gx")) / 8.0).cast("long").alias("dst_cols"),
-    )
-    out = warp_gcp_grid(u8, gcps, geo, ["product_id"], k=_GCP_K, bucket=256.0, value="q")
-    return out.select("product_id", "row", "col", fround(F.col("q")).alias("q"))
+    return _gcp_warp(u8, gcps, snap=False)
 
 
 # --- G5c: true TPS GCP warp fixture ------------------------------------------
@@ -1809,8 +1799,9 @@ def q_affine_warp_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dyadic doctrine. The unpivot is a single-pass explode (4 rows per
     # cell, nulls dropped after), NOT a union — a union would re-execute
     # the join+agg subtree once per kernel leg.
-    fused = geom.all_kernels_gather(
-        geom.affine_coords(geo, ["product_id"]), u8, ["product_id"], value="q"
+    fused = geom.resample_gather(
+        geom.affine_coords(geo, ["product_id"]), u8, ["product_id"], value="q",
+        alg=("near", "bilinear", "cubic", "lanczos"),
     )
     e = F.explode(
         F.array(
@@ -1835,7 +1826,7 @@ def q_affine_warp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G5 affine warp in-engine: u8 product -> bilinear resample onto a 2x
     finer sheared target grid. Canvas at row grain, corner explode, one
     co-partitioned join, per-cell weighted agg — no per-product task."""
-    from sarpro_spark.operators.geometry import affine_warp_bilinear, product_dims
+    from sarpro_spark.operators.geometry import affine_warp, product_dims
     from sarpro_spark.queries import fround
 
     px = _vv_px(spark, sf_dir)
@@ -1855,7 +1846,7 @@ def q_affine_warp(spark: SparkSession, sf_dir: str) -> DataFrame:
         (pid * -64.0).alias("dg3"), F.lit(0.0).alias("dg4"), F.lit(-4.0).alias("dg5"),
         (F.col("rows") * 2).alias("dst_rows"), (F.col("cols") * 2).alias("dst_cols"),
     )
-    out = affine_warp_bilinear(u8, geo, ["product_id"], value="q")
+    out = affine_warp(u8, geo, ["product_id"], value="q", alg="bilinear")
     return out.select("product_id", "row", "col", fround(F.col("q")).alias("q"))
 
 
@@ -2060,8 +2051,6 @@ _AGD66_CTR_LON, _AGD66_CTR_LAT = (141.5, 7, 11), (-42.5, 3, 9)
 
 
 def _warp_ntv2_sql() -> str:
-    from sarpro_spark.operators.geometry import sql_warp_gcp_grid
-
     u8 = asc.oracle_autoscale_sql(_VV_SRC_CTE, ["product_id"], _KEYS, "standard-a2", BitDepth.U8)
     grid = gsx.sql_synthetic_grid_cte("ntv2grid")
     cells = gsx.sql_grid_cells_cte("ntv2grid", "ntv2cells")
@@ -2075,7 +2064,6 @@ def _warp_ntv2_sql() -> str:
             easting="easting", northing="northing",
         ),
     )
-    warp = sql_warp_gcp_grid("u8", "gcpz", "wgeo", ["product_id"], _GCP_K, 256.0, "q")
     return f"""
 WITH u8 AS ({u8}),
 wdims AS (
@@ -2087,21 +2075,7 @@ wdims AS (
 {cells},
 {inv},
 fw AS ({fwd}),
-gcpz AS (
-  SELECT product_id, gi, gj,
-         FLOOR(easting * 4.0 + 0.5) / 4.0 AS gx,
-         FLOOR(northing * 4.0 + 0.5) / 4.0 AS gy
-  FROM fw
-),
-wgeo AS (
-  SELECT product_id, MIN(gx) AS dg0, 8.0 AS dg1, 0.0 AS dg2,
-         MAX(gy) AS dg3, 0.0 AS dg4, -8.0 AS dg5,
-         CAST(CEIL((MAX(gy) - MIN(gy)) / 8.0) AS BIGINT) AS dst_rows,
-         CAST(CEIL((MAX(gx) - MIN(gx)) / 8.0) AS BIGINT) AS dst_cols
-  FROM gcpz GROUP BY product_id
-),
-{warp}
-SELECT product_id, row, col, {sql_fround('q')} AS q FROM warped
+{_sql_gcp_warp("fw", snap=True)}
 """.strip()
 
 
@@ -2119,7 +2093,7 @@ def q_warp_ntv2_from_lonlat(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same warp/snap scaffolding as warp_utm_from_lonlat; only the
     projection leg differs, so a dispatch bug in the datum chain cannot
     hide behind the shared warp math."""
-    from sarpro_spark.operators.geometry import product_dims, warp_gcp_grid
+    from sarpro_spark.operators.geometry import product_dims
 
     import sarpro_spark.operators.kernel as krn
 
@@ -2137,23 +2111,7 @@ def q_warp_ntv2_from_lonlat(spark: SparkSession, sf_dir: str) -> DataFrame:
             easting="easting", northing="northing",
         ),
     )
-    gcps = fw.select(
-        "product_id", "gi", "gj",
-        (F.floor(F.col("easting") * 4.0 + F.lit(0.5)) / 4.0).alias("gx"),
-        (F.floor(F.col("northing") * 4.0 + F.lit(0.5)) / 4.0).alias("gy"),
-    )
-    geo = gcps.groupBy("product_id").agg(
-        F.min("gx").alias("dg0"),
-        F.lit(8.0).alias("dg1"),
-        F.lit(0.0).alias("dg2"),
-        F.max("gy").alias("dg3"),
-        F.lit(0.0).alias("dg4"),
-        F.lit(-8.0).alias("dg5"),
-        F.ceil((F.max("gy") - F.min("gy")) / 8.0).cast("long").alias("dst_rows"),
-        F.ceil((F.max("gx") - F.min("gx")) / 8.0).cast("long").alias("dst_cols"),
-    )
-    out = warp_gcp_grid(u8, gcps, geo, ["product_id"], k=_GCP_K, bucket=256.0, value="q")
-    return out.select("product_id", "row", "col", fround(F.col("q")).alias("q"))
+    return _gcp_warp(u8, fw, snap=True)
 
 
 _MULTIGRID_LAT, _MULTIGRID_LON = (-42.0, 3, 8), (142.0, 7, 9)

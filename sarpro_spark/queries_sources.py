@@ -286,7 +286,7 @@ def q_plan_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.append((10, route7, band7, needs_warp(None, "EPSG:3035"),
                  warp_route(None, "EPSG:3035", True, gcp_crs="EPSG:4326"), k7))
     # lanczos: TRUE 36-tap Lanczos3 in the warp since r11
-    # (geometry.lanczos_gather) — the reference degrades it to bilinear
+    # (geometry.resample_gather) — the reference degrades it to bilinear
     # (sentinel1.rs:937-941); documented deviation, see resample_kernel
     p11 = ProcessingParams(polarization=Polarization.VV, resample_alg=ResampleAlg.LANCZOS)
     route11, band11 = pipeline_route(p11)

@@ -65,8 +65,10 @@ class ResampleAlg(str, Enum):
     # reference CLI strings: src/cli/runner.rs:61-67 accepts
     # nearest|bilinear|cubic|lanczos. For the WARP the reference maps
     # Lanczos to bilinear (sentinel1.rs:937-941 `_ => "bilinear"`) —
-    # Lanczos proper is the RESIZE kernel (resize.rs) — and this engine
-    # mirrors that fallback in plans.pipeline.resample_kernel.
+    # Lanczos proper is the RESIZE kernel (resize.rs). This engine warps
+    # with the true 36-tap Lanczos3 instead (plans.pipeline.resample_kernel
+    # -> geometry.resample_gather); `-r bilinear` gives the reference's
+    # warp output.
     NEAREST = "nearest"
     BILINEAR = "bilinear"
     CUBIC = "cubic"

@@ -125,7 +125,7 @@ def _geo_frame(spark, rows, cols, sg, dg, dst_rows, dst_cols):
 def test_affine_warp_identity(spark):
     """Warping onto the SOURCE grid itself must return every pixel exactly
     (bilinear weights collapse to 1 at cell centers, edges renormalize)."""
-    from sarpro_spark.operators.geometry import affine_warp_bilinear
+    from sarpro_spark.operators.geometry import affine_warp
 
     rng = np.random.RandomState(5)
     vals = rng.randint(0, 256, size=(6, 7))
@@ -133,7 +133,7 @@ def test_affine_warp_identity(spark):
     px = spark.createDataFrame(data, "product_id string, row int, col int, v double")
     gt = (100.0, 8.0, 0.0, -50.0, 0.0, -8.0)
     geo = _geo_frame(spark, 6, 7, gt, gt, 6, 7)
-    out = affine_warp_bilinear(px, geo, ["product_id"], value="v").collect()
+    out = affine_warp(px, geo, ["product_id"], value="v", alg="bilinear").collect()
     assert len(out) == 6 * 7
     got = {(r["row"], r["col"]): r["v"] for r in out}
     for r in range(6):
@@ -143,7 +143,7 @@ def test_affine_warp_identity(spark):
 
 def test_affine_warp_matches_numpy_bilinear(spark):
     """2x upsample + dyadic shear vs a direct numpy bilinear implementation."""
-    from sarpro_spark.operators.geometry import affine_warp_bilinear
+    from sarpro_spark.operators.geometry import affine_warp
 
     rng = np.random.RandomState(9)
     R, C = 5, 6
@@ -154,7 +154,7 @@ def test_affine_warp_matches_numpy_bilinear(spark):
     dg = (0.0, 4.0, 2.0, 0.0, 0.0, -4.0)
     geo = _geo_frame(spark, R, C, sg, dg, 2 * R, 2 * C)
     out = {(r["row"], r["col"]): r["v"]
-           for r in affine_warp_bilinear(px, geo, ["product_id"], value="v").collect()}
+           for r in affine_warp(px, geo, ["product_id"], value="v", alg="bilinear").collect()}
 
     expect = {}
     for tr in range(2 * R):
@@ -427,7 +427,7 @@ def test_nearest_gather_picks_rounded_pixel(spark):
         (0, 3, 5.0, 0.0),     # out of footprint -> dropped
     ])
     out = {(r["row"], r["col"]): r["v"] for r in
-           geom.nearest_gather(coords, px, ["g"]).collect()}
+           geom.resample_gather(coords, px, ["g"], alg="near").collect()}
     assert out == {(0, 0): 13.0, (0, 1): 3.0, (0, 2): 0.0}
 
 
@@ -440,10 +440,10 @@ def test_cubic_gather_partition_of_unity_and_linearity(spark):
     pts = [(0, 0, 3.25, 4.5), (0, 1, 2.0, 2.0), (0, 2, 4.75, 1.25)]
     coords = _coords(spark, pts)
     out_c = {(r["row"], r["col"]): r["v"] for r in
-             geom.cubic_gather(coords, const, ["g"]).collect()}
+             geom.resample_gather(coords, const, ["g"], alg="cubic").collect()}
     assert out_c == {(0, 0): 7.0, (0, 1): 7.0, (0, 2): 7.0}
     out_r = {(r["row"], r["col"]): r["v"] for r in
-             geom.cubic_gather(coords, ramp, ["g"]).collect()}
+             geom.resample_gather(coords, ramp, ["g"], alg="cubic").collect()}
     for (row, col, cs, rs) in pts:
         assert out_r[(row, col)] == 2.0 * cs + 3.0 * rs
 
@@ -453,7 +453,7 @@ def test_cubic_gather_edge_renormalizes(spark):
     # produces the constant under renormalization
     const = _px(spark, 4, 4, [[5.0] * 4 for _ in range(4)])
     coords = _coords(spark, [(0, 0, 0.25, 0.25)])  # taps at -1 clipped
-    out = geom.cubic_gather(coords, const, ["g"]).collect()
+    out = geom.resample_gather(coords, const, ["g"], alg="cubic").collect()
     assert len(out) == 1 and out[0]["v"] == pytest.approx(5.0)
 
 
@@ -532,8 +532,9 @@ def test_resample_gather_accepts_lanczos(spark):
     # degrade). On a symmetric 2x2 patch at the half-pixel point the 4
     # inner taps dominate and renormalization makes the result the source
     # mean — same as bilinear there — while the kernel itself is lanczos
-    # (verified by the dedicated gather being the dispatch target).
-    from sarpro_spark.operators.geometry import lanczos_gather, resample_gather
+    # (its leg is compared with the fused gather in
+    # test_all_kernels_gather_matches_dedicated_gathers).
+    from sarpro_spark.operators.geometry import resample_gather
 
     coords = spark.createDataFrame(
         [("p", 0, 0, 0.5, 0.5)], "g string, row int, col int, cs double, rs double"
@@ -543,8 +544,6 @@ def test_resample_gather_accepts_lanczos(spark):
         "g string, row int, col int, v double",
     )
     got = resample_gather(coords, px, ["g"], alg="lanczos").collect()
-    want = lanczos_gather(coords, px, ["g"]).collect()
-    assert [r.asDict() for r in got] == [r.asDict() for r in want]
     # symmetric patch at the exact center: renormalized lanczos = the mean
     assert got[0]["v"] == pytest.approx(1.5, abs=1e-9)
 
@@ -563,7 +562,7 @@ def test_lanczos_gather_properties(spark):
     coords = spark.createDataFrame(
         [("p", 0, 0, 5.0, 6.0)], "g string, row int, col int, cs double, rs double"
     )
-    v = geom.lanczos_gather(coords, px, ["g"]).collect()[0]["v"]
+    v = geom.resample_gather(coords, px, ["g"], alg="lanczos").collect()[0]["v"]
     assert v == pytest.approx(float((6 * 7 + 5 * 3) % 19), abs=1e-9)
 
     const = spark.createDataFrame(
@@ -574,7 +573,7 @@ def test_lanczos_gather_properties(spark):
         [("p", 0, 0, 5.34375, 6.21875)],  # phases 11/32 and 7/32 exactly
         "g string, row int, col int, cs double, rs double",
     )
-    v = geom.lanczos_gather(frac, const, ["g"]).collect()[0]["v"]
+    v = geom.resample_gather(frac, const, ["g"], alg="lanczos").collect()[0]["v"]
     assert v == pytest.approx(7.0, abs=1e-9)
 
 
@@ -731,22 +730,25 @@ def test_ups_inverse_steps_roundtrip_vs_numpy(spark):
 
 
 def test_all_kernels_gather_matches_dedicated_gathers(spark):
-    """The fused 16-tap gather must be BIT-identical per leg to the three
-    dedicated gathers (the zero-weight outer taps add exact +0.0 terms,
-    which cannot change an exact-dyadic sum)."""
+    """The fused 36-tap gather (a tuple of kernels) must be BIT-identical
+    per leg to each single-kernel gather (the zero-weight outer taps add
+    exact +0.0 terms, which cannot change an exact-dyadic sum)."""
     px = _px(spark, 10, 12, [[float((3 * r + 5 * c) % 97) for c in range(12)]
                              for r in range(10)])
     pts = [(0, i, 0.25 * i + 0.125, 9.0 - 0.75 * i) for i in range(14)]
     coords = _coords(spark, pts)
     fused = {(r["row"], r["col"]): r for r in
-             geom.all_kernels_gather(coords, px, ["g"]).collect()}
-    for alg, qcol, fn in (
-        ("near", "q_near", geom.nearest_gather),
-        ("bilinear", "q_bilinear", geom.bilinear_gather),
-        ("cubic", "q_cubic", geom.cubic_gather),
+             geom.resample_gather(
+                 coords, px, ["g"], alg=("near", "bilinear", "cubic", "lanczos")
+             ).collect()}
+    for alg, qcol in (
+        ("near", "q_near"),
+        ("bilinear", "q_bilinear"),
+        ("cubic", "q_cubic"),
+        ("lanczos", "q_lanczos"),
     ):
         solo = {(r["row"], r["col"]): r["v"] for r in
-                fn(coords, px, ["g"]).collect()}
+                geom.resample_gather(coords, px, ["g"], alg=alg).collect()}
         fused_leg = {k: r[qcol] for k, r in fused.items() if r[qcol] is not None}
         assert fused_leg == solo, alg
 
@@ -778,7 +780,7 @@ def test_cubic_gather_matches_numpy_reference(spark):
         pts.append((0, i, cs, rs))
     coords = _coords(spark, pts)
     got = {(r["row"], r["col"]): r["v"] for r in
-           geom.cubic_gather(coords, px, ["g"]).collect()}
+           geom.resample_gather(coords, px, ["g"], alg="cubic").collect()}
     for (row, col, cs, rs) in pts:
         r0, c0 = int(np.floor(rs)), int(np.floor(cs))
         fr, fc = rs - r0, cs - c0

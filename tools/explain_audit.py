@@ -136,8 +136,9 @@ AUDITS: dict[str, dict] = {
         "forbid": ["CartesianProduct", "BatchEvalPython"],
     },
     "affine_warp_kernels": {
-        # r6 fused certificate: ONE 16-tap gather (the near tap and the
-        # bilinear corners are subsets of the cubic patch) with a pinned
+        # fused certificate: ONE 36-tap gather (the near tap, the bilinear
+        # corners and the cubic patch are subsets of the Lanczos3 6x6
+        # patch; geometry.resample_gather with a tuple of kernels) with a pinned
         # SortMergeJoin (cells x pixels is big x big), u8 via the grouped
         # kernel (FlatMapGroupsInPandas), single-pass explode unpivot
         # (Generate) — a Union here would mean the join is re-executed per
