@@ -298,10 +298,10 @@ _GCP_FAMILIES: dict[str, tuple] = {
     ), "mga_easting", "mga_northing"),
     # r8/r9 Helmert datum shifts: WGS84 geocentric -> Helmert -> the local
     # ellipsoid -> the national projection, in ONE flat step chain
-    "osgb": ("British National Grid (EPSG:27700, Helmert datum shift)", lambda code, lon, lat: tmx.osgb_forward_steps(lon=lon, lat=lat),
-             "osgb_easting", "osgb_northing"),
-    "bd72": ("Belgian Lambert 72 (EPSG:31370, Helmert datum shift)", lambda code, lon, lat: tmx.bd72_forward_steps(lon=lon, lat=lat),
-             "bd72_easting", "bd72_northing"),
+    "osgb": ("British National Grid (EPSG:27700, Helmert datum shift)",
+             lambda code, lon, lat: tmx.osgb_forward_steps(lon=lon, lat=lat), "osgb_easting", "osgb_northing"),
+    "bd72": ("Belgian Lambert 72 (EPSG:31370, Helmert datum shift)",
+             lambda code, lon, lat: tmx.bd72_forward_steps(lon=lon, lat=lat), "bd72_easting", "bd72_northing"),
 }
 
 
